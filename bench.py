@@ -549,9 +549,9 @@ def main() -> None:
         hw = steal_window(s0, cpu_snapshot())
         hw["load1"] = round(os.getloadavg()[0], 2)
         host[name] = hw
+        steal = "n/a" if hw["steal_pct"] is None else f"{hw['steal_pct']}%"
         print(
-            f"# {name}: {timings[name]:.3f}s ({n} rows) "
-            f"steal={hw['steal_pct']}%",
+            f"# {name}: {timings[name]:.3f}s ({n} rows) steal={steal}",
             file=sys.stderr,
         )
         # drop the query's leaked persists (operators persist multi-

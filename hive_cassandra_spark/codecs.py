@@ -32,7 +32,7 @@ from __future__ import annotations
 import base64
 import re
 import struct
-from datetime import datetime, timezone
+from datetime import datetime, timedelta, timezone
 
 import pandas as pd
 from pyspark.sql import Column, functions as F, types as T
@@ -210,6 +210,7 @@ def decode_string(data: bytes) -> str | None:
 # tier rather than raising (random bytes are a valid cell payload)
 _TS_MILLIS_MIN = -62135596800000   # 0001-01-01T00:00:00Z
 _TS_MILLIS_MAX = 253402300799999   # 9999-12-31T23:59:59.999Z
+_EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
 
 
 def decode_timestamp(data: bytes) -> datetime | None:
@@ -221,7 +222,8 @@ def decode_timestamp(data: bytes) -> datetime | None:
         millis = struct.unpack(">q", data)[0]
         if not (_TS_MILLIS_MIN <= millis <= _TS_MILLIS_MAX):
             return None  # outside datetime's year 1..9999 — undecodable
-        return datetime.fromtimestamp(millis / 1000.0, tz=timezone.utc)
+        # integer arithmetic: millis / 1000.0 loses microseconds near year 9999
+        return _EPOCH + timedelta(milliseconds=millis)
     try:
         s = _java_trim(data.decode("ascii"))
     except UnicodeDecodeError:
@@ -425,12 +427,8 @@ def _ascii(col: Column) -> Column:
 
 def _signed64(col: Column) -> Column:
     """Reinterpret an 8-byte binary column as a signed big-endian long:
-    two conv()'d 32-bit halves recombined (conv alone is unsigned)."""
-    hx = F.hex(col)
-    hi = F.conv(F.substring(hx, 1, 8), 16, 10).cast("long")
-    lo = F.conv(F.substring(hx, 9, 8), 16, 10).cast("long")
-    shi = F.when(hi >= F.lit(1 << 31), hi - F.lit(1 << 32)).otherwise(hi)
-    return shi * F.lit(1 << 32) + lo
+    conv() to a negative base reads the 64 bits as two's complement."""
+    return F.conv(F.hex(col), 16, -10).cast("long")
 
 
 def _signed32(col: Column) -> Column:

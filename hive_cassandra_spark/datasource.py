@@ -45,6 +45,18 @@ cells (the same bounded-memory contract the reference's split reader
 makes), footers only are read at planning time, and no driver collect
 exists anywhere — at 100 TB the store is many files and splits simply
 multiply.
+
+Fixed cost: every scan through this source makes three Python-worker
+calls (create the source, push filters + plan splits, read each split),
+about 0.25 CPU-s each on a 4-core host even with reused workers, because
+pyspark's worker set-up calls ``importlib.invalidate_caches()``, which
+re-reads ``pyspark.zip``'s directory once per zipimporter. That is the
+price of the connector seam and is paid per scan, not per cell, so the
+engine's own read paths bypass it: ``handler.read_table`` and
+``index.index_lookup`` scan the same files as JVM parquet
+(``source.read_cells``; ``store_schema`` gives them this source's column
+list). Callers that query through ``cassandra_cells`` keep the three
+calls, which the Python Data Source API requires.
 """
 
 from __future__ import annotations
@@ -96,6 +108,25 @@ def _vacuum_watermark(path: str) -> int | None:
             txt = fh.read().strip()
             return int(txt) if txt else None
     return None
+
+
+def store_schema(path: str) -> str:
+    """The store's scan schema: ``sink.to_cells``'s columns, then each
+    optional column (sub_column_name, ttl_s) that ANY sampled footer has —
+    appends may have introduced it after the store was created, and
+    footer-only sampling keeps planning cheap."""
+    parts = [_BASE_SCHEMA]
+    files = _store_files(path)
+    if files:
+        import pyarrow.parquet as pq
+
+        names: set[str] = set()
+        for f in files[:16]:
+            names |= set(pq.read_schema(f).names)
+        for c in _OPTIONAL_COLS:
+            if c in names:
+                parts.append(f"{c} binary" if c == "sub_column_name" else f"{c} int")
+    return ", ".join(parts)
 
 
 @dataclass
@@ -182,7 +213,7 @@ class CellStoreReader(DataSourceReader):
             elif isinstance(f, LessThanOrEqual):
                 e = field <= f.value
             elif isinstance(f, In):
-                e = field.isin(list(f.values))
+                e = field.isin(list(f.value))
             else:  # IsNotNull
                 e = field.is_valid()
             expr = e if expr is None else expr & e
@@ -639,24 +670,7 @@ class CellStoreDataSource(DataSource):
         return FORMAT_NAME
 
     def schema(self) -> str:
-        # default schema mirrors sink.to_cells; optional store columns
-        # (sub_column_name, ttl_s) are appended when ANY sampled footer
-        # has them — appends may have introduced them after the store was
-        # created, and footer-only sampling keeps planning cheap
-        parts = [_BASE_SCHEMA]
-        files = _store_files(self.options.get("path", ""))
-        if files:
-            import pyarrow.parquet as pq
-
-            names: set[str] = set()
-            for f in files[:16]:
-                names |= set(pq.read_schema(f).names)
-            for c in _OPTIONAL_COLS:
-                if c in names:
-                    parts.append(
-                        f"{c} binary" if c == "sub_column_name" else f"{c} int"
-                    )
-        return ", ".join(parts)
+        return store_schema(self.options.get("path", ""))
 
     def reader(self, schema: StructType) -> CellStoreReader:
         return CellStoreReader(dict(self.options), schema)

@@ -7,19 +7,29 @@ SlicePredicate push in :73-98 narrows COLUMNS, never rows-by-value).
 Cassandra itself answers ``WHERE col = v`` with a secondary index: an
 internal column family whose ROW KEY is the indexed value and whose
 COLUMN NAMES are the base-table row keys owning it. This module builds
-the same structure as cells, so the index is itself a cell store — it is
-written, split, paged, and pushdown-scanned by the exact machinery of
-``datasource.py``, which is the property that makes it work at 100 TB:
+the same structure as cells, so the index is itself a cell store, written
+and compacted by the ordinary sink machinery, which is the property that
+makes it work at 100 TB:
 
 - the index write is one projection of the base cells (no join);
-- a value lookup is a ROW-KEY point read on the index store —
-  ``pushFilters`` turns it into row-group-statistics pruning inside the
-  pyarrow scan, so only the probed value's index row is materialized;
+- a value lookup is a ROW-KEY point read on the index store — the
+  ``row_key =`` predicate is pushed into the parquet scan, so row-group
+  statistics prune everything but the probed value's index row;
 - the fetched base row keys (the selectivity of the predicate, NOT the
   table size) broadcast into a semi-join against the base store. The
   base side is scanned but never shuffled; with the base store
   row_key-sorted (sink.write_cells hash-distributes; compact_store
-  sorts), a future JVM DSv2 runtime-filter push would prune it too.
+  sorts), a runtime-filter push would prune it too.
+
+Both stores are read as native JVM parquet scans (``source.read_cells``
+with the connector's column list, ``datasource.store_schema``), not
+through ``cassandra_cells``: a Python Data Source scan costs three
+Python-worker calls (create, pushdown + plan, read) at about 0.25 CPU-s
+each even with reused workers — pyspark's worker set-up invalidates the
+import caches, which re-reads ``pyspark.zip``'s directory once per
+zipimporter — so two connector scans made a lookup cost about 1.5 CPU-s
+of fixed overhead for a few cells. The connector stays the path for
+callers that scan the store themselves.
 
 Index maintenance under mutation is LWW like everything else: rebuilds
 are one projection, and a stale index entry is detected at fetch time
@@ -61,15 +71,14 @@ def index_lookup(
     ``value``: point-read the index row (pushdown-pruned scan of the
     index store), broadcast the matching base row keys, semi-join the
     base store. Returns the full cell rows of the matching base rows."""
-    from hive_cassandra_spark import datasource
+    from hive_cassandra_spark.datasource import store_schema
+    from hive_cassandra_spark.source import read_cells
 
-    datasource.register(spark)
     keys = (
-        spark.read.format("cassandra_cells")
-        .load(index_path)
+        read_cells(spark, index_path, store_schema(index_path))
         .filter(F.col("row_key") == F.lit(value))
         .select(F.col("column_name").alias("row_key"))
         .distinct()
     )
-    base = spark.read.format("cassandra_cells").load(base_path)
+    base = read_cells(spark, base_path, store_schema(base_path))
     return base.join(F.broadcast(keys), "row_key", "semi")

@@ -11,15 +11,23 @@ the CassandraLazy* codecs (input/LazyCassandraRow.java:69-106).
 
 Spark-first re-expression:
 
-- *regular*: LWW-compact cell versions on (row_key, column_name) by ts —
-  the semantics Cassandra's reconciler gives the reference for free — then
-  one keyed pivot back to wide rows and a vectorized per-type decode.
-  One shuffle, on the row key (the table's natural partitioning).
+- *regular*: ONE keyed aggregation on the row key does last-write-wins
+  and the pivot together — the semantics Cassandra's reconciler gives the
+  reference for free. Each mapped column keeps the struct-max (ts, value)
+  of its cells (ties to the greater value, sink._compact_winners' rule);
+  tombstones (NULL values) take part, so a delete suppresses every older
+  version and reads NULL, and a row with no live winner is dropped (the
+  ghost-row skip). Then a per-type decode. One shuffle, on the row key
+  (the table's natural partitioning); an LWW pass followed by a separate
+  pivot cost two shuffles and four sort-based aggregates, since binary
+  aggregation buffers rule out hash aggregation.
 - *transposed*: pure projection + decode; **no shuffle at all** (the
   reference's wide-row iterator, ColumnFamilyWideRowRecordReader.java:240-429,
   exists only to page cells over Thrift — columnar storage makes it moot).
 - *cf-map*: cells → ``map<string,binary>`` per row (functional, unlike the
-  reference's no-op LazyCassandraCellMap.parse — a documented deviation).
+  reference's no-op LazyCassandraCellMap.parse — a documented deviation),
+  inside the same aggregation: each entry name keeps its newest version
+  and tombstoned entries leave the map.
 
 Projection pushdown (#4 in SURVEY.md §2.A): pass ``wanted_columns`` to
 prune cells *before* the pivot shuffle — the analogue of the reference's
@@ -30,7 +38,10 @@ SlicePredicate.column_names push
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import operator
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from hive_cassandra_spark.codecs import decode_col
 from hive_cassandra_spark.mapping import ColumnMapping
@@ -47,16 +58,13 @@ def _decode_value(col: F.Column, hive_type: str) -> F.Column:
     return decode_col(col, hive_type)
 
 
-def read_cells(spark: SparkSession, path: str) -> DataFrame:
-    """Open a persisted cell store (see sink.write_cells)."""
-    return spark.read.parquet(path)
-
-
-def _live(cells: DataFrame) -> DataFrame:
-    """Drop dead/tombstone cells (≙ isLive() filter,
-    CassandraHiveRecordReader.java:198-214, and the DSP-465 ghost-row skip
-    :139-147)."""
-    return cells.filter(F.col("value").isNotNull())
+def read_cells(spark: SparkSession, path: str, schema: str | None = None) -> DataFrame:
+    """Open a persisted cell store (see sink.write_cells). Without
+    ``schema`` Spark infers it from one part file; pass
+    ``datasource.store_schema(path)`` to get the connector's column list
+    when only some parts carry the optional columns."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
 
 
 def expire_cells(
@@ -69,8 +77,8 @@ def expire_cells(
     ``ts + ttl_s·1000 > now_millis`` (ts is the writer's epoch-millis
     timestamp from sink._ts_column). A row whose every cell expires
     disappears entirely from the pivoted read — the TTL analogue of the
-    ghost-row elimination in ``_live`` — because cells_to_table sees no
-    live cells for its key. Narrow codegen filter, zero shuffle; the
+    ghost-row elimination — because cells_to_table sees no live cells for
+    its key. Narrow codegen filter, zero shuffle; the
     ``ttl_col`` column is dropped so downstream decode sees the standard
     cell schema."""
     alive = F.col(ttl_col).isNull() | (
@@ -85,9 +93,9 @@ def apply_cdc_batch(cells: DataFrame, changes: DataFrame) -> DataFrame:
     cell key with ``value`` NULL at a newer ``ts``. Union + last-write-
     wins compaction resolves everything in one keyed aggregation
     (``max_by`` keeps the newest version even when it is the NULL
-    tombstone — pinned by test_source_sink), and the standard ``_live``
-    filter then drops tombstoned cells, so a fully-deleted row vanishes
-    from the pivoted read exactly like a ghost row.
+    tombstone — pinned by test_source_sink), and cells_to_table reads a
+    tombstoned cell as NULL, so a fully-deleted row vanishes from the
+    pivoted read exactly like a ghost row.
 
     Cassandra's distributed-delete semantics, public data model (the
     reference inherits reconciliation from the server and, being Hive
@@ -107,6 +115,21 @@ def lww_latest(cells: DataFrame, key_cols: list[str] | None = None) -> DataFrame
     return (
         cells.groupBy(*key_cols)
         .agg(F.max_by("value", "ts").alias("value"), F.max("ts").alias("ts"))
+    )
+
+
+def _live_map(entries: Column) -> Column:
+    """Sorted (key, ts, value) cell entries → map of each key's winner, the
+    key's last entry; keys whose winner is a tombstone are left out."""
+    newest = F.filter(
+        entries,
+        lambda e, j: (j == F.size(entries) - 1) | (entries[j + 1]["key"] != e["key"]),
+    )
+    return F.map_from_entries(
+        F.transform(
+            F.filter(newest, lambda e: e["value"].isNotNull()),
+            lambda e: F.struct(e["key"].alias("key"), e["value"].alias("value")),
+        )
     )
 
 
@@ -130,7 +153,6 @@ def cells_to_table(
         mapping.entries
     ):
         raise ValueError("schema arity must match mapping arity")
-    live = _live(cells)
 
     if mapping.transposed:
         entry_to_idx = {e: i for i, e in enumerate(mapping.entries)}
@@ -153,70 +175,61 @@ def cells_to_table(
                 column_names[entry_to_idx[":value"]]
             )
         )
-        return live.select(*out)
+        # dead/tombstone cells are skipped (≙ isLive() filter,
+        # CassandraHiveRecordReader.java:198-214)
+        return cells.filter(F.col("value").isNotNull()).select(*out)
 
     cf_map_idx = set(mapping.cf_map_indexes)
     plain_idx = [
         i for i in range(len(mapping.entries)) if i != mapping.key_index and i not in cf_map_idx
     ]
+    # a cf-map column owns every cell no plain mapped column claims, wanted or not
+    claimed = [mapping.entries[i] for i in plain_idx]
     if wanted_columns is not None:
         plain_idx = [i for i in plain_idx if column_names[i] in wanted_columns]
         cf_map_idx = {i for i in cf_map_idx if column_names[i] in wanted_columns}
-    wanted_cell_names = [mapping.entries[i] for i in plain_idx]
 
     # Projection pushdown: restrict cells before the shuffle. With no cf-map
     # column the IN-filter also reaches the parquet scan (PushedFilters).
-    if not cf_map_idx:
-        live = live.filter(
-            F.col("column_name").cast("string").isin(wanted_cell_names)
-        )
-
-    latest = lww_latest(live)
     name_str = F.col("column_name").cast("string")
-    aggs = []
-    for i in plain_idx:
-        aggs.append(
-            F.max(
-                F.when(name_str == mapping.entries[i], F.col("value"))
-            ).alias(f"__v{i}")
-        )
-    for i in cf_map_idx:
-        # everything not claimed by a plain mapped column belongs to the map
-        aggs.append(
-            F.map_from_entries(
-                F.array_sort(
-                    F.collect_list(
-                        F.when(
-                            ~name_str.isin(
-                                [mapping.entries[j] for j in plain_idx]
-                            ),
-                            F.struct(name_str.alias("key"), F.col("value").alias("value")),
-                        )
-                    )
-                )
-            ).alias(f"__m{i}")
-        )
-    wide = latest.groupBy("row_key").agg(*aggs)
+    if not cf_map_idx:
+        cells = cells.filter(name_str.isin([mapping.entries[i] for i in plain_idx]))
 
+    # One keyed aggregation does LWW and the pivot together: each plain
+    # column keeps its struct-max (ts, value) — highest ts, ties to the
+    # greater value, the sink._compact_winners rule — and tombstones take
+    # part, so a delete suppresses every older version of its cell.
+    version = F.struct("ts", "value")
+    aggs = [
+        F.max(F.when(name_str == mapping.entries[i], version)).alias(f"__v{i}")
+        for i in plain_idx
+    ]
+    entry = F.struct(name_str.alias("key"), F.col("ts"), F.col("value"))
+    aggs += [
+        F.array_sort(F.collect_list(F.when(~name_str.isin(claimed), entry))).alias(f"__m{i}")
+        for i in cf_map_idx
+    ]
+    wide = cells.groupBy("row_key").agg(*aggs)
+    vals = {i: F.col(f"__v{i}.value") for i in plain_idx}
+    maps = {i: _live_map(F.col(f"__m{i}")) for i in cf_map_idx}
+    # ghost rows (DSP-465 skip, CassandraHiveRecordReader.java:139-147): a
+    # row none of whose wanted cells is live after LWW has no row
+    live = [v.isNotNull() for v in vals.values()] + [F.size(m) > 0 for m in maps.values()]
     out = [
         decode_col(F.col("row_key"), hive_types[mapping.key_index]).alias(
             column_names[mapping.key_index]
         )
     ]
-    for i in plain_idx:
-        out.append(_decode_value(F.col(f"__v{i}"), hive_types[i]).alias(column_names[i]))
-    for i in cf_map_idx:
-        # decode the map's binary values per the declared value type; keys
-        # are utf-8 strings (validated map<string,?> —
-        # CassandraColumnSerDe.java:66-81). transform_values keeps it JVM-side
-        # for the string case; other value types decode via a post-explode
-        # pass by the caller if needed.
-        out.append(
-            F.transform_values(
-                F.col(f"__m{i}"), lambda _, v: v.cast("string")
-            ).alias(column_names[i])
-        )
-    return wide.select(*out)
+    out += [_decode_value(v, hive_types[i]).alias(column_names[i]) for i, v in vals.items()]
+    # decode the map's binary values per the declared value type; keys are
+    # utf-8 strings (validated map<string,?> — CassandraColumnSerDe.java:66-81).
+    # transform_values keeps it JVM-side for the string case; other value
+    # types decode via a post-explode pass by the caller if needed.
+    out += [
+        F.transform_values(m, lambda _, v: v.cast("string")).alias(column_names[i])
+        for i, m in maps.items()
+    ]
+    return wide.filter(reduce(operator.or_, live, F.lit(False))).select(*out)
 
 
 def paged_cells(cells: DataFrame, page_size: int = 1000) -> DataFrame:

@@ -2,7 +2,7 @@
 is the most fragile surface (SURVEY.md §7 risk register)."""
 
 import struct
-from datetime import datetime, timezone
+from datetime import datetime, timedelta, timezone
 
 from hypothesis import given, strategies as st
 
@@ -279,3 +279,36 @@ def test_decode_expression_fuzz_random_bytes(spark, hive_type):
         else:
             ok = a == b
         assert ok, (hive_type, bytes(r.cell).hex(), a, b)
+
+
+_BOUNDARY_8 = [b"\x00" * 8, b"\x7f" + b"\xff" * 7, b"\x80" + b"\x00" * 7, b"\xff" * 8]
+_TS_EDGES = [
+    struct.pack(">q", ms)
+    for ms in (codecs._TS_MILLIS_MIN, codecs._TS_MILLIS_MAX,
+               codecs._TS_MILLIS_MIN - 1, codecs._TS_MILLIS_MAX + 1)
+]
+
+
+@pytest.mark.parametrize("hive_type", ["bigint", "double", "timestamp"])
+def test_decode_col_boundary_bytes_match_python(spark, hive_type):
+    """The two's-complement reading of 8-byte payloads at the sign and
+    range boundaries: the expression tier equals the Python decoder
+    exactly (timestamps compared in epoch microseconds, doubles by bit
+    pattern so -0.0 counts, NaN payloads as NaN)."""
+    payloads = _BOUNDARY_8 + (_TS_EDGES if hive_type == "timestamp" else [])
+    dec = codecs.decode_col(F.col("cell"), hive_type)
+    if hive_type == "timestamp":
+        dec = F.unix_micros(dec)
+    got = [r[0] for r in spark.createDataFrame([(b,) for b in payloads], "cell binary")
+           .select(dec).collect()]
+    want = [codecs.DECODERS[hive_type](b) for b in payloads]
+    if hive_type == "timestamp":
+        epoch = datetime(1970, 1, 1, tzinfo=timezone.utc)
+        want = [None if w is None else (w - epoch) // timedelta(microseconds=1) for w in want]
+        assert want[-2:] == [None, None]  # outside year 1..9999
+    if hive_type == "double":
+        got, want = ([None if math.isnan(x) else struct.pack(">d", x) for x in xs]
+                     for xs in (got, want))
+    assert got == want, (hive_type, got, want)
+    if hive_type == "bigint":
+        assert want == [0, (1 << 63) - 1, -(1 << 63), -1]

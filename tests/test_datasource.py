@@ -6,7 +6,7 @@ direct parquet read of the same store."""
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql.datasource import EqualTo, GreaterThanOrEqual, IsNotNull, StringContains
+from pyspark.sql.datasource import EqualTo, GreaterThanOrEqual, In, IsNotNull, StringContains
 from pyspark.sql.types import StructType
 
 from hive_cassandra_spark import datasource, handler
@@ -85,6 +85,52 @@ def test_pushed_slice_filter_correct_results(spark, store):
         .groupBy("seg").count()
     )
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+
+def _direct_cells(spark, store, pred):
+    rows = (
+        spark.read.parquet(store)
+        .select("row_key", "column_name", "value", "ts")
+        .filter(pred)
+        .collect()
+    )
+    return sorted(map(tuple, rows))
+
+
+def _pushed_in_reads(store, column, values):
+    """Values of ``column`` a one-split reader returns once ``column IN
+    values`` is pushed to it (the filter must be accepted, not returned)."""
+    reader = datasource.CellStoreReader(
+        {"path": store, "split_size": "1000000000"},
+        StructType.fromDDL(datasource._BASE_SCHEMA),
+    )
+    assert list(reader.pushFilters([In((column,), tuple(values))])) == []
+    (split,) = reader.partitions()
+    return {v for b in reader.read(split) for v in b.column(column).to_pylist()}
+
+
+def test_row_key_in_pushed_and_correct(spark, store):
+    """``row_key IN (...)`` reaches pushFilters as an ``In`` filter whose
+    values sit in ``.value`` (a tuple) and returns exactly those rows'
+    cells."""
+    keys = sorted(
+        {bytes(r.row_key) for r in spark.read.parquet(store).limit(40).collect()}
+    )[:3]
+    assert len(keys) == 3
+    df = spark.read.format("cassandra_cells").load(store)
+    got = sorted(map(tuple, df.filter(F.col("row_key").isin(*keys)).collect()))
+    want = _direct_cells(spark, store, F.col("row_key").isin(*keys))
+    assert got == want and {g[0] for g in got} == set(keys)
+    assert _pushed_in_reads(store, "row_key", keys) == set(keys)
+
+
+def test_column_name_in_pushed_and_correct(spark, store):
+    names = [b"c_name", b"c_mktsegment"]
+    df = spark.read.format("cassandra_cells").load(store)
+    got = sorted(map(tuple, df.filter(F.col("column_name").isin(*names)).collect()))
+    want = _direct_cells(spark, store, F.col("column_name").isin(*names))
+    assert got == want and {g[1] for g in got} == set(names)
+    assert _pushed_in_reads(store, "column_name", names) == set(names)
 
 
 def test_read_pages_are_bounded_and_ordered(spark, store):

@@ -70,3 +70,52 @@ def test_lww_across_two_writes(spark, tmp_path):
     handler.write_table(df2, tdef, mode="append", clock_millis=2)
     back = handler.read_table(spark, tdef)
     assert [(r.id, r.v) for r in back.collect()] == [(1, "new")]
+
+
+def _two_row_table(spark, tmp_path):
+    tdef = handler.define_table(
+        "del", str(tmp_path / "del"), ["rk", "a", "b"], ["string", "bigint", "bigint"],
+    )
+    handler.write_table(
+        spark.createDataFrame([("k1", 1, 2), ("k2", 3, 4)], "rk string, a bigint, b bigint"),
+        tdef, clock_millis=1000,
+    )
+    return tdef
+
+
+def _delete(spark, tdef, cells, ts):
+    """Append a tombstone (NULL value at ``ts``) for each (row, column)."""
+    from hive_cassandra_spark import sink
+
+    sink.write_cells(
+        spark.createDataFrame(
+            [(rk.encode(), cn.encode(), None, ts) for rk, cn in cells],
+            "row_key binary, column_name binary, value binary, ts bigint",
+        ),
+        tdef.path, mode="append",
+    )
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def test_read_table_deleted_cell_reads_null(spark, tmp_path):
+    """A cell deleted after it was written reads back NULL: the tombstone
+    takes part in last-write-wins instead of being dropped before it."""
+    tdef = _two_row_table(spark, tmp_path)
+    _delete(spark, tdef, [("k1", "a")], ts=2000)
+    assert _rows(handler.read_table(spark, tdef)) == [("k1", None, 2), ("k2", 3, 4)]
+    # a tombstone older than the write it targets deletes nothing
+    _delete(spark, tdef, [("k2", "a")], ts=500)
+    assert _rows(handler.read_table(spark, tdef)) == [("k1", None, 2), ("k2", 3, 4)]
+
+
+def test_read_table_fully_deleted_row_vanishes(spark, tmp_path):
+    tdef = _two_row_table(spark, tmp_path)
+    _delete(spark, tdef, [("k1", "a"), ("k1", "b")], ts=2000)
+    assert _rows(handler.read_table(spark, tdef)) == [("k2", 3, 4)]
+    # with only a's cell deleted, a projection onto a drops k1 as well
+    tdef2 = _two_row_table(spark, tmp_path / "p")
+    _delete(spark, tdef2, [("k1", "a")], ts=2000)
+    assert _rows(handler.read_table(spark, tdef2, wanted_columns=["a"])) == [("k2", 3)]

@@ -107,3 +107,48 @@ def test_index_lookup_via_sql_views(spark, tmp_path):
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
     cat.drop_table("cf_base")
     cat.drop_table("cf_seg_idx")
+
+
+def test_native_lookup_matches_connector_on_mixed_schema_store(spark, tmp_path):
+    """The lookup scans the stores as JVM parquet, not through the
+    connector, but returns the connector's column list and rows — also
+    when only the later parts of the base store carry ``ttl_s``, where
+    parquet schema inference from one footer would drop the column."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    base = tmp_path / "base"
+    base.mkdir()
+
+    def part(name, rows, ttl=None):
+        cols = {
+            "row_key": pa.array([r[0].encode() for r in rows], pa.binary()),
+            "column_name": pa.array([r[1].encode() for r in rows], pa.binary()),
+            "value": pa.array([None if r[2] is None else r[2].encode() for r in rows], pa.binary()),
+            "ts": pa.array([r[3] for r in rows], pa.int64()),
+        }
+        if ttl is not None:
+            cols["ttl_s"] = pa.array([ttl] * len(rows), pa.int32())
+        pq.write_table(pa.table(cols), str(base / name))
+
+    part("part-0.parquet", BASE[:4])
+    part("part-1.parquet", BASE[4:], ttl=60)
+    part("part-2.parquet", [("r3", "seg", "gold", 2), ("r5", "seg", "gold", 1)], ttl=30)
+
+    datasource.register(spark)
+    cells = spark.read.format("cassandra_cells").load(str(base))
+    idx_path = str(tmp_path / "idx")
+    sink.write_cells(index.build_value_index(cells, b"seg"), idx_path)
+
+    got = index.index_lookup(spark, str(base), idx_path, b"gold")
+    keys = (
+        spark.read.format("cassandra_cells").load(idx_path)
+        .filter(F.col("row_key") == F.lit(b"gold"))
+        .select(F.col("column_name").alias("row_key")).distinct()
+    )
+    want = cells.join(F.broadcast(keys), "row_key", "semi")
+    assert got.columns == want.columns == ["row_key", "column_name", "value", "ts", "ttl_s"]
+    assert got.schema == want.schema
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+    # r3's later gold write is indexed too (index entries are per version)
+    assert {r.row_key for r in got.collect()} == {b"r1", b"r2", b"r3", b"r5"}

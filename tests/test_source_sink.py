@@ -1174,3 +1174,64 @@ def test_occ_claim_race_across_processes(tmp_path):
     # won by someone (asserted above), so losing never wedged a
     # committer and never left partial state behind
     assert len(flat) == n_workers * n_versions
+
+
+def _raw_cells(spark, rows):
+    return spark.createDataFrame(
+        [
+            (rk.encode(), cn.encode(), None if v is None else v.encode(), ts)
+            for rk, cn, v, ts in rows
+        ],
+        "row_key binary, column_name binary, value binary, ts long",
+    )
+
+
+def test_cells_to_table_matches_compacted_store(spark, tmp_path):
+    """Read-time LWW picks the same winners compaction does: ts ties go to
+    the greater value (a value beats a same-ts tombstone), and a
+    tombstone winner reads NULL — so the rows are identical before and
+    after sink.compact_store, whether it keeps tombstones or drops them."""
+    m = parse_mapping(":key,a,b", 3)
+    names, types = ["k", "a", "b"], ["string", "string", "string"]
+    rows = [
+        ("k1", "a", "x", 10), ("k1", "a", "y", 10),      # tie: y wins
+        ("k1", "b", "p", 10), ("k1", "b", None, 10),     # tie: p beats the tombstone
+        ("k2", "a", "old", 10), ("k2", "a", None, 20),   # deleted
+        ("k2", "b", "q", 5),
+        ("k3", "a", "z", 3), ("k3", "a", None, 7), ("k3", "b", None, 7),  # row gone
+        ("k4", "a", "m", 10), ("k4", "a", None, 11), ("k4", "a", "n", 12),  # re-written
+    ]
+    want = [("k1", "y", "p"), ("k2", None, "q"), ("k4", "n", None)]
+    for drop in (False, True):
+        store = str(tmp_path / f"store-{drop}")
+        sink.write_cells(_raw_cells(spark, rows), store)
+        before = source.cells_to_table(source.read_cells(spark, store), m, names, types)
+        assert sorted(map(tuple, before.collect())) == want
+        sink.compact_store(spark, store, drop_tombstones=drop, target_buckets=2)
+        after = source.cells_to_table(source.read_cells(spark, store), m, names, types)
+        assert sorted(map(tuple, after.collect())) == want
+
+
+def test_cf_map_overwrite_and_tombstone(spark):
+    """The cf-map branch reconciles per entry with the same LWW rule: an
+    overwritten entry reads its newest value, a tombstoned entry leaves
+    the map, and cells claimed by a plain column never enter it — even
+    when that column is not wanted."""
+    m = parse_mapping(":key,name,props:", 3)
+    names = ["id", "name", "props"]
+    types = ["string", "string", "map<string,string>"]
+    cells = _raw_cells(spark, [
+        ("r1", "name", "alice", 1),
+        ("r1", "a", "1", 1), ("r1", "a", "2", 2),        # overwritten
+        ("r1", "b", "x", 1), ("r1", "b", None, 2),       # tombstoned
+        ("r1", "c", "keep", 1),
+        ("r2", "d", "gone", 1), ("r2", "d", None, 3),    # only entry deleted
+        ("r3", "name", "carol", 1),
+    ])
+    got = {r.id: (r.name, r.props) for r in source.cells_to_table(cells, m, names, types).collect()}
+    assert got == {
+        "r1": ("alice", {"a": "2", "c": "keep"}),
+        "r3": ("carol", {}),
+    }
+    only_map = source.cells_to_table(cells, m, names, types, wanted_columns=["props"])
+    assert {r.id: r.props for r in only_map.collect()} == {"r1": {"a": "2", "c": "keep"}}

@@ -61,7 +61,9 @@ def window(a: tuple[int, ...] | None, b: tuple[int, ...] | None) -> dict:
     or no ticks elapsed (sub-jiffy window)."""
     if a is None or b is None:
         return {"steal_pct": None, "busy_pct": None}
-    n = min(len(a), len(b))
+    # fields 8-9 (guest, guest_nice) are already counted in user/nice:
+    # only the first eight fields partition the elapsed time
+    n = min(len(a), len(b), 8)
     d = [b[i] - a[i] for i in range(n)]
     total = sum(d)
     if total <= 0:

@@ -141,20 +141,21 @@ def main() -> None:
                 continue
             trials.append(wall)
             steals.append(hw["steal_pct"])
-        med = statistics.median(trials)
+        # every trial may have been discarded for steal: no median then
+        med = round(statistics.median(trials), 3) if trials else None
         base = baselines.get(name)
         results[name] = {
             "trials": trials,
             "steal_pct_per_trial": steals,
             "discarded_steal_trials": discarded,
-            "median": round(med, 3),
+            "median": med,
             "baseline": base,
             "ratio_vs_baseline": (
-                round(med / base, 2) if base else None
+                round(med / base, 2) if base and med is not None else None
             ),
         }
         print(
-            f"# {name}: median {med:.2f}s trials={trials} "
+            f"# {name}: median {'n/a' if med is None else f'{med}s'} trials={trials} "
             f"steal={steals} discards={len(discarded)}",
             file=sys.stderr,
         )

@@ -159,30 +159,6 @@ def _spread(df: DataFrame, key: str) -> DataFrame:
     return df.repartition(n, key)
 
 
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 12,
-    n: int = 3,
-) -> DataFrame:
-    """Wide MinHash signature: (doc, m00, m01, ..) — one column per hash fn.
-
-    Hash family: md5(seed || '|' || shingle) — deterministic, portable to
-    any engine with md5 (the min over hex strings is the min over the
-    128-bit values since the hex encoding is order-preserving).
-
-    Plan shape (the 100 TB consideration): explode shingles ONCE
-    (|docs|×|shingles| rows), project all ``num_hashes`` md5 columns, then a
-    single groupBy(doc) with N parallel min() aggregates. The map-side
-    partial collapses each partition to |docs| rows before the shuffle —
-    ~12× less exchanged data than the naive seeds×shingles explode (which
-    benched 17.7s vs ~3s at sf0.1)."""
-    return _signatures_from_shingles(
-        shingle_table(df, text_col, id_col, n), num_hashes
-    )
-
-
 def _signatures_from_shingles(sh_tbl: DataFrame, num_hashes: int) -> DataFrame:
     """Wide signature from a (doc, shs) shingle table (possibly persisted)."""
     exploded = sh_tbl.select("doc", F.explode("shs").alias("sh"))

@@ -561,44 +561,6 @@ class _JpegBitWriter:
         return bytes(self.buf)
 
 
-class _JpegBitReader:
-    def __init__(self, data: bytes, pos: int) -> None:
-        self.data = data
-        self.pos = pos
-        self.acc = 0
-        self.nbits = 0
-
-    def read_bit(self) -> int:
-        if self.nbits == 0:
-            b = self.data[self.pos]
-            self.pos += 1
-            if b == 0xFF:
-                nxt = self.data[self.pos]
-                if nxt == 0x00:
-                    self.pos += 1  # unstuff
-                else:
-                    raise ValueError(f"unexpected marker 0xFF{nxt:02X} in scan")
-            self.acc = b
-            self.nbits = 8
-        self.nbits -= 1
-        return (self.acc >> self.nbits) & 1
-
-    def read_bits(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            v = (v << 1) | self.read_bit()
-        return v
-
-    def read_symbol(self, table: dict[tuple[int, int], int]) -> int:
-        code, ln = 0, 0
-        while ln < 16:
-            code = (code << 1) | self.read_bit()
-            ln += 1
-            if (ln, code) in table:
-                return table[(ln, code)]
-        raise ValueError("invalid Huffman code in scan data")
-
-
 def _magnitude(v: int) -> tuple[int, int]:
     """(size category, appended bits) for a DC diff / AC coefficient."""
     size = int(abs(v)).bit_length()

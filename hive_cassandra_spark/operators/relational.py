@@ -21,21 +21,6 @@ def top_k(df: DataFrame, order_cols: list, k: int) -> DataFrame:
     return df.orderBy(*order_cols).limit(k)
 
 
-def top_k_per_group(
-    df: DataFrame, group_cols: list[str], order_cols: list, k: int, rank_name: str = "rn"
-) -> DataFrame:
-    """Top-K per group via row_number window: one shuffle on the group key.
-
-    (Hive 0.9 — the reference's engine — had no window functions at all;
-    this is part of the Spark superset, SURVEY.md §2.B "Windows".)
-    """
-    w = Window.partitionBy(*group_cols).orderBy(*order_cols)
-    return (
-        df.withColumn(rank_name, F.row_number().over(w))
-        .filter(F.col(rank_name) <= k)
-    )
-
-
 def broadcast_join(
     fact: DataFrame, dim: DataFrame, on, how: str = "inner"
 ) -> DataFrame:

@@ -275,8 +275,6 @@ def update_postings_index_occ(
     no-ops — the double-append corruption mode is structurally gone.
     Returns {docs_added, tokens_added, n, a, version, conflicts,
     already_applied}."""
-    import time as _time
-
     from hive_cassandra_spark import sink
 
     conflicts = 0
@@ -330,23 +328,7 @@ def update_postings_index_occ(
                 "already_applied": False,
             }
         conflicts += 1
-        if res["claim_pending"]:
-            # the occ_compact_store grace discipline: wait out a possibly
-            # LIVE claimant, sweep only once the claim outlives the
-            # grace. Claim age rides the pluggable backend (an
-            # object-store deployment has no local claim dir to stat).
-            while True:
-                if sink.store_version(path) > res["version"]:
-                    break
-                age = sink.OCC_CLAIM_BACKEND.claim_age_s(
-                    path, res["version"] + 1
-                )
-                if age == float("inf"):
-                    break
-                if age >= claim_grace_s:
-                    sink.occ_recover(path, min_age_s=claim_grace_s)
-                    break
-                _time.sleep(min(0.2, claim_grace_s - age))
+        sink.occ_wait_claim(path, res, claim_grace_s)
     raise RuntimeError(
         f"update_postings_index_occ: {max_retries} consecutive commit "
         f"conflicts on {path} — a writer is outpacing index maintenance"

@@ -9346,7 +9346,6 @@ def q185_occ_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob as _glob
     import hashlib
     import os
-    import re as _re
     import shutil
     import tempfile
 
@@ -9406,9 +9405,8 @@ def q185_occ_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     res = sink.occ_compact_store(spark, store)
     assert res["version"] == 5, res
     # after the vacuum only snapshot-version parts remain on disk
-    pat = _re.compile(r"part-occ-v(\d{9})-")
     vers = {
-        int(pat.search(os.path.basename(f)).group(1))
+        int(sink._PART_RE.search(os.path.basename(f)).group(1))
         for f in _glob.glob(os.path.join(store, "part-occ-v*.parquet"))
     }
     only_snapshot_parts = int(vers == {res["version"]})

@@ -27,6 +27,13 @@ streamed partition-by-partition, never collected.
 
 from __future__ import annotations
 
+import glob
+import os
+import re
+import shutil
+import time
+import uuid
+
 from pyspark.sql import Column, DataFrame, functions as F
 
 from hive_cassandra_spark.codecs import encode_col
@@ -240,8 +247,6 @@ def stream_to_cells(
         clk = clock_millis if clock_millis is not None else None
         cells = to_cells(batch_df, mapping, hive_types, clock_millis=clk)
         if clk is None:
-            import time
-
             ts = _next_lww_ts(last_ts["v"], int(time.time() * 1000))
             last_ts["v"] = ts
             cells = cells.withColumn("ts", F.lit(ts).cast("long"))
@@ -339,11 +344,6 @@ def compact_store(
     maintainer per store at a time. Returns
     {cells_in, cells_out, files_in, files_out}.
     """
-    import glob as _glob
-    import os
-    import shutil
-    import uuid
-
     from hive_cassandra_spark import datasource
 
     datasource.register(spark)
@@ -354,7 +354,7 @@ def compact_store(
     )
     extras = [c for c in ("ttl_s",) if c in cols]
     cells_in = cells.count()
-    files_in = len(_glob.glob(os.path.join(path, "*.parquet")))
+    files_in = len(glob.glob(os.path.join(path, "*.parquet")))
 
     flat = _compact_winners(
         cells, key, extras, drop_tombstones, now_millis, gc_grace_s,
@@ -370,7 +370,7 @@ def compact_store(
         .save(tmp_dir)
     )
     cells_out = spark.read.parquet(tmp_dir).count()
-    files_out = len(_glob.glob(os.path.join(tmp_dir, "*.parquet")))
+    files_out = len(glob.glob(os.path.join(tmp_dir, "*.parquet")))
     old_dir = f"{path.rstrip('/')}.old-{token}"
     os.rename(path, old_dir)
     os.rename(tmp_dir, path)
@@ -406,14 +406,10 @@ def recover_store(path: str) -> dict:
 
     Idempotent; returns {rolled_forward, dropped_partials, dropped_old}.
     """
-    import glob as _glob
-    import os
-    import shutil
-
     base = path.rstrip("/")
     rolled = dropped_partial = dropped_old = 0
-    compacting = sorted(_glob.glob(f"{base}.compacting-*"))
-    olds = sorted(_glob.glob(f"{base}.old-*"))
+    compacting = sorted(glob.glob(f"{base}.compacting-*"))
+    olds = sorted(glob.glob(f"{base}.old-*"))
     if not os.path.exists(base):
         # state 2: finish the interrupted swap with the newest complete
         # compaction output; its paired .old- dir is then obsolete
@@ -470,20 +466,14 @@ def vacuum_commit_log(spark, path: str, retain_after_batch: int) -> dict:
     compaction. Returns {files_in, files_out, cells_in, cells_out,
     watermark}.
     """
-    import glob as _glob
-    import os
-    import re as _re
-    import shutil as _shutil
-    import uuid as _uuid
-
     from hive_cassandra_spark import datasource
 
-    files = sorted(_glob.glob(os.path.join(path, "*.parquet")))
+    files = sorted(glob.glob(os.path.join(path, "*.parquet")))
     if not files:
         raise ValueError(f"no parquet files under {path}")
     ids: dict[str, int] = {}
     for f in files:
-        m = _re.search(datasource._BATCH_PART_RE, os.path.basename(f))
+        m = re.search(datasource._BATCH_PART_RE, os.path.basename(f))
         if m is None:
             raise ValueError(
                 f"{os.path.basename(f)}: vacuum needs a stream-written "
@@ -511,12 +501,12 @@ def vacuum_commit_log(spark, path: str, retain_after_batch: int) -> dict:
         F.col("w.ts").alias("ts"),
         *[F.col(f"w.{c}").alias(c) for c in extras],
     )
-    tmp = f"{path}.vacuum-{_uuid.uuid4().hex[:12]}"
+    tmp = f"{path}.vacuum-{uuid.uuid4().hex[:12]}"
     flat.write.mode("overwrite").parquet(tmp)
-    tok = _uuid.uuid4().hex
+    tok = uuid.uuid4().hex
     renamed: list[str] = []
     for i, part in enumerate(
-        sorted(_glob.glob(os.path.join(tmp, "*.parquet")))
+        sorted(glob.glob(os.path.join(tmp, "*.parquet")))
     ):
         dst = os.path.join(
             path, f"part-{tok}-b{cutoff:09d}-{i:05d}.parquet"
@@ -533,7 +523,7 @@ def vacuum_commit_log(spark, path: str, retain_after_batch: int) -> dict:
         fh.write(str(max(prev, cutoff)))
     for f in prefix:
         os.remove(f)
-    _shutil.rmtree(tmp, ignore_errors=True)
+    shutil.rmtree(tmp, ignore_errors=True)
     # footer-only row counts: no Spark read (a glob read here makes
     # FileStreamSink log a spurious metadata-probe stack trace)
     import pyarrow.parquet as _pq
@@ -548,17 +538,67 @@ def vacuum_commit_log(spark, path: str, retain_after_batch: int) -> dict:
     }
 
 
+# A published commit is one ``_occ-v%09d`` marker whose text is the
+# claimant's token, then optional ``snapshot`` and ``tag:<t>`` lines,
+# then the part counts it committed: ``files:<n>`` for a flat cell store,
+# ``files:<table>=<k>`` per table of a multi-table artifact. Parts land
+# under names this regex parses back to their version.
+_PART_RE = re.compile(r"part-occ-v(\d{9})-\d{5}-[0-9a-f]+\.parquet$")
+
+
+def _occ_log(path: str) -> dict:
+    """The OCC log of a store: ``{version: {snapshot, tag, files}}`` for
+    every published marker, ``files`` mapping table (None = the flat
+    cell store) to the part count the commit recorded. The ONE place
+    markers are listed and parsed: head version, tags, the visible set,
+    snapshot floors, pinned-read checks and vacuum retention all derive
+    from a single call, so a read resolves its snapshot from one listing
+    (Delta's log-snapshot rule) and a commit that publishes mid-read is
+    wholly seen or wholly unseen. A marker that vanishes between the
+    listing and its read is skipped."""
+    log = {}
+    for m in glob.glob(os.path.join(path, "_occ-v*")):
+        try:
+            with open(m) as fh:
+                lines = fh.read().splitlines()[1:]
+        except OSError:
+            continue
+        tag, files = None, {}
+        for ln in lines:
+            if ln.startswith("tag:"):
+                tag = ln[4:]
+            elif ln.startswith("files:"):
+                table, eq, n = ln[6:].rpartition("=")
+                files.setdefault(table if eq else None, int(n))
+        log[int(os.path.basename(m)[6:])] = {
+            "snapshot": lines[:1] == ["snapshot"], "tag": tag, "files": files,
+        }
+    return log
+
+
+def _occ_floor(log: dict, cap: int | None = None) -> int:
+    """Highest snapshot version in ``log`` (0 = none): versions below it
+    are superseded — invisible to latest reads, droppable by
+    ``occ_vacuum``. ``cap`` bounds it to snapshots at or below a pinned
+    version (a compaction published AFTER the pin must not supersede the
+    pin's history)."""
+    return max(
+        (v for v, e in log.items()
+         if e["snapshot"] and (cap is None or v <= cap)),
+        default=0,
+    )
+
+
+def _occ_dir(root: str, table: str | None) -> str:
+    """Directory holding ``table``'s parts (None = the flat store root)."""
+    return root if table is None else os.path.join(root, table)
+
+
 def store_version(path: str) -> int:
     """Current committed version of an OCC-managed store: the highest
     PUBLISHED ``_occ-v%09d`` marker (0 = never committed). Markers are
     underscore-prefixed so every parquet reader ignores them."""
-    import glob as _glob
-    import os
-
-    marks = _glob.glob(os.path.join(path, "_occ-v*"))
-    if not marks:
-        return 0
-    return max(int(os.path.basename(m)[6:]) for m in marks)
+    return max(_occ_log(path), default=0)
 
 
 class LocalFSClaimBackend:
@@ -579,16 +619,21 @@ class LocalFSClaimBackend:
       DynamoDB ``attribute_not_exists`` put works the same.
     - ``publish(path, version, content)`` makes the version marker
       visible atomically (readers either see the whole marker or no
-      marker). Only the claim winner may call it. The marker MUST land
-      at ``<path>/_occ-v%09d`` on the same filesystem abstraction that
-      serves ``path``'s data files — ``store_version`` / ``occ_read*``
-      / ``store_tags`` list markers there directly, so a backend that
-      publishes markers elsewhere (e.g. only into a lock table) would
-      leave readers blind to committed versions and recovery would
-      sweep LIVE commits. On S3 that filesystem IS the bucket (an
-      s3fs/fsspec mount or the committer's S3 client — a single-object
-      PUT is atomic, which is all publish needs); the claim atomics are
-      what S3 LACKS, and they are the part a backend replaces.
+      marker). Only the claim winner may call it. Local: the content is
+      written to a dot-prefixed ``.occ-staging-*`` temp file in ``path``
+      (invisible to the marker listing and to parquet readers; a crash
+      leaves it for ``occ_recover`` to sweep) and ``os.replace``d onto
+      the marker. The marker MUST land at ``<path>/_occ-v%09d`` on the
+      same filesystem abstraction that serves ``path``'s data files —
+      the one log reader (``_occ_log``, behind ``store_version``,
+      ``store_tags`` and ``occ_read*``) lists markers there directly, so
+      a backend that publishes markers elsewhere (e.g. only into a lock
+      table) would leave readers blind to committed versions and
+      recovery would sweep LIVE commits. On S3 that filesystem IS the
+      bucket (an s3fs/fsspec mount or the committer's S3 client — a
+      single-object PUT is atomic, which is all publish needs); the
+      claim atomics are what S3 LACKS, and they are the part a backend
+      replaces.
     - ``claim_token / pending_claims / claim_age_s / abandon`` serve
       ``occ_recover``: enumerate claims with no published marker, age
       them (a conditional-PUT backend uses the object's Last-Modified),
@@ -599,8 +644,6 @@ class LocalFSClaimBackend:
     only supplies the two atomics and claim bookkeeping."""
 
     def claim(self, path: str, version: int, token: str) -> bool:
-        import os
-
         claim = os.path.join(path, f"_occ-claim-{version:09d}")
         try:
             os.mkdir(claim)  # the atom: exactly one winner per version
@@ -611,14 +654,14 @@ class LocalFSClaimBackend:
         return True
 
     def publish(self, path: str, version: int, content: str) -> None:
-        import os
-
-        with open(os.path.join(path, f"_occ-v{version:09d}"), "w") as fh:
+        tmp = os.path.join(
+            path, f".occ-staging-{version:09d}-{uuid.uuid4().hex[:8]}.marker"
+        )
+        with open(tmp, "w") as fh:
             fh.write(content)
+        os.replace(tmp, os.path.join(path, f"_occ-v{version:09d}"))
 
     def claim_token(self, path: str, version: int) -> str:
-        import os
-
         tok_file = os.path.join(
             path, f"_occ-claim-{version:09d}", "token"
         )
@@ -627,29 +670,20 @@ class LocalFSClaimBackend:
         return ""
 
     def pending_claims(self, path: str) -> list[int]:
-        import glob as _glob
-        import os
-
         return sorted(
             int(os.path.basename(c)[11:])
-            for c in _glob.glob(os.path.join(path, "_occ-claim-*"))
+            for c in glob.glob(os.path.join(path, "_occ-claim-*"))
         )
 
     def claim_age_s(self, path: str, version: int) -> float:
-        import os
-        import time as _time
-
         try:
-            return _time.time() - os.path.getmtime(
+            return time.time() - os.path.getmtime(
                 os.path.join(path, f"_occ-claim-{version:09d}")
             )
         except OSError:
             return float("inf")  # claim vanished: nothing to protect
 
     def abandon(self, path: str, version: int) -> None:
-        import os
-        import shutil
-
         shutil.rmtree(
             os.path.join(path, f"_occ-claim-{version:09d}"),
             ignore_errors=True,
@@ -678,6 +712,109 @@ def _parquet_num_rows(path: str) -> int:
     return pq.ParquetFile(path).metadata.num_rows
 
 
+def _occ_commit(
+    path: str,
+    tables: dict,
+    expected_version: int,
+    snapshot: bool,
+    tag: str | None = None,
+) -> dict:
+    """The one commit routine behind ``occ_commit`` (``tables`` =
+    ``{None: cells}``, parts at the store root) and
+    ``occ_commit_tables`` (one subdir per table): version check, stage,
+    claim, move the staged parts in, publish ONE marker. Returns
+    {committed, version, conflict, claim_pending, files}."""
+    os.makedirs(path, exist_ok=True)
+    cur = store_version(path)
+    if cur != expected_version:
+        return {
+            "committed": False, "version": cur, "conflict": True,
+            "claim_pending": False, "files": 0,
+        }
+    v = cur + 1
+    token = uuid.uuid4().hex[:8]
+    staging = os.path.join(path, f".occ-staging-{v:09d}-{token}")
+
+    # stage the tables as CONCURRENT write jobs (a small driver-side
+    # thread pool): the per-table writes are independent, and Spark's
+    # scheduler back-fills executors freed by one job's straggler tail
+    # with the next job's tasks — serially, a 5-table IVF-PQ commit
+    # paid 5 full job latencies for mostly-small tables. FIFO
+    # scheduling keeps the first job's resource priority; atomicity is
+    # untouched (nothing publishes until every staged write returned).
+    def _stage(item):
+        tname, df = item
+        df.write.mode("overwrite").parquet(_occ_dir(staging, tname))
+
+    if len(tables) > 1:
+        from concurrent.futures import ThreadPoolExecutor
+
+        with ThreadPoolExecutor(
+            max_workers=min(3, len(tables))
+        ) as pool:
+            list(pool.map(_stage, tables.items()))
+    else:
+        for item in tables.items():
+            _stage(item)
+    # the claim/publish atomics ride the pluggable backend (the
+    # deployment seam — LocalFSClaimBackend documents the contract)
+    if not OCC_CLAIM_BACKEND.claim(path, v, token):
+        shutil.rmtree(staging, ignore_errors=True)
+        # distinguish a live racing writer (its marker will appear and
+        # the version will advance) from a DEAD claim (no marker ever):
+        # a caller that only refresh-and-retries would spin forever on
+        # the latter — claim_pending tells it to occ_wait_claim first
+        log = _occ_log(path)
+        return {
+            "committed": False, "version": max(log, default=0),
+            "conflict": True, "claim_pending": v not in log, "files": 0,
+        }
+    lines = [token]
+    if snapshot:
+        lines.append("snapshot")
+    if tag:
+        lines.append(f"tag:{tag}")
+    n = 0
+    for tname in tables:
+        dst = _occ_dir(path, tname)
+        os.makedirs(dst, exist_ok=True)
+        k = 0
+        for f in sorted(
+            glob.glob(os.path.join(_occ_dir(staging, tname), "*.parquet"))
+        ):
+            # drop zero-row parts instead of committing them: Spark
+            # writes one empty part file even for an empty DataFrame,
+            # and a streaming pipeline committing many empty micro-batch
+            # deltas would accumulate junk files that every later read
+            # must list and open. The marker then records the truthful
+            # count 0, which is what lets a pinned as-of read tell "this
+            # version was legitimately empty" from "its parts were
+            # vacuumed".
+            if _parquet_num_rows(f) == 0:
+                os.remove(f)
+                continue
+            os.rename(
+                f,
+                os.path.join(
+                    dst, f"part-occ-v{v:09d}-{k:05d}-{token}.parquet"
+                ),
+            )
+            k += 1
+        n += k
+        # the recorded part counts let an as-of read tell "this version
+        # committed parts that were later vacuumed" (fail closed) from
+        # "nothing to see" — markers are the only durable record once
+        # parts are gone; a version that never carried table T stays a
+        # legitimate no-op for T
+        lines.append(f"files:{k}" if tname is None else f"files:{tname}={k}")
+    shutil.rmtree(staging, ignore_errors=True)
+    OCC_CLAIM_BACKEND.publish(path, v, "\n".join(lines))
+    return {
+        "committed": True, "version": v, "conflict": False,
+        "claim_pending": False, "files": n,
+    }
+
+
 def occ_commit(
     spark, path: str, cells, expected_version: int, snapshot: bool = False,
 ) -> dict:
@@ -700,9 +837,12 @@ def occ_commit(
        cleans its staging and reports the conflict with the fresh
        version so the caller can re-derive and retry;
     3. move the staged files in under version-stamped names
-       (``part-occ-v%09d-*``), then PUBLISH with the ``_occ-v%09d``
-       marker file — ``store_version`` counts only published markers,
-       so a torn commit is never observed as the current VERSION.
+       (``part-occ-v%09d-*``), then PUBLISH the ``_occ-v%09d`` marker
+       (``token``, optional ``snapshot``, ``files:<n>``) — atomically:
+       the marker appears whole or not at all. Every reader resolves
+       the store from the published markers through one log listing
+       (``_occ_log``), so a torn commit is never observed as the
+       current VERSION.
 
     Torn-commit isolation applies to ``store_version`` and to readers
     that go through ``occ_read`` (which lists only part files whose
@@ -728,74 +868,12 @@ def occ_commit(
     failed against a claim that has NO published marker gets
     ``claim_pending=True`` in its result: the claimant is either still
     in flight or dead, and a refresh-and-retry loop alone will spin
-    forever on a dead claim — the caller should invoke ``occ_recover``
-    (single-maintainer contract) before retrying. Returns
+    forever on a dead claim — the caller should wait it out with
+    ``occ_wait_claim`` (which runs ``occ_recover`` once the claim
+    outlives a grace) before retrying. Returns
     {committed, version, conflict, claim_pending, files}.
     """
-    import glob as _glob
-    import os
-    import shutil
-    import uuid
-
-    os.makedirs(path, exist_ok=True)
-    cur = store_version(path)
-    if cur != expected_version:
-        return {
-            "committed": False, "version": cur, "conflict": True,
-            "claim_pending": False, "files": 0,
-        }
-    v = cur + 1
-    token = uuid.uuid4().hex[:8]
-    staging = os.path.join(path, f".occ-staging-{v:09d}-{token}")
-    cells.write.mode("overwrite").parquet(staging)
-    # the claim/publish atomics ride the pluggable backend (the
-    # deployment seam — LocalFSClaimBackend documents the contract)
-    if not OCC_CLAIM_BACKEND.claim(path, v, token):
-        shutil.rmtree(staging, ignore_errors=True)
-        # distinguish a live racing writer (its marker will appear and
-        # store_version will advance) from a DEAD claim (no marker ever):
-        # a caller that only refresh-and-retries would spin forever on
-        # the latter — claim_pending tells it to run occ_recover first
-        return {
-            "committed": False,
-            "version": store_version(path),
-            "conflict": True,
-            "claim_pending": not os.path.exists(
-                os.path.join(path, f"_occ-v{v:09d}")
-            ),
-            "files": 0,
-        }
-    n = 0
-    for f in sorted(_glob.glob(os.path.join(staging, "*.parquet"))):
-        # drop zero-row parts instead of committing them: Spark writes
-        # one empty part file even for an empty DataFrame, and a
-        # streaming pipeline committing many empty micro-batch deltas
-        # would accumulate junk files that every later read must list
-        # and open. The marker then records the truthful files:0, which
-        # is what lets a pinned as-of read distinguish "this version
-        # was legitimately empty" from "its parts were vacuumed".
-        if _parquet_num_rows(f) == 0:
-            os.remove(f)
-            continue
-        os.rename(
-            f,
-            os.path.join(
-                path, f"part-occ-v{v:09d}-{n:05d}-{token}.parquet"
-            ),
-        )
-        n += 1
-    shutil.rmtree(staging, ignore_errors=True)
-    # files:<n> lets an as-of read distinguish "this version committed
-    # parts that were later vacuumed" (fail closed) from "nothing to
-    # see" — markers are the only durable record once parts are gone
-    OCC_CLAIM_BACKEND.publish(
-        path, v,
-        token + ("\nsnapshot" if snapshot else "") + f"\nfiles:{n}",
-    )
-    return {
-        "committed": True, "version": v, "conflict": False,
-        "claim_pending": False, "files": n,
-    }
+    return _occ_commit(path, {None: cells}, expected_version, snapshot)
 
 
 def occ_commit_tables(
@@ -824,210 +902,87 @@ def occ_commit_tables(
     delta can detect it already published (``store_tags``) instead of
     double-applying. Same conflict/claim_pending contract as
     ``occ_commit``."""
-    import glob as _glob
-    import os
-    import shutil
-    import uuid
-
-    os.makedirs(path, exist_ok=True)
-    cur = store_version(path)
-    if cur != expected_version:
-        return {
-            "committed": False, "version": cur, "conflict": True,
-            "claim_pending": False, "files": 0,
-        }
-    v = cur + 1
-    token = uuid.uuid4().hex[:8]
-    staging = os.path.join(path, f".occ-staging-{v:09d}-{token}")
-
-    # stage the tables as CONCURRENT write jobs (a small driver-side
-    # thread pool): the per-table writes are independent, and Spark's
-    # scheduler back-fills executors freed by one job's straggler tail
-    # with the next job's tasks — serially, a 5-table IVF-PQ commit
-    # paid 5 full job latencies for mostly-small tables. FIFO
-    # scheduling keeps the first job's resource priority; atomicity is
-    # untouched (nothing publishes until every staged write returned).
-    def _stage(item):
-        tname, df = item
-        df.write.mode("overwrite").parquet(os.path.join(staging, tname))
-
-    if len(tables) > 1:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(
-            max_workers=min(3, len(tables))
-        ) as pool:
-            list(pool.map(_stage, tables.items()))
-    else:
-        for item in tables.items():
-            _stage(item)
-    if not OCC_CLAIM_BACKEND.claim(path, v, token):
-        shutil.rmtree(staging, ignore_errors=True)
-        return {
-            "committed": False,
-            "version": store_version(path),
-            "conflict": True,
-            "claim_pending": not os.path.exists(
-                os.path.join(path, f"_occ-v{v:09d}")
-            ),
-            "files": 0,
-        }
-    n = 0
-    per_table: dict[str, int] = {}
-    for tname in tables:
-        os.makedirs(os.path.join(path, tname), exist_ok=True)
-        k = 0
-        for f in sorted(
-            _glob.glob(os.path.join(staging, tname, "*.parquet"))
-        ):
-            if _parquet_num_rows(f) == 0:  # see occ_commit: no junk parts
-                os.remove(f)
-                continue
-            os.rename(
-                f,
-                os.path.join(
-                    path, tname,
-                    f"part-occ-v{v:09d}-{k:05d}-{token}.parquet",
-                ),
-            )
-            k += 1
-            n += 1
-        per_table[tname] = k
-    shutil.rmtree(staging, ignore_errors=True)
-    lines = [token]
-    if snapshot:
-        lines.append("snapshot")
-    if tag:
-        lines.append(f"tag:{tag}")
-    # files:<table>=<k> per table: an as-of read of table T fails closed
-    # when a visible version RECORDED parts for T that are now missing
-    # (vacuumed history), while a version that never carried T stays a
-    # legitimate no-op for that table
-    for tname, k in per_table.items():
-        lines.append(f"files:{tname}={k}")
-    OCC_CLAIM_BACKEND.publish(path, v, "\n".join(lines))
-    return {
-        "committed": True, "version": v, "conflict": False,
-        "claim_pending": False, "files": n,
-    }
+    return _occ_commit(path, tables, expected_version, snapshot, tag)
 
 
 def store_tags(path: str) -> dict:
     """{version: tag} for every published marker that carries one —
     lets a retried delta job detect its batch already landed."""
-    import glob as _glob
-    import os
-
-    out = {}
-    for m in _glob.glob(os.path.join(path, "_occ-v*")):
-        try:
-            with open(m) as fh:
-                lines = fh.read().splitlines()
-        except OSError:
-            continue
-        for ln in lines[1:]:
-            if ln.startswith("tag:"):
-                out[int(os.path.basename(m)[6:])] = ln[4:]
-    return out
-
-
-def _occ_visible_versions(path: str, as_of_version: int | None) -> set:
-    """Published versions visible to a read: all of them for a latest
-    read, only ``(floor-at-N, N]`` for an as-of read — where the floor
-    is the highest published SNAPSHOT at or below the pin, so a
-    compaction that lands AFTER the pinned version cannot rewrite
-    history out from under it (Delta/Iceberg time-travel semantics).
-    Raises ValueError on a pin that was never published: pinning a run
-    to a version that doesn't exist is a caller bug, not an empty
-    read."""
-    import glob as _glob
-    import os
-
-    published = {
-        int(os.path.basename(m)[6:])
-        for m in _glob.glob(os.path.join(path, "_occ-v*"))
+    return {
+        v: e["tag"] for v, e in _occ_log(path).items() if e["tag"] is not None
     }
+
+
+def _occ_visible_versions(
+    log: dict, path: str, as_of_version: int | None
+) -> set:
+    """Published versions visible to a read: all of them at or above the
+    snapshot floor for a latest read, only ``(floor-at-N, N]`` for an
+    as-of read — where the floor is the highest published SNAPSHOT at or
+    below the pin, so a compaction that lands AFTER the pinned version
+    cannot rewrite history out from under it (Delta/Iceberg time-travel
+    semantics). Raises ValueError on a pin that was never published:
+    pinning a run to a version that doesn't exist is a caller bug, not
+    an empty read."""
     if as_of_version is None:
-        return {v for v in published if v >= _occ_snapshot_floor(path)}
-    if as_of_version not in published:
+        floor = _occ_floor(log)
+        return {v for v in log if v >= floor}
+    if as_of_version not in log:
         raise ValueError(
             f"as_of_version={as_of_version} was never published under "
-            f"{path} (published: {sorted(published)}) — cannot pin a "
+            f"{path} (published: {sorted(log)}) — cannot pin a "
             "read to a version that does not exist"
         )
-    floor = _occ_snapshot_floor(path, cap=as_of_version)
-    return {v for v in published if floor <= v <= as_of_version}
+    floor = _occ_floor(log, cap=as_of_version)
+    return {v for v in log if floor <= v <= as_of_version}
 
 
-def _occ_marker_files(path: str, version: int, table: str | None) -> int | None:
-    """Part-file count the version's marker RECORDED at commit time for
-    ``table`` (None = the flat cell-store count) — the durable evidence
-    an as-of read checks against once parts may have been vacuumed.
-    Returns None when the marker predates the files: lines (pre-round-12
-    stores) or never recorded this table."""
-    import os
+def _occ_visible_parts(
+    path: str, table: str | None, as_of_version: int | None
+) -> tuple:
+    """The visible-part lister behind ``occ_read`` (``table=None``) and
+    ``occ_read_table``: ONE log listing resolves the visible versions,
+    one listing of the table's ``part-occ-v*`` files groups the visible
+    versions' parts (in name order). Returns (log, visible,
+    {version: [part, ...]}, every part listed — visible or not).
 
-    try:
-        with open(os.path.join(path, f"_occ-v{version:09d}")) as fh:
-            lines = fh.read().splitlines()
-    except OSError:
-        return None
-    want = "files:" if table is None else f"files:{table}="
-    for ln in lines[1:]:
-        if ln.startswith("files:") and table is None and "=" not in ln:
-            return int(ln[6:])
-        if table is not None and ln.startswith(want):
-            return int(ln[len(want):])
-    return None
-
-
-def _occ_check_pinned_complete(
-    path: str,
-    visible: set,
-    counts: dict,
-    as_of_version: int | None,
-    table: str | None,
-) -> None:
-    """Fail closed when a PINNED read's visible range is only partially
-    on disk: a version whose marker recorded parts (for this table) that
+    A PINNED read whose visible range is only partially on disk fails
+    closed: a version whose marker recorded parts (for this table) that
     are now gone was vacuumed — serving the surviving suffix as "the
     state at vN" would be silently wrong history, the one thing a
-    reproducibility pin exists to prevent.
-
-    ``counts`` maps version -> number of part files actually on disk;
-    EVERY visible version is compared against the part count its marker
-    durably recorded (``files:``/``files:<table>=`` lines), not just the
-    fully-absent ones — a version that lost SOME part files to
-    out-of-band deletion or a partial copy/restore is the same wrong
-    history as one that lost all of them. Versions whose marker predates
-    the ``files:`` records (``None``) fall back to the old
-    presence-only semantics (unknowable, so not flagged)."""
-    if as_of_version is None:
-        return
-    for v in sorted(visible):
-        recorded = _occ_marker_files(path, v, table)
-        actual = counts.get(v, 0)
-        if recorded and actual < recorded:
-            raise FileNotFoundError(
-                f"as_of_version={as_of_version}: version {v} committed "
-                f"{recorded} part file(s)"
-                + (f" for table '{table}'" if table else "")
-                + f" under {path} but only {actual} remain on disk — "
-                "the pinned history was vacuumed (occ_vacuum retention "
-                "window passed) or externally damaged; refusing to "
-                "serve partial state"
-            )
-
-
-def _occ_pinned_all_empty(path: str, visible: set, table: str | None) -> bool:
-    """True when EVERY visible version's marker explicitly records 0
-    part files (an empty-DataFrame commit writes ``files:0``): the
-    pinned state is provably an empty store, not vacuumed history.
-    ``None`` (pre-``files:``-record marker) is unknowable and returns
-    False — fail closed."""
-    return all(
-        _occ_marker_files(path, v, table) == 0 for v in sorted(visible)
+    reproducibility pin exists to prevent. EVERY visible version is
+    compared against the part count its marker durably recorded
+    (``files:``/``files:<table>=`` lines), not just the fully-absent
+    ones — a version that lost SOME part files to out-of-band deletion
+    or a partial copy/restore is the same wrong history as one that
+    lost all of them. Versions whose marker predates the ``files:``
+    records fall back to presence-only semantics (unknowable, so not
+    flagged)."""
+    log = _occ_log(path)
+    visible = _occ_visible_versions(log, path, as_of_version)
+    parts = sorted(
+        glob.glob(os.path.join(_occ_dir(path, table), "part-occ-v*.parquet"))
     )
+    by_version: dict = {}
+    for f in parts:
+        m = _PART_RE.search(os.path.basename(f))
+        if m and int(m.group(1)) in visible:
+            by_version.setdefault(int(m.group(1)), []).append(f)
+    if as_of_version is not None:
+        for v in sorted(visible):
+            recorded = log[v]["files"].get(table)
+            actual = len(by_version.get(v, ()))
+            if recorded and actual < recorded:
+                raise FileNotFoundError(
+                    f"as_of_version={as_of_version}: version {v} committed "
+                    f"{recorded} part file(s)"
+                    + (f" for table '{table}'" if table else "")
+                    + f" under {path} but only {actual} remain on disk — "
+                    "the pinned history was vacuumed (occ_vacuum retention "
+                    "window passed) or externally damaged; refusing to "
+                    "serve partial state"
+                )
+    return log, visible, by_version, parts
 
 
 def occ_read_table(
@@ -1051,26 +1006,7 @@ def occ_read_table(
     empty index — for an as-of read that includes a pin whose parts
     ``occ_vacuum`` already dropped (history physically gone, same as
     time-travel past a Delta VACUUM)."""
-    import glob as _glob
-    import os
-    import re as _re
-
-    visible = _occ_visible_versions(path, as_of_version)
-    pat = _re.compile(r"part-occ-v(\d{9})-\d{5}-[0-9a-f]+\.parquet$")
-    by_version: dict = {}
-    for f in sorted(
-        _glob.glob(os.path.join(path, table, "part-occ-v*.parquet"))
-    ):
-        m = pat.search(os.path.basename(f))
-        if m and int(m.group(1)) in visible:
-            by_version.setdefault(int(m.group(1)), []).append(f)
-    _occ_check_pinned_complete(
-        path,
-        visible,
-        {v: len(fs) for v, fs in by_version.items()},
-        as_of_version,
-        table,
-    )
+    _, _, by_version, _ = _occ_visible_parts(path, table, as_of_version)
     if not by_version:
         raise FileNotFoundError(
             f"no committed parts for table '{table}' under {path}"
@@ -1087,30 +1023,6 @@ def occ_read_table(
     else:
         files = [f for fs in by_version.values() for f in fs]
     return spark.read.parquet(*files)
-
-
-def _occ_snapshot_floor(path: str, cap: int | None = None) -> int:
-    """Highest published snapshot version (0 = none): versions below it
-    are superseded — invisible to ``occ_read``, droppable by
-    ``occ_vacuum``. ``cap`` bounds the scan to snapshots at or below a
-    pinned version (the as-of-read floor: a compaction published AFTER
-    the pin must not supersede the pin's history)."""
-    import glob as _glob
-    import os
-
-    floor = 0
-    for m in _glob.glob(os.path.join(path, "_occ-v*")):
-        v = int(os.path.basename(m)[6:])
-        if cap is not None and v > cap:
-            continue
-        try:
-            with open(m) as fh:
-                lines = fh.read().splitlines()
-        except OSError:
-            continue
-        if len(lines) > 1 and lines[1] == "snapshot":
-            floor = max(floor, v)
-    return floor
 
 
 def occ_read(
@@ -1137,59 +1049,47 @@ def occ_read(
     store whose cells carry ``sub_column_name`` / ``ttl_s`` would read
     back 4-column when empty and diverge from the non-empty case in
     downstream unions and compaction key derivation."""
-    import glob as _glob
-    import os
-    import re as _re
-
-    visible = _occ_visible_versions(path, as_of_version)
-    pat = _re.compile(r"part-occ-v(\d{9})-\d{5}-[0-9a-f]+\.parquet$")
-    files = []
-    counts: dict = {}
-    all_parts = sorted(_glob.glob(os.path.join(path, "part-occ-v*.parquet")))
-    for f in all_parts:
-        m = pat.search(os.path.basename(f))
-        if m and int(m.group(1)) in visible:
-            files.append(f)
-            v = int(m.group(1))
-            counts[v] = counts.get(v, 0) + 1
-    _occ_check_pinned_complete(path, visible, counts, as_of_version, None)
-    if not files:
-        if as_of_version is not None and not _occ_pinned_all_empty(
-            path, visible, None
-        ):
-            # a published pin with no visible parts — and at least one
-            # visible marker that recorded parts or predates the
-            # files: records — means occ_vacuum already dropped the
-            # pinned history: fail closed like occ_read_table, never
-            # silently serve an empty store as "the state at vN".
-            # When EVERY visible marker explicitly records files:0
-            # (empty-DataFrame commits), the pinned state genuinely IS
-            # an empty store, and it serves through the same
-            # empty-schema path the latest read uses.
-            raise FileNotFoundError(
-                f"no parts visible as of version {as_of_version} under "
-                f"{path} — the pinned history was vacuumed"
-            )
-        if empty_schema is not None:
-            return spark.createDataFrame([], empty_schema)
-        if all_parts:
-            # no visible version, but the store HAS a cell shape — take
-            # the schema from any part footer (metadata-only read)
-            return spark.read.parquet(all_parts[-1]).limit(0)
-        from pyspark.sql import types as T
-
-        return spark.createDataFrame(
-            [],
-            T.StructType(
-                [
-                    T.StructField("row_key", T.BinaryType()),
-                    T.StructField("column_name", T.BinaryType()),
-                    T.StructField("value", T.BinaryType()),
-                    T.StructField("ts", T.LongType()),
-                ]
-            ),
+    log, visible, by_version, parts = _occ_visible_parts(
+        path, None, as_of_version
+    )
+    if by_version:
+        return spark.read.parquet(
+            *(f for fs in by_version.values() for f in fs)
         )
-    return spark.read.parquet(*files)
+    if as_of_version is not None and not all(
+        log[v]["files"].get(None) == 0 for v in visible
+    ):
+        # a published pin with no visible parts — and at least one
+        # visible marker that recorded parts or predates the files:
+        # records — means occ_vacuum already dropped the pinned
+        # history: fail closed like occ_read_table, never silently
+        # serve an empty store as "the state at vN". When EVERY visible
+        # marker explicitly records files:0 (empty-DataFrame commits),
+        # the pinned state genuinely IS an empty store, and it serves
+        # through the same empty-schema path the latest read uses.
+        raise FileNotFoundError(
+            f"no parts visible as of version {as_of_version} under "
+            f"{path} — the pinned history was vacuumed"
+        )
+    if empty_schema is not None:
+        return spark.createDataFrame([], empty_schema)
+    if parts:
+        # no visible version, but the store HAS a cell shape — take
+        # the schema from any part footer (metadata-only read)
+        return spark.read.parquet(parts[-1]).limit(0)
+    from pyspark.sql import types as T
+
+    return spark.createDataFrame(
+        [],
+        T.StructType(
+            [
+                T.StructField("row_key", T.BinaryType()),
+                T.StructField("column_name", T.BinaryType()),
+                T.StructField("value", T.BinaryType()),
+                T.StructField("ts", T.LongType()),
+            ]
+        ),
+    )
 
 
 def occ_recover(path: str, min_age_s: float = 0.0) -> dict:
@@ -1197,8 +1097,8 @@ def occ_recover(path: str, min_age_s: float = 0.0) -> dict:
     published marker is a torn commit — drop its token-matched part
     files and the claim itself so the version becomes claimable again
     (the in-flight writer is presumed dead; the ``recover_store``
-    single-maintainer contract). Leftover staging dirs sweep
-    unconditionally (they were never visible). Idempotent.
+    single-maintainer contract). Leftover staging dirs and marker temp
+    files sweep unconditionally (they were never visible). Idempotent.
 
     ``min_age_s`` age-gates the sweep: a claim younger than it is left
     alone (counted in ``skipped_young``). "No marker at conflict time"
@@ -1206,21 +1106,24 @@ def occ_recover(path: str, min_age_s: float = 0.0) -> dict:
     that state between its mkdir claim and its marker publish, and
     sweeping it would delete its claim and already-renamed parts, so its
     eventually-published marker would name a version with silently
-    missing files. Automated maintenance (``occ_compact_store``) passes
+    missing files. Automated maintenance (``occ_wait_claim``) passes
     a grace period; a human-invoked recovery after a known crash may
     keep the 0 default. Returns {dropped_claims, dropped_parts,
     dropped_staging, skipped_young}."""
-    import glob as _glob
-    import os
-    import shutil
-
     dropped_claims = dropped_parts = dropped_staging = 0
     skipped_young = 0
-    for stg in _glob.glob(os.path.join(path, ".occ-staging-*")):
-        shutil.rmtree(stg, ignore_errors=True)
+    for stg in glob.glob(os.path.join(path, ".occ-staging-*")):
+        if os.path.isdir(stg):
+            shutil.rmtree(stg, ignore_errors=True)
+        else:  # a marker temp file a crashed publish left behind
+            os.remove(stg)
         dropped_staging += 1
-    for v in OCC_CLAIM_BACKEND.pending_claims(path):
-        if os.path.exists(os.path.join(path, f"_occ-v{v:09d}")):
+    # list the log AFTER the claims: every claimant that published
+    # before this listing is seen as published
+    pending = OCC_CLAIM_BACKEND.pending_claims(path)
+    published = _occ_log(path)
+    for v in pending:
+        if v in published:
             continue  # published — the claim is the permanent winner record
         if OCC_CLAIM_BACKEND.claim_age_s(path, v) < min_age_s:
             skipped_young += 1
@@ -1235,7 +1138,7 @@ def occ_recover(path: str, min_age_s: float = 0.0) -> dict:
                     path, "*", f"part-occ-v{v:09d}-*-{token}.parquet"
                 ),
             ):
-                for f in _glob.glob(pattern):
+                for f in glob.glob(pattern):
                     os.remove(f)
                     dropped_parts += 1
         OCC_CLAIM_BACKEND.abandon(path, v)
@@ -1246,6 +1149,30 @@ def occ_recover(path: str, min_age_s: float = 0.0) -> dict:
         "dropped_staging": dropped_staging,
         "skipped_young": skipped_young,
     }
+
+
+def occ_wait_claim(path: str, res: dict, claim_grace_s: float) -> None:
+    """The conflict wait every OCC retry loop runs after a lost commit
+    ``res``: a no-op unless ``res["claim_pending"]``. A pending claim
+    (claim without marker) is AMBIGUOUS — a live writer sits in exactly
+    that state between its claim and its publish, indistinguishable from
+    a dead claimant at conflict time — so this polls for the version to
+    advance (a LIVE claimant publishing turns the wait into an ordinary
+    refresh-and-retry) until the claim is ``claim_grace_s`` old, and only
+    then sweeps it with ``occ_recover(min_age_s=claim_grace_s)``. Claim
+    age comes from the pluggable backend, never a local getmtime: under
+    an object-store backend there IS no local claim dir, and bypassing
+    the seam would break recovery."""
+    if not res["claim_pending"]:
+        return
+    while store_version(path) <= res["version"]:
+        age = OCC_CLAIM_BACKEND.claim_age_s(path, res["version"] + 1)
+        if age == float("inf"):
+            return  # claim gone (recovered elsewhere / published)
+        if age >= claim_grace_s:
+            occ_recover(path, min_age_s=claim_grace_s)
+            return
+        time.sleep(min(0.2, claim_grace_s - age))
 
 
 def occ_vacuum(path: str, retain_versions: int = 0) -> dict:
@@ -1264,31 +1191,20 @@ def occ_vacuum(path: str, retain_versions: int = 0) -> dict:
     drops them for good. Default 0 = reclaim everything below the
     floor, the pre-round-12 behavior every maintenance pass uses.
     Returns {dropped_parts, floor, retained_versions}."""
-    import glob as _glob
-    import os
-    import re as _re
-
-    floor = _occ_snapshot_floor(path)
+    log = _occ_log(path)
+    floor = _occ_floor(log)
     dropped = 0
     retained: set[int] = set()
     if floor:
-        pat = _re.compile(r"part-occ-v(\d{9})-\d{5}-[0-9a-f]+\.parquet$")
         if retain_versions > 0:
-            superseded = sorted(
-                v
-                for v in {
-                    int(os.path.basename(m)[6:])
-                    for m in _glob.glob(os.path.join(path, "_occ-v*"))
-                }
-                if v < floor
-            )
+            superseded = sorted(v for v in log if v < floor)
             retained = set(superseded[-retain_versions:])
         for pattern in (
             os.path.join(path, "part-occ-v*.parquet"),
             os.path.join(path, "*", "part-occ-v*.parquet"),
         ):
-            for f in _glob.glob(pattern):
-                m = pat.search(os.path.basename(f))
+            for f in glob.glob(pattern):
+                m = _PART_RE.search(os.path.basename(f))
                 v = m and int(m.group(1))
                 if m and v < floor and v not in retained:
                     os.remove(f)
@@ -1320,23 +1236,15 @@ def occ_compact_store(
     between ingest and maintenance (the Delta/Iceberg optimistic-
     compaction shape).
 
-    A pending claim (claim without marker) is AMBIGUOUS: a live ingest
-    sits in exactly that state between its mkdir claim and its marker
-    publish, indistinguishable from a dead claimant at conflict time.
-    Sweeping it immediately would delete the live writer's claim and its
-    already-renamed parts — its eventually-published marker would then
-    name a version with silently missing files. So the sweep is
-    age-gated (r09 advisor finding): compaction WAITS, polling for the
-    marker, until the claim is at least ``claim_grace_s`` old, and only
-    then invokes ``occ_recover(min_age_s=claim_grace_s)``; a live writer
-    that publishes inside the grace window turns the wait into an
-    ordinary refresh-and-retry. Superseded parts are vacuumed after the
-    commit. Returns {cells_in, cells_out, version, conflicts, vacuumed,
-    files}.
+    A pending claim (claim without marker) is waited out with
+    ``occ_wait_claim``: the sweep is age-gated (r09 advisor finding), so
+    compaction polls for the marker until the claim is at least
+    ``claim_grace_s`` old and only then invokes
+    ``occ_recover(min_age_s=claim_grace_s)``; a live writer that
+    publishes inside the grace window turns the wait into an ordinary
+    refresh-and-retry. Superseded parts are vacuumed after the commit.
+    Returns {cells_in, cells_out, version, conflicts, vacuumed, files}.
     """
-    import os as _os
-    import time as _time
-
     conflicts = 0
     for _ in range(max_retries):
         v_read = store_version(path)
@@ -1367,23 +1275,7 @@ def occ_compact_store(
                 "files": res["files"],
             }
         conflicts += 1
-        if res["claim_pending"]:
-            # wait out the grace window (polling for the marker / version
-            # advance — a LIVE claimant publishing turns this into a
-            # normal refresh), then sweep only claims older than it.
-            # Claim age comes from the pluggable backend, never a local
-            # getmtime: under an object-store backend there IS no local
-            # claim dir, and bypassing the seam would break recovery.
-            while True:
-                if store_version(path) > res["version"]:
-                    break  # claimant published — ordinary conflict retry
-                age = OCC_CLAIM_BACKEND.claim_age_s(path, res["version"] + 1)
-                if age == float("inf"):
-                    break  # claim gone (recovered elsewhere / published)
-                if age >= claim_grace_s:
-                    occ_recover(path, min_age_s=claim_grace_s)
-                    break
-                _time.sleep(min(0.2, claim_grace_s - age))
+        occ_wait_claim(path, res, claim_grace_s)
     raise RuntimeError(
         f"occ_compact_store: {max_retries} consecutive commit conflicts "
         f"on {path} — a live writer is outpacing compaction"

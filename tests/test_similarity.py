@@ -728,3 +728,51 @@ def test_ivfpq_indexed_occ_as_of_version(spark, sf_dir, tmp_path):
             as_of_version=9,
         )
     assert sink.store_version(idx) == 2
+
+
+def test_ivfpq_torn_update_invisible_and_recovered(spark, sf_dir, tmp_path):
+    """A vector delta that crashed between claim and publish leaves
+    nothing visible (reads serve v1), and the next
+    update_ivfpq_index_occ waits the claim out past its grace, sweeps
+    the dead claimant's part, and commits."""
+    import os
+
+    from hive_cassandra_spark import sink
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").filter(
+        F.col("vec_id") < 120
+    )
+    even = F.col("vec_id") % 2 == 0
+    base = str(tmp_path / "ivfpq_torn")
+    similarity.build_ivfpq_index_occ(
+        spark, emb.filter(even), base, n_cells=8, m=4, k_codes=8
+    )
+    n_v1 = sink.occ_read_table(spark, base, "assignments").count()
+    # torn delta: claim for v2 + token-matched junk part in
+    # assignments/, NO marker — exactly what a crash mid-commit leaves
+    claim = os.path.join(base, "_occ-claim-000000002")
+    os.mkdir(claim)
+    with open(os.path.join(claim, "token"), "w") as fh:
+        fh.write("deadc0de")
+    junk = os.path.join(
+        base, "assignments", "part-occ-v000000002-00000-deadc0de.parquet"
+    )
+    with open(junk, "wb") as fh:
+        fh.write(b"junk")
+    assert sink.occ_read_table(spark, base, "assignments").count() == n_v1
+    q = emb.filter(F.col("vec_id") < 3)
+    served = similarity.ivfpq_topk_indexed_occ(
+        spark, base, q, nprobe=2, topk=5, id_col="vec_id"
+    ).collect()
+    assert len(served) == 15 and all(r[1] % 2 == 0 for r in served)
+    # the claim is STALE (backdated past any grace): the next delta
+    # sweeps it and commits at the freed version
+    os.utime(claim, (1_000_000_000, 1_000_000_000))
+    r = similarity.update_ivfpq_index_occ(
+        spark, base, emb.filter(~even), batch_id="b2", claim_grace_s=0.5
+    )
+    assert r["version"] == 2 and r["conflicts"] == 1
+    assert not r["already_applied"]
+    assert not os.path.exists(junk)
+    n_all = sink.occ_read_table(spark, base, "assignments").count()
+    assert n_all == emb.count()

@@ -1106,6 +1106,121 @@ def test_occ_as_of_partial_part_loss_fails_closed(spark, tmp_path):
         sink.occ_read(spark, store, as_of_version=1).count()
 
 
+def _publish_snapshot_after_first_listing(monkeypatch, store, part_dir, part):
+    """Make the NEXT ``_occ-v*`` listing race a compaction: right after
+    it returns, move ``part`` in as a v3 part under ``part_dir`` and
+    publish v3 as a snapshot — the interleaving that tore a reader that
+    listed markers twice."""
+    import glob
+    import os
+
+    real_glob = glob.glob
+    fired = []
+
+    def racing_glob(pattern, *args, **kwargs):
+        out = real_glob(pattern, *args, **kwargs)
+        if pattern.endswith("_occ-v*") and not fired:
+            fired.append(pattern)
+            os.rename(part, os.path.join(
+                part_dir, "part-occ-v000000003-00000-5a5a5a5a.parquet"))
+            with open(os.path.join(store, "_occ-v000000003"), "w") as fh:
+                fh.write("5a5a5a5a\nsnapshot\nfiles:1")
+        return out
+
+    monkeypatch.setattr(glob, "glob", racing_glob)
+    return fired
+
+
+def test_occ_read_snapshot_published_mid_read_is_not_torn(
+    spark, tmp_path, monkeypatch
+):
+    """A latest occ_read resolves its snapshot from ONE marker listing: a
+    compaction that publishes between the reader's listing and its part
+    listing is either wholly seen or wholly unseen — never an empty
+    read built from the old visible set and the new floor."""
+    import glob
+
+    from pyspark.sql import functions as F2
+
+    from hive_cassandra_spark import sink
+
+    store = str(tmp_path / "occ_store")
+
+    def gen(tag, n):
+        return spark.range(n).select(
+            F2.encode(F2.concat(F2.lit(tag), F2.col("id").cast("string")),
+                      "utf-8").alias("row_key"),
+            F2.encode(F2.lit("c"), "utf-8").alias("column_name"),
+            F2.encode(F2.lit(tag), "utf-8").alias("value"),
+            F2.lit(1).cast("long").alias("ts"),
+        )
+
+    assert sink.occ_commit(spark, store, gen("a", 10), 0)["committed"]
+    assert sink.occ_commit(spark, store, gen("b", 5), 1)["committed"]
+    side = str(tmp_path / "v3")
+    gen("z", 1).coalesce(1).write.parquet(side)
+    part = glob.glob(f"{side}/*.parquet")[0]
+    fired = _publish_snapshot_after_first_listing(
+        monkeypatch, store, store, part
+    )
+    n = sink.occ_read(spark, store).count()
+    assert fired
+    assert n in (15, 1), n  # the v1+v2 state or the v3 snapshot
+    monkeypatch.undo()
+    assert sink.occ_read(spark, store).count() == 1
+
+
+def test_occ_read_table_snapshot_published_mid_read_is_not_torn(
+    spark, tmp_path, monkeypatch
+):
+    """The occ_read_table(latest_only=True) twin: the meta-shaped read
+    must serve v2 (or v3), never raise for a store that has parts."""
+    import glob
+    import os
+
+    from hive_cassandra_spark import sink
+
+    idx = str(tmp_path / "idx")
+    for v, k in ((0, 3), (1, 4)):
+        t = spark.range(k).coalesce(1)
+        assert sink.occ_commit_tables(spark, idx, {"t": t}, v)["committed"]
+    side = str(tmp_path / "v3")
+    spark.range(1).coalesce(1).write.parquet(side)
+    part = glob.glob(f"{side}/*.parquet")[0]
+    fired = _publish_snapshot_after_first_listing(
+        monkeypatch, idx, os.path.join(idx, "t"), part
+    )
+    n = sink.occ_read_table(spark, idx, "t", latest_only=True).count()
+    assert fired
+    assert n in (4, 1), n
+
+
+def test_occ_publish_is_atomic(tmp_path):
+    """LocalFSClaimBackend.publish lands the whole marker or none: a
+    write that fails after the file is opened leaves no ``_occ-v*``
+    marker (so the version stays unpublished), and occ_recover sweeps
+    the temp file it left behind."""
+    import os
+
+    import pytest
+
+    from hive_cassandra_spark import sink
+
+    store = str(tmp_path / "store")
+    os.makedirs(store)
+    backend = sink.LocalFSClaimBackend()
+    backend.publish(store, 1, "tok1\nfiles:0")
+    with pytest.raises(TypeError):
+        backend.publish(store, 2, b"tok2\nfiles:0")  # not str: write fails
+    assert not os.path.exists(os.path.join(store, "_occ-v000000002"))
+    assert sink.store_version(store) == 1
+    leftovers = [f for f in os.listdir(store) if f != "_occ-v000000001"]
+    assert len(leftovers) == 1 and leftovers[0].startswith(".")
+    assert sink.occ_recover(store)["dropped_staging"] == 1
+    assert os.listdir(store) == ["_occ-v000000001"]
+    assert sink.store_version(store) == 1
+
+
 def _claim_race_worker(store, idx, n_versions, barrier, results):
     """One racing committer PROCESS (r12 verdict item 6): at every
     version it synchronizes on the barrier (so all contenders hit the

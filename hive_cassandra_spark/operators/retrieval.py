@@ -270,69 +270,55 @@ def update_postings_index_occ(
     window where postings carry the delta but stats are stale), and the
     commit declares the version its meta read came from, so a racing
     rebuild or second maintainer forces a refresh-and-retry instead of
-    a silent double-merge. With ``batch_id``, a crashed-then-retried
-    delta detects its batch already published (the marker tag) and
-    no-ops — the double-append corruption mode is structurally gone.
+    a silent double-merge. The whole read-modify-commit runs through
+    ``sink.occ_update``: one attempt reads ONE snapshot of the marker
+    log, and a retried ``batch_id`` is detected from that snapshot (its
+    marker tag) and no-ops — a duplicate delivery that publishes
+    mid-attempt makes this attempt's commit lose, and the retry sees
+    the tag, so the double-append corruption mode is structurally gone.
     Returns {docs_added, tokens_added, n, a, version, conflicts,
     already_applied}."""
     from hive_cassandra_spark import sink
 
-    conflicts = 0
-    for _ in range(max_retries):
-        if batch_id and batch_id in sink.store_tags(path).values():
-            return {
-                "docs_added": 0, "tokens_added": 0,
-                "n": None, "a": None,
-                "version": sink.store_version(path),
-                "conflicts": conflicts, "already_applied": True,
-            }
-        v_read = sink.store_version(path)
-        meta = sink.occ_read_table(spark, path, "meta", latest_only=True)
+    # a micro-batch delta is small by definition: bound its file count
+    # so each commit cycle (and every future reader's union) pays a
+    # handful of parts, not the session's 32 shuffle partitions of
+    # near-empty files. Persist it: every attempt consumes it twice (the
+    # stats head and the staging write), and it does not depend on the
+    # index state, so the retries reuse it too.
+    delta_post = postings(new_docs, id_col, text_col).coalesce(
+        delta_files
+    ).persist()
+
+    def derive(snap):
+        meta = snap.read("meta", latest_only=True)
         if "s" not in meta.columns:
             raise ValueError(
                 "index meta has no total-token column 's' — rebuild it "
                 "with build_postings_index_occ (a floor-rounded average "
                 "alone cannot be merged exactly)"
             )
-        # a micro-batch delta is small by definition: bound its file
-        # count so each commit cycle (and every future reader's union)
-        # pays a handful of parts, not the session's 32 shuffle
-        # partitions of near-empty files. Persist it: the delta subtree
-        # is consumed twice per commit cycle (the stats head below and
-        # the staging write inside occ_commit_tables) and would
-        # otherwise re-scan + re-explode the batch for each.
-        delta_post = postings(new_docs, id_col, text_col).coalesce(
-            delta_files
-        ).persist()
-        delta_stats = corpus_stats(new_docs, delta_post, id_col)
-        old, dlt = meta.head(), delta_stats.head()
+        old = meta.head()
+        dlt = corpus_stats(new_docs, delta_post, id_col).head()
         n = int(old["n"]) + int(dlt["n"])
         s = int(old["s"]) + int(dlt["s"])
         merged = local_df(
             spark, [(n, s, s // max(n, 1))], "n long, s long, a long"
         )
-        res = sink.occ_commit_tables(
-            spark, path,
-            {"postings": delta_post, "meta": merged.coalesce(1)},
-            v_read, tag=batch_id,
+        return {"postings": delta_post, "meta": merged.coalesce(1)}, {
+            "docs_added": int(dlt["n"]), "tokens_added": int(dlt["s"]),
+            "n": n, "a": s // max(n, 1),
+        }
+
+    try:
+        res = sink.occ_update(
+            spark, path, derive, tag=batch_id, max_retries=max_retries,
+            claim_grace_s=claim_grace_s,
         )
+    finally:
         delta_post.unpersist()
-        if res["committed"]:
-            return {
-                "docs_added": int(dlt["n"]),
-                "tokens_added": int(dlt["s"]),
-                "n": n,
-                "a": s // max(n, 1),
-                "version": res["version"],
-                "conflicts": conflicts,
-                "already_applied": False,
-            }
-        conflicts += 1
-        sink.occ_wait_claim(path, res, claim_grace_s)
-    raise RuntimeError(
-        f"update_postings_index_occ: {max_retries} consecutive commit "
-        f"conflicts on {path} — a writer is outpacing index maintenance"
-    )
+    del res["files"]
+    return {"docs_added": 0, "tokens_added": 0, "n": None, "a": None, **res}
 
 
 def bm25_topk(

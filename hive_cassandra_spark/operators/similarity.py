@@ -1380,8 +1380,8 @@ def kcenter_select(
     )
     seed = it.orderBy(F.col("vec_id").asc()).limit(1).head()
     if seed is None:
-        return items.sparkSession.createDataFrame(
-            [], "round long, vec_id long, dmin double"
+        return local_df(
+            items.sparkSession, [], "round long, vec_id long, dmin double"
         )
     chosen = [(1, int(seed["vec_id"]), 0.0)]
 
@@ -1490,29 +1490,19 @@ def update_ivfpq_index_occ(
     quantize under them; periodic REBUILDS retrain when drift
     accumulates, and the OCC snapshot supersede handles that race),
     and their (assignments, codes) delta publishes under ONE version
-    marker. A replayed ``batch_id`` finds its marker tag and no-ops; a
-    stale writer fails closed and retries against refreshed state
-    (``sink.occ_wait_claim``). Returns
+    marker, through ``sink.occ_update``: one attempt reads ONE snapshot
+    of the marker log, a replayed ``batch_id`` is detected from that
+    snapshot (its marker tag) and no-ops, and a stale writer fails
+    closed and retries against refreshed state. Returns
     {vecs_added, version, conflicts, already_applied}."""
     from hive_cassandra_spark import sink
 
-    conflicts = 0
-    for _ in range(max_retries):
-        if batch_id and batch_id in sink.store_tags(path).values():
-            return {
-                "vecs_added": 0,
-                "version": sink.store_version(path),
-                "conflicts": conflicts,
-                "already_applied": True,
-            }
-        v_read = sink.store_version(path)
-        cc = sink.occ_read_table(
-            spark, path, "coarse_centroids", latest_only=True
-        )
-        pc = sink.occ_read_table(
-            spark, path, "pq_codebooks", latest_only=True
-        )
-        meta = sink.occ_read_table(spark, path, "meta", latest_only=True)
+    held = []  # each attempt's persisted coarse assignment
+
+    def derive(snap):
+        cc = snap.read("coarse_centroids", latest_only=True)
+        pc = snap.read("pq_codebooks", latest_only=True)
+        meta = snap.read("meta", latest_only=True)
         m = int(meta.select("__m").head()[0])
         dim_row = meta.select("__dim")
         # encode ONLY the new vectors under the frozen quantizers —
@@ -1531,7 +1521,7 @@ def update_ivfpq_index_occ(
         )
         w_cell = Window.partitionBy("id").orderBy("d2", "ccid")
         # persist: the coarse assignment is consumed twice per commit
-        # cycle (its own staging write AND the residual/codes lineage
+        # attempt (its own staging write AND the residual/codes lineage
         # below) — unpersisted, the route-to-nearest-centroid pass over
         # the batch would run twice
         cassign = (
@@ -1539,6 +1529,7 @@ def update_ivfpq_index_occ(
             .filter(F.col("__rn") == 1)
             .select("id", "ccid")
         ).persist()
+        held.append(cassign)
         res = (
             pos.join(cassign, "id")
             .join(F.broadcast(cc), ["ccid", "i"])
@@ -1561,30 +1552,20 @@ def update_ivfpq_index_occ(
             .filter(F.col("__rn") == 1)
             .select("id", "sub", "pcid")
         )
-        n_new = new_items.count()
         # bound delta file counts (the update_postings_index_occ
         # discipline): a delta batch is small by definition
-        resc = sink.occ_commit_tables(
-            spark,
-            path,
-            {
-                "assignments": cassign.coalesce(delta_files),
-                "codes": codes.coalesce(delta_files),
-            },
-            v_read,
-            tag=batch_id,
+        return {
+            "assignments": cassign.coalesce(delta_files),
+            "codes": codes.coalesce(delta_files),
+        }, {"vecs_added": new_items.count()}
+
+    try:
+        res = sink.occ_update(
+            spark, path, derive, tag=batch_id, max_retries=max_retries,
+            claim_grace_s=claim_grace_s,
         )
-        cassign.unpersist()
-        if resc["committed"]:
-            return {
-                "vecs_added": n_new,
-                "version": resc["version"],
-                "conflicts": conflicts,
-                "already_applied": False,
-            }
-        conflicts += 1
-        sink.occ_wait_claim(path, resc, claim_grace_s)
-    raise RuntimeError(
-        f"update_ivfpq_index_occ: {max_retries} consecutive commit "
-        f"conflicts on {path} — a writer is outpacing index maintenance"
-    )
+    finally:
+        for df in held:
+            df.unpersist()
+    del res["files"]
+    return {"vecs_added": 0, **res}

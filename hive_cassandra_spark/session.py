@@ -14,6 +14,7 @@ is only the test harness default.
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
@@ -99,14 +100,18 @@ def ensure_session_confs(spark: SparkSession) -> None:
     """Pin the correctness-critical SQL confs on an already-built session.
 
     Idempotent and cheap (reads before writing); tolerates confs that a
-    particular deployment refuses to set rather than failing the query.
+    particular deployment refuses to set rather than failing the query,
+    but logs a warning naming each refused key, the wanted value and
+    the error — results that depend on it may then differ.
     """
     for key, want in _REQUIRED_RUNTIME_CONF.items():
         try:
             if spark.conf.get(key, None) != want:
                 spark.conf.set(key, want)
-        except Exception:
-            pass
+        except Exception as exc:
+            logging.getLogger(__name__).warning(
+                "could not pin required conf %s=%s: %s", key, want, exc
+            )
 
 
 def local_df(spark: SparkSession, rows, schema):
@@ -124,14 +129,20 @@ def local_df(spark: SparkSession, rows, schema):
     action time at all. Values are unchanged (the explicit schema is
     applied either way); any conversion the Arrow path refuses falls back
     to the classic path, so this is a plan-shape optimization only.
+    Zero rows go through an empty ``pyarrow`` table of the same schema:
+    an empty pandas frame still plans as ``Scan ExistingRDD``.
     """
     import pandas as pd
     from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     try:
         st = T.StructType.fromDDL(schema) if isinstance(schema, str) else schema
+        rows = list(rows)
+        if not rows:
+            return spark.createDataFrame(to_arrow_schema(st).empty_table())
         names = [f.name for f in st.fields]
-        pdf = pd.DataFrame.from_records(list(rows), columns=names)
+        pdf = pd.DataFrame.from_records(rows, columns=names)
         return spark.createDataFrame(pdf, schema=st)
     except Exception:
         return spark.createDataFrame(rows, schema)

@@ -27,17 +27,20 @@ streamed partition-by-partition, never collected.
 
 from __future__ import annotations
 
+import functools
 import glob
 import os
 import re
 import shutil
 import time
 import uuid
+from types import SimpleNamespace
 
 from pyspark.sql import Column, DataFrame, functions as F
 
 from hive_cassandra_spark.codecs import encode_col
 from hive_cassandra_spark.mapping import ColumnMapping
+from hive_cassandra_spark.session import local_df
 
 # Reference defaults carried as option schema (AbstractColumnSerDe.java:66-75).
 DEFAULT_BATCH_MUTATE_SIZE = 500
@@ -695,8 +698,11 @@ OCC_CLAIM_BACKEND: LocalFSClaimBackend = LocalFSClaimBackend()
 
 def set_occ_claim_backend(backend) -> object:
     """Install a custom claim backend (see ``LocalFSClaimBackend`` for
-    the contract) and return the previous one — the deployment seam for
-    object stores, where mkdir atomicity doesn't exist."""
+    the contract) and return the previous one. It stays public with no
+    caller in the package because it is the deployment seam: an
+    object-store deployment, where mkdir atomicity doesn't exist,
+    installs its conditional-PUT backend here, and tests use it to
+    substitute fake backends."""
     global OCC_CLAIM_BACKEND
     prev, OCC_CLAIM_BACKEND = OCC_CLAIM_BACKEND, backend
     return prev
@@ -868,9 +874,10 @@ def occ_commit(
     failed against a claim that has NO published marker gets
     ``claim_pending=True`` in its result: the claimant is either still
     in flight or dead, and a refresh-and-retry loop alone will spin
-    forever on a dead claim — the caller should wait it out with
-    ``occ_wait_claim`` (which runs ``occ_recover`` once the claim
-    outlives a grace) before retrying. Returns
+    forever on a dead claim. ``occ_update`` is that loop: one attempt
+    reads ONE snapshot of the marker log, detects a retried batch from
+    its tags, commits at its version and waits out a pending claim
+    (``occ_wait_claim``). Returns
     {committed, version, conflict, claim_pending, files}.
     """
     return _occ_commit(path, {None: cells}, expected_version, snapshot)
@@ -899,9 +906,9 @@ def occ_commit_tables(
     ``snapshot=True`` supersedes every prior version (the rebuild
     commit); an append commit layers on top (the delta commit). ``tag``
     lands in the marker (e.g. a batch id) so a crashed-then-retried
-    delta can detect it already published (``store_tags``) instead of
-    double-applying. Same conflict/claim_pending contract as
-    ``occ_commit``."""
+    delta can detect it already published (``occ_update`` checks the
+    attempt's snapshot) instead of double-applying. Same
+    conflict/claim_pending contract as ``occ_commit``."""
     return _occ_commit(path, tables, expected_version, snapshot, tag)
 
 
@@ -913,53 +920,36 @@ def store_tags(path: str) -> dict:
     }
 
 
-def _occ_visible_versions(
-    log: dict, path: str, as_of_version: int | None
-) -> set:
-    """Published versions visible to a read: all of them at or above the
-    snapshot floor for a latest read, only ``(floor-at-N, N]`` for an
-    as-of read — where the floor is the highest published SNAPSHOT at or
-    below the pin, so a compaction that lands AFTER the pinned version
-    cannot rewrite history out from under it (Delta/Iceberg time-travel
-    semantics). Raises ValueError on a pin that was never published:
-    pinning a run to a version that doesn't exist is a caller bug, not
-    an empty read."""
-    if as_of_version is None:
-        floor = _occ_floor(log)
-        return {v for v in log if v >= floor}
-    if as_of_version not in log:
+def _occ_read(
+    spark, path: str, log: dict, table: str | None = None,
+    latest_only: bool = False, as_of_version: int | None = None,
+    empty_schema=None,
+):
+    """The one read behind ``occ_read`` (``table=None``), ``occ_read_table``
+    and ``occ_update``'s snapshot. The caller's ONE log listing resolves
+    the visible versions: those at or above the snapshot floor, or
+    ``(floor-at-N, N]`` for a pin at N (a compaction published after the
+    pin cannot rewrite its history; a never-published pin is a caller
+    bug and raises ValueError). One listing of the table's parts groups
+    them by version.
+
+    A PINNED read whose visible range is only partially on disk fails
+    closed: every visible version's parts are counted against the
+    ``files:`` count its marker durably recorded, so a version that lost
+    some or all of its parts to ``occ_vacuum``, out-of-band deletion or
+    a partial restore is never served as "the state at vN". Markers
+    that predate the ``files:`` records cannot be checked."""
+    if as_of_version is not None and as_of_version not in log:
         raise ValueError(
             f"as_of_version={as_of_version} was never published under "
             f"{path} (published: {sorted(log)}) — cannot pin a "
             "read to a version that does not exist"
         )
     floor = _occ_floor(log, cap=as_of_version)
-    return {v for v in log if floor <= v <= as_of_version}
-
-
-def _occ_visible_parts(
-    path: str, table: str | None, as_of_version: int | None
-) -> tuple:
-    """The visible-part lister behind ``occ_read`` (``table=None``) and
-    ``occ_read_table``: ONE log listing resolves the visible versions,
-    one listing of the table's ``part-occ-v*`` files groups the visible
-    versions' parts (in name order). Returns (log, visible,
-    {version: [part, ...]}, every part listed — visible or not).
-
-    A PINNED read whose visible range is only partially on disk fails
-    closed: a version whose marker recorded parts (for this table) that
-    are now gone was vacuumed — serving the surviving suffix as "the
-    state at vN" would be silently wrong history, the one thing a
-    reproducibility pin exists to prevent. EVERY visible version is
-    compared against the part count its marker durably recorded
-    (``files:``/``files:<table>=`` lines), not just the fully-absent
-    ones — a version that lost SOME part files to out-of-band deletion
-    or a partial copy/restore is the same wrong history as one that
-    lost all of them. Versions whose marker predates the ``files:``
-    records fall back to presence-only semantics (unknowable, so not
-    flagged)."""
-    log = _occ_log(path)
-    visible = _occ_visible_versions(log, path, as_of_version)
+    visible = {
+        v for v in log
+        if floor <= v and (as_of_version is None or v <= as_of_version)
+    }
     parts = sorted(
         glob.glob(os.path.join(_occ_dir(path, table), "part-occ-v*.parquet"))
     )
@@ -982,7 +972,47 @@ def _occ_visible_parts(
                     "window passed) or externally damaged; refusing to "
                     "serve partial state"
                 )
-    return log, visible, by_version, parts
+    if by_version:
+        if latest_only:
+            files = by_version[max(by_version)]
+        else:
+            files = [f for fs in by_version.values() for f in fs]
+        return spark.read.parquet(*files)
+    if table is not None:
+        raise FileNotFoundError(
+            f"no committed parts for table '{table}' under {path}"
+            + (
+                f" visible as of version {as_of_version} — the pinned "
+                "history was vacuumed (or the table had no parts yet)"
+                if as_of_version is not None
+                else " — the artifact was never built (or every version "
+                "was swept)"
+            )
+        )
+    if as_of_version is not None and not all(
+        log[v]["files"].get(None) == 0 for v in visible
+    ):
+        # a published pin with no visible parts — and at least one
+        # visible marker that recorded parts or predates the files:
+        # records — means occ_vacuum already dropped the pinned
+        # history: fail closed like occ_read_table, never silently
+        # serve an empty store as "the state at vN". When EVERY visible
+        # marker explicitly records files:0 (empty-DataFrame commits),
+        # the pinned state genuinely IS an empty store, and it serves
+        # through the same empty-schema path the latest read uses.
+        raise FileNotFoundError(
+            f"no parts visible as of version {as_of_version} under "
+            f"{path} — the pinned history was vacuumed"
+        )
+    if empty_schema is not None:
+        return local_df(spark, [], empty_schema)
+    if parts:
+        # no visible version, but the store HAS a cell shape — take
+        # the schema from any part footer (metadata-only read)
+        return spark.read.parquet(parts[-1]).limit(0)
+    return local_df(
+        spark, [], "row_key binary, column_name binary, value binary, ts long"
+    )
 
 
 def occ_read_table(
@@ -1006,23 +1036,9 @@ def occ_read_table(
     empty index — for an as-of read that includes a pin whose parts
     ``occ_vacuum`` already dropped (history physically gone, same as
     time-travel past a Delta VACUUM)."""
-    _, _, by_version, _ = _occ_visible_parts(path, table, as_of_version)
-    if not by_version:
-        raise FileNotFoundError(
-            f"no committed parts for table '{table}' under {path}"
-            + (
-                f" visible as of version {as_of_version} — the pinned "
-                "history was vacuumed (or the table had no parts yet)"
-                if as_of_version is not None
-                else " — the artifact was never built (or every version "
-                "was swept)"
-            )
-        )
-    if latest_only:
-        files = by_version[max(by_version)]
-    else:
-        files = [f for fs in by_version.values() for f in fs]
-    return spark.read.parquet(*files)
+    return _occ_read(
+        spark, path, _occ_log(path), table, latest_only, as_of_version
+    )
 
 
 def occ_read(
@@ -1049,46 +1065,9 @@ def occ_read(
     store whose cells carry ``sub_column_name`` / ``ttl_s`` would read
     back 4-column when empty and diverge from the non-empty case in
     downstream unions and compaction key derivation."""
-    log, visible, by_version, parts = _occ_visible_parts(
-        path, None, as_of_version
-    )
-    if by_version:
-        return spark.read.parquet(
-            *(f for fs in by_version.values() for f in fs)
-        )
-    if as_of_version is not None and not all(
-        log[v]["files"].get(None) == 0 for v in visible
-    ):
-        # a published pin with no visible parts — and at least one
-        # visible marker that recorded parts or predates the files:
-        # records — means occ_vacuum already dropped the pinned
-        # history: fail closed like occ_read_table, never silently
-        # serve an empty store as "the state at vN". When EVERY visible
-        # marker explicitly records files:0 (empty-DataFrame commits),
-        # the pinned state genuinely IS an empty store, and it serves
-        # through the same empty-schema path the latest read uses.
-        raise FileNotFoundError(
-            f"no parts visible as of version {as_of_version} under "
-            f"{path} — the pinned history was vacuumed"
-        )
-    if empty_schema is not None:
-        return spark.createDataFrame([], empty_schema)
-    if parts:
-        # no visible version, but the store HAS a cell shape — take
-        # the schema from any part footer (metadata-only read)
-        return spark.read.parquet(parts[-1]).limit(0)
-    from pyspark.sql import types as T
-
-    return spark.createDataFrame(
-        [],
-        T.StructType(
-            [
-                T.StructField("row_key", T.BinaryType()),
-                T.StructField("column_name", T.BinaryType()),
-                T.StructField("value", T.BinaryType()),
-                T.StructField("ts", T.LongType()),
-            ]
-        ),
+    return _occ_read(
+        spark, path, _occ_log(path), as_of_version=as_of_version,
+        empty_schema=empty_schema,
     )
 
 
@@ -1152,7 +1131,7 @@ def occ_recover(path: str, min_age_s: float = 0.0) -> dict:
 
 
 def occ_wait_claim(path: str, res: dict, claim_grace_s: float) -> None:
-    """The conflict wait every OCC retry loop runs after a lost commit
+    """The conflict wait ``occ_update`` runs after a lost commit
     ``res``: a no-op unless ``res["claim_pending"]``. A pending claim
     (claim without marker) is AMBIGUOUS — a live writer sits in exactly
     that state between its claim and its publish, indistinguishable from
@@ -1216,6 +1195,57 @@ def occ_vacuum(path: str, retain_versions: int = 0) -> dict:
     }
 
 
+def occ_update(
+    spark, path: str, derive, snapshot: bool = False, tag: str | None = None,
+    max_retries: int = 5, claim_grace_s: float = 10.0,
+) -> dict:
+    """The one OCC read-modify-commit loop. Each attempt decides
+    everything from ONE ``_occ_log`` listing (Delta's log-snapshot
+    rule): a ``tag`` already in it returns ``already_applied``; else
+    ``derive(snap)`` gets ``snap.version`` and ``snap.read(table=None,
+    latest_only=False)`` (``occ_read`` / ``occ_read_table`` semantics,
+    resolved from that same listing) and returns ``(tables, out)`` —
+    the ``{table: DataFrame}`` to commit at ``snap.version`` (``None`` =
+    the store root) and the caller's result dict. A lost commit, or a
+    table read that found its snapshot vacuumed by a newer snapshot
+    commit, counts a conflict, waits out a pending claim
+    (``occ_wait_claim``) and retries on a fresh listing. So a duplicate
+    delivery of ``tag`` published mid-attempt loses this attempt its
+    commit, and the retry sees the tag: never a second apply. Returns
+    ``{**out, version, conflicts, already_applied, files}``; raises
+    RuntimeError after ``max_retries`` attempts."""
+    conflicts = 0
+    for _ in range(max_retries):
+        log = _occ_log(path)
+        version = max(log, default=0)
+        if tag and any(e["tag"] == tag for e in log.values()):
+            return {
+                "version": version, "conflicts": conflicts,
+                "already_applied": True, "files": 0,
+            }
+        read = functools.partial(_occ_read, spark, path, log)
+        snap = SimpleNamespace(version=version, read=read)
+        try:
+            tables, out = derive(snap)
+        except FileNotFoundError:
+            if store_version(path) == version:
+                raise
+            conflicts += 1
+            continue
+        res = _occ_commit(path, tables, version, snapshot, tag)
+        if res["committed"]:
+            return {
+                **out, "version": res["version"], "conflicts": conflicts,
+                "already_applied": False, "files": res["files"],
+            }
+        conflicts += 1
+        occ_wait_claim(path, res, claim_grace_s)
+    raise RuntimeError(
+        f"occ_update: {max_retries} consecutive commit conflicts on {path}"
+        " — a live writer is outpacing this read-modify-commit"
+    )
+
+
 def occ_compact_store(
     spark,
     path: str,
@@ -1229,26 +1259,20 @@ def occ_compact_store(
     r08-verdict item-3 consumer. The plain swap discipline has a
     lost-update window: compaction reads the store, a concurrent ingest
     appends, compaction's rename-swap clobbers the append. Here the
-    compacted winners are committed as a SNAPSHOT at the exact version
-    the inputs were read at: a concurrent append that claimed the next
-    version first forces a refresh-and-retry that re-reads WITH the new
-    append included — no write is ever lost, with zero coordination
-    between ingest and maintenance (the Delta/Iceberg optimistic-
-    compaction shape).
-
-    A pending claim (claim without marker) is waited out with
-    ``occ_wait_claim``: the sweep is age-gated (r09 advisor finding), so
-    compaction polls for the marker until the claim is at least
-    ``claim_grace_s`` old and only then invokes
-    ``occ_recover(min_age_s=claim_grace_s)``; a live writer that
-    publishes inside the grace window turns the wait into an ordinary
-    refresh-and-retry. Superseded parts are vacuumed after the commit.
-    Returns {cells_in, cells_out, version, conflicts, vacuumed, files}.
+    compacted winners are committed through ``occ_update`` as a
+    SNAPSHOT at the exact version its one listing read the inputs at: a
+    concurrent append that claimed the next version first forces a
+    refresh-and-retry that re-reads WITH the new append included — no
+    write is ever lost, with zero coordination between ingest and
+    maintenance (the Delta/Iceberg optimistic-compaction shape). A
+    pending claim is waited out for ``claim_grace_s`` before it is swept
+    (``occ_wait_claim``). Superseded parts are vacuumed after the
+    commit. Returns {cells_in, cells_out, version, conflicts, vacuumed,
+    files}.
     """
-    conflicts = 0
-    for _ in range(max_retries):
-        v_read = store_version(path)
-        cells = occ_read(spark, path)
+
+    def derive(snap):
+        cells = snap.read()
         cols = set(cells.columns)
         key = ["row_key", "column_name"] + (
             ["sub_column_name"] if "sub_column_name" in cols else []
@@ -1262,21 +1286,11 @@ def occ_compact_store(
         # materialize the winners BEFORE the claim: the commit's write
         # must not re-read store files that a racing vacuum could move
         flat = flat.localCheckpoint(eager=True)
-        cells_out = flat.count()
-        res = occ_commit(spark, path, flat, v_read, snapshot=True)
-        if res["committed"]:
-            vac = occ_vacuum(path)
-            return {
-                "cells_in": cells_in,
-                "cells_out": cells_out,
-                "version": res["version"],
-                "conflicts": conflicts,
-                "vacuumed": vac["dropped_parts"],
-                "files": res["files"],
-            }
-        conflicts += 1
-        occ_wait_claim(path, res, claim_grace_s)
-    raise RuntimeError(
-        f"occ_compact_store: {max_retries} consecutive commit conflicts "
-        f"on {path} — a live writer is outpacing compaction"
+        return {None: flat}, {"cells_in": cells_in, "cells_out": flat.count()}
+
+    res = occ_update(
+        spark, path, derive, snapshot=True, max_retries=max_retries,
+        claim_grace_s=claim_grace_s,
     )
+    del res["already_applied"]  # untagged: a compaction always commits
+    return {**res, "vacuumed": occ_vacuum(path)["dropped_parts"]}

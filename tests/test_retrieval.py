@@ -417,6 +417,71 @@ def test_occ_index_replayed_batch_noops(spark, sf_dir, tmp_path):
     assert rt.read_postings_index_occ(spark, path)[0].count() == n_after
 
 
+def test_occ_index_duplicate_delivery_mid_update_applies_once(
+    spark, sf_dir, tmp_path, publish_after_first_listing
+):
+    """A duplicate delivery of batch B that publishes right after the
+    update's first marker listing must not make the update apply B a
+    second time: the update reads ONE snapshot per attempt, so its
+    commit loses, and the retry finds B's tag and no-ops."""
+    from pyspark.sql import functions as F2
+
+    from hive_cassandra_spark.operators import retrieval as rt
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    base, delta = (docs.filter(F2.col("doc_id") % 2 == k) for k in (0, 1))
+    path, twin = str(tmp_path / "idx"), str(tmp_path / "twin")
+    for p in (path, twin):
+        rt.build_postings_index_occ(spark, base, p)
+    # the duplicate delivery: batch B committed as v2 on a twin index
+    assert rt.update_postings_index_occ(
+        spark, twin, delta, batch_id="B"
+    )["version"] == 2
+    fired = publish_after_first_listing(path, twin, 2)
+    r = rt.update_postings_index_occ(spark, path, delta, batch_id="B")
+    assert fired
+    assert r["already_applied"] and r["version"] == 2, r
+    assert r["docs_added"] == 0 and r["conflicts"] == 1
+    # B is in the index exactly once: postings and (n, s) as the twin's
+    post, meta = rt.read_postings_index_occ(spark, path)
+    post_t, meta_t = rt.read_postings_index_occ(spark, twin)
+    assert sorted(map(tuple, post.collect())) == sorted(
+        map(tuple, post_t.collect())
+    )
+    assert meta.collect() == meta_t.collect()
+    assert meta.head()["n"] == docs.count()
+
+
+def test_occ_index_update_retries_past_rebuild_vacuumed_mid_update(
+    spark, sf_dir, tmp_path, publish_after_first_listing
+):
+    """A rebuild that publishes (and vacuums the parts the update's
+    snapshot names) right after the update's first marker listing is a
+    conflict, not a missing artifact: the update retries on the rebuilt
+    index and lands the batch on top of it."""
+    from pyspark.sql import functions as F2
+
+    from hive_cassandra_spark.operators import retrieval as rt
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    base, delta = (docs.filter(F2.col("doc_id") % 2 == k) for k in (0, 1))
+    path, twin = str(tmp_path / "idx"), str(tmp_path / "twin")
+    for p in (path, twin):
+        rt.build_postings_index_occ(spark, base, p)
+    assert rt.build_postings_index_occ(spark, base, twin)["version"] == 2
+    fired = publish_after_first_listing(path, twin, 2, vacuum=True)
+    r = rt.update_postings_index_occ(spark, path, delta, batch_id="B")
+    assert fired
+    assert r["version"] == 3 and not r["already_applied"], r
+    assert r["conflicts"] == 1 and r["n"] == docs.count()
+    plain = str(tmp_path / "plain")
+    rt.build_postings_index(docs, plain)
+    assert (
+        rt.read_postings_index_occ(spark, path)[1].collect()
+        == rt.read_postings_index(spark, plain)[1].collect()
+    )
+
+
 def test_occ_index_torn_update_invisible_and_recovered(spark, sf_dir, tmp_path):
     """A delta that crashed between claim and publish leaves NOTHING
     visible (readers see the prior version; stats and postings stay

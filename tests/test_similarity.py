@@ -619,6 +619,45 @@ def test_update_ivfpq_index_occ_delta_lifecycle(spark, sf_dir, tmp_path):
     assert s1 == s2 and len(s1) == 15
 
 
+def test_update_ivfpq_duplicate_delivery_mid_update_applies_once(
+    spark, sf_dir, tmp_path, publish_after_first_listing
+):
+    """A duplicate delivery of batch B that publishes right after the
+    update's first marker listing must not make the update encode B a
+    second time: one snapshot per attempt, so its commit loses and the
+    retry finds B's tag and no-ops — every vector assigned once."""
+    from hive_cassandra_spark import sink
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").filter(
+        F.col("vec_id") < 120
+    )
+    even = F.col("vec_id") % 2 == 0
+    path, twin = str(tmp_path / "idx"), str(tmp_path / "twin")
+    for p in (path, twin):
+        similarity.build_ivfpq_index_occ(
+            spark, emb.filter(even), p, n_cells=8, m=4, k_codes=8
+        )
+    # the duplicate delivery: batch B committed as v2 on a twin index
+    assert similarity.update_ivfpq_index_occ(
+        spark, twin, emb.filter(~even), batch_id="B"
+    )["version"] == 2
+    fired = publish_after_first_listing(path, twin, 2)
+    r = similarity.update_ivfpq_index_occ(
+        spark, path, emb.filter(~even), batch_id="B"
+    )
+    assert fired
+    assert r["already_applied"] and r["version"] == 2, r
+    assert r["vecs_added"] == 0 and r["conflicts"] == 1
+    n = emb.count()
+    assign = sink.occ_read_table(spark, path, "assignments")
+    assert assign.count() == n
+    assert assign.select("id").distinct().count() == n
+    assert sink.occ_read_table(spark, path, "codes").count() == 4 * n
+    assert sorted(map(tuple, assign.collect())) == sorted(map(
+        tuple, sink.occ_read_table(spark, twin, "assignments").collect()
+    ))
+
+
 def test_stream_update_ivfpq_index_equals_batch_delta(spark, sf_dir, tmp_path):
     """The streaming maintenance face for vectors (r10 verdict item 8):
     bootstrap snapshot + one OCC delta per micro-batch must serve the

@@ -139,48 +139,6 @@ def with_bm25_term_score(df: DataFrame, out_col: str = "term_score") -> DataFram
     )
 
 
-def build_postings_index(
-    df: DataFrame, path: str, id_col: str = "doc_id", text_col: str = "text"
-) -> None:
-    """Materialize the retrieval index once per corpus version: the
-    postings table at ``<path>/postings`` and the one-row corpus stats
-    at ``<path>/meta``. This is THE corpus pass — the build scans the
-    documents exactly twice (once exploded for postings, once
-    column-pruned for the doc count) and every downstream consumer
-    (BM25 top-k, qrels derivation, RRF's sparse leg, eval) reads only
-    the artifact, which is orders of magnitude smaller than the corpus.
-    At 100 TB the index build is the amortized nightly job; queries are
-    interactive against the parquet postings with min/max term pruning.
-
-    This is the build-once / serve-many artifact (q176). Incremental
-    maintenance deliberately has NO plain-layout variant: the old
-    ``update_postings_index`` appended delta postings BEFORE its meta
-    rename swap, so a crash between the two left postings counting docs
-    the stats didn't (r10 verdict item 4 — two maintenance paths with
-    different crash semantics). Index maintenance is
-    ``update_postings_index_occ`` only: one version marker, one crash
-    semantics.
-    """
-    # persist for the duration of the two writes: the corpus-stats meta
-    # derives its token total from the postings aggregate, which would
-    # otherwise re-scan + re-explode the corpus a second time
-    post = postings(df, id_col, text_col).persist()
-    post.write.mode("overwrite").parquet(f"{path.rstrip('/')}/postings")
-    corpus_stats(df, post, id_col).write.mode("overwrite").parquet(
-        f"{path.rstrip('/')}/meta"
-    )
-    post.unpersist()
-
-
-def read_postings_index(spark, path: str) -> tuple[DataFrame, DataFrame]:
-    """(postings, corpus_meta) from a ``build_postings_index`` artifact."""
-    base = path.rstrip("/")
-    return (
-        spark.read.parquet(f"{base}/postings"),
-        spark.read.parquet(f"{base}/meta"),
-    )
-
-
 def build_postings_index_occ(
     spark,
     df: DataFrame,
@@ -190,22 +148,33 @@ def build_postings_index_occ(
     expected_version: int | None = None,
     retain_versions: int = 0,
 ) -> dict:
-    """``build_postings_index`` routed through the OCC commit protocol
-    (r09 verdict item 3): the full postings + corpus meta land as ONE
-    SNAPSHOT commit — a rebuild that raced a delta update (its read
-    version went stale) fails closed and must refresh, never clobbering
-    the delta; prior versions become invisible atomically and are
-    vacuumable at leisure. ``expected_version=None`` reads the current
-    version (rebuild-at-current); pass an explicit version to pin the
-    read snapshot the rebuild derived from. ``retain_versions=K`` keeps
-    the K newest superseded versions on disk through the post-commit
+    """Materialize the retrieval index once per corpus version: the
+    postings table and the one-row corpus stats land as ONE SNAPSHOT
+    commit of an OCC-versioned artifact (tables ``postings`` and
+    ``meta``). This is THE corpus pass — the build scans the documents
+    exactly twice (once exploded for postings, once column-pruned for
+    the doc count) and every downstream consumer (BM25 top-k, qrels
+    derivation, RRF's sparse leg, eval) reads only the artifact through
+    ``read_postings_index_occ``, which is orders of magnitude smaller
+    than the corpus. At 100 TB the index build is the amortized nightly
+    job; queries are interactive against the parquet postings with
+    min/max term pruning. Incremental maintenance is
+    ``update_postings_index_occ``.
+
+    A rebuild that raced a delta update (its read version went stale)
+    fails closed and must refresh, never clobbering the delta; prior
+    versions become invisible atomically and are vacuumable at leisure.
+    ``expected_version=None`` reads the current version
+    (rebuild-at-current); pass an explicit version to pin the read
+    snapshot the rebuild derived from. ``retain_versions=K`` keeps the
+    K newest superseded versions on disk through the post-commit
     vacuum, so ``as_of_version`` pins (q204) stay serviceable across
     the nightly rebuild (sink.occ_vacuum retention)."""
     from hive_cassandra_spark import sink
 
-    # persist for the duration of the commit: the meta staging write
-    # re-derives the token total from the postings aggregate (see
-    # build_postings_index — one corpus explode, not two)
+    # persist for the duration of the commit: the corpus-stats meta
+    # derives its token total from the postings aggregate, which would
+    # otherwise re-scan + re-explode the corpus a second time
     post = postings(df, id_col, text_col).persist()
     meta = corpus_stats(df, post, id_col)
     v = (
@@ -226,25 +195,22 @@ def build_postings_index_occ(
 def read_postings_index_occ(
     spark, path: str, as_of_version: int | None = None
 ) -> tuple[DataFrame, DataFrame]:
-    """(postings, corpus_meta) from an OCC-versioned index: postings
-    union every published version at or above the snapshot floor
-    (append semantics); meta is the latest published row (each commit
-    republishes the full merged stats). ``as_of_version=N`` pins both
-    tables to the index state when version N was the head — later
-    deltas and later rebuild snapshots invisible — so a training run
-    that recorded the version it retrieved against reproduces the
-    exact same ranked results later (sink.occ_read_table time-travel).
-    Fails closed on a never-built artifact."""
+    """(postings, corpus_meta) from a ``build_postings_index_occ``
+    index, both read from ONE ``sink.occ_snapshot`` so they always come
+    from the same version set: postings union every published version
+    at or above the snapshot floor (append semantics); meta is the
+    latest published row (each commit republishes the full merged
+    stats). ``as_of_version=N`` pins both tables to the index state
+    when version N was the head — later deltas and later rebuild
+    snapshots invisible — so a training run that recorded the version
+    it retrieved against reproduces the exact same ranked results
+    later. Fails closed on a never-built artifact."""
     from hive_cassandra_spark import sink
 
+    snap = sink.occ_snapshot(spark, path)
     return (
-        sink.occ_read_table(
-            spark, path, "postings", as_of_version=as_of_version
-        ),
-        sink.occ_read_table(
-            spark, path, "meta", latest_only=True,
-            as_of_version=as_of_version,
-        ),
+        snap.read("postings", as_of_version=as_of_version),
+        snap.read("meta", latest_only=True, as_of_version=as_of_version),
     )
 
 
@@ -260,7 +226,7 @@ def update_postings_index_occ(
     delta_files: int = 8,
 ) -> dict:
     """THE incremental index-maintenance path (the delta job that keeps
-    ``build_postings_index``'s nightly corpus pass amortized — only the
+    ``build_postings_index_occ``'s nightly corpus pass amortized — only the
     new documents are scanned, per-doc postings append exactly, corpus
     stats merge from exact (n, s) sums, never the floor-lossy average),
     with the crash-atomicity and race safety the r09 advisor asked for
@@ -348,7 +314,7 @@ def bm25_topk(
 
     ``corpus`` accepts a prebuilt one-row (n, a) corpus-stats table
     (``corpus_stats()`` output, materialized next to the postings by
-    ``build_postings_index``); with both ``post`` and ``corpus`` given,
+    ``build_postings_index_occ``); with both ``post`` and ``corpus`` given,
     ``df`` is never touched — the fully-indexed serving path scans ZERO
     document bytes.
     """

@@ -846,7 +846,7 @@ def _ivfpq_build(
     vec_col: str,
 ) -> dict:
     """The index-construction half of IVF-PQ, shared by the inline query
-    (``ivfpq_topk``) and the persisted artifact (``build_ivfpq_index``):
+    (``ivfpq_topk``) and the persisted artifact (``build_ivfpq_index_occ``):
     coarse centroids, per-item cell assignments, residual PQ codebooks,
     and per-item PQ codes — all from the deterministic one-Lloyd-round
     hash-init construction the q148 oracle replays."""
@@ -1101,64 +1101,6 @@ def ann_tune_nprobe(
     )
 
 
-def build_ivfpq_index(
-    items: DataFrame,
-    path: str,
-    n_cells: int = 8,
-    m: int = 4,
-    k_codes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Materialize the IVF-PQ index once per corpus version — the Faiss
-    index-file analogue, and the vector-side counterpart of
-    ``retrieval.build_postings_index``: coarse centroids, PQ codebooks,
-    per-item cell assignments, and per-item PQ codes land as parquet
-    under ``path``. This is THE corpus pass; serving then reads only
-    the artifact, whose dominant parts (assignments + codes) are a few
-    ints per vector — ~128× smaller than the vectors — and the corpus
-    embeddings are never rescanned. At 100 TB of vectors the build is
-    the amortized nightly job; queries are interactive."""
-    base = path.rstrip("/")
-    ix = _ivfpq_build(items, n_cells, m, k_codes, id_col, vec_col)
-    # persist the shared construction tables for the duration of the
-    # artifact writes (codes → pc → res → assign → cc lineage overlap —
-    # see build_ivfpq_index_occ), and run the four independent writes
-    # as concurrent jobs so small-table job latencies overlap (the
-    # occ_commit_tables staging discipline)
-    for key in ("cc", "pc", "assign", "res"):
-        ix[key] = ix[key].persist()
-    from concurrent.futures import ThreadPoolExecutor
-
-    writes = [
-        (ix["cc"], f"{base}/coarse_centroids"),
-        (ix["pc"], f"{base}/pq_codebooks"),
-        (ix["assign"], f"{base}/assignments"),
-        (ix["codes"], f"{base}/codes"),
-    ]
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        list(
-            pool.map(
-                lambda dp: dp[0].write.mode("overwrite").parquet(dp[1]),
-                writes,
-            )
-        )
-    # the meta artifact carries the build parameters: serving derives
-    # the subspace split from __m rather than trusting its caller (a
-    # mismatched m would silently mis-bucket `sub` and return wrong
-    # neighbors with no error)
-    (
-        ix["dim"]
-        .withColumn("__m", F.lit(int(m)))
-        .withColumn("__n_cells", F.lit(int(n_cells)))
-        .withColumn("__k_codes", F.lit(int(k_codes)))
-        .write.mode("overwrite")
-        .parquet(f"{base}/meta")
-    )
-    for key in ("cc", "pc", "assign", "res"):
-        ix[key].unpersist()
-
-
 def build_ivfpq_index_occ(
     spark,
     items: DataFrame,
@@ -1171,13 +1113,19 @@ def build_ivfpq_index_occ(
     expected_version: int | None = None,
     retain_versions: int = 0,
 ) -> dict:
-    """``build_ivfpq_index`` routed through the OCC commit protocol
-    (r09 verdict item 3, the vector-side sibling of
-    ``retrieval.build_postings_index_occ``): all five index tables
-    publish atomically as ONE SNAPSHOT commit, so a reader never sees
-    centroids from one build and codes from another, and a rebuild
-    whose read version went stale fails closed instead of clobbering a
-    concurrent refresh."""
+    """Materialize the IVF-PQ index once per corpus version — the Faiss
+    index-file analogue, and the vector-side counterpart of
+    ``retrieval.build_postings_index_occ``: coarse centroids, PQ
+    codebooks, per-item cell assignments, per-item PQ codes and a meta
+    row carrying the build parameters publish atomically as ONE
+    SNAPSHOT commit. This is THE corpus pass; serving
+    (``ivfpq_topk_indexed_occ``) then reads only the artifact, whose
+    dominant parts (assignments + codes) are a few ints per vector —
+    ~128× smaller than the vectors — and the corpus embeddings are
+    never rescanned. At 100 TB of vectors the build is the amortized
+    nightly job; queries are interactive. A rebuild whose read version
+    went stale fails closed instead of clobbering a concurrent
+    refresh."""
     from hive_cassandra_spark import sink
 
     ix = _ivfpq_build(items, n_cells, m, k_codes, id_col, vec_col)
@@ -1188,6 +1136,10 @@ def build_ivfpq_index_occ(
     # pass each instead
     for key in ("cc", "pc", "assign", "res"):
         ix[key] = ix[key].persist()
+    # the meta table carries the build parameters: serving derives the
+    # subspace split from __m rather than trusting its caller (a
+    # mismatched m would silently mis-bucket `sub` and return wrong
+    # neighbors with no error)
     meta = (
         ix["dim"]
         .withColumn("__m", F.lit(int(m)))
@@ -1232,95 +1184,41 @@ def ivfpq_topk_indexed_occ(
     vec_col: str = "embedding",
     as_of_version: int | None = None,
 ) -> DataFrame:
-    """``ivfpq_topk_indexed`` over an OCC-versioned artifact: the
-    quantizers (centroids, codebooks, meta) read at the latest
-    published version carrying them (replace semantics — a snapshot
-    rebuild supersedes them atomically), while assignments and codes
-    UNION every published version at or above the snapshot floor
-    (append semantics — ``update_ivfpq_index_occ`` deltas layer on the
-    bootstrap exactly like postings deltas on q188's index). A torn or
-    in-flight commit is invisible either way. ``as_of_version=N`` pins
-    every table to the index state when version N was the head (later
-    deltas and rebuilds invisible — sink.occ_read_table time-travel),
-    so an evaluation or training run reproduces the exact neighbor
-    sets it recorded."""
+    """Serve IVF-PQ top-k from a ``build_ivfpq_index_occ`` artifact:
+    the query vectors are the ONLY non-artifact input — corpus
+    embeddings are never touched (plan-asserted in test_similarity).
+    Same deterministic arithmetic as the inline ``ivfpq_topk``, so
+    results are row-identical when the queries are the same corpus
+    members; the subspace count ``m`` comes from the artifact's meta.
+
+    Every table is read from ONE ``sink.occ_snapshot``, so centroids,
+    codebooks, assignments, codes and meta always come from the same
+    version set: the quantizers (centroids, codebooks, meta) read at
+    the latest visible version carrying them (replace semantics — a
+    snapshot rebuild supersedes them atomically), while assignments and
+    codes UNION every visible version (append semantics —
+    ``update_ivfpq_index_occ`` deltas layer on the bootstrap exactly
+    like postings deltas on q188's index). ``as_of_version=N`` pins
+    every table to the index state when version N was the head, so an
+    evaluation or training run reproduces the exact neighbor sets it
+    recorded."""
     from hive_cassandra_spark import sink
 
+    snap = sink.occ_snapshot(spark, path)
+
+    def read(table, latest_only=False):
+        return snap.read(
+            table, latest_only=latest_only, as_of_version=as_of_version
+        )
+
     ix = {
-        "cc": sink.occ_read_table(
-            spark, path, "coarse_centroids", latest_only=True,
-            as_of_version=as_of_version,
-        ),
-        "pc": sink.occ_read_table(
-            spark, path, "pq_codebooks", latest_only=True,
-            as_of_version=as_of_version,
-        ),
-        "assign": sink.occ_read_table(
-            spark, path, "assignments", as_of_version=as_of_version
-        ),
-        "codes": sink.occ_read_table(
-            spark, path, "codes", as_of_version=as_of_version
-        ),
-        "dim": sink.occ_read_table(
-            spark, path, "meta", latest_only=True,
-            as_of_version=as_of_version,
-        ),
+        "cc": read("coarse_centroids", latest_only=True),
+        "pc": read("pq_codebooks", latest_only=True),
+        "assign": read("assignments"),
+        "codes": read("codes"),
+        "dim": read("meta", latest_only=True),
     }
     m = int(ix["dim"].select("__m").head()[0])
-    ix["dim"] = ix["dim"].select("__dim")
-    qpos = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.posexplode(F.col(vec_col).cast("array<double>")).alias("i", "x"),
-    ).localCheckpoint(eager=False)
-    qcd = (
-        qpos.join(F.broadcast(ix["cc"]), "i")
-        .groupBy("query_id", "ccid")
-        .agg(_d2_of("x", "c").alias("d2"))
-        .localCheckpoint(eager=False)
-    )
-    return _ivfpq_serve(ix, qpos, qcd, nprobe, m, topk)
-
-
-def ivfpq_topk_indexed(
-    spark,
-    path: str,
-    queries: DataFrame,
-    nprobe: int = 2,
-    m: int | None = None,
-    topk: int = 5,
-    id_col: str = "query_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Serve IVF-PQ top-k from a ``build_ivfpq_index`` artifact: the
-    query vectors are the ONLY non-artifact input — corpus embeddings
-    are never touched (plan-asserted in test_similarity). Same
-    deterministic arithmetic as the inline ``ivfpq_topk``, so results
-    are row-identical when the queries are the same corpus members.
-    The subspace count ``m`` comes from the artifact's meta table;
-    passing one that disagrees with the build raises instead of
-    silently mis-bucketing the subspace split."""
-    base = path.rstrip("/")
-    ix = {
-        "cc": spark.read.parquet(f"{base}/coarse_centroids"),
-        "pc": spark.read.parquet(f"{base}/pq_codebooks"),
-        "assign": spark.read.parquet(f"{base}/assignments"),
-        "codes": spark.read.parquet(f"{base}/codes"),
-        "dim": spark.read.parquet(f"{base}/meta"),
-    }
-    meta_cols = set(ix["dim"].columns)
-    built_m = (
-        int(ix["dim"].select("__m").head()[0]) if "__m" in meta_cols else m
-    )
-    if built_m is None:
-        raise ValueError(
-            "index meta carries no __m and no m was passed — rebuild the "
-            "artifact with build_ivfpq_index or pass the build-time m"
-        )
-    if m is not None and m != built_m:
-        raise ValueError(
-            f"m={m} disagrees with the artifact's build-time m={built_m}"
-        )
-    m = built_m
     ix["dim"] = ix["dim"].select("__dim")
     # Query-side frames are interactive-scale by definition (|queries| ×
     # dim rows); checkpoint them once so the serve plan's several

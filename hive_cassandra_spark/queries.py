@@ -8811,10 +8811,10 @@ _RETRIEVAL_QSET = [
     # the production retrieval shape at 100 TB.
     oracle=_SQL_RETRIEVAL_EVAL,
     doc="materialized-postings retrieval serving "
-    "(retrieval.build_postings_index + bm25_topk(post=, corpus=) + "
-    "eval_ranking): index the corpus once — postings parquet + one-row "
-    "corpus stats — then serve the BM25 ranking, the derived qrels, "
-    "and the eval metrics entirely from the artifact. The r07 verdict's "
+    "(retrieval.build_postings_index_occ + read_postings_index_occ + "
+    "bm25_topk(post=, corpus=) + eval_ranking): index the corpus once — "
+    "postings + one-row corpus stats as one OCC snapshot commit — then "
+    "serve the BM25 ranking, the derived qrels, and the eval metrics entirely from the artifact. The r07 verdict's "
     "registered-variant fix for the q157/q172 inline-rebuild plans; "
     "document scans end-to-end: exactly 2 (both in the build), asserted "
     "in PLANS.md + test_retrieval. Bears the retrieval tag alongside "
@@ -8833,8 +8833,8 @@ def q176_indexed_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     shutil.rmtree(base, ignore_errors=True)
     # THE corpus pass: two document scans, amortized over every consumer
-    retrieval.build_postings_index(docs, base)
-    post, corpus = retrieval.read_postings_index(spark, base)
+    retrieval.build_postings_index_occ(spark, docs, base)
+    post, corpus = retrieval.read_postings_index_occ(spark, base)
     qterms = local_df(
         spark,
         _RETRIEVAL_QSET, "query_id string, term string"
@@ -9383,8 +9383,7 @@ def q185_occ_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a compactor reads its inputs at v3 and computes winners...
     v_read = sink.store_version(store)
     stale_winners = sink._compact_winners(
-        sink.occ_read(spark, store), ["row_key", "column_name"], [],
-        True, None, None, False,
+        sink.occ_read(spark, store), True, None, None
     ).localCheckpoint(eager=True)
     # ...but a concurrent ingest claims v4 first (late updates that
     # resurrect the %35 tombstoned keys — THE writes a rename-swap
@@ -9673,9 +9672,9 @@ def q181_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ~128x smaller than the vectors) plus the ≤3 query rows.
     oracle=QUERIES["q148_ivfpq_topk"].oracle,
     doc="materialized IVF-PQ index serving (similarity."
-    "build_ivfpq_index + ivfpq_topk_indexed) — the Faiss index-file "
-    "analogue and the vector-side counterpart of q176's postings "
-    "artifact: coarse centroids, residual PQ codebooks, inverted-list "
+    "build_ivfpq_index_occ + ivfpq_topk_indexed_occ) — the Faiss "
+    "index-file analogue and the vector-side counterpart of q176's "
+    "postings artifact: coarse centroids, residual PQ codebooks, inverted-list "
     "assignments and per-item codes persist once per corpus version; "
     "queries probe nprobe cells and ADC-score the probed codes with "
     "ZERO corpus-vector rescans (plan-asserted). Completes the "
@@ -9694,12 +9693,14 @@ def q182_indexed_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         tempfile.gettempdir(), f"hcs_q182_{tok}_{os.getpid()}_ivfpq"
     )
     shutil.rmtree(base, ignore_errors=True)
-    similarity.build_ivfpq_index(emb, base, n_cells=8, m=4, k_codes=8)
+    similarity.build_ivfpq_index_occ(
+        spark, emb, base, n_cells=8, m=4, k_codes=8
+    )
     queries = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    return similarity.ivfpq_topk_indexed(
-        spark, base, queries, nprobe=2, m=4, topk=5
+    return similarity.ivfpq_topk_indexed_occ(
+        spark, base, queries, nprobe=2, topk=5
     )
 
 
@@ -10987,7 +10988,7 @@ def _q204_bm25_chain(tag: str, pred: str) -> str:
            CAST(3 AS BIGINT), CAST(1 AS BIGINT)
     FROM ranked2 WHERE rank <= 10
     """,
-    doc="OCC as-of-version reads — time travel (sink.occ_read_table/"
+    doc="OCC as-of-version reads — time travel (sink.occ_snapshot/"
     "occ_read as_of_version=N threaded through retrieval."
     "read_postings_index_occ and similarity.ivfpq_topk_indexed_occ — "
     "r11 verdict item 2): the dataset-reproducibility primitive a "

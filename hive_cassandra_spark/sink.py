@@ -265,18 +265,21 @@ def stream_to_cells(
 
 def _compact_winners(
     cells: DataFrame,
-    key: list,
-    extras: list,
     drop_tombstones: bool,
     now_millis: int | None,
     gc_grace_s: int | None,
-    has_ttl: bool,
 ) -> DataFrame:
-    """The compaction winner computation shared by ``compact_store`` and
-    ``occ_compact_store``: per cell key keep the (ts, value, extras)
-    struct-max — highest ts wins, ties to the lexically greater value
-    (Cassandra's reconciliation rule) — then apply the tombstone /
+    """The compaction winner computation shared by ``compact_store``,
+    ``occ_compact_store`` and ``vacuum_commit_log``: per cell key
+    (row_key, column_name[, sub_column_name]) keep the (ts, value[,
+    ttl_s]) struct-max — highest ts wins, ties to the lexically greater
+    value (Cassandra's reconciliation rule) — then apply the tombstone /
     gc_grace / TTL purge rules documented on ``compact_store``."""
+    cols = set(cells.columns)
+    key = ["row_key", "column_name"] + (
+        ["sub_column_name"] if "sub_column_name" in cols else []
+    )
+    extras = [c for c in ("ttl_s",) if c in cols]
     packed = F.struct(*(["ts", "value"] + extras))
     won = cells.groupBy(*key).agg(F.max(packed).alias("w"))
     flat = won.select(
@@ -295,7 +298,7 @@ def _compact_winners(
             )
         else:
             flat = flat.filter(F.col("value").isNotNull())
-    if now_millis is not None and has_ttl:
+    if now_millis is not None and extras:
         flat = flat.filter(
             F.col("ttl_s").isNull()
             | (
@@ -351,18 +354,10 @@ def compact_store(
 
     datasource.register(spark)
     cells = spark.read.format("cassandra_cells").load(path)
-    cols = set(cells.columns)
-    key = ["row_key", "column_name"] + (
-        ["sub_column_name"] if "sub_column_name" in cols else []
-    )
-    extras = [c for c in ("ttl_s",) if c in cols]
     cells_in = cells.count()
     files_in = len(glob.glob(os.path.join(path, "*.parquet")))
 
-    flat = _compact_winners(
-        cells, key, extras, drop_tombstones, now_millis, gc_grace_s,
-        "ttl_s" in cols,
-    )
+    flat = _compact_winners(cells, drop_tombstones, now_millis, gc_grace_s)
 
     token = uuid.uuid4().hex[:8]
     tmp_dir = f"{path.rstrip('/')}.compacting-{token}"
@@ -491,18 +486,9 @@ def vacuum_commit_log(spark, path: str, retain_after_batch: int) -> dict:
             "cells_in": 0, "cells_out": 0, "watermark": None,
         }
     cells = spark.read.parquet(*prefix)
-    cols = set(cells.columns)
-    key = ["row_key", "column_name"] + (
-        ["sub_column_name"] if "sub_column_name" in cols else []
-    )
-    extras = [c for c in ("ttl_s",) if c in cols]
     cells_in = cells.count()
-    packed = F.struct(*(["ts", "value"] + extras))
-    flat = cells.groupBy(*key).agg(F.max(packed).alias("w")).select(
-        *key,
-        F.col("w.value").alias("value"),
-        F.col("w.ts").alias("ts"),
-        *[F.col(f"w.{c}").alias(c) for c in extras],
+    flat = _compact_winners(
+        cells, drop_tombstones=False, now_millis=None, gc_grace_s=None
     )
     tmp = f"{path}.vacuum-{uuid.uuid4().hex[:12]}"
     flat.write.mode("overwrite").parquet(tmp)
@@ -900,8 +886,8 @@ def occ_commit_tables(
     with stale stats and a retry double-appended. Here every table's
     parts stage first, ONE mkdir claims the version, parts rename in
     under ``<path>/<table>/part-occ-v%09d-*-<token>.parquet``, and ONE
-    marker publishes them together — readers (``occ_read_table``) see
-    all of the commit or none of it.
+    marker publishes them together — a reader that takes every table
+    from one ``occ_snapshot`` sees all of the commit or none of it.
 
     ``snapshot=True`` supersedes every prior version (the rebuild
     commit); an append commit layers on top (the delta commit). ``tag``
@@ -925,8 +911,8 @@ def _occ_read(
     latest_only: bool = False, as_of_version: int | None = None,
     empty_schema=None,
 ):
-    """The one read behind ``occ_read`` (``table=None``), ``occ_read_table``
-    and ``occ_update``'s snapshot. The caller's ONE log listing resolves
+    """The one read behind ``occ_snapshot(...).read`` (and so ``occ_read``,
+    ``table=None``). The snapshot's ONE log listing resolves
     the visible versions: those at or above the snapshot floor, or
     ``(floor-at-N, N]`` for a pin at N (a compaction published after the
     pin cannot rewrite its history; a never-published pin is a caller
@@ -995,7 +981,7 @@ def _occ_read(
         # a published pin with no visible parts — and at least one
         # visible marker that recorded parts or predates the files:
         # records — means occ_vacuum already dropped the pinned
-        # history: fail closed like occ_read_table, never silently
+        # history: fail closed like a table read, never silently
         # serve an empty store as "the state at vN". When EVERY visible
         # marker explicitly records files:0 (empty-DataFrame commits),
         # the pinned state genuinely IS an empty store, and it serves
@@ -1015,29 +1001,31 @@ def _occ_read(
     )
 
 
-def occ_read_table(
-    spark,
-    path: str,
-    table: str,
-    latest_only: bool = False,
-    as_of_version: int | None = None,
-):
-    """Snapshot-isolation read of one table of an ``occ_commit_tables``
-    artifact: parts of PUBLISHED versions at or above the newest
-    snapshot floor, unioned (append semantics); ``latest_only=True``
-    reads just the highest published version carrying parts for this
-    table (replace semantics — the one-row meta shape).
-    ``as_of_version=N`` pins the read to the store's state when version
-    N was the head — versions in ``(floor-at-N, N]`` only, later deltas
-    and later snapshots invisible — the dataset-reproducibility
-    primitive a training run pins its inputs to (Delta/Iceberg
-    time-travel). Raises FileNotFoundError when no committed parts are
-    visible: index consumers must fail closed, not silently serve an
-    empty index — for an as-of read that includes a pin whose parts
-    ``occ_vacuum`` already dropped (history physically gone, same as
-    time-travel past a Delta VACUUM)."""
-    return _occ_read(
-        spark, path, _occ_log(path), table, latest_only, as_of_version
+def occ_snapshot(spark, path: str) -> SimpleNamespace:
+    """ONE listing of an OCC store's marker log, as a value: ``version``
+    (the head, 0 = never committed), ``tags`` ({version: tag}) and
+    ``read(table=None, latest_only=False, as_of_version=None,
+    empty_schema=None)``, every read resolved from that same listing
+    (Delta's log-snapshot rule). A reader that takes several tables of
+    an ``occ_commit_tables`` artifact from one snapshot gets them all
+    from ONE version set: a commit published after the listing is
+    wholly unseen, never half seen.
+
+    ``read()`` with no table is ``occ_read``. ``read(table)`` unions the
+    table's parts of every visible version (append semantics);
+    ``latest_only=True`` reads just the highest visible version carrying
+    parts for it (replace semantics — the one-row meta shape).
+    ``as_of_version=N`` pins the read to the state when version N was
+    the head: versions in ``(floor-at-N, N]`` only, later deltas and
+    later snapshots invisible (Delta/Iceberg time-travel). A table read
+    with no visible parts raises FileNotFoundError — index consumers
+    fail closed rather than serve an empty index — including a pin
+    whose parts ``occ_vacuum`` already dropped."""
+    log = _occ_log(path)
+    return SimpleNamespace(
+        version=max(log, default=0),
+        tags={v: e["tag"] for v, e in log.items() if e["tag"] is not None},
+        read=functools.partial(_occ_read, spark, path, log),
     )
 
 
@@ -1052,7 +1040,7 @@ def occ_read(
     superseded and skipped even before ``occ_vacuum`` physically drops
     them. ``as_of_version=N`` pins the read to the state as of version
     N — versions in ``(floor-at-N, N]``, later deltas and later
-    snapshots invisible (time-travel; see ``occ_read_table``). Listing
+    snapshots invisible (time-travel; see ``occ_snapshot``). Listing
     is O(files) driver-side dirent work (the same cost class as any
     parquet file listing), zero data movement; the returned DataFrame
     scans exactly the committed, current parts.
@@ -1065,9 +1053,8 @@ def occ_read(
     store whose cells carry ``sub_column_name`` / ``ttl_s`` would read
     back 4-column when empty and diverge from the non-empty case in
     downstream unions and compaction key derivation."""
-    return _occ_read(
-        spark, path, _occ_log(path), as_of_version=as_of_version,
-        empty_schema=empty_schema,
+    return occ_snapshot(spark, path).read(
+        as_of_version=as_of_version, empty_schema=empty_schema
     )
 
 
@@ -1200,11 +1187,11 @@ def occ_update(
     max_retries: int = 5, claim_grace_s: float = 10.0,
 ) -> dict:
     """The one OCC read-modify-commit loop. Each attempt decides
-    everything from ONE ``_occ_log`` listing (Delta's log-snapshot
-    rule): a ``tag`` already in it returns ``already_applied``; else
-    ``derive(snap)`` gets ``snap.version`` and ``snap.read(table=None,
-    latest_only=False)`` (``occ_read`` / ``occ_read_table`` semantics,
-    resolved from that same listing) and returns ``(tables, out)`` —
+    everything from ONE ``occ_snapshot`` (Delta's log-snapshot rule): a
+    ``tag`` already in its ``tags`` returns ``already_applied``; else
+    ``derive(snap)`` gets the attempt's ``occ_snapshot`` — its
+    ``version`` and its ``read``, resolved from that same listing — and
+    returns ``(tables, out)`` —
     the ``{table: DataFrame}`` to commit at ``snap.version`` (``None`` =
     the store root) and the caller's result dict. A lost commit, or a
     table read that found its snapshot vacuumed by a newer snapshot
@@ -1216,23 +1203,20 @@ def occ_update(
     RuntimeError after ``max_retries`` attempts."""
     conflicts = 0
     for _ in range(max_retries):
-        log = _occ_log(path)
-        version = max(log, default=0)
-        if tag and any(e["tag"] == tag for e in log.values()):
+        snap = occ_snapshot(spark, path)
+        if tag and tag in snap.tags.values():
             return {
-                "version": version, "conflicts": conflicts,
+                "version": snap.version, "conflicts": conflicts,
                 "already_applied": True, "files": 0,
             }
-        read = functools.partial(_occ_read, spark, path, log)
-        snap = SimpleNamespace(version=version, read=read)
         try:
             tables, out = derive(snap)
         except FileNotFoundError:
-            if store_version(path) == version:
+            if store_version(path) == snap.version:
                 raise
             conflicts += 1
             continue
-        res = _occ_commit(path, tables, version, snapshot, tag)
+        res = _occ_commit(path, tables, snap.version, snapshot, tag)
         if res["committed"]:
             return {
                 **out, "version": res["version"], "conflicts": conflicts,
@@ -1273,16 +1257,8 @@ def occ_compact_store(
 
     def derive(snap):
         cells = snap.read()
-        cols = set(cells.columns)
-        key = ["row_key", "column_name"] + (
-            ["sub_column_name"] if "sub_column_name" in cols else []
-        )
-        extras = [c for c in ("ttl_s",) if c in cols]
         cells_in = cells.count()
-        flat = _compact_winners(
-            cells, key, extras, drop_tombstones, now_millis, gc_grace_s,
-            "ttl_s" in cols,
-        )
+        flat = _compact_winners(cells, drop_tombstones, now_millis, gc_grace_s)
         # materialize the winners BEFORE the claim: the commit's write
         # must not re-read store files that a racing vacuum could move
         flat = flat.localCheckpoint(eager=True)

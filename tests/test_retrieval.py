@@ -297,7 +297,7 @@ def test_bm25_materialized_postings_collapses_corpus_scans(spark, sf_dir, tmp_pa
 
 
 def test_postings_index_serving_scans_zero_document_bytes(spark, sf_dir, tmp_path):
-    """q176's production contract: after build_postings_index, the
+    """q176's production contract: after build_postings_index_occ, the
     serving plan (ranking from post= + corpus=) reads ONLY the artifact —
     zero scans of the documents parquet — and is row-identical to the
     inline path."""
@@ -307,8 +307,8 @@ def test_postings_index_serving_scans_zero_document_bytes(spark, sf_dir, tmp_pat
         "query_id string, term string",
     )
     base = str(tmp_path / "idx")
-    retrieval.build_postings_index(docs, base)
-    post, corpus = retrieval.read_postings_index(spark, base)
+    retrieval.build_postings_index_occ(spark, docs, base)
+    post, corpus = retrieval.read_postings_index_occ(spark, base)
     served = retrieval.bm25_topk(None, qset, k=5, post=post, corpus=corpus)
     inline = retrieval.bm25_topk(docs, qset, k=5)
     key = lambda r: (r.query_id, r.rank, r.doc_id, r.score)  # noqa: E731
@@ -321,7 +321,7 @@ def test_occ_update_postings_index_equals_rebuild(spark, docs, tmp_path):
     """Incremental OCC maintenance == from-scratch rebuild, exactly:
     build on a prefix, delta-update with the rest, and both the artifact
     contents (postings + merged (n, s, a) stats) and the served BM25
-    ranking must equal a full plain rebuild's. Also: the guard against
+    ranking must equal a from-scratch full-corpus build's. Also: the guard against
     an s-less meta fails closed, and the legacy non-OCC update path (the
     append-before-rename-swap crash hazard, r10 verdict item 4) is GONE
     — one maintenance path, one crash semantics."""
@@ -335,9 +335,9 @@ def test_occ_update_postings_index_equals_rebuild(spark, docs, tmp_path):
     retrieval.build_postings_index_occ(spark, old_docs, inc)
     res = retrieval.update_postings_index_occ(spark, inc, new_docs)
     assert res["docs_added"] == 2 and res["tokens_added"] == 10
-    retrieval.build_postings_index(docs, full)
+    retrieval.build_postings_index_occ(spark, docs, full)
     post_i, meta_i = retrieval.read_postings_index_occ(spark, inc)
-    post_f, meta_f = retrieval.read_postings_index(spark, full)
+    post_f, meta_f = retrieval.read_postings_index_occ(spark, full)
     assert sorted(map(tuple, post_i.collect())) == sorted(
         map(tuple, post_f.collect())
     )
@@ -368,7 +368,7 @@ def test_occ_update_postings_index_equals_rebuild(spark, docs, tmp_path):
 def test_occ_index_lifecycle_matches_plain_build(spark, sf_dir, tmp_path):
     """OCC-versioned index (r09 verdict item 3): snapshot build + delta
     update must read back IDENTICAL postings and meta to a from-scratch
-    plain build over the full corpus."""
+    build over the full corpus."""
     from pyspark.sql import functions as F2
 
     from hive_cassandra_spark.operators import retrieval as rt
@@ -385,9 +385,9 @@ def test_occ_index_lifecycle_matches_plain_build(spark, sf_dir, tmp_path):
     )
     assert r2["version"] == 2 and not r2["already_applied"]
     plain_path = str(tmp_path / "plain_idx")
-    rt.build_postings_index(docs, plain_path)
+    rt.build_postings_index_occ(spark, docs, plain_path)
     post_occ, meta_occ = rt.read_postings_index_occ(spark, occ_path)
-    post_plain, meta_plain = rt.read_postings_index(spark, plain_path)
+    post_plain, meta_plain = rt.read_postings_index_occ(spark, plain_path)
     assert meta_occ.collect() == meta_plain.collect()
     assert (
         post_occ.select("id", "term", "tf").exceptAll(
@@ -475,11 +475,45 @@ def test_occ_index_update_retries_past_rebuild_vacuumed_mid_update(
     assert r["version"] == 3 and not r["already_applied"], r
     assert r["conflicts"] == 1 and r["n"] == docs.count()
     plain = str(tmp_path / "plain")
-    rt.build_postings_index(docs, plain)
+    rt.build_postings_index_occ(spark, docs, plain)
     assert (
         rt.read_postings_index_occ(spark, path)[1].collect()
-        == rt.read_postings_index(spark, plain)[1].collect()
+        == rt.read_postings_index_occ(spark, plain)[1].collect()
     )
+
+
+def test_occ_index_read_is_one_snapshot_across_tables(
+    spark, sf_dir, tmp_path, publish_after_first_listing
+):
+    """A rebuild that publishes right after the reader's first marker
+    listing must not tear the read: postings and meta both come from
+    the version set of that one listing (v1) — never postings from one
+    build and corpus stats from another."""
+    import re
+    import shutil
+
+    from pyspark.sql import functions as F2
+
+    from hive_cassandra_spark.operators import retrieval as rt
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    even = docs.filter(F2.col("doc_id") % 2 == 0)
+    path, twin = str(tmp_path / "idx"), str(tmp_path / "twin")
+    rt.build_postings_index_occ(spark, even, path)
+    shutil.copytree(path, twin)
+    assert rt.build_postings_index_occ(spark, docs, twin)["version"] == 2
+    fired = publish_after_first_listing(path, twin, 2)
+    post, meta = rt.read_postings_index_occ(spark, path)
+    assert fired
+
+    def versions(df):
+        return {
+            int(re.search(r"part-occ-v(\d{9})", f).group(1))
+            for f in df.inputFiles()
+        }
+
+    assert versions(post) == {1} and versions(meta) == {1}
+    assert meta.head()["n"] == even.count()
 
 
 def test_occ_index_torn_update_invisible_and_recovered(spark, sf_dir, tmp_path):

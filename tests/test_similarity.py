@@ -349,7 +349,7 @@ def test_ivfpq_residual_recovers_offset_structure(spark):
 
 def test_ivfpq_indexed_equals_inline_and_skips_corpus(spark, sf_dir, tmp_path):
     """q182's production contract (the q176 pattern on the vector side):
-    serving from a build_ivfpq_index artifact is row-identical to the
+    serving from a build_ivfpq_index_occ artifact is row-identical to the
     inline ivfpq_topk, and the serving plan reads the embeddings parquet
     at most once (the <=3 query rows, pushed filter) — the corpus
     vectors live only in the artifact."""
@@ -358,12 +358,14 @@ def test_ivfpq_indexed_equals_inline_and_skips_corpus(spark, sf_dir, tmp_path):
         emb, n_cells=8, nprobe=2, m=4, k_codes=8, query_max=3, topk=5
     )
     base = str(tmp_path / "ivfpq")
-    similarity.build_ivfpq_index(emb, base, n_cells=8, m=4, k_codes=8)
+    similarity.build_ivfpq_index_occ(
+        spark, emb, base, n_cells=8, m=4, k_codes=8
+    )
     queries = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    served = similarity.ivfpq_topk_indexed(
-        spark, base, queries, nprobe=2, m=4, topk=5
+    served = similarity.ivfpq_topk_indexed_occ(
+        spark, base, queries, nprobe=2, topk=5
     )
     key = lambda r: (r.query_id, r.rank, r.neighbor_id, r.adc_d2)  # noqa: E731
     assert sorted(map(key, served.collect())) == sorted(
@@ -463,9 +465,9 @@ def test_ann_tune_nprobe_report_and_choice(spark, sf_dir):
 
 
 def test_ivfpq_occ_index_matches_plain_artifact(spark, sf_dir, tmp_path):
-    """OCC-routed IVF-PQ build/serve: identical results to the plain
-    artifact, all five tables publish atomically, and a stale rebuild
-    fails closed."""
+    """OCC-routed IVF-PQ build/serve: identical results to the inline
+    from-scratch ivfpq_topk, all five tables publish atomically, and a
+    stale rebuild fails closed."""
     from pyspark.sql import functions as F2
 
     from hive_cassandra_spark.operators import similarity as sim
@@ -474,8 +476,6 @@ def test_ivfpq_occ_index_matches_plain_artifact(spark, sf_dir, tmp_path):
     occ_path = str(tmp_path / "occ_ivfpq")
     r1 = sim.build_ivfpq_index_occ(spark, emb, occ_path, n_cells=8, m=4, k_codes=8)
     assert r1["committed"] and r1["version"] == 1
-    plain_path = str(tmp_path / "plain_ivfpq")
-    sim.build_ivfpq_index(emb, plain_path, n_cells=8, m=4, k_codes=8)
     queries = emb.filter(F2.col("vec_id") < 3).select(
         F2.col("vec_id").alias("query_id"), "embedding"
     )
@@ -485,8 +485,8 @@ def test_ivfpq_occ_index_matches_plain_artifact(spark, sf_dir, tmp_path):
         ).collect()
     )
     want = sorted(
-        sim.ivfpq_topk_indexed(
-            spark, plain_path, queries, nprobe=2, m=4, topk=5
+        sim.ivfpq_topk(
+            emb, n_cells=8, nprobe=2, m=4, k_codes=8, query_max=3, topk=5
         ).collect()
     )
     assert got == want
@@ -582,8 +582,8 @@ def test_update_ivfpq_index_occ_delta_lifecycle(spark, sf_dir, tmp_path):
     )
     assert r3["already_applied"] and sink.store_version(base) == 2
     # exactly-once coverage across the version union
-    assign = sink.occ_read_table(spark, base, "assignments")
-    codes = sink.occ_read_table(spark, base, "codes")
+    assign = sink.occ_snapshot(spark, base).read("assignments")
+    codes = sink.occ_snapshot(spark, base).read("codes")
     n = emb.count()
     assert assign.count() == n
     assert assign.select("id").distinct().count() == n
@@ -607,8 +607,8 @@ def test_update_ivfpq_index_occ_delta_lifecycle(spark, sf_dir, tmp_path):
     a1 = sorted(map(tuple, spark.read.parquet(
         *[f for f in __import__("glob").glob(f"{base2}/assignments/part-occ-v000000001-*.parquet")]
     ).collect()))
-    a2 = sorted(map(tuple, sink.occ_read_table(
-        spark, base2, "assignments", latest_only=True).collect()))
+    a2 = sorted(map(tuple, sink.occ_snapshot(spark, base2).read(
+        "assignments", latest_only=True).collect()))
     assert a1 == a2
     # served ranking is deterministic across two reads
     q = emb.filter(F.col("vec_id") < 3)
@@ -649,12 +649,12 @@ def test_update_ivfpq_duplicate_delivery_mid_update_applies_once(
     assert r["already_applied"] and r["version"] == 2, r
     assert r["vecs_added"] == 0 and r["conflicts"] == 1
     n = emb.count()
-    assign = sink.occ_read_table(spark, path, "assignments")
+    assign = sink.occ_snapshot(spark, path).read("assignments")
     assert assign.count() == n
     assert assign.select("id").distinct().count() == n
-    assert sink.occ_read_table(spark, path, "codes").count() == 4 * n
+    assert sink.occ_snapshot(spark, path).read("codes").count() == 4 * n
     assert sorted(map(tuple, assign.collect())) == sorted(map(
-        tuple, sink.occ_read_table(spark, twin, "assignments").collect()
+        tuple, sink.occ_snapshot(spark, twin).read("assignments").collect()
     ))
 
 
@@ -692,12 +692,13 @@ def test_stream_update_ivfpq_index_equals_batch_delta(spark, sf_dir, tmp_path):
     tags = set(sink.store_tags(idx).values())
     assert {"stream-0", "stream-1", "stream-2"} <= tags
     # replayed batch no-ops on the marker tag — content untouched
-    n_assign = sink.occ_read_table(spark, idx, "assignments").count()
+    n_assign = sink.occ_snapshot(spark, idx).read("assignments").count()
     r = sim.update_ivfpq_index_occ(
         spark, idx, emb.filter(~even), batch_id="stream-1"
     )
     assert r["already_applied"] and sink.store_version(idx) == 4
-    assert sink.occ_read_table(spark, idx, "assignments").count() == n_assign
+    n_after = sink.occ_snapshot(spark, idx).read("assignments").count()
+    assert n_after == n_assign
     # exactly-once coverage: every vector assigned exactly once
     assert n_assign == emb.count()
     # served ranking == the single-delta batch path's
@@ -769,6 +770,48 @@ def test_ivfpq_indexed_occ_as_of_version(spark, sf_dir, tmp_path):
     assert sink.store_version(idx) == 2
 
 
+def test_ivfpq_indexed_occ_reads_one_snapshot_across_tables(
+    spark, sf_dir, tmp_path, publish_after_first_listing
+):
+    """A rebuild that publishes right after the server's first marker
+    listing must not tear the read: centroids, codebooks, assignments,
+    codes and meta all come from the version set of that one listing
+    (v1) — never centroids from one build and codes from another."""
+    import os
+    import re
+    import shutil
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").filter(
+        F.col("vec_id") < 120
+    )
+    even = F.col("vec_id") % 2 == 0
+    path, twin = str(tmp_path / "idx"), str(tmp_path / "twin")
+    similarity.build_ivfpq_index_occ(
+        spark, emb.filter(even), path, n_cells=8, m=4, k_codes=8
+    )
+    shutil.copytree(path, twin)
+    assert similarity.build_ivfpq_index_occ(
+        spark, emb, twin, n_cells=8, m=4, k_codes=8
+    )["version"] == 2
+    fired = publish_after_first_listing(path, twin, 2)
+    served = similarity.ivfpq_topk_indexed_occ(
+        spark, path, emb.filter(F.col("vec_id") < 3), nprobe=2, topk=5,
+        id_col="vec_id",
+    )
+    assert fired
+    parts = [f for f in served.inputFiles() if "part-occ-v" in f]
+    tables = {os.path.basename(os.path.dirname(f)) for f in parts}
+    assert tables == {
+        "coarse_centroids", "pq_codebooks", "assignments", "codes", "meta"
+    }
+    versions = {
+        int(re.search(r"part-occ-v(\d{9})", f).group(1)) for f in parts
+    }
+    assert versions == {1}, sorted(parts)
+    rows = served.collect()
+    assert len(rows) == 15 and all(r[1] % 2 == 0 for r in rows)
+
+
 def test_ivfpq_torn_update_invisible_and_recovered(spark, sf_dir, tmp_path):
     """A vector delta that crashed between claim and publish leaves
     nothing visible (reads serve v1), and the next
@@ -786,7 +829,7 @@ def test_ivfpq_torn_update_invisible_and_recovered(spark, sf_dir, tmp_path):
     similarity.build_ivfpq_index_occ(
         spark, emb.filter(even), base, n_cells=8, m=4, k_codes=8
     )
-    n_v1 = sink.occ_read_table(spark, base, "assignments").count()
+    n_v1 = sink.occ_snapshot(spark, base).read("assignments").count()
     # torn delta: claim for v2 + token-matched junk part in
     # assignments/, NO marker — exactly what a crash mid-commit leaves
     claim = os.path.join(base, "_occ-claim-000000002")
@@ -798,7 +841,8 @@ def test_ivfpq_torn_update_invisible_and_recovered(spark, sf_dir, tmp_path):
     )
     with open(junk, "wb") as fh:
         fh.write(b"junk")
-    assert sink.occ_read_table(spark, base, "assignments").count() == n_v1
+    n_torn = sink.occ_snapshot(spark, base).read("assignments").count()
+    assert n_torn == n_v1
     q = emb.filter(F.col("vec_id") < 3)
     served = similarity.ivfpq_topk_indexed_occ(
         spark, base, q, nprobe=2, topk=5, id_col="vec_id"
@@ -813,5 +857,5 @@ def test_ivfpq_torn_update_invisible_and_recovered(spark, sf_dir, tmp_path):
     assert r["version"] == 2 and r["conflicts"] == 1
     assert not r["already_applied"]
     assert not os.path.exists(junk)
-    n_all = sink.occ_read_table(spark, base, "assignments").count()
+    n_all = sink.occ_snapshot(spark, base).read("assignments").count()
     assert n_all == emb.count()

@@ -792,7 +792,8 @@ def test_occ_read_modify_commit_listing_budget(spark, sf_dir, tmp_path,
     """One read-modify-commit attempt with no conflict lists the marker
     log at most: twice for an index delta (the attempt's snapshot, the
     commit's version check) and three times for a compaction (plus its
-    post-commit vacuum)."""
+    post-commit vacuum). An index reader lists it once: every table
+    comes from one snapshot."""
     import glob
 
     from pyspark.sql import functions as F2
@@ -815,7 +816,8 @@ def test_occ_read_modify_commit_listing_budget(spark, sf_dir, tmp_path,
             res = call()
         finally:
             monkeypatch.setattr(glob, "glob", real_glob)
-        assert res["conflicts"] == 0, res
+        if isinstance(res, dict):
+            assert res["conflicts"] == 0, res
         return len(listings)
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -826,6 +828,7 @@ def test_occ_read_modify_commit_listing_budget(spark, sf_dir, tmp_path,
     assert count(lambda: retrieval.update_postings_index_occ(
         spark, idx, docs.filter(F2.col("doc_id") % 2 == 1), batch_id="b1"
     )) <= 2
+    assert count(lambda: retrieval.read_postings_index_occ(spark, idx)) <= 1
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").filter(
         F2.col("vec_id") < 60
     )
@@ -837,6 +840,10 @@ def test_occ_read_modify_commit_listing_budget(spark, sf_dir, tmp_path,
     assert count(lambda: similarity.update_ivfpq_index_occ(
         spark, vidx, emb.filter(F2.col("vec_id") % 2 == 1), batch_id="b1"
     )) <= 2
+    queries = emb.filter(F2.col("vec_id") < 3)
+    assert count(lambda: similarity.ivfpq_topk_indexed_occ(
+        spark, vidx, queries, id_col="vec_id"
+    )) <= 1
     store = str(tmp_path / "cells")
     cells = spark.range(20).select(
         F2.encode(F2.col("id").cast("string"), "utf-8").alias("row_key"),
@@ -930,7 +937,7 @@ def test_occ_custom_claim_backend(spark, tmp_path):
         assert rt1["committed"] and rt1["version"] == 1
         rt2 = sink.occ_commit_tables(spark, idx, {"t": t}, 0, tag="b1")
         assert not rt2["committed"] and rt2["conflict"]
-        assert sink.occ_read_table(spark, idx, "t").count() == 3
+        assert sink.occ_snapshot(spark, idx).read("t").count() == 3
         assert sink.store_tags(idx) == {1: "b0"}
     finally:
         sink.set_occ_claim_backend(prev)
@@ -1014,24 +1021,26 @@ def test_occ_read_table_as_of_version(spark, tmp_path):
     assert sink.occ_commit_tables(spark, idx, tables(3, 108), 1)["committed"]
     assert sink.occ_commit_tables(spark, idx, tables(2, 110), 2)["committed"]
     # pinned union = commits 1..2 only; latest_only meta = the v2 row
-    assert sink.occ_read_table(spark, idx, "rows",
-                               as_of_version=2).count() == 8
-    assert sink.occ_read_table(
-        spark, idx, "meta", latest_only=True, as_of_version=2
+    assert sink.occ_snapshot(spark, idx).read(
+        "rows", as_of_version=2
+    ).count() == 8
+    assert sink.occ_snapshot(spark, idx).read(
+        "meta", latest_only=True, as_of_version=2
     ).head()["m"] == 108
-    assert sink.occ_read_table(spark, idx, "rows").count() == 10
+    assert sink.occ_snapshot(spark, idx).read("rows").count() == 10
     with pytest.raises(ValueError, match="never published"):
-        sink.occ_read_table(spark, idx, "rows", as_of_version=7)
+        sink.occ_snapshot(spark, idx).read("rows", as_of_version=7)
     # a superseding snapshot at v4 replaces everything for latest reads
     # but a pin at v2 still sees the pre-snapshot union
     assert sink.occ_commit_tables(
         spark, idx, tables(20, 120), 3, snapshot=True
     )["committed"]
-    assert sink.occ_read_table(spark, idx, "rows").count() == 20
-    assert sink.occ_read_table(spark, idx, "rows",
-                               as_of_version=2).count() == 8
-    assert sink.occ_read_table(
-        spark, idx, "meta", latest_only=True, as_of_version=2
+    assert sink.occ_snapshot(spark, idx).read("rows").count() == 20
+    assert sink.occ_snapshot(spark, idx).read(
+        "rows", as_of_version=2
+    ).count() == 8
+    assert sink.occ_snapshot(spark, idx).read(
+        "meta", latest_only=True, as_of_version=2
     ).head()["m"] == 108
 
 
@@ -1119,13 +1128,14 @@ def test_occ_as_of_partial_vacuum_fails_closed_table_level(spark, tmp_path):
         spark, idx, {"rows": rows, "meta": meta}, 2
     )["committed"]
     # pin at v3 reads rows from v1+v3 (v2's absence is not an error)
-    assert sink.occ_read_table(spark, idx, "rows",
-                               as_of_version=3).count() == 10
+    assert sink.occ_snapshot(spark, idx).read(
+        "rows", as_of_version=3
+    ).count() == 10
     # simulate a vacuumed v1: physically remove its rows parts
     for f in glob.glob(os.path.join(idx, "rows", "part-occ-v000000001-*")):
         os.remove(f)
     with pytest.raises(FileNotFoundError, match="vacuumed"):
-        sink.occ_read_table(spark, idx, "rows", as_of_version=3).count()
+        sink.occ_snapshot(spark, idx).read("rows", as_of_version=3).count()
 
 
 def test_occ_as_of_empty_commit_serves_empty_store(spark, tmp_path):
@@ -1263,7 +1273,7 @@ def test_occ_read_snapshot_published_mid_read_is_not_torn(
 def test_occ_read_table_snapshot_published_mid_read_is_not_torn(
     spark, tmp_path, monkeypatch
 ):
-    """The occ_read_table(latest_only=True) twin: the meta-shaped read
+    """The snapshot.read(table, latest_only=True) twin: the meta-shaped read
     must serve v2 (or v3), never raise for a store that has parts."""
     import glob
     import os
@@ -1280,7 +1290,7 @@ def test_occ_read_table_snapshot_published_mid_read_is_not_torn(
     fired = _publish_snapshot_after_first_listing(
         monkeypatch, idx, os.path.join(idx, "t"), part
     )
-    n = sink.occ_read_table(spark, idx, "t", latest_only=True).count()
+    n = sink.occ_snapshot(spark, idx).read("t", latest_only=True).count()
     assert fired
     assert n in (4, 1), n
 

@@ -300,12 +300,14 @@ NOTES = {
         "only published markers). The timed cost is the three writes."
     ),
     "q182_indexed_ann": (
-        "the q176 pattern on the vector side: the index build scans the "
-        "embeddings once into parquet (centroids + codebooks + "
-        "assignments + codes — the dominant parts are a few ints per "
+        "the q176 pattern on the vector side: build_ivfpq_index_occ "
+        "scans the embeddings once into one OCC snapshot commit "
+        "(centroids + codebooks + assignments + codes + meta — the "
+        "dominant parts are a few ints per "
         "vector, ~128x smaller than the vectors); serving probes nprobe "
         "cells and ADC-scores the probed codes reading ONLY the "
-        "artifact plus the checkpointed query rows — corpus vectors "
+        "artifact (ivfpq_topk_indexed_occ, every table from one OCC "
+        "snapshot) plus the checkpointed query rows — corpus vectors "
         "are never rescanned (plan-asserted: <=1 embeddings scan served "
         "vs >=5 inline)."
     ),
@@ -348,7 +350,7 @@ NOTES = {
     ),
     "q176_indexed_retrieval": (
         "the materialized-postings serving path (r07 verdict item 3): "
-        "build_postings_index scans the documents parquet exactly TWICE "
+        "build_postings_index_occ scans the documents parquet exactly TWICE "
         "(postings explode + corpus count — vs 11 scans / 25 exchanges "
         "in q172's inline plan, PLANS r07), then the BM25 ranking, the "
         "derived qrels, AND the eval all read only the parquet "

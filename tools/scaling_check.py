@@ -550,14 +550,15 @@ def postings_build(spark, sf_dir: str):
     size lands in the record as artifact_mb."""
     import shutil
 
+    from hive_cassandra_spark import sink
     from hive_cassandra_spark.operators import retrieval
 
     path = f"/tmp/hcs_scaling_postings_{os.getpid()}"
     shutil.rmtree(path, ignore_errors=True)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    retrieval.build_postings_index(docs, path)
+    retrieval.build_postings_index_occ(spark, docs, path)
     ARTIFACT_PATH["postings_build"] = path
-    return spark.read.parquet(f"{path}/postings")
+    return sink.occ_snapshot(spark, path).read("postings")
 
 
 def ivfpq_build(spark, sf_dir: str):
@@ -568,14 +569,17 @@ def ivfpq_build(spark, sf_dir: str):
     the ~128x-smaller-than-vectors claim, measured per point."""
     import shutil
 
+    from hive_cassandra_spark import sink
     from hive_cassandra_spark.operators import similarity
 
     path = f"/tmp/hcs_scaling_ivfpq_{os.getpid()}"
     shutil.rmtree(path, ignore_errors=True)
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    similarity.build_ivfpq_index(emb, path, n_cells=8, m=4, k_codes=8)
+    similarity.build_ivfpq_index_occ(
+        spark, emb, path, n_cells=8, m=4, k_codes=8
+    )
     ARTIFACT_PATH["ivfpq_build"] = path
-    return spark.read.parquet(f"{path}/codes")
+    return sink.occ_snapshot(spark, path).read("codes")
 
 
 def dir_mb(path: str) -> float:

@@ -80,7 +80,6 @@ from pyspark.sql.datasource import (
     IsNotNull,
     LessThan,
     LessThanOrEqual,
-    SimpleDataSourceStreamReader,
     WriterCommitMessage,
 )
 from pyspark.sql.types import StructType
@@ -540,15 +539,22 @@ class CommitLogPartition(InputPartition):
 
 
 class CellStoreParallelStreamReader(DataSourceStreamReader):
-    """Partition-parallel tailing reader over the sink's commit log — the
-    corpus-scale upgrade of ``CellStoreStreamReader`` (which, per the
-    Simple-reader contract, materializes each micro-batch ON THE DRIVER).
-    Same integer offsets (batch id = offset), same deterministic replay;
-    the difference is ``partitions()`` plans one split per committed part
-    file and ``read()`` runs IN THE EXECUTORS, yielding Arrow record
-    batches — so a tailed store scales exactly like the batch scan path.
-    Selected with ``.option("parallel", "true")``; without it the Simple
-    reader serves control-plane-sized feeds with less per-batch planning.
+    """``spark.readStream.format("cassandra_cells")``: tail a
+    STREAM-WRITTEN cell store as a streaming source — the CDC-ish read
+    face of the seam. The streaming sink's commit protocol is a
+    log-structured sequence of atomically-published micro-batches
+    (``part-<job>-b<batchid>-<task>.parquet``), so the batch id IS the
+    offset: a micro-batch covers every fully-committed batch id in
+    [start, end), and a committed range replays deterministically for
+    failure recovery. Offsets are a single integer — no unbounded
+    seen-file lists.
+
+    ``partitions()`` plans one split per committed part file and
+    ``read()`` runs IN THE EXECUTORS, yielding Arrow record batches — so
+    a tailed store scales exactly like the batch scan path. Batch-job
+    parts (no batch id in the name) are refused with a pointer to
+    ``spark.read``: only the streaming sink's commit log defines an
+    ordering a tailing reader can trust.
     """
 
     def __init__(self, options: dict, schema: StructType) -> None:
@@ -593,75 +599,6 @@ class CellStoreParallelStreamReader(DataSourceStreamReader):
         pass  # the commit log is retained; nothing to clean per offset
 
 
-class CellStoreStreamReader(SimpleDataSourceStreamReader):
-    """``spark.readStream.format("cassandra_cells")``: tail a
-    STREAM-WRITTEN cell store as a streaming source — the CDC-ish read
-    face of the seam. The streaming sink's commit protocol is a
-    log-structured sequence of atomically-published micro-batches
-    (``part-<job>-b<batchid>-<task>.parquet``), so the batch id IS the
-    offset: ``read(start)`` consumes every fully-committed batch id ≥
-    start and advances to max+1; ``readBetweenOffsets`` replays a
-    committed range deterministically for failure recovery. Offsets are
-    a single integer — no unbounded seen-file lists.
-
-    Batch-job parts (no batch id in the name) are refused with a pointer
-    to ``spark.read``: only the streaming sink's commit log defines an
-    ordering a tailing reader can trust.
-
-    Scale posture: this is the Simple (driver-side) reader variant —
-    right for tailing control-plane-sized mutation feeds. For
-    corpus-sized stores, ``.option("parallel", "true")`` selects
-    ``CellStoreParallelStreamReader``: the same offsets and replay
-    semantics, planned as one split per committed part file and read in
-    the executors (equivalence pinned in test_datasource).
-    """
-
-    def __init__(self, options: dict, schema: StructType) -> None:
-        path = options.get("path")
-        if not path:
-            raise ValueError(
-                "cassandra_cells needs a store path: .load('<dir>')"
-            )
-        self.path = path
-        self.fields = [f.name for f in schema.fields]
-
-    def initialOffset(self) -> dict:
-        return {"pos": 0}
-
-    def _batches(self) -> dict[int, list[str]]:
-        return _commit_log_batches(self.path)
-
-    def read(self, start: dict):
-        batches = self._batches()
-        avail = sorted(b for b in batches if b >= start["pos"])
-        if not avail:
-            return iter(()), start
-        end = {"pos": avail[-1] + 1}
-        # list-backed iterator: the engine's prefetch cache copy.copy()s
-        # it for replay, which a generator cannot survive. Driver-side
-        # materialization of one micro-batch is the Simple-reader contract
-        # (see class docstring for the partition-parallel upgrade path).
-        return iter(list(self._rows(batches, start["pos"], end["pos"]))), end
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        return iter(list(self._rows(self._batches(), start["pos"], end["pos"])))
-
-    def _rows(self, batches: dict[int, list[str]], lo: int, hi: int):
-        import pyarrow.parquet as pq
-
-        for b in sorted(batches):
-            if lo <= b < hi:
-                for f in sorted(batches[b]):
-                    t = pq.read_table(f)
-                    cols = [
-                        t.column(n).to_pylist()
-                        if n in t.column_names
-                        else [None] * t.num_rows
-                        for n in self.fields
-                    ]
-                    yield from zip(*cols)
-
-
 class CellStoreDataSource(DataSource):
     """format("cassandra_cells"): see module docstring."""
 
@@ -681,16 +618,8 @@ class CellStoreDataSource(DataSource):
     def streamWriter(self, schema: StructType, overwrite: bool) -> CellStoreStreamWriter:
         return CellStoreStreamWriter(dict(self.options), schema, overwrite)
 
-    def simpleStreamReader(self, schema: StructType) -> CellStoreStreamReader:
-        return CellStoreStreamReader(dict(self.options), schema)
-
     def streamReader(self, schema: StructType) -> CellStoreParallelStreamReader:
-        # opt-in executor-parallel tail; raising the NotImplemented marker
-        # otherwise makes Spark fall back to simpleStreamReader (the
-        # documented resolution order in pyspark.sql.datasource)
-        if str(self.options.get("parallel", "false")).lower() in ("true", "1"):
-            return CellStoreParallelStreamReader(dict(self.options), schema)
-        return super().streamReader(schema)
+        return CellStoreParallelStreamReader(dict(self.options), schema)
 
 
 def register(spark) -> None:

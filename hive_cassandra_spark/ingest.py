@@ -50,6 +50,10 @@ def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     through ``read_jsonl`` with the matching schema is lossless for the
     primitive types the fixtures use. Parallelism: one part file per
     input partition, exactly like any distributed text sink.
+
+    No query calls it; it stays public because it is the writer that
+    ``read_jsonl``'s lossless round trip is pinned against — the JSONL
+    producer side of the ingest contract (test_ingest).
     """
     df.select(F.to_json(F.struct(*df.columns)).alias("value")).write.mode(
         mode

@@ -428,39 +428,6 @@ def simhash(
     )
 
 
-def simhash_bands(sig: DataFrame) -> DataFrame:
-    """(doc, sim_hi, sim_lo, pos, band): the 64-bit signature banded into
-    4 × 16-bit words — 65,536 distinct buckets per position, so bucket
-    population stays ~|corpus|/65,536 per (pos, band) key instead of the
-    O(|corpus|/256) a byte-banded 32-bit scheme degrades to. Pure
-    projection + explode; no shuffle."""
-    words = [
-        ("sim_lo", 0),
-        ("sim_lo", SIMHASH_BAND_BITS),
-        ("sim_hi", 0),
-        ("sim_hi", SIMHASH_BAND_BITS),
-    ]
-    mask = (1 << SIMHASH_BAND_BITS) - 1
-    return sig.select(
-        "doc",
-        "sim_hi",
-        "sim_lo",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("pos"),
-                        F.shiftright(F.col(col), sh)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("band"),
-                    )
-                    for i, (col, sh) in enumerate(words)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc", "sim_hi", "sim_lo", "bb.pos", "bb.band")
-
-
 def simhash_pairs(
     df: DataFrame,
     max_hamming: int = 3,

@@ -12,12 +12,12 @@ zlib DEFLATE + full scanline unfiltering — stdlib ``zlib`` + numpy, no
 PIL), **GIF** (87a/89a, from-scratch variable-width LZW with width
 growth and 4096-entry table resets, extension skipping, global/local
 palettes — validated against the canonical external 1×1 GIF89a vector)
-**JPEG** (ITU-T T.81, 8-bit grayscale: baseline sequential SOF0 AND
-progressive SOF2 — spectral selection + successive approximation with
-EOBn runs and correction-bit refinement — generated zigzag/DCT basis,
-canonical Huffman tables read from DHT, DPCM DC + run/size AC entropy
-coding, byte stuffing; encoder AND decoder for both modes, no libjpeg;
-color 4:4:4 and 4:2:0 baseline variants further below) and **WAV**
+**JPEG** (ITU-T T.81, 8-bit: baseline sequential SOF0 grayscale, YCbCr
+4:4:4 and 4:2:0, plus grayscale progressive SOF2 — spectral selection +
+successive approximation with EOBn runs and correction-bit refinement —
+generated zigzag/DCT basis, canonical Huffman tables read from DHT, DPCM
+DC + run/size AC entropy coding, byte stuffing; one ``decode_jpeg`` reads
+every shape from the stream's own SOF header, no libjpeg) and **WAV**
 (RIFF/PCM 16-bit mono, plus the G.711 mu-law format-7 telephony
 variant; animated multi-frame GIF89a on the video side) are encoded
 AND decoded below, so
@@ -34,6 +34,7 @@ Base64 sniff (CassandraLazyBinary.java:26-51 → codecs.decode_binary).
 
 from __future__ import annotations
 
+import re
 import struct
 import zlib
 from collections.abc import Iterator
@@ -423,18 +424,26 @@ def decode_gif_gray8(data: bytes) -> tuple[int, int, np.ndarray]:
 
 
 # ------------------------------------------------------------------------
-# baseline JPEG (ITU-T T.81), 8-bit grayscale, from scratch
+# JPEG (ITU-T T.81), 8-bit, from scratch: one encoder, one decoder
 # ------------------------------------------------------------------------
-# Cleanroom implementation of the baseline sequential DCT process from the
-# public spec: 8x8 forward/inverse DCT, zigzag scan, uniform quantization,
-# DPCM-coded DC + run/size-coded AC entropy, canonical Huffman tables
-# carried in DHT segments (the DECODER builds its tables from the file, so
-# it reads any single-component baseline JPEG, not just our encoder's).
-# The zigzag order and DCT basis are GENERATED, not transcribed; the
-# Huffman code lengths are our own (any Kraft-valid canonical table is a
-# legal DHT). No PIL/libjpeg anywhere. Fills the last capability gap the
-# r06 verdict named (item 6): JPEG was previously a NotImplementedError
-# behind the absent-library branch.
+# Cleanroom implementation of the sequential and progressive DCT processes
+# from the public spec: 8x8 forward/inverse DCT, zigzag scan, uniform
+# quantization, DPCM-coded DC + run/size-coded AC entropy, canonical
+# Huffman tables carried in DHT segments (the DECODER builds its tables
+# from the file, so it reads any stream of a supported shape, not just our
+# encoder's). The zigzag order and DCT basis are GENERATED, not
+# transcribed; the Huffman code lengths are our own (any Kraft-valid
+# canonical table is a legal DHT). No PIL/libjpeg anywhere.
+#
+# Supported shapes: baseline (SOF0) grayscale, YCbCr 4:4:4 and YCbCr 4:2:0
+# (luma sampled 2x2, chroma 1x1, chroma averaged over 2x2 pixel groups on
+# encode and replicated on decode), plus single-component progressive
+# (SOF2). ``decode_jpeg`` reads the shape from the stream's own SOF header
+# — one segment parser, one bit reader, one MCU loop driven by the
+# sampling factors, one dequantize+IDCT — so callers never name a decoder.
+# Color stays in YCbCr through the codec; the pinned-rounding transforms
+# (``rgb_to_ycbcr`` / ``ycbcr_to_rgb``) keep exactness-shaped fixtures
+# bit-identical across engines.
 
 
 def _zigzag_order() -> np.ndarray:
@@ -464,14 +473,17 @@ def _dct_matrix() -> np.ndarray:
 
 _DCT_M = _dct_matrix()
 
-# Default quantization table (natural order): DC step 1 — constant blocks
+# Default quantization tables (natural order): DC step 1 — constant blocks
 # roundtrip EXACTLY (8*(v-128) is an integer, step-1 quantization is the
-# identity), which is what the q127 oracle replays — and a mild synthetic
-# frequency ramp for AC (documented as ours, NOT the Annex K example
-# table, which is only an informative suggestion in the spec).
+# identity), which is what the q127/q166 oracles replay — and a mild
+# synthetic frequency ramp for AC, steeper for chroma (documented as ours,
+# NOT the Annex K example tables, which are only informative).
 _JPEG_QTABLE = np.ones((8, 8), dtype=np.int64)
 _JPEG_QTABLE += 2 * (np.add.outer(np.arange(8), np.arange(8)))
 _JPEG_QTABLE[0, 0] = 1
+_JPEG_QTABLE_CHROMA = np.ones((8, 8), dtype=np.int64)
+_JPEG_QTABLE_CHROMA += 3 * (np.add.outer(np.arange(8), np.arange(8)))
+_JPEG_QTABLE_CHROMA[0, 0] = 1
 
 # Our canonical Huffman code lengths (symbol -> bit length). Any length
 # assignment with Kraft sum <= 1 and max 16 yields a legal DHT; these
@@ -485,6 +497,18 @@ _AC_LENGTHS.update(
         for run in range(16)
         for size in range(1, 11)
         if (run << 4) | size not in _AC_LENGTHS
+    }
+)
+# Progressive AC table: EOBn run-length symbols (n<<4 | 0 for n = 0..14,
+# T.81 §G.1.2.2) join ZRL and the run/size symbols; favor EOB0.
+_AC_PROG_LENGTHS = {0x00: 2, 0xF0: 6}
+_AC_PROG_LENGTHS.update({n << 4: 6 for n in range(1, 15)})
+_AC_PROG_LENGTHS.update(
+    {
+        (run << 4) | size: 12
+        for run in range(16)
+        for size in range(1, 11)
+        if (run << 4) | size not in _AC_PROG_LENGTHS
     }
 )
 
@@ -516,26 +540,22 @@ def _huffman_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int
 _DECODE_LUT_CACHE: dict = {}
 
 
-def _decode_lut(bits: bytes, vals: bytes):
+def _decode_lut(bits: bytes, vals: bytes) -> list[int]:
     """16-bit-prefix Huffman decode table for a DHT (BITS, VALUES) pair:
-    two 65536-entry arrays mapping every 16-bit window prefix to (symbol,
-    code length); length 0 marks an invalid prefix. Built once per
-    distinct table (cached — payload batches share their DHTs), so the
-    per-symbol decode cost is one shift + two array reads."""
+    a 65536-entry list mapping every 16-bit window prefix to
+    ``(code length << 8) | symbol``; 0 marks an invalid prefix. Built once
+    per distinct table (cached — payload batches share their DHTs), so
+    the per-symbol decode cost is one list read."""
     key = (bits, vals)
     hit = _DECODE_LUT_CACHE.get(key)
     if hit is not None:
         return hit
-    sym = np.zeros(1 << 16, dtype=np.int16)
-    lng = np.zeros(1 << 16, dtype=np.int8)
-    codes = _huffman_codes(list(bits), list(vals))
-    for s, (code, ln) in codes.items():
+    lut = np.zeros(1 << 16, dtype=np.int64)
+    for s, (code, ln) in _huffman_codes(list(bits), list(vals)).items():
         lo = code << (16 - ln)
-        hi = lo + (1 << (16 - ln))
-        sym[lo:hi] = s
-        lng[lo:hi] = ln
-    _DECODE_LUT_CACHE[key] = (sym, lng)
-    return sym, lng
+        lut[lo : lo + (1 << (16 - ln))] = (ln << 8) | s
+    _DECODE_LUT_CACHE[key] = hit = lut.tolist()
+    return hit
 
 
 class _JpegBitWriter:
@@ -561,6 +581,37 @@ class _JpegBitWriter:
         return bytes(self.buf)
 
 
+class _ScanReader:
+    """Bit reader over one scan's entropy-coded segment: unstuffs FF00
+    once and keeps the 24-bit window starting at every byte, so a 16-bit
+    peek at any bit offset is one list read and one shift; symbols
+    resolve through the 16-bit-prefix LUT of ``_decode_lut``."""
+
+    def __init__(self, scan: bytes) -> None:
+        raw = np.frombuffer(
+            scan.replace(b"\xff\x00", b"\xff") + b"\x00\x00\x00\x00",
+            dtype=np.uint8,
+        ).astype(np.int64)
+        self.win = ((raw[:-2] << 16) | (raw[1:-1] << 8) | raw[2:]).tolist()
+        self.bp = 0  # bit position from the scan start
+
+    def read_symbol(self, lut: list[int]) -> int:
+        bp = self.bp
+        e = lut[(self.win[bp >> 3] >> (8 - (bp & 7))) & 0xFFFF]
+        if not e:
+            raise ValueError("invalid Huffman code in scan data")
+        self.bp = bp + (e >> 8)
+        return e & 0xFF
+
+    def read_bits(self, n: int) -> int:
+        bp = self.bp
+        self.bp = bp + n
+        return ((self.win[bp >> 3] >> (8 - (bp & 7))) & 0xFFFF) >> (16 - n)
+
+    def read_bit(self) -> int:
+        return self.read_bits(1)
+
+
 def _magnitude(v: int) -> tuple[int, int]:
     """(size category, appended bits) for a DC diff / AC coefficient."""
     size = int(abs(v)).bit_length()
@@ -575,226 +626,193 @@ def _extend(bits: int, size: int) -> int:
     return bits if bits >= (1 << (size - 1)) else bits - (1 << size) + 1
 
 
-def encode_jpeg_gray8(pixels: np.ndarray, qtable: np.ndarray | None = None) -> bytes:
-    """Encode a (h, w) uint8 array as a real baseline JPEG (SOI, DQT,
-    SOF0, two DHTs, SOS, entropy-coded scan, EOI): level shift, 8x8
-    orthonormal FDCT, uniform quantization, zigzag, DPCM DC + run/size AC,
-    canonical Huffman, 0xFF byte stuffing. Edges pad by replication.
-    Readable by any JPEG viewer (and by ``decode_jpeg_gray8``)."""
-    q = _JPEG_QTABLE if qtable is None else np.asarray(qtable, dtype=np.int64)
-    h, w = pixels.shape
-    ph, pw = (h + 7) & ~7, (w + 7) & ~7
+def rgb_to_ycbcr(rgb: np.ndarray) -> np.ndarray:
+    """JFIF full-range RGB → YCbCr with PINNED rounding: every channel is
+    ``clip(floor(expr + 0.5), 0, 255)`` where expr is the ITU-R BT.601
+    linear combination evaluated left-to-right in float64 — the exact
+    expression an engine-side SQL replay evaluates, so converted planes
+    are bit-identical across engines (plain ``round`` half-even vs
+    half-up at representation boundaries is exactly the cross-engine
+    trap the q150 z-score hit)."""
+    r = rgb[..., 0].astype(np.float64)
+    g = rgb[..., 1].astype(np.float64)
+    b = rgb[..., 2].astype(np.float64)
+    y = np.floor(0.299 * r + 0.587 * g + 0.114 * b + 0.5)
+    cb = np.floor(128.0 - 0.168736 * r - 0.331264 * g + 0.5 * b + 0.5)
+    cr = np.floor(128.0 + 0.5 * r - 0.418688 * g - 0.081312 * b + 0.5)
+    out = np.stack([y, cb, cr], axis=-1)
+    return np.clip(out, 0, 255).astype(np.uint8)
+
+
+def ycbcr_to_rgb(ycc: np.ndarray) -> np.ndarray:
+    """Inverse JFIF transform, same pinned floor(x+0.5) rounding."""
+    y = ycc[..., 0].astype(np.float64)
+    cb = ycc[..., 1].astype(np.float64) - 128.0
+    cr = ycc[..., 2].astype(np.float64) - 128.0
+    r = np.floor(y + 1.402 * cr + 0.5)
+    g = np.floor(y - 0.344136 * cb - 0.714136 * cr + 0.5)
+    b = np.floor(y + 1.772 * cb + 0.5)
+    out = np.stack([r, g, b], axis=-1)
+    return np.clip(out, 0, 255).astype(np.uint8)
+
+
+def _pad_plane(plane: np.ndarray, mult: int = 8) -> np.ndarray:
+    """Replicate-pad a (h, w) plane to multiples of ``mult``, float64."""
+    h, w = plane.shape
+    ph, pw = -(-h // mult) * mult, -(-w // mult) * mult
     padded = np.empty((ph, pw), dtype=np.float64)
-    padded[:h, :w] = pixels
-    padded[h:, :w] = pixels[-1:, :]
+    padded[:h, :w] = plane
+    padded[h:, :w] = plane[-1:, :]
     padded[:h, w:] = padded[:h, w - 1 : w]
     padded[h:, w:] = padded[h - 1, w - 1]
+    return padded
 
-    dc_bits, dc_vals = _canonical_table(_DC_LENGTHS)
-    ac_bits, ac_vals = _canonical_table(_AC_LENGTHS)
-    dc_codes = _huffman_codes(dc_bits, dc_vals)
-    ac_codes = _huffman_codes(ac_bits, ac_vals)
 
-    wr = _JpegBitWriter()
-    # all blocks at once: (nby, nbx, 8, 8) → one einsum FDCT, one
-    # vectorized quantize + zigzag; only the entropy coding loops per
-    # block (and only over nonzero coefficients)
+def _plane_zigzags(plane: np.ndarray, q: np.ndarray) -> np.ndarray:
+    """(ph, pw) float plane → (nby, nbx, 64) quantized zigzag coefficient
+    blocks: level shift, one einsum FDCT over every block, vectorized
+    quantize + zigzag (only the entropy coding loops per block)."""
+    ph, pw = plane.shape
     nby, nbx = ph // 8, pw // 8
-    blocks = (
-        padded.reshape(nby, 8, nbx, 8).transpose(0, 2, 1, 3) - 128.0
-    )
+    blocks = plane.reshape(nby, 8, nbx, 8).transpose(0, 2, 1, 3) - 128.0
     coefs = np.einsum("ij,yxjk,lk->yxil", _DCT_M, blocks, _DCT_M)
     quants = np.round(coefs / q).astype(np.int64)
-    zzs = quants.reshape(nby, nbx, 64)[:, :, _ZIGZAG]
-    prev_dc = 0
-    for by in range(nby):
-        for bx in range(nbx):
-            zz = zzs[by, bx]
-            diff = int(zz[0]) - prev_dc
-            prev_dc = int(zz[0])
-            size, bits = _magnitude(diff)
-            wr.write(*dc_codes[size])
-            if size:
-                wr.write(bits, size)
-            run = 0
-            nz = np.nonzero(zz[1:])[0]
-            last = int(nz[-1]) + 1 if len(nz) else 0
-            for k in range(1, last + 1):
-                v = int(zz[k])
-                if v == 0:
-                    run += 1
-                    continue
-                while run >= 16:
-                    wr.write(*ac_codes[0xF0])  # ZRL
-                    run -= 16
-                size, bits = _magnitude(v)
-                if size > 10:
-                    raise ValueError("coefficient magnitude exceeds table")
-                wr.write(*ac_codes[(run << 4) | size])
-                wr.write(bits, size)
-                run = 0
-            if last < 63:
-                wr.write(*ac_codes[0x00])  # EOB
+    return quants.reshape(nby, nbx, 64)[:, :, _ZIGZAG]
 
-    def seg(marker: int, body: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(body) + 2) + body
 
-    dqt = seg(0xFFDB, bytes([0]) + bytes(int(x) for x in q.reshape(64)[_ZIGZAG]))
-    sof = seg(0xFFC0, struct.pack(">BHHB", 8, h, w, 1) + bytes([1, 0x11, 0]))
-    dht_dc = seg(0xFFC4, bytes([0x00]) + bytes(dc_bits) + bytes(dc_vals))
-    dht_ac = seg(0xFFC4, bytes([0x10]) + bytes(ac_bits) + bytes(ac_vals))
-    sos = seg(0xFFDA, bytes([1, 1, 0x00, 0, 63, 0]))
+def _write_block(wr, zz: np.ndarray, prev_dc: int, dc_codes, ac_codes) -> int:
+    """Entropy-code one zigzag block (DPCM DC + run/size AC + EOB);
+    returns the new DC predictor."""
+    diff = int(zz[0]) - prev_dc
+    size, bits = _magnitude(diff)
+    wr.write(*dc_codes[size])
+    if size:
+        wr.write(bits, size)
+    run = 0
+    nz = np.nonzero(zz[1:])[0]
+    last = int(nz[-1]) + 1 if len(nz) else 0
+    for k in range(1, last + 1):
+        v = int(zz[k])
+        if v == 0:
+            run += 1
+            continue
+        while run >= 16:
+            wr.write(*ac_codes[0xF0])  # ZRL
+            run -= 16
+        size, bits = _magnitude(v)
+        if size > 10:
+            raise ValueError("coefficient magnitude exceeds table")
+        wr.write(*ac_codes[(run << 4) | size])
+        wr.write(bits, size)
+        run = 0
+    if last < 63:
+        wr.write(*ac_codes[0x00])  # EOB
+    return int(zz[0])
+
+
+def _segment(marker: int, body: bytes) -> bytes:
+    return struct.pack(">HH", marker, len(body) + 2) + body
+
+
+def _jpeg_header(
+    sof: int, h: int, w: int, qtables: list, samplings: list[int], ac_lengths
+) -> bytes:
+    """SOI, DQT, SOF and the DC/AC DHTs of one of our streams. Component
+    ``c`` (id c+1) samples at ``samplings[c]`` in both directions and
+    reads quant table ``min(c, 1)`` (luma 0, chroma 1); every component
+    shares Huffman table 0 (legal per T.81)."""
+    dqt = b"".join(
+        bytes([t]) + bytes(int(x) for x in q.reshape(64)[_ZIGZAG])
+        for t, q in enumerate(qtables)
+    )
+    comps = b"".join(
+        bytes([c + 1, 0x11 * s, min(c, 1)]) for c, s in enumerate(samplings)
+    )
+    dht = b"".join(
+        _segment(0xFFC4, bytes([tc]) + bytes(bits) + bytes(vals))
+        for tc, (bits, vals) in (
+            (0x00, _canonical_table(_DC_LENGTHS)),
+            (0x10, _canonical_table(ac_lengths)),
+        )
+    )
     return (
-        b"\xff\xd8" + dqt + sof + dht_dc + dht_ac + sos + wr.flush() + b"\xff\xd9"
+        b"\xff\xd8"
+        + _segment(0xFFDB, dqt)
+        + _segment(sof, struct.pack(">BHHB", 8, h, w, len(samplings)) + comps)
+        + dht
     )
 
 
-def decode_jpeg_gray8(data: bytes) -> tuple[int, int, np.ndarray]:
-    """Decode a single-component JPEG → (width, height, (h, w) uint8
-    pixels). Parses DQT/SOF/DHT/SOS from the file (tables come from the
-    stream — any Kraft-valid canonical DHT works), entropy-decodes with
-    0xFF00 unstuffing, dequantizes, un-zigzags, and applies the
-    orthonormal IDCT. Baseline (SOF0) streams decode inline; progressive
-    (SOF2) streams — spectral selection AND successive approximation —
-    dispatch to ``decode_jpeg_gray8_progressive`` (round 8: previously
-    the absent-library stub). Extended-sequential/lossless/arithmetic
-    (SOF1/3/5-7/9-11), 12-bit, multi-component, and restart-interval
-    streams remain out of the grayscale scope and raise."""
-    if data[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG payload (missing SOI)")
-    pos = 2
-    qtables: dict[int, np.ndarray] = {}
-    huff: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
-    w = h = 0
-    comp_q = dc_id = ac_id = 0
-    while pos + 4 <= len(data):
-        if data[pos] != 0xFF:
-            raise ValueError(f"expected marker at {pos}")
-        marker = data[pos + 1]
-        if marker == 0xC2:
-            return decode_jpeg_gray8_progressive(data)
-        if marker in (0xC1, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB):
-            raise NotImplementedError(
-                "only baseline (SOF0) and progressive (SOF2) JPEG supported"
-            )
-        (ln,) = struct.unpack_from(">H", data, pos + 2)
-        body = data[pos + 4 : pos + 2 + ln]
-        if marker == 0xDB:  # DQT (possibly several tables)
-            b = 0
-            while b < len(body):
-                pq, tq = body[b] >> 4, body[b] & 0xF
-                if pq != 0:
-                    raise NotImplementedError("16-bit quant tables unsupported")
-                zz = np.frombuffer(body, dtype=np.uint8, count=64, offset=b + 1)
-                nat = np.empty(64, dtype=np.int64)
-                nat[_ZIGZAG] = zz
-                qtables[tq] = nat.reshape(8, 8)
-                b += 65
-        elif marker == 0xC0:  # SOF0
-            precision, h, w, ncomp = struct.unpack_from(">BHHB", body, 0)
-            if precision != 8 or ncomp != 1:
-                raise NotImplementedError(
-                    "only 8-bit single-component (grayscale) JPEG supported"
-                )
-            comp_q = body[8]  # per-component: id, sampling, then qtable id
-        elif marker == 0xC4:  # DHT (possibly several tables)
-            b = 0
-            while b < len(body):
-                tc, th = body[b] >> 4, body[b] & 0xF
-                bits = list(body[b + 1 : b + 17])
-                nvals = sum(bits)
-                vals = list(body[b + 17 : b + 17 + nvals])
-                huff[(tc, th)] = _decode_lut(bytes(bits), bytes(vals))
-                b += 17 + nvals
-        elif marker == 0xDD:
-            raise NotImplementedError("restart intervals unsupported")
-        elif marker == 0xDA:  # SOS → entropy-coded data follows
-            dc_id, ac_id = body[2] >> 4, body[2] & 0xF
-            pos = pos + 2 + ln
-            break
-        pos += 2 + ln
+def _sos(ncomp: int, ss: int = 0, se: int = 63, ahal: int = 0) -> bytes:
+    """SOS header: components 1..ncomp on Huffman tables 0, band Ss..Se,
+    successive-approximation nibbles Ah|Al."""
+    specs = b"".join(bytes([c + 1, 0x00]) for c in range(ncomp))
+    return _segment(0xFFDA, bytes([ncomp]) + specs + bytes([ss, se, ahal]))
+
+
+def encode_jpeg(
+    pixels: np.ndarray, qtable: np.ndarray | None = None, sampling: int = 1
+) -> bytes:
+    """Encode a (h, w) uint8 gray plane or an (h, w, 3) uint8 RGB array as
+    a real baseline JPEG (SOI, DQT, SOF0, two DHTs, SOS, entropy-coded
+    scan, EOI): level shift, 8x8 orthonormal FDCT, uniform quantization,
+    zigzag, DPCM DC + run/size AC, canonical Huffman, 0xFF byte stuffing.
+    Edges pad by replication. Readable by any JPEG viewer (and by
+    ``decode_jpeg``).
+
+    Color converts through the pinned ``rgb_to_ycbcr`` and codes three
+    interleaved components, each with its own DC predictor: luma on
+    ``qtable`` (default ``_JPEG_QTABLE``, also the gray table), chroma on
+    ``_JPEG_QTABLE_CHROMA``. ``sampling`` is the luma sampling factor:
+    1 → 4:4:4 (an MCU is one block per component); 2 → 4:2:0 (a 16x16
+    MCU carries four Y blocks, row-major, plus one Cb and one Cr block,
+    chroma averaged over 2x2 pixel groups with pinned floor(mean + 0.5)
+    rounding)."""
+    qy = _JPEG_QTABLE if qtable is None else np.asarray(qtable, dtype=np.int64)
+    if pixels.ndim == 2 and sampling == 1:
+        comps = [(pixels, qy, 1)]
+    elif pixels.ndim == 3 and pixels.shape[2] == 3 and sampling in (1, 2):
+        ycc = rgb_to_ycbcr(pixels)
+        comps = [(ycc[..., 0], qy, sampling)] + [
+            (ycc[..., c], _JPEG_QTABLE_CHROMA, 1) for c in (1, 2)
+        ]
     else:
-        raise ValueError("JPEG missing SOS")
-    if w == 0 or comp_q not in qtables:
-        raise ValueError("JPEG missing SOF0/DQT before SOS")
-    q = qtables[comp_q]
-    (dc_sym, dc_len), (ac_sym, ac_len) = huff[(0, dc_id)], huff[(1, ac_id)]
-    # Entropy decode over a bigint bit window: the scan is unstuffed once
-    # (FF00 → FF; the trailing EOI marker's bits are never consumed — we
-    # stop after the last block), each symbol resolved by ONE 16-bit-
-    # prefix table lookup instead of a per-bit tree walk.
-    scan = data[pos:].replace(b"\xff\x00", b"\xff") + b"\x00\x00\x00\x00"
-    bp = 0  # bit position from the stream start
-
-    def peek16(p):
-        b = p >> 3
-        return (
-            int.from_bytes(scan[b : b + 4], "big") >> (16 - (p & 7))
-        ) & 0xFFFF
-    nby, nbx = (h + 7) // 8, (w + 7) // 8
-    zzs = np.zeros((nby * nbx, 64), dtype=np.int64)
-    prev_dc = 0
-    for bi in range(nby * nbx):
-        zz = zzs[bi]
-        peek = peek16(bp)
-        size, ln = int(dc_sym[peek]), int(dc_len[peek])
-        if ln == 0:
-            raise ValueError("invalid Huffman code in scan data")
-        bp += ln
-        if size:
-            recv = peek16(bp) >> (16 - size)
-            bp += size
-            prev_dc += _extend(recv, size)
-        zz[0] = prev_dc
-        k = 1
-        while k < 64:
-            peek = peek16(bp)
-            sym, ln = int(ac_sym[peek]), int(ac_len[peek])
-            if ln == 0:
-                raise ValueError("invalid Huffman code in scan data")
-            bp += ln
-            if sym == 0x00:  # EOB
-                break
-            if sym == 0xF0:  # ZRL
-                k += 16
-                continue
-            run, size = sym >> 4, sym & 0xF
-            k += run
-            if k > 63:
-                raise ValueError("AC run past end of block")
-            recv = peek16(bp) >> (16 - size)
-            bp += size
-            zz[k] = _extend(recv, size)
-            k += 1
-    # batch dequantize + inverse zigzag + IDCT for every block at once
-    nat = np.zeros((nby * nbx, 64), dtype=np.int64)
-    nat[:, _ZIGZAG] = zzs
-    coefs = nat.reshape(-1, 8, 8) * q
-    blocks = (
-        np.einsum("ji,njk,kl->nil", _DCT_M, coefs.astype(np.float64), _DCT_M)
-        + 128.0
+        raise ValueError(
+            "encode_jpeg needs an (h, w) gray plane, or an (h, w, 3) RGB "
+            "array with sampling 1 (4:4:4) or 2 (4:2:0)"
+        )
+    h, w = pixels.shape[:2]
+    zzs = []
+    for plane, q, s in comps:
+        padded = _pad_plane(plane, 8 * sampling)
+        f = sampling // s  # subsampled component: average f x f groups
+        if f > 1:
+            ph, pw = padded.shape
+            grouped = padded.reshape(ph // f, f, pw // f, f).mean(axis=(1, 3))
+            padded = np.floor(grouped + 0.5)
+        zzs.append(_plane_zigzags(padded, q))
+    dc_codes = _huffman_codes(*_canonical_table(_DC_LENGTHS))
+    ac_codes = _huffman_codes(*_canonical_table(_AC_LENGTHS))
+    wr = _JpegBitWriter()
+    nmy, nmx = zzs[0].shape[0] // sampling, zzs[0].shape[1] // sampling
+    prev = [0] * len(comps)
+    for my in range(nmy):
+        for mx in range(nmx):
+            for c, (_, _, s) in enumerate(comps):
+                for dy in range(s):
+                    for dx in range(s):
+                        prev[c] = _write_block(
+                            wr, zzs[c][s * my + dy, s * mx + dx], prev[c],
+                            dc_codes, ac_codes,
+                        )
+    qtables = [qy] if len(comps) == 1 else [qy, _JPEG_QTABLE_CHROMA]
+    samplings = [s for _, _, s in comps]
+    return (
+        _jpeg_header(0xFFC0, h, w, qtables, samplings, _AC_LENGTHS)
+        + _sos(len(comps))
+        + wr.flush()
+        + b"\xff\xd9"
     )
-    pix = np.clip(np.round(blocks), 0, 255).astype(np.uint8)
-    out = (
-        pix.reshape(nby, nbx, 8, 8).transpose(0, 2, 1, 3)
-        .reshape(nby * 8, nbx * 8)
-    )
-    return w, h, out[:h, :w].copy()
-
-
-# Progressive AC table: EOBn run-length symbols (n<<4 | 0 for n = 0..14,
-# T.81 §G.1.2.2) join ZRL and the run/size symbols. Any Kraft-valid
-# length assignment is legal (the DHT rides in-stream); favor EOB0.
-_AC_PROG_LENGTHS = {0x00: 2, 0xF0: 6}
-_AC_PROG_LENGTHS.update({n << 4: 6 for n in range(1, 15)})
-_AC_PROG_LENGTHS.update(
-    {
-        (run << 4) | size: 12
-        for run in range(16)
-        for size in range(1, 11)
-        if (run << 4) | size not in _AC_PROG_LENGTHS
-    }
-)
 
 
 def encode_jpeg_gray8_progressive(
@@ -803,8 +821,8 @@ def encode_jpeg_gray8_progressive(
     """Encode a (h, w) uint8 array as a real PROGRESSIVE JPEG (ITU-T
     T.81 §G — SOF2), exercising BOTH progressive modes:
 
-    - spectral selection: the coefficients ship in three bands —
-      DC-only scans, then AC 1..63;
+    - spectral selection: the coefficients ship in bands — DC-only
+      scans, then AC 1..63;
     - successive approximation: each band ships at point transform
       Al=1 first (coefficients arithmetically/sign-magnitude shifted
       right per §G.1.2.1) and is then refined to full precision by an
@@ -815,28 +833,15 @@ def encode_jpeg_gray8_progressive(
 
     Scan script: (1) DC first Al=1, (2) AC 1-63 first Al=1 with EOBn
     accumulation, (3) DC refine, (4) AC refine. The quantized
-    coefficients are identical to ``encode_jpeg_gray8``'s, so decoding
-    a progressive stream yields bit-identical pixels to the baseline
-    pipeline over the same source — the cross-codec exactness test.
-    Cleanroom from the published spec; no libjpeg."""
+    coefficients are identical to ``encode_jpeg``'s gray stream, so
+    decoding a progressive stream yields bit-identical pixels to the
+    baseline pipeline over the same source — the cross-codec exactness
+    test. Cleanroom from the published spec; no libjpeg."""
     q = _JPEG_QTABLE if qtable is None else np.asarray(qtable, dtype=np.int64)
     h, w = pixels.shape
-    ph, pw = (h + 7) & ~7, (w + 7) & ~7
-    padded = np.empty((ph, pw), dtype=np.float64)
-    padded[:h, :w] = pixels
-    padded[h:, :w] = pixels[-1:, :]
-    padded[:h, w:] = padded[:h, w - 1 : w]
-    padded[h:, w:] = padded[h - 1, w - 1]
-    nby, nbx = ph // 8, pw // 8
-    blocks = padded.reshape(nby, 8, nbx, 8).transpose(0, 2, 1, 3) - 128.0
-    coefs = np.einsum("ij,yxjk,lk->yxil", _DCT_M, blocks, _DCT_M)
-    quants = np.round(coefs / q).astype(np.int64)
-    zzs = quants.reshape(nby * nbx, 64)[:, _ZIGZAG]
-
-    dc_bits, dc_vals = _canonical_table(_DC_LENGTHS)
-    ac_bits, ac_vals = _canonical_table(_AC_PROG_LENGTHS)
-    dc_codes = _huffman_codes(dc_bits, dc_vals)
-    ac_codes = _huffman_codes(ac_bits, ac_vals)
+    zzs = _plane_zigzags(_pad_plane(pixels), q).reshape(-1, 64)
+    dc_codes = _huffman_codes(*_canonical_table(_DC_LENGTHS))
+    ac_codes = _huffman_codes(*_canonical_table(_AC_PROG_LENGTHS))
 
     # ---- scan 1: DC first, Ss=Se=0, Ah=0, Al=1 (arithmetic >> per spec)
     wr1 = _JpegBitWriter()
@@ -953,169 +958,212 @@ def encode_jpeg_gray8_progressive(
                 flush_eob4()
     flush_eob4()
 
-    def seg(marker: int, body: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(body) + 2) + body
-
-    dqt = seg(0xFFDB, bytes([0]) + bytes(int(x) for x in q.reshape(64)[_ZIGZAG]))
-    sof = seg(0xFFC2, struct.pack(">BHHB", 8, h, w, 1) + bytes([1, 0x11, 0]))
-    dht_dc = seg(0xFFC4, bytes([0x00]) + bytes(dc_bits) + bytes(dc_vals))
-    dht_ac = seg(0xFFC4, bytes([0x10]) + bytes(ac_bits) + bytes(ac_vals))
-
-    def sos(ss: int, se: int, ah: int, al: int) -> bytes:
-        return seg(0xFFDA, bytes([1, 1, 0x00, ss, se, (ah << 4) | al]))
-
     return (
-        b"\xff\xd8"
-        + dqt
-        + sof
-        + dht_dc
-        + dht_ac
-        + sos(0, 0, 0, 1)
+        _jpeg_header(0xFFC2, h, w, [q], [1], _AC_PROG_LENGTHS)
+        + _sos(1, 0, 0, 0x01)
         + wr1.flush()
-        + sos(1, 63, 0, 1)
+        + _sos(1, 1, 63, 0x01)
         + wr2.flush()
-        + sos(0, 0, 1, 0)
+        + _sos(1, 0, 0, 0x10)
         + wr3.flush()
-        + sos(1, 63, 1, 0)
+        + _sos(1, 1, 63, 0x10)
         + wr4.flush()
         + b"\xff\xd9"
     )
 
 
-class _ScanReader:
-    """Bit reader over one scan's entropy-coded segment: unstuffs FF00
-    once, then resolves symbols with the 16-bit-prefix LUT (same decode
-    shape as the baseline path)."""
+def decode_jpeg(data: bytes) -> tuple[int, int, np.ndarray]:
+    """Decode a JPEG → (width, height, planes): ``(h, w)`` uint8 for a
+    one-component stream, ``(h, w, 3)`` uint8 YCbCr for a three-component
+    one — planes, not RGB, so exactness-shaped fixtures can be verified
+    without paying the inverse-transform rounding; ``ycbcr_to_rgb``
+    converts when display-space pixels are wanted.
 
-    def __init__(self, scan: bytes) -> None:
-        self.scan = scan.replace(b"\xff\x00", b"\xff") + b"\x00\x00\x00\x00"
-        self.bp = 0
+    One segment parser reads DQT/SOF/DHT/SOS (tables come from the
+    stream — any Kraft-valid canonical DHT works) and the SOF sampling
+    factors drive the MCU layout. Baseline (SOF0) streams decode one
+    interleaved scan; progressive (SOF2) streams accumulate the
+    coefficient array across an arbitrary scan script (DC first/refine,
+    AC spectral-selection bands, successive approximation, T.81 §G.2).
+    Either way every component then goes through the same dequantize +
+    un-zigzag + orthonormal IDCT, and 4:2:0 chroma upsamples by pinned
+    2x2 replication (no interpolation, so exactness fixtures survive).
 
-    def _peek16(self) -> int:
-        b = self.bp >> 3
-        return (
-            int.from_bytes(self.scan[b : b + 4], "big") >> (16 - (self.bp & 7))
-        ) & 0xFFFF
-
-    def read_symbol(self, lut) -> int:
-        sym, lng = lut
-        peek = self._peek16()
-        s, ln = int(sym[peek]), int(lng[peek])
-        if ln == 0:
-            raise ValueError("invalid Huffman code in scan data")
-        self.bp += ln
-        return s
-
-    def read_bits(self, n: int) -> int:
-        if n == 0:
-            return 0
-        v = self._peek16() >> (16 - n)
-        self.bp += n
-        return v
-
-    def read_bit(self) -> int:
-        return self.read_bits(1)
-
-
-def decode_jpeg_gray8_progressive(data: bytes) -> tuple[int, int, np.ndarray]:
-    """Decode a single-component PROGRESSIVE JPEG (SOF2) → (width,
-    height, (h, w) uint8 pixels). Accumulates the coefficient array
-    across an arbitrary scan script — DC first/refine, AC
-    spectral-selection bands at any Ss..Se, successive-approximation
-    first passes (Ah=0, coefficients scaled << Al) and refinement passes
-    (Ah>0: EOBn runs, ZRL over zero-history positions, correction bits
-    on nonzero history per T.81 §G.2) — then dequantizes, un-zigzags,
-    and IDCTs once at EOI. Cleanroom from the published spec."""
+    Accepted shapes: gray (sampling 1x1), three components at
+    1x1/1x1/1x1 or 2x2/1x1/1x1, and single-component SOF2. Everything
+    else raises NotImplementedError: extended-sequential / lossless /
+    arithmetic (SOF1/3/5-7/9-11), 12-bit precision, 16-bit DQT, restart
+    intervals, other component counts or sampling factors, and
+    interleaved progressive scans. A payload without SOI raises
+    ValueError."""
     if data[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG payload (missing SOI)")
-    pos = 2
     qtables: dict[int, np.ndarray] = {}
-    huff: dict[tuple[int, int], tuple] = {}
-    w = h = 0
-    comp_q = 0
-    coef: np.ndarray | None = None
+    huff: dict[tuple[int, int], list[int]] = {}
+    coefs: list[np.ndarray] | None = None
+    n_scans = 0
+    pos = 2
     while pos + 4 <= len(data):
         if data[pos] != 0xFF:
             raise ValueError(f"expected marker at {pos}")
         marker = data[pos + 1]
         if marker == 0xD9:
             break
+        if marker in (0xC1, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB):
+            raise NotImplementedError(
+                "only baseline (SOF0) and progressive (SOF2) JPEG supported"
+            )
         (ln,) = struct.unpack_from(">H", data, pos + 2)
         body = data[pos + 4 : pos + 2 + ln]
-        if marker == 0xDB:
+        pos += 2 + ln
+        if marker == 0xDB:  # DQT (possibly several tables)
             b = 0
             while b < len(body):
                 pq, tq = body[b] >> 4, body[b] & 0xF
                 if pq != 0:
                     raise NotImplementedError("16-bit quant tables unsupported")
                 zz = np.frombuffer(body, dtype=np.uint8, count=64, offset=b + 1)
-                nat = np.empty(64, dtype=np.int64)
-                nat[_ZIGZAG] = zz
-                qtables[tq] = nat.reshape(8, 8)
+                qtables[tq] = zz.astype(np.int64)[_UNZIGZAG].reshape(8, 8)
                 b += 65
-        elif marker == 0xC2:
-            precision, h, w, ncomp = struct.unpack_from(">BHHB", body, 0)
-            if precision != 8 or ncomp != 1:
-                raise NotImplementedError(
-                    "only 8-bit single-component progressive JPEG supported"
-                )
-            comp_q = body[8]
-            nby, nbx = (h + 7) // 8, (w + 7) // 8
-            coef = np.zeros((nby * nbx, 64), dtype=np.int64)
-        elif marker == 0xC0:
-            raise ValueError("baseline SOF0 inside the progressive decoder")
-        elif marker == 0xC4:
+        elif marker == 0xC4:  # DHT (possibly several tables)
             b = 0
             while b < len(body):
                 tc, th = body[b] >> 4, body[b] & 0xF
-                bits = list(body[b + 1 : b + 17])
-                nvals = sum(bits)
-                vals = list(body[b + 17 : b + 17 + nvals])
-                huff[(tc, th)] = _decode_lut(bytes(bits), bytes(vals))
+                nvals = sum(body[b + 1 : b + 17])
+                huff[(tc, th)] = _decode_lut(
+                    bytes(body[b + 1 : b + 17]),
+                    bytes(body[b + 17 : b + 17 + nvals]),
+                )
                 b += 17 + nvals
         elif marker == 0xDD:
             raise NotImplementedError("restart intervals unsupported")
-        elif marker == 0xDA:
-            if coef is None:
-                raise ValueError("SOS before SOF2")
-            if body[0] != 1:
+        elif marker in (0xC0, 0xC2):  # SOF0 / SOF2
+            precision, h, w, ncomp = struct.unpack_from(">BHHB", body, 0)
+            samps = [body[7 + 3 * c] for c in range(ncomp)]
+            comp_q = [body[8 + 3 * c] for c in range(ncomp)]
+            progressive = marker == 0xC2
+            if (
+                precision != 8
+                or samps not in ([0x11], [0x11] * 3, [0x22, 0x11, 0x11])
+                or (progressive and ncomp != 1)
+            ):
+                raise NotImplementedError(
+                    "supported JPEG shapes: 8-bit gray, YCbCr 4:4:4 or "
+                    "4:2:0 baseline, and gray progressive "
+                    f"(got precision {precision}, sampling {samps}, "
+                    f"SOF{marker - 0xC0})"
+                )
+            samp = [s & 0xF for s in samps]
+            hmax = samp[0]
+            nmy, nmx = -(-h // (8 * hmax)), -(-w // (8 * hmax))
+            coefs = [
+                np.zeros((nmy * nmx * s * s, 64), dtype=np.int64) for s in samp
+            ]
+        elif marker == 0xDA:  # SOS → entropy-coded data follows
+            if coefs is None or any(q not in qtables for q in comp_q):
+                raise ValueError("JPEG missing SOF/DQT before SOS")
+            m = re.compile(rb"\xff[^\x00\xd0-\xd7]").search(data, pos)
+            end = m.start() if m else len(data)
+            rd = _ScanReader(data[pos:end])
+            tabs = [(t >> 4, t & 0xF) for t in body[2 : 2 + 2 * body[0] : 2]]
+            n_scans += 1
+            pos = end
+            if progressive and body[0] != 1:
                 raise NotImplementedError(
                     "interleaved multi-component scans unsupported"
                 )
-            td, ta = body[2] >> 4, body[2] & 0xF
-            ss, se, ahal = body[3], body[4], body[5]
-            ah, al = ahal >> 4, ahal & 0xF
-            scan_start = pos + 2 + ln
-            i = scan_start
-            while True:  # find the next real marker (skip stuffed FF00)
-                i = data.index(b"\xff", i)
-                nxt = data[i + 1]
-                if nxt == 0x00 or 0xD0 <= nxt <= 0xD7:
-                    i += 2
+            if not progressive and body[0] != ncomp:
+                raise NotImplementedError(
+                    "baseline scans must interleave every component"
+                )
+            try:
+                if progressive:
+                    ss, se, ahal = body[-3], body[-2], body[-1]
+                    _decode_progressive_scan(
+                        rd, coefs[0], huff, *tabs[0], ss, se,
+                        ahal >> 4, ahal & 0xF,
+                    )
                     continue
+                luts = [(huff[(0, td)], huff[(1, ta)]) for td, ta in tabs]
+                _decode_baseline_scan(rd, coefs, samp, luts, nmy, nmx)
                 break
-            rd = _ScanReader(data[scan_start:i])
-            _decode_progressive_scan(rd, coef, huff, td, ta, ss, se, ah, al)
-            pos = i
-            continue
-        pos += 2 + ln
-    if coef is None or w == 0 or comp_q not in qtables:
-        raise ValueError("progressive JPEG missing SOF2/DQT")
-    q = qtables[comp_q]
-    nby, nbx = (h + 7) // 8, (w + 7) // 8
-    nat = np.zeros((nby * nbx, 64), dtype=np.int64)
-    nat[:, _ZIGZAG] = coef
-    planes = nat.reshape(-1, 8, 8) * q
+            except IndexError:
+                raise ValueError("JPEG scan data ends mid-block") from None
+    if n_scans == 0:
+        raise ValueError("JPEG missing SOS")
+    planes = []
+    for c, s in enumerate(samp):
+        plane = _idct_plane(coefs[c], qtables[comp_q[c]], nmy * s, nmx * s)
+        f = hmax // s  # pinned 2x2 replication for subsampled chroma
+        if f > 1:
+            plane = np.repeat(np.repeat(plane, f, 0), f, 1)
+        planes.append(plane[:h, :w])
+    if len(planes) == 1:
+        return w, h, planes[0].copy()
+    return w, h, np.stack(planes, axis=-1)
+
+
+def _decode_baseline_scan(
+    rd: _ScanReader,
+    coefs: list[np.ndarray],
+    samp: list[int],
+    luts: list[tuple[list[int], list[int]]],
+    nmy: int,
+    nmx: int,
+) -> None:
+    """Entropy-decode one interleaved baseline scan (T.81 §F.2) into the
+    per-component zigzag coefficient arrays: MCU by MCU in raster order,
+    component ``c`` contributes ``samp[c]``² blocks (row-major inside the
+    MCU), each a DPCM DC against that component's own predictor followed
+    by run/size AC symbols up to EOB."""
+    prev = [0] * len(coefs)
+    for my in range(nmy):
+        for mx in range(nmx):
+            for c, s in enumerate(samp):
+                dc, ac = luts[c]
+                for dy in range(s):
+                    base = (my * s + dy) * nmx * s + mx * s
+                    for dx in range(s):
+                        zz = coefs[c][base + dx]
+                        size = rd.read_symbol(dc)
+                        prev[c] += _extend(rd.read_bits(size), size)
+                        zz[0] = prev[c]
+                        k = 1
+                        while k < 64:
+                            sym = rd.read_symbol(ac)
+                            if sym == 0x00:  # EOB
+                                break
+                            if sym == 0xF0:  # ZRL
+                                k += 16
+                                continue
+                            k += sym >> 4
+                            if k > 63:
+                                raise ValueError("AC run past end of block")
+                            size = sym & 0xF
+                            zz[k] = _extend(rd.read_bits(size), size)
+                            k += 1
+
+
+def _idct_plane(zzs: np.ndarray, q: np.ndarray, nby: int, nbx: int) -> np.ndarray:
+    """Dequantize + un-zigzag + IDCT (nby*nbx, 64) zigzag coefficient
+    blocks into one (nby*8, nbx*8) uint8 plane, every block at once."""
+    coefs = zzs[:, _UNZIGZAG].reshape(-1, 8, 8) * q
     blocks = (
-        np.einsum("ji,njk,kl->nil", _DCT_M, planes.astype(np.float64), _DCT_M)
+        np.einsum("ji,njk,kl->nil", _DCT_M, coefs.astype(np.float64), _DCT_M)
         + 128.0
     )
     pix = np.clip(np.round(blocks), 0, 255).astype(np.uint8)
-    out = (
-        pix.reshape(nby, nbx, 8, 8).transpose(0, 2, 1, 3)
-        .reshape(nby * 8, nbx * 8)
-    )
-    return w, h, out[:h, :w].copy()
+    return pix.reshape(nby, nbx, 8, 8).transpose(0, 2, 1, 3).reshape(nby * 8, nbx * 8)
+
+
+def _jpeg_gray(data: bytes) -> np.ndarray:
+    """The (h, w) pixel plane of a one-component JPEG — the content byte
+    plane of the gray kernels. A color stream has no single plane, so it
+    raises NotImplementedError (``color_plane_sums`` reads those)."""
+    planes = decode_jpeg(data)[2]
+    if planes.ndim != 2:
+        raise NotImplementedError("expected a one-component (gray) JPEG")
+    return planes
 
 
 def _decode_progressive_scan(
@@ -1357,31 +1405,29 @@ def attach_image_payload(
     plane equals the source EXACTLY — every per-pixel fraction equals the
     per-byte fraction (64 copies each), which is what the q127 oracle
     replays. The entropy path is still fully real: DPCM DC categories,
-    Huffman, EOB, stuffing."""
-    if container not in (
-        "bmp", "png", "gif", "jpeg", "jpeg_prog", "jpeg444", "jpeg420"
-    ):
-        raise ValueError(f"unsupported image container {container!r}")
+    Huffman, EOB, stuffing. ``'jpeg_prog'`` codes the same plane as a
+    progressive stream; ``'jpeg444'`` / ``'jpeg420'`` code byte-derived
+    constant-RGB blocks as color streams (``encode_jpeg`` sampling 1 /
+    2). Every JPEG container is labeled ``image/jpeg`` — ``decode_jpeg``
+    reads the shape from the stream itself."""
     encode = {
         "bmp": encode_bmp_gray8,
         "png": encode_png_gray8,
         "gif": encode_gif_gray8,
-        "jpeg": encode_jpeg_gray8,
+        "jpeg": encode_jpeg,
         "jpeg_prog": encode_jpeg_gray8_progressive,
-        "jpeg444": encode_jpeg_color444,
-        "jpeg420": encode_jpeg_color420,
-    }[container]
-    fmt = (
-        "image/jpeg"
-        if container in ("jpeg_prog", "jpeg444", "jpeg420")
-        else f"image/{container}"
-    )
+        "jpeg444": encode_jpeg,
+        "jpeg420": lambda rgb: encode_jpeg(rgb, sampling=2),
+    }.get(container)
+    if encode is None:
+        raise ValueError(f"unsupported image container {container!r}")
+    fmt = "image/jpeg" if container.startswith("jpeg") else f"image/{container}"
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             payloads, metas = [], []
             for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                if container in ("jpeg", "jpeg_prog", "jpeg444", "jpeg420"):
+                if container.startswith("jpeg"):
                     if container == "jpeg420":
                         # 4:2:0 exactness needs CONSTANT 16x16 macro-
                         # blocks (chroma averages a 2x2 group, which must
@@ -1515,7 +1561,7 @@ def attach_audio_payload(
 def decode_payload_bytes(buf: bytes, fmt: str) -> bytes:
     """Decode a container payload to its content byte plane: BMP → pixel
     bytes (top-down row-major), WAV → samples mapped back to bytes
-    ((s >> 8) + 128), raw → as-is. The single dispatch point every real
+    ((s >> 8) + 128), gray JPEG → pixel bytes, raw → as-is. The single dispatch point every real
     (fake=False) kernel shares; unsupported container formats raise
     NotImplementedError naming the absent library."""
     if fmt == "image/bmp":
@@ -1528,8 +1574,7 @@ def decode_payload_bytes(buf: bytes, fmt: str) -> bytes:
         _, _, pixels = decode_gif_gray8(bytes(buf))
         return pixels.tobytes()
     if fmt == "image/jpeg":
-        _, _, pixels = decode_jpeg_gray8(bytes(buf))
-        return pixels.tobytes()
+        return _jpeg_gray(bytes(buf)).tobytes()
     if fmt == "audio/wav":
         _, samples = decode_wav_pcm16(bytes(buf))
         return (((samples.astype(np.int32) >> 8) + 128) & 0xFF).astype(np.uint8).tobytes()
@@ -1796,7 +1841,7 @@ def frame_sample(df: DataFrame, n_frames: int = 3, fake: bool = True) -> DataFra
                             ids.append(doc_id)
                             idxs.append(i)
                             frames.append(
-                                decode_jpeg_gray8(sample)[2].tobytes()
+                                _jpeg_gray(sample).tobytes()
                                 if mjpeg
                                 else sample
                             )
@@ -1928,321 +1973,26 @@ def audio_fingerprint(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     ).mapInPandas(kernel, schema="doc long, sim_hi long, sim_lo long")
 
 
-# ---------------------------------------------------------------------
-# Baseline COLOR JPEG (4:4:4 YCbCr) — the color face of the cleanroom
-# T.81 codec. Same generated DCT/zigzag/Huffman machinery as the gray
-# path; what color adds is the pinned-rounding YCbCr transform, a second
-# (chroma) quant table, and the interleaved per-MCU scan with one DC
-# predictor per component. 4:4:4 (no chroma subsampling) is fully legal
-# baseline JPEG — every component carries sampling factor 1x1, an MCU is
-# exactly one block per component — and keeps the exactness contract the
-# q127/q166 oracles need (subsampling would average chroma across
-# blocks; 4:2:0 is a lossy-pipeline option, not a correctness tier).
-# ---------------------------------------------------------------------
-
-_JPEG_QTABLE_CHROMA = np.ones((8, 8), dtype=np.int64)
-_JPEG_QTABLE_CHROMA += 3 * (np.add.outer(np.arange(8), np.arange(8)))
-_JPEG_QTABLE_CHROMA[0, 0] = 1  # DC step 1 keeps constant blocks exact
-
-
-def rgb_to_ycbcr(rgb: np.ndarray) -> np.ndarray:
-    """JFIF full-range RGB → YCbCr with PINNED rounding: every channel is
-    ``clip(floor(expr + 0.5), 0, 255)`` where expr is the ITU-R BT.601
-    linear combination evaluated left-to-right in float64 — the exact
-    expression an engine-side SQL replay evaluates, so converted planes
-    are bit-identical across engines (plain ``round`` half-even vs
-    half-up at representation boundaries is exactly the cross-engine
-    trap the q150 z-score hit)."""
-    r = rgb[..., 0].astype(np.float64)
-    g = rgb[..., 1].astype(np.float64)
-    b = rgb[..., 2].astype(np.float64)
-    y = np.floor(0.299 * r + 0.587 * g + 0.114 * b + 0.5)
-    cb = np.floor(128.0 - 0.168736 * r - 0.331264 * g + 0.5 * b + 0.5)
-    cr = np.floor(128.0 + 0.5 * r - 0.418688 * g - 0.081312 * b + 0.5)
-    out = np.stack([y, cb, cr], axis=-1)
-    return np.clip(out, 0, 255).astype(np.uint8)
-
-
-def ycbcr_to_rgb(ycc: np.ndarray) -> np.ndarray:
-    """Inverse JFIF transform, same pinned floor(x+0.5) rounding."""
-    y = ycc[..., 0].astype(np.float64)
-    cb = ycc[..., 1].astype(np.float64) - 128.0
-    cr = ycc[..., 2].astype(np.float64) - 128.0
-    r = np.floor(y + 1.402 * cr + 0.5)
-    g = np.floor(y - 0.344136 * cb - 0.714136 * cr + 0.5)
-    b = np.floor(y + 1.772 * cb + 0.5)
-    out = np.stack([r, g, b], axis=-1)
-    return np.clip(out, 0, 255).astype(np.uint8)
-
-
-def _plane_zigzags(plane: np.ndarray, q: np.ndarray) -> np.ndarray:
-    """(ph, pw) float plane → (nby, nbx, 64) quantized zigzag coefficient
-    blocks (vectorized FDCT + quantize, the gray encoder's hot path)."""
-    ph, pw = plane.shape
-    nby, nbx = ph // 8, pw // 8
-    blocks = plane.reshape(nby, 8, nbx, 8).transpose(0, 2, 1, 3) - 128.0
-    coefs = np.einsum("ij,yxjk,lk->yxil", _DCT_M, blocks, _DCT_M)
-    quants = np.round(coefs / q).astype(np.int64)
-    return quants.reshape(nby, nbx, 64)[:, :, _ZIGZAG]
-
-
-def _pad_plane(plane: np.ndarray) -> np.ndarray:
-    """Replicate-pad a (h, w) uint8 plane to multiples of 8, float64."""
-    h, w = plane.shape
-    ph, pw = (h + 7) & ~7, (w + 7) & ~7
-    padded = np.empty((ph, pw), dtype=np.float64)
-    padded[:h, :w] = plane
-    padded[h:, :w] = plane[-1:, :]
-    padded[:h, w:] = padded[:h, w - 1 : w]
-    padded[h:, w:] = padded[h - 1, w - 1]
-    return padded
-
-
-def _write_block(wr, zz: np.ndarray, prev_dc: int, dc_codes, ac_codes) -> int:
-    """Entropy-code one zigzag block (DPCM DC + run/size AC + EOB);
-    returns the new DC predictor."""
-    diff = int(zz[0]) - prev_dc
-    size, bits = _magnitude(diff)
-    wr.write(*dc_codes[size])
-    if size:
-        wr.write(bits, size)
-    run = 0
-    nz = np.nonzero(zz[1:])[0]
-    last = int(nz[-1]) + 1 if len(nz) else 0
-    for k in range(1, last + 1):
-        v = int(zz[k])
-        if v == 0:
-            run += 1
-            continue
-        while run >= 16:
-            wr.write(*ac_codes[0xF0])
-            run -= 16
-        size, bits = _magnitude(v)
-        if size > 10:
-            raise ValueError("coefficient magnitude exceeds table")
-        wr.write(*ac_codes[(run << 4) | size])
-        wr.write(bits, size)
-        run = 0
-    if last < 63:
-        wr.write(*ac_codes[0x00])
-    return int(zz[0])
-
-
-def encode_jpeg_color444(
-    rgb: np.ndarray,
-    qtable_y: np.ndarray | None = None,
-    qtable_c: np.ndarray | None = None,
-) -> bytes:
-    """Encode an (h, w, 3) uint8 RGB array as a baseline color JPEG
-    (4:4:4, three components sampling 1x1, luma + chroma quant tables,
-    interleaved Y/Cb/Cr MCUs with per-component DC prediction, shared
-    canonical Huffman tables — legal per T.81, every component's SOS
-    entry just references table 0). Readable by any JPEG viewer and by
-    ``decode_jpeg_color444``."""
-    if rgb.ndim != 3 or rgb.shape[2] != 3:
-        raise ValueError("encode_jpeg_color444 needs an (h, w, 3) array")
-    qy = _JPEG_QTABLE if qtable_y is None else np.asarray(qtable_y, np.int64)
-    qc = (
-        _JPEG_QTABLE_CHROMA
-        if qtable_c is None
-        else np.asarray(qtable_c, np.int64)
-    )
-    h, w = rgb.shape[:2]
-    ycc = rgb_to_ycbcr(rgb)
-    zz_per_comp = [
-        _plane_zigzags(_pad_plane(ycc[..., c]), qy if c == 0 else qc)
-        for c in range(3)
-    ]
-    dc_bits, dc_vals = _canonical_table(_DC_LENGTHS)
-    ac_bits, ac_vals = _canonical_table(_AC_LENGTHS)
-    dc_codes = _huffman_codes(dc_bits, dc_vals)
-    ac_codes = _huffman_codes(ac_bits, ac_vals)
-    wr = _JpegBitWriter()
-    nby, nbx = zz_per_comp[0].shape[:2]
-    prev = [0, 0, 0]
-    for by in range(nby):
-        for bx in range(nbx):
-            for c in range(3):
-                prev[c] = _write_block(
-                    wr, zz_per_comp[c][by, bx], prev[c], dc_codes, ac_codes
-                )
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(body) + 2) + body
-
-    dqt = seg(
-        0xFFDB,
-        bytes([0]) + bytes(int(x) for x in qy.reshape(64)[_ZIGZAG])
-        + bytes([1]) + bytes(int(x) for x in qc.reshape(64)[_ZIGZAG]),
-    )
-    sof = seg(
-        0xFFC0,
-        struct.pack(">BHHB", 8, h, w, 3)
-        + bytes([1, 0x11, 0, 2, 0x11, 1, 3, 0x11, 1]),
-    )
-    dht_dc = seg(0xFFC4, bytes([0x00]) + bytes(dc_bits) + bytes(dc_vals))
-    dht_ac = seg(0xFFC4, bytes([0x10]) + bytes(ac_bits) + bytes(ac_vals))
-    sos = seg(0xFFDA, bytes([3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 63, 0]))
-    return (
-        b"\xff\xd8" + dqt + sof + dht_dc + dht_ac + sos + wr.flush()
-        + b"\xff\xd9"
-    )
-
-
-def decode_jpeg_color444(data: bytes) -> tuple[int, int, np.ndarray]:
-    """Decode a baseline 4:4:4 color JPEG → (width, height, (h, w, 3)
-    uint8 YCbCr planes) — planes, not RGB, so exactness-shaped fixtures
-    can be verified without paying the inverse-transform rounding;
-    ``ycbcr_to_rgb`` converts when display-space pixels are wanted.
-    Subsampled (non-1x1), progressive, 12-bit, and restart-interval
-    streams raise."""
-    if data[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG payload (missing SOI)")
-    pos = 2
-    qtables: dict[int, np.ndarray] = {}
-    huff: dict[tuple[int, int], tuple] = {}
-    w = h = 0
-    comp_q: list[int] = []
-    scan_tabs: list[tuple[int, int]] = []
-    while pos + 4 <= len(data):
-        if data[pos] != 0xFF:
-            raise ValueError(f"expected marker at {pos}")
-        marker = data[pos + 1]
-        if marker in (0xC2, 0xC1, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB):
-            raise NotImplementedError(
-                "only baseline sequential (SOF0) JPEG supported"
-            )
-        (ln,) = struct.unpack_from(">H", data, pos + 2)
-        body = data[pos + 4 : pos + 2 + ln]
-        if marker == 0xDB:
-            b = 0
-            while b < len(body):
-                pq, tq = body[b] >> 4, body[b] & 0xF
-                if pq != 0:
-                    raise NotImplementedError("16-bit quant tables unsupported")
-                zzq = np.frombuffer(body, dtype=np.uint8, count=64, offset=b + 1)
-                nat = np.empty(64, dtype=np.int64)
-                nat[_ZIGZAG] = zzq
-                qtables[tq] = nat.reshape(8, 8)
-                b += 65
-        elif marker == 0xC0:
-            precision, h, w, ncomp = struct.unpack_from(">BHHB", body, 0)
-            if precision != 8 or ncomp != 3:
-                raise NotImplementedError(
-                    "decode_jpeg_color444 handles 8-bit 3-component JPEG"
-                )
-            for c in range(3):
-                samp, qid = body[6 + 3 * c + 1], body[6 + 3 * c + 2]
-                if samp != 0x11:
-                    raise NotImplementedError(
-                        "chroma-subsampled JPEG unsupported (4:4:4 only)"
-                    )
-                comp_q.append(qid)
-        elif marker == 0xC4:
-            b = 0
-            while b < len(body):
-                tc, th = body[b] >> 4, body[b] & 0xF
-                bits = list(body[b + 1 : b + 17])
-                nvals = sum(bits)
-                vals = list(body[b + 17 : b + 17 + nvals])
-                huff[(tc, th)] = _decode_lut(bytes(bits), bytes(vals))
-                b += 17 + nvals
-        elif marker == 0xDD:
-            raise NotImplementedError("restart intervals unsupported")
-        elif marker == 0xDA:
-            nscan = body[0]
-            if nscan != 3:
-                raise NotImplementedError("expected a 3-component scan")
-            for c in range(3):
-                tabs = body[2 + 2 * c]
-                scan_tabs.append((tabs >> 4, tabs & 0xF))
-            pos = pos + 2 + ln
-            break
-        pos += 2 + ln
-    else:
-        raise ValueError("JPEG missing SOS")
-    if w == 0 or any(q not in qtables for q in comp_q):
-        raise ValueError("JPEG missing SOF0/DQT before SOS")
-    scan = data[pos:].replace(b"\xff\x00", b"\xff") + b"\x00\x00\x00\x00"
-    bp = 0
-
-    def peek16(p):
-        b = p >> 3
-        return (
-            int.from_bytes(scan[b : b + 4], "big") >> (16 - (p & 7))
-        ) & 0xFFFF
-
-    nby, nbx = (h + 7) // 8, (w + 7) // 8
-    zzs = [np.zeros((nby * nbx, 64), dtype=np.int64) for _ in range(3)]
-    prev = [0, 0, 0]
-    for bi in range(nby * nbx):
-        for c in range(3):
-            (dc_sym, dc_len) = huff[(0, scan_tabs[c][0])]
-            (ac_sym, ac_len) = huff[(1, scan_tabs[c][1])]
-            zz = zzs[c][bi]
-            peek = peek16(bp)
-            size, lnb = int(dc_sym[peek]), int(dc_len[peek])
-            if lnb == 0:
-                raise ValueError("invalid Huffman code in scan data")
-            bp += lnb
-            if size:
-                recv = peek16(bp) >> (16 - size)
-                bp += size
-                prev[c] += _extend(recv, size)
-            zz[0] = prev[c]
-            k = 1
-            while k < 64:
-                peek = peek16(bp)
-                sym, lnb = int(ac_sym[peek]), int(ac_len[peek])
-                if lnb == 0:
-                    raise ValueError("invalid Huffman code in scan data")
-                bp += lnb
-                if sym == 0x00:
-                    break
-                if sym == 0xF0:
-                    k += 16
-                    continue
-                run, size = sym >> 4, sym & 0xF
-                k += run
-                if k > 63:
-                    raise ValueError("AC run past end of block")
-                recv = peek16(bp) >> (16 - size)
-                bp += size
-                zz[k] = _extend(recv, size)
-                k += 1
-    planes = []
-    for c in range(3):
-        nat = np.zeros((nby * nbx, 64), dtype=np.int64)
-        nat[:, _ZIGZAG] = zzs[c]
-        coefs = nat.reshape(-1, 8, 8) * qtables[comp_q[c]]
-        blocks = (
-            np.einsum("ji,njk,kl->nil", _DCT_M, coefs.astype(np.float64), _DCT_M)
-            + 128.0
-        )
-        pix = np.clip(np.round(blocks), 0, 255).astype(np.uint8)
-        planes.append(
-            pix.reshape(nby, nbx, 8, 8).transpose(0, 2, 1, 3)
-            .reshape(nby * 8, nbx * 8)[:h, :w]
-        )
-    return w, h, np.stack(planes, axis=-1).copy()
-
-
-def color_plane_sums(df: DataFrame, subsampling: str = "444") -> DataFrame:
+def color_plane_sums(df: DataFrame) -> DataFrame:
     """Decode color-JPEG payloads and emit exact per-plane pixel sums
     (doc_id, sum_y, sum_cb, sum_cr) — BIGINT, no floats, so an oracle
     that replays the fixture's per-byte RGB→YCbCr arithmetic matches
-    bit-for-bit. ``subsampling`` picks the decoder ("444" or "420").
-    Arrow-batched ``mapInPandas``; the decode is per-payload CPU work,
-    so callers repartition small inputs first (q127 lesson)."""
-    decode = {"444": decode_jpeg_color444, "420": decode_jpeg_color420}[
-        subsampling
-    ]
+    bit-for-bit. ``decode_jpeg`` reads each payload's sampling (4:4:4 or
+    4:2:0) from its own SOF header, so one column may mix both; a
+    one-component (gray) payload raises. Arrow-batched ``mapInPandas``;
+    the decode is per-payload CPU work, so callers repartition small
+    inputs first (q127 lesson)."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, sy, scb, scr = [], [], [], []
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                _w, _h, ycc = decode(bytes(payload))
+                _w, _h, ycc = decode_jpeg(bytes(payload))
+                if ycc.ndim != 3:
+                    raise NotImplementedError(
+                        f"doc {doc_id}: color_plane_sums needs a "
+                        "three-component JPEG"
+                    )
                 p = ycc.astype(np.int64)
                 ids.append(doc_id)
                 sy.append(int(p[..., 0].sum()))
@@ -2256,237 +2006,6 @@ def color_plane_sums(df: DataFrame, subsampling: str = "444") -> DataFrame:
         kernel, schema="doc_id long, sum_y long, sum_cb long, sum_cr long"
     )
 
-
-def encode_jpeg_color420(
-    rgb: np.ndarray,
-    qtable_y: np.ndarray | None = None,
-    qtable_c: np.ndarray | None = None,
-) -> bytes:
-    """Encode an (h, w, 3) uint8 RGB array as a baseline 4:2:0 JPEG —
-    the subsampling every camera and web encoder defaults to: chroma is
-    averaged over 2x2 pixel groups (pinned floor(mean + 0.5) rounding),
-    so an MCU covers 16x16 pixels and carries FOUR Y blocks (row-major
-    within the MCU) plus one Cb and one Cr block (sampling factors
-    2x2 / 1x1 / 1x1). Everything else — pinned BT.601 transform, per-
-    component quant tables, DPCM DC per component, canonical Huffman —
-    is the 4:4:4 path's machinery. Readable by any JPEG viewer."""
-    if rgb.ndim != 3 or rgb.shape[2] != 3:
-        raise ValueError("encode_jpeg_color420 needs an (h, w, 3) array")
-    qy = _JPEG_QTABLE if qtable_y is None else np.asarray(qtable_y, np.int64)
-    qc = (
-        _JPEG_QTABLE_CHROMA
-        if qtable_c is None
-        else np.asarray(qtable_c, np.int64)
-    )
-    h, w = rgb.shape[:2]
-    ycc = rgb_to_ycbcr(rgb)
-
-    def pad16(plane: np.ndarray) -> np.ndarray:
-        hh, ww = plane.shape
-        ph, pw = (hh + 15) & ~15, (ww + 15) & ~15
-        out = np.empty((ph, pw), dtype=np.float64)
-        out[:hh, :ww] = plane
-        out[hh:, :ww] = plane[-1:, :]
-        out[:hh, ww:] = out[:hh, ww - 1 : ww]
-        out[hh:, ww:] = out[hh - 1, ww - 1]
-        return out
-
-    ypl = pad16(ycc[..., 0])
-    ph, pw = ypl.shape
-    subs = []
-    for c in (1, 2):
-        full = pad16(ycc[..., c])
-        g = full.reshape(ph // 2, 2, pw // 2, 2).mean(axis=(1, 3))
-        subs.append(np.floor(g + 0.5))
-    zz_y = _plane_zigzags(ypl, qy)
-    zz_cb = _plane_zigzags(subs[0], qc)
-    zz_cr = _plane_zigzags(subs[1], qc)
-    dc_bits, dc_vals = _canonical_table(_DC_LENGTHS)
-    ac_bits, ac_vals = _canonical_table(_AC_LENGTHS)
-    dc_codes = _huffman_codes(dc_bits, dc_vals)
-    ac_codes = _huffman_codes(ac_bits, ac_vals)
-    wr = _JpegBitWriter()
-    nmy, nmx = ph // 16, pw // 16
-    prev = [0, 0, 0]
-    for my in range(nmy):
-        for mx in range(nmx):
-            for dy, dx in ((0, 0), (0, 1), (1, 0), (1, 1)):
-                prev[0] = _write_block(
-                    wr, zz_y[2 * my + dy, 2 * mx + dx], prev[0],
-                    dc_codes, ac_codes,
-                )
-            prev[1] = _write_block(wr, zz_cb[my, mx], prev[1], dc_codes, ac_codes)
-            prev[2] = _write_block(wr, zz_cr[my, mx], prev[2], dc_codes, ac_codes)
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(body) + 2) + body
-
-    dqt = seg(
-        0xFFDB,
-        bytes([0]) + bytes(int(x) for x in qy.reshape(64)[_ZIGZAG])
-        + bytes([1]) + bytes(int(x) for x in qc.reshape(64)[_ZIGZAG]),
-    )
-    sof = seg(
-        0xFFC0,
-        struct.pack(">BHHB", 8, h, w, 3)
-        + bytes([1, 0x22, 0, 2, 0x11, 1, 3, 0x11, 1]),
-    )
-    dht_dc = seg(0xFFC4, bytes([0x00]) + bytes(dc_bits) + bytes(dc_vals))
-    dht_ac = seg(0xFFC4, bytes([0x10]) + bytes(ac_bits) + bytes(ac_vals))
-    sos = seg(0xFFDA, bytes([3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 63, 0]))
-    return (
-        b"\xff\xd8" + dqt + sof + dht_dc + dht_ac + sos + wr.flush()
-        + b"\xff\xd9"
-    )
-
-
-def decode_jpeg_color420(data: bytes) -> tuple[int, int, np.ndarray]:
-    """Decode a baseline 4:2:0 color JPEG → (width, height, (h, w, 3)
-    uint8 YCbCr planes); chroma upsamples by 2x2 replication (pinned —
-    no interpolation, so exactness fixtures survive). Rejects non-4:2:0
-    sampling, progressive, 12-bit, and restart intervals."""
-    if data[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG payload (missing SOI)")
-    pos = 2
-    qtables: dict[int, np.ndarray] = {}
-    huff: dict[tuple[int, int], tuple] = {}
-    w = h = 0
-    comp_q: list[int] = []
-    scan_tabs: list[tuple[int, int]] = []
-    while pos + 4 <= len(data):
-        if data[pos] != 0xFF:
-            raise ValueError(f"expected marker at {pos}")
-        marker = data[pos + 1]
-        if marker in (0xC2, 0xC1, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB):
-            raise NotImplementedError(
-                "only baseline sequential (SOF0) JPEG supported"
-            )
-        (ln,) = struct.unpack_from(">H", data, pos + 2)
-        body = data[pos + 4 : pos + 2 + ln]
-        if marker == 0xDB:
-            b = 0
-            while b < len(body):
-                pq, tq = body[b] >> 4, body[b] & 0xF
-                if pq != 0:
-                    raise NotImplementedError("16-bit quant tables unsupported")
-                zzq = np.frombuffer(body, dtype=np.uint8, count=64, offset=b + 1)
-                nat = np.empty(64, dtype=np.int64)
-                nat[_ZIGZAG] = zzq
-                qtables[tq] = nat.reshape(8, 8)
-                b += 65
-        elif marker == 0xC0:
-            precision, h, w, ncomp = struct.unpack_from(">BHHB", body, 0)
-            if precision != 8 or ncomp != 3:
-                raise NotImplementedError(
-                    "decode_jpeg_color420 handles 8-bit 3-component JPEG"
-                )
-            samps = [body[6 + 3 * c + 1] for c in range(3)]
-            if samps != [0x22, 0x11, 0x11]:
-                raise NotImplementedError(
-                    "decode_jpeg_color420 handles 4:2:0 sampling only"
-                )
-            comp_q = [body[6 + 3 * c + 2] for c in range(3)]
-        elif marker == 0xC4:
-            b = 0
-            while b < len(body):
-                tc, th = body[b] >> 4, body[b] & 0xF
-                bits = list(body[b + 1 : b + 17])
-                nvals = sum(bits)
-                vals = list(body[b + 17 : b + 17 + nvals])
-                huff[(tc, th)] = _decode_lut(bytes(bits), bytes(vals))
-                b += 17 + nvals
-        elif marker == 0xDD:
-            raise NotImplementedError("restart intervals unsupported")
-        elif marker == 0xDA:
-            if body[0] != 3:
-                raise NotImplementedError("expected a 3-component scan")
-            for c in range(3):
-                tabs = body[2 + 2 * c]
-                scan_tabs.append((tabs >> 4, tabs & 0xF))
-            pos = pos + 2 + ln
-            break
-        pos += 2 + ln
-    else:
-        raise ValueError("JPEG missing SOS")
-    if w == 0 or any(q not in qtables for q in comp_q):
-        raise ValueError("JPEG missing SOF0/DQT before SOS")
-    scan = data[pos:].replace(b"\xff\x00", b"\xff") + b"\x00\x00\x00\x00"
-    bp = 0
-
-    def peek16(p):
-        b = p >> 3
-        return (
-            int.from_bytes(scan[b : b + 4], "big") >> (16 - (p & 7))
-        ) & 0xFFFF
-
-    def read_block(zz: np.ndarray, c: int) -> None:
-        nonlocal bp
-        (dc_sym, dc_len) = huff[(0, scan_tabs[c][0])]
-        (ac_sym, ac_len) = huff[(1, scan_tabs[c][1])]
-        peek = peek16(bp)
-        size, lnb = int(dc_sym[peek]), int(dc_len[peek])
-        if lnb == 0:
-            raise ValueError("invalid Huffman code in scan data")
-        bp += lnb
-        if size:
-            recv = peek16(bp) >> (16 - size)
-            bp += size
-            prev[c] += _extend(recv, size)
-        zz[0] = prev[c]
-        k = 1
-        while k < 64:
-            peek = peek16(bp)
-            sym, lnb = int(ac_sym[peek]), int(ac_len[peek])
-            if lnb == 0:
-                raise ValueError("invalid Huffman code in scan data")
-            bp += lnb
-            if sym == 0x00:
-                break
-            if sym == 0xF0:
-                k += 16
-                continue
-            run, size = sym >> 4, sym & 0xF
-            k += run
-            if k > 63:
-                raise ValueError("AC run past end of block")
-            recv = peek16(bp) >> (16 - size)
-            bp += size
-            zz[k] = _extend(recv, size)
-            k += 1
-
-    nmy, nmx = (h + 15) // 16, (w + 15) // 16
-    nby, nbx = 2 * nmy, 2 * nmx
-    zz_y = np.zeros((nby * nbx, 64), dtype=np.int64)
-    zz_cb = np.zeros((nmy * nmx, 64), dtype=np.int64)
-    zz_cr = np.zeros((nmy * nmx, 64), dtype=np.int64)
-    prev = [0, 0, 0]
-    for my in range(nmy):
-        for mx in range(nmx):
-            for dy, dx in ((0, 0), (0, 1), (1, 0), (1, 1)):
-                read_block(zz_y[(2 * my + dy) * nbx + (2 * mx + dx)], 0)
-            read_block(zz_cb[my * nmx + mx], 1)
-            read_block(zz_cr[my * nmx + mx], 2)
-
-    def idct_plane(zzs: np.ndarray, q: np.ndarray, rows: int, cols: int):
-        nat = np.zeros((zzs.shape[0], 64), dtype=np.int64)
-        nat[:, _ZIGZAG] = zzs
-        coefs = nat.reshape(-1, 8, 8) * q
-        blocks = (
-            np.einsum("ji,njk,kl->nil", _DCT_M, coefs.astype(np.float64), _DCT_M)
-            + 128.0
-        )
-        pix = np.clip(np.round(blocks), 0, 255).astype(np.uint8)
-        return (
-            pix.reshape(rows, cols, 8, 8).transpose(0, 2, 1, 3)
-            .reshape(rows * 8, cols * 8)
-        )
-
-    ypl = idct_plane(zz_y, qtables[comp_q[0]], nby, nbx)[:h, :w]
-    cb = idct_plane(zz_cb, qtables[comp_q[1]], nmy, nmx)
-    cr = idct_plane(zz_cr, qtables[comp_q[2]], nmy, nmx)
-    cb = np.repeat(np.repeat(cb, 2, 0), 2, 1)[:h, :w]
-    cr = np.repeat(np.repeat(cr, 2, 0), 2, 1)[:h, :w]
-    return w, h, np.stack([ypl, cb, cr], axis=-1).copy()
 
 
 # ---------------------------------------------------------------------------
@@ -2753,14 +2272,6 @@ def _mp4_codec_from(data: bytes, sb: int, se: int) -> str:
     return ""
 
 
-def mp4_sample_codec(data: bytes) -> str:
-    """stsd codec fourcc of the track ``mp4_sample_table`` reads — by
-    construction the SAME track selection, so a decode decision based on
-    this fourcc always matches the extracted sample bytes."""
-    sb, se = _mp4_select_stbl(data)
-    return _mp4_codec_from(data, sb, se)
-
-
 def mp4_codec_and_samples(data: bytes) -> tuple[str, list[tuple[int, int]]]:
     """(codec fourcc, sample table) of the selected track from ONE moov
     walk — the per-payload hot-kernel entry (``frame_sample``'s video
@@ -2867,7 +2378,7 @@ def attach_mjpeg_mp4_payload(
 ) -> DataFrame:
     """Synthesize REAL MJPEG-in-MP4 payloads from the documents fixture:
     ``doc_id % 3 + 2`` frames, each a genuine baseline JPEG from
-    ``encode_jpeg_gray8``, muxed by ``encode_mp4_video`` with codec
+    ``encode_jpeg``, muxed by ``encode_mp4_video`` with codec
     fourcc ``jpeg`` in stsd (QuickTime's motion-JPEG track layout) — the
     end-to-end-decodable video fixture: container demux AND codec decode
     both run on this repo's own cleanroom code, zero media libraries.
@@ -2894,7 +2405,7 @@ def attach_mjpeg_mp4_payload(
                     )
                     blocks = np.frombuffer(sl, dtype=np.uint8).reshape(bh, bw)
                     pixels = np.repeat(np.repeat(blocks, 8, 0), 8, 1)
-                    frames.append(encode_jpeg_gray8(pixels))
+                    frames.append(encode_jpeg(pixels))
                 payloads.append(
                     encode_mp4_video(
                         frames, width=bw * 8, height=bh * 8, codec=b"jpeg"
@@ -2949,9 +2460,7 @@ def attach_mjpeg_timeline_payload(
         def frame_for(b: int) -> bytes:
             out = jpeg_of.get(b)
             if out is None:
-                out = encode_jpeg_gray8(
-                    np.full((8, 8), b, dtype=np.uint8)
-                )
+                out = encode_jpeg(np.full((8, 8), b, dtype=np.uint8))
                 jpeg_of[b] = out
             return out
 
@@ -3035,8 +2544,7 @@ def video_fingerprint(
         def sample_energy(sample: bytes) -> int:
             e = energy_of.get(sample)
             if e is None:
-                _, _, px = decode_jpeg_gray8(sample)
-                e = int(px.sum(dtype=np.int64))
+                e = int(_jpeg_gray(sample).sum(dtype=np.int64))
                 if len(energy_of) < 4096:
                     energy_of[sample] = e
             return e
@@ -3098,8 +2606,7 @@ def video_slot_energies(
         def sample_energy(sample: bytes) -> int:
             e = energy_of.get(sample)
             if e is None:
-                _, _, px = decode_jpeg_gray8(sample)
-                e = int(px.sum(dtype=np.int64))
+                e = int(_jpeg_gray(sample).sum(dtype=np.int64))
                 if len(energy_of) < 4096:
                     energy_of[sample] = e
             return e

@@ -102,24 +102,6 @@ def skew_safe_distinct_agg(
     )
 
 
-def salted_collect_list(
-    df: DataFrame, group_cols: list[str], value_col: str, salt_buckets: int = 16
-) -> DataFrame:
-    """collect_list per group, built in ``salt_buckets`` shards so no single
-    reducer materializes a hot key's whole list at once: shard-level lists
-    concatenate via flatten in a second (tiny) aggregation. Element order is
-    unspecified, as with plain collect_list."""
-    shards = (
-        df.withColumn("__salt", F.pmod(F.hash(value_col), F.lit(salt_buckets)))
-        .groupBy(*group_cols, "__salt")
-        .agg(F.collect_list(value_col).alias("__part"))
-    )
-    return (
-        shards.groupBy(*group_cols)
-        .agg(F.flatten(F.collect_list("__part")).alias(f"{value_col}_list"))
-    )
-
-
 def deterministic_split(
     df: DataFrame,
     key_col: str,

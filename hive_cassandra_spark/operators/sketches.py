@@ -218,14 +218,6 @@ def bloom_build(
     )
 
 
-def bloom_merge(a: DataFrame, b: DataFrame) -> DataFrame:
-    """OR two filters built with the same (n_words, k):
-    merge(bloom(A), bloom(B)) == bloom(A ∪ B) exactly."""
-    return a.unionByName(b).groupBy("word_idx").agg(
-        F.bit_or("bits").alias("bits")
-    )
-
-
 def bloom_probe(
     df: DataFrame,
     bloom: DataFrame,

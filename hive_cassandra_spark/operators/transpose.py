@@ -25,7 +25,7 @@ destination table.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 # Virtual column names that auto-trigger transposed mode in the reference
 # (AbstractColumnSerDe.java:56-64).
@@ -181,14 +181,3 @@ def lww_compact(
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-
-
-def counter_rollup(df: DataFrame, key_cols: list[str], value_col: str) -> Column | DataFrame:
-    """Counter-column semantics: aggregate increments per (key, column).
-
-    The reference reads counters as plain longs and cannot write them
-    (CassandraPut.java:103 `// TODO check for counter`;
-    ColumnFamilyWideRowRecordReader.java:414-419). Here the write path is an
-    aggregate-on-write: one map-side-combined shuffle.
-    """
-    return df.groupBy(*key_cols).agg(F.sum(value_col).alias(value_col))

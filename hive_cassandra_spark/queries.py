@@ -3669,10 +3669,11 @@ def q92_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="streaming READ through the connector seam: "
     "spark.readStream.format('cassandra_cells') tails a stream-written "
-    "cell store (datasource.CellStoreStreamReader — the streaming sink's "
-    "atomically-published micro-batches are a commit log, so the batch "
-    "id is the offset; readBetweenOffsets replays committed ranges "
-    "deterministically for recovery). Events flow stream→sink→store→"
+    "cell store (datasource.CellStoreParallelStreamReader — the "
+    "streaming sink's atomically-published micro-batches are a commit "
+    "log, so the batch id is the offset; a committed range replays "
+    "deterministically for recovery, one executor split per part "
+    "file). Events flow stream→sink→store→"
     "tail→aggregate and must equal the batch table — the CDC-shaped "
     "composition the reference's stateless scans could never express "
     "(overflow variant of the in-window q84 connector family)",
@@ -3707,15 +3708,10 @@ def q93_stream_cell_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start(store)
     )
     wq.awaitTermination()
-    # parallel=true: the executor-parallel tail (one split per committed
-    # part file) — the corpus-scale reader earns the driver row; its
-    # row-for-row equivalence with the driver-side Simple reader is
+    # the executor-parallel tail: one split per committed part file; its
+    # row-for-row equivalence with the batch read of the same store is
     # pinned in test_datasource
-    tailed = (
-        spark.readStream.format("cassandra_cells")
-        .option("parallel", "true")
-        .load(store)
-    )
+    tailed = spark.readStream.format("cassandra_cells").load(store)
     # distinct aggregates are unsupported on streams: materialize the
     # tailed cells (append mode — the read is the streaming part under
     # test), aggregate batch-side
@@ -5920,7 +5916,7 @@ def q110_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Arrow mapInPandas: payloads are genuine grayscale JPEGs from the "
     "from-scratch encoder (generated zigzag/DCT basis, canonical Huffman "
     "tables carried in DHT, DPCM DC + run/size AC, 0xFF stuffing — "
-    "encode_jpeg_gray8/decode_jpeg_gray8, no libjpeg), entropy-decoded + "
+    "encode_jpeg/decode_jpeg, no libjpeg), entropy-decoded + "
     "dequantized + IDCT'd to the pixel plane in the fake=False path and "
     "histogrammed (SURVEY.md §2.C multimodal; r06 verdict item 6 — JPEG "
     "was the last capability stub behind the absent-library branch)",
@@ -8125,7 +8121,8 @@ def q165_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     "from-scratch color encoder (pinned-rounding BT.601 transform, luma "
     "+ chroma quant tables, interleaved Y/Cb/Cr MCUs with per-component "
     "DC prediction, shared canonical Huffman tables — "
-    "encode/decode_jpeg_color444, no libjpeg); the decode "
+    "encode_jpeg/decode_jpeg, no libjpeg); the decode reads the 4:4:4 "
+    "shape from the stream's own SOF header, "
     "entropy-decodes all three interleaved components, dequantizes per "
     "component table, IDCTs, and emits exact BIGINT per-plane pixel "
     "sums the oracle replays byte-for-byte. Extends q127's grayscale "
@@ -8237,7 +8234,8 @@ def q167_stream_jsonl_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="REAL baseline 4:2:0 JPEG decode — the chroma subsampling every "
     "camera and web encoder defaults to: an MCU is FOUR interleaved Y "
     "blocks plus one Cb and one Cr at half resolution "
-    "(encode/decode_jpeg_color420; pinned floor(mean+0.5) 2x2 chroma "
+    "(encode_jpeg(sampling=2)/decode_jpeg — the decoder reads the "
+    "sampling factors from the SOF header; pinned floor(mean+0.5) 2x2 chroma "
     "averaging on encode, 2x2 replication upsample on decode). The "
     "decode walks the 6-block MCU structure with three DC predictors, "
     "per-component quant tables, and emits exact BIGINT plane sums the "
@@ -8250,7 +8248,7 @@ def q168_multimodal_jpeg_420(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.sparkContext.defaultParallelism
     )
     payloads = multimodal.attach_image_payload(docs, container="jpeg420")
-    return multimodal.color_plane_sums(payloads, subsampling="420")
+    return multimodal.color_plane_sums(payloads)
 
 
 @register(
@@ -9017,7 +9015,8 @@ def q177_recovery_runbook(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Al=1 first passes + correction-bit refinement with EOBn end-of-band "
     "runs, §G.1.2.3) — entropy-decoded scan-by-scan into the coefficient "
     "array, then dequantized + IDCT'd (encode_jpeg_gray8_progressive / "
-    "decode_jpeg_gray8_progressive, no libjpeg). Closes the r07 "
+    "decode_jpeg — the same decoder as every baseline shape, no "
+    "libjpeg). Closes the r07 "
     "verdict's last multimodal stub (progressive JPEG was an "
     "absent-library NotImplementedError branch). Ordinary overflow of "
     "the multimodal family (q166/q168 in-window); pixels are proven "
@@ -10814,7 +10813,8 @@ def q201_stream_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="END-TO-END MJPEG-in-MP4 video decode (multimodal."
     "attach_mjpeg_mp4_payload / frame_sample(fake=False) / "
     "frame_pixel_stats — r10 verdict item 4): real baseline JPEGs "
-    "(encode_jpeg_gray8, ITU-T T.81) muxed into a real ISO BMFF "
+    "(encode_jpeg, ITU-T T.81; decode_jpeg on the way back) muxed into "
+    "a real ISO BMFF "
     "container with codec 'jpeg' in stsd (QuickTime's motion-JPEG "
     "layout), then container demux (stsc x stco x stsz sample "
     "resolution) AND codec decode (Huffman + dequant + IDCT) both run "

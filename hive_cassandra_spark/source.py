@@ -43,6 +43,7 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from hive_cassandra_spark import sink
 from hive_cassandra_spark.codecs import decode_col
 from hive_cassandra_spark.mapping import ColumnMapping
 
@@ -175,9 +176,14 @@ def cells_to_table(
                 column_names[entry_to_idx[":value"]]
             )
         )
-        # dead/tombstone cells are skipped (≙ isLive() filter,
+        # one row per cell: last write wins (the compaction rule, so a
+        # tombstone suppresses every older version of its cell), then
+        # dead/tombstone winners are skipped (≙ isLive() filter,
         # CassandraHiveRecordReader.java:198-214)
-        return cells.filter(F.col("value").isNotNull()).select(*out)
+        live = sink._compact_winners(
+            cells, drop_tombstones=True, now_millis=None, gc_grace_s=None
+        )
+        return live.select(*out)
 
     cf_map_idx = set(mapping.cf_map_indexes)
     plain_idx = [

@@ -426,14 +426,14 @@ def test_streaming_read_tails_stream_written_store(spark, store, tmp_path):
     # batch-job parts have no batch-id ordering: the tailing reader refuses
     batch_store = str(tmp_path / "batch_store")
     spark.read.parquet(store).write.format("cassandra_cells").mode("append").save(batch_store)
-    reader = datasource.CellStoreStreamReader({"path": batch_store}, schema)
+    reader = datasource.CellStoreParallelStreamReader({"path": batch_store}, schema)
     with pytest.raises(ValueError, match="stream-written"):
-        reader.read({"pos": 0})
+        reader.latestOffset()
 
 
 def test_streaming_read_offsets_are_deterministic(spark, store, tmp_path):
-    """readBetweenOffsets replays a committed range exactly (failure
-    recovery contract): rows for [0, mid) + [mid, end) == all rows."""
+    """A committed offset range replays exactly (failure recovery
+    contract): rows for [0, mid) + [mid, end) == all rows."""
     out = str(tmp_path / "repl_store")
     schema = spark.read.parquet(store).schema
     src = (
@@ -449,15 +449,21 @@ def test_streaming_read_offsets_are_deterministic(spark, store, tmp_path):
         .start(out)
     )
     q.awaitTermination()
-    reader = datasource.CellStoreStreamReader({"path": out}, schema)
-    rows, end = reader.read({"pos": 0})
-    all_rows = sorted(rows)
-    assert end["pos"] >= 1
-    mid = max(1, end["pos"] // 2)
-    replay = sorted(
-        list(reader.readBetweenOffsets({"pos": 0}, {"pos": mid}))
-        + list(reader.readBetweenOffsets({"pos": mid}, end))
-    )
+    reader = datasource.CellStoreParallelStreamReader({"path": out}, schema)
+
+    def rows(lo: int, hi: int) -> list:
+        return [
+            tuple(r.values())
+            for part in reader.partitions({"pos": lo}, {"pos": hi})
+            for batch in reader.read(part)
+            for r in batch.to_pylist()
+        ]
+
+    end = reader.latestOffset()["pos"]
+    assert end >= 1
+    all_rows = sorted(rows(0, end))
+    mid = max(1, end // 2)
+    replay = sorted(rows(0, mid) + rows(mid, end))
     assert replay == all_rows and len(all_rows) > 0
 
 
@@ -543,9 +549,9 @@ def test_as_of_batch_time_travel(spark, store, tmp_path):
 
 
 def test_parallel_stream_reader_matches_simple(spark, store, tmp_path):
-    """.option('parallel', 'true') tails the same commit log through the
-    executor-parallel DataSourceStreamReader: identical rows to the
-    driver-side Simple reader, batch ids still the offsets."""
+    """The streaming tail (executor-parallel, one split per committed
+    part file, batch ids as offsets) returns exactly the rows of a batch
+    ``spark.read.format("cassandra_cells")`` of the same store."""
     out = str(tmp_path / "stream_store")
     src = str(tmp_path / "src_halves")
     cells = spark.read.parquet(store)
@@ -563,29 +569,21 @@ def test_parallel_stream_reader_matches_simple(spark, store, tmp_path):
         .start(out)
     )
     q.awaitTermination()
-
-    def tail(parallel: bool):
-        name = f"tail_{'par' if parallel else 'simple'}"
-        reader = spark.readStream.format("cassandra_cells")
-        if parallel:
-            reader = reader.option("parallel", "true")
-        tq = (
-            reader.load(out)
-            .writeStream.format("memory")
-            .queryName(name)
-            .option(
-                "checkpointLocation",
-                str(tmp_path / f"ck_{name}"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        tq.awaitTermination()
-        return sorted(map(tuple, spark.table(name).collect()))
-
-    par, simple = tail(True), tail(False)
-    assert par == simple
-    assert len(par) == cells.count()
+    tq = (
+        spark.readStream.format("cassandra_cells")
+        .load(out)
+        .writeStream.format("memory")
+        .queryName("tail_par")
+        .option("checkpointLocation", str(tmp_path / "ck_tail_par"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    tq.awaitTermination()
+    tailed = spark.table("tail_par")
+    batch = spark.read.format("cassandra_cells").load(out).select(*tailed.columns)
+    got = sorted(map(tuple, tailed.collect()))
+    assert got == sorted(map(tuple, batch.collect()))
+    assert len(got) == cells.count()
 
 
 def test_as_of_batch_composes_with_reversed(spark, store, tmp_path):

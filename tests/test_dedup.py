@@ -126,27 +126,6 @@ def test_simhash_pairs_hamming_correct(spark, sf_dir):
     assert {(r.doc_a, r.doc_b) for r in out} == expected
 
 
-def test_simhash_band_space_and_bucket_width(spark, sf_dir):
-    """Scale-shape guard (r02 verdict item 3): bands must span the full
-    16-bit space (values 0..65535, 4 positions) and on real data bucket
-    population must stay near |corpus|/65536 — not the |corpus|/256 a
-    byte-banded 32-bit scheme degrades to."""
-    from pyspark.sql import functions as F
-
-    docs = _docs(spark, sf_dir, 500)
-    bands = dedup.simhash_bands(dedup.simhash(docs))
-    stats = bands.groupBy("pos", "band").count()
-    top = stats.agg(F.max("count").alias("mx")).collect()[0]
-    rng = bands.agg(
-        F.min("band").alias("lo"), F.max("band").alias("hi"),
-        F.countDistinct("pos").alias("npos"),
-    ).collect()[0]
-    assert rng.npos == 4 and 0 <= rng.lo and rng.hi <= 65535
-    # 500 near-uniform 16-bit words: collisions exist but no bucket should
-    # hold more than a tiny fraction of the corpus
-    assert top.mx <= 25, top.mx
-
-
 def test_simhash_exact_duplicates_immune_to_bucket_cap(spark):
     """r09 verdict item 2: a corpus of identical docs collapses to ONE
     distinct signature before banding, so even a max_bucket far below the

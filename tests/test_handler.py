@@ -119,3 +119,25 @@ def test_read_table_fully_deleted_row_vanishes(spark, tmp_path):
     tdef2 = _two_row_table(spark, tmp_path / "p")
     _delete(spark, tdef2, [("k1", "a")], ts=2000)
     assert _rows(handler.read_table(spark, tdef2, wanted_columns=["a"])) == [("k2", 3)]
+
+
+def test_transposed_read_is_last_write_wins(spark, tmp_path):
+    """A transposed table reads one row per cell: the newest version
+    wins and a tombstone removes its cell instead of letting an older
+    version through."""
+    tdef = handler.define_table(
+        "tr", str(tmp_path / "tr"),
+        ["row_key", "column_name", "value"], ["string", "string", "string"],
+    )
+    schema = "row_key string, column_name string, value string"
+    handler.write_table(
+        spark.createDataFrame([("k1", "c1", "old"), ("k1", "c2", "x")], schema),
+        tdef, clock_millis=1000,
+    )
+    handler.write_table(
+        spark.createDataFrame([("k1", "c1", "new")], schema),
+        tdef, mode="append", clock_millis=2000,
+    )
+    _delete(spark, tdef, [("k1", "c2")], ts=3000)
+    assert tdef.mapping.transposed
+    assert _rows(handler.read_table(spark, tdef)) == [("k1", "c1", "new")]

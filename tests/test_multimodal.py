@@ -57,7 +57,7 @@ def test_real_decode_unsupported_format_is_stubbed(spark, sf_dir):
     with pytest.raises(Exception, match="NotImplementedError|absent codec|ffmpeg"):
         multimodal.extract_features(src, fake=False).collect()
     with pytest.raises(Exception, match="ValueError|SOI"):
-        multimodal.decode_jpeg_gray8(b"plainly not a jpeg")
+        multimodal.decode_jpeg(b"plainly not a jpeg")
 
 
 def test_bmp_codec_roundtrip():
@@ -449,9 +449,9 @@ def test_jpeg_constant_blocks_roundtrip_exact():
     rng = np.random.RandomState(11)
     blocks = rng.randint(0, 256, (4, 7), dtype=np.uint8)
     img = np.repeat(np.repeat(blocks, 8, 0), 8, 1)
-    data = multimodal.encode_jpeg_gray8(img)
+    data = multimodal.encode_jpeg(img)
     assert data[:2] == b"\xff\xd8" and data[-2:] == b"\xff\xd9"
-    w, h, dec = multimodal.decode_jpeg_gray8(data)
+    w, h, dec = multimodal.decode_jpeg(data)
     assert (w, h) == (56, 32)
     assert (dec == img).all()
 
@@ -463,8 +463,8 @@ def test_jpeg_flat_table_near_lossless_any_image():
     rng = np.random.RandomState(5)
     img = rng.randint(0, 256, (24, 31), dtype=np.uint8)
     q1 = np.ones((8, 8), dtype=np.int64)
-    data = multimodal.encode_jpeg_gray8(img, qtable=q1)
-    w, h, dec = multimodal.decode_jpeg_gray8(data)
+    data = multimodal.encode_jpeg(img, qtable=q1)
+    w, h, dec = multimodal.decode_jpeg(data)
     assert (w, h) == (31, 24)  # non-multiple-of-8 dims survive
     assert np.abs(dec.astype(int) - img.astype(int)).max() <= 1
 
@@ -475,11 +475,11 @@ def test_jpeg_default_table_lossy_but_bounded():
     bound; smooth gradients come back within a couple of levels."""
     rng = np.random.RandomState(9)
     noise = rng.randint(0, 256, (16, 16), dtype=np.uint8)
-    _, _, dec = multimodal.decode_jpeg_gray8(multimodal.encode_jpeg_gray8(noise))
+    _, _, dec = multimodal.decode_jpeg(multimodal.encode_jpeg(noise))
     assert np.abs(dec.astype(int) - noise.astype(int)).max() <= 64
     yy, xx = np.mgrid[0:19, 0:22]
     grad = ((yy * 7 + xx * 3) % 256).astype(np.uint8)
-    _, _, dg = multimodal.decode_jpeg_gray8(multimodal.encode_jpeg_gray8(grad))
+    _, _, dg = multimodal.decode_jpeg(multimodal.encode_jpeg(grad))
     assert np.abs(dg.astype(int) - grad.astype(int)).max() <= 4
 
 
@@ -487,15 +487,15 @@ def test_jpeg_decoder_rejects_out_of_scope_streams():
     import struct as _s
 
     with pytest.raises(ValueError, match="SOI"):
-        multimodal.decode_jpeg_gray8(b"nope")
+        multimodal.decode_jpeg(b"nope")
     # extended sequential (SOF1) explicitly out of scope (progressive
     # SOF2 became a real decode path in round 8 — tested below)
     img = np.zeros((8, 8), dtype=np.uint8)
-    data = bytearray(multimodal.encode_jpeg_gray8(img))
+    data = bytearray(multimodal.encode_jpeg(img))
     i = data.find(b"\xff\xc0")
     data[i + 1] = 0xC1
     with pytest.raises(NotImplementedError, match="SOF0"):
-        multimodal.decode_jpeg_gray8(bytes(data))
+        multimodal.decode_jpeg(bytes(data))
 
 
 def test_jpeg_dc_prediction_spans_blocks():
@@ -503,7 +503,7 @@ def test_jpeg_dc_prediction_spans_blocks():
     correctly only if the differential chain is applied in raster order."""
     blocks = np.arange(0, 256, 8, dtype=np.uint8).reshape(4, 8)
     img = np.repeat(np.repeat(blocks, 8, 0), 8, 1)
-    _, _, dec = multimodal.decode_jpeg_gray8(multimodal.encode_jpeg_gray8(img))
+    _, _, dec = multimodal.decode_jpeg(multimodal.encode_jpeg(img))
     assert (dec == img).all()
 
 
@@ -513,7 +513,7 @@ def test_attach_image_payload_real_jpeg_decode(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").filter(F.col("doc_id") < 8)
     texts = {r.doc_id: r.text for r in docs.collect()}
     for r in multimodal.attach_image_payload(docs, container="jpeg").collect():
-        w, h, pixels = multimodal.decode_jpeg_gray8(bytes(r.payload))
+        w, h, pixels = multimodal.decode_jpeg(bytes(r.payload))
         assert (w, h) == (r.meta.width, r.meta.height)
         bw, bh = w // 8, h // 8
         raw = texts[r.doc_id].encode("utf-8")[: bw * bh].ljust(bw * bh, b"\x00")
@@ -539,8 +539,8 @@ def test_jpeg_flat_table_roundtrip_fuzz():
         img = np.random.RandomState(seed).randint(
             0, 256, (h, w), dtype=np.uint8
         )
-        dw, dh, dec = multimodal.decode_jpeg_gray8(
-            multimodal.encode_jpeg_gray8(img, qtable=q1)
+        dw, dh, dec = multimodal.decode_jpeg(
+            multimodal.encode_jpeg(img, qtable=q1)
         )
         assert (dw, dh) == (w, h)
         assert np.abs(dec.astype(int) - img.astype(int)).max() <= 1
@@ -556,8 +556,8 @@ def test_color_jpeg_constant_blocks_exact():
         [bi, (bi * 7 + 31) % 256, (bi * 13 + 101) % 256], axis=-1
     ).astype(np.uint8)
     rgb = np.repeat(np.repeat(rgb_blocks, 8, 0), 8, 1)
-    w, h, ycc = multimodal.decode_jpeg_color444(
-        multimodal.encode_jpeg_color444(rgb)
+    w, h, ycc = multimodal.decode_jpeg(
+        multimodal.encode_jpeg(rgb)
     )
     assert (w, h) == (32, 24)
     # constant blocks carry only DC; DC step 1 on both tables →
@@ -575,8 +575,8 @@ def test_color_jpeg_primary_color_constants():
     ]:
         img = np.zeros((8, 8, 3), dtype=np.uint8)
         img[:] = rgb_const
-        _w, _h, ycc = multimodal.decode_jpeg_color444(
-            multimodal.encode_jpeg_color444(img)
+        _w, _h, ycc = multimodal.decode_jpeg(
+            multimodal.encode_jpeg(img)
         )
         assert tuple(int(x) for x in ycc[0, 0]) == expect, (rgb_const, ycc[0, 0])
 
@@ -584,8 +584,8 @@ def test_color_jpeg_primary_color_constants():
 def test_color_jpeg_lossy_bound_and_rgb_roundtrip():
     rng = np.random.RandomState(11)
     img = rng.randint(0, 256, (17, 23, 3), dtype=np.uint8)
-    w, h, ycc = multimodal.decode_jpeg_color444(
-        multimodal.encode_jpeg_color444(img)
+    w, h, ycc = multimodal.decode_jpeg(
+        multimodal.encode_jpeg(img)
     )
     assert (w, h) == (23, 17)
     # worst-case quantization error bound: half a step per coefficient,
@@ -599,32 +599,33 @@ def test_color_jpeg_lossy_bound_and_rgb_roundtrip():
     grad[..., 0] = np.arange(16, dtype=np.uint8)[None, :] * 4
     grad[..., 1] = 128
     grad[..., 2] = np.arange(16, dtype=np.uint8)[:, None] * 4
-    _w, _h, ycc2 = multimodal.decode_jpeg_color444(
-        multimodal.encode_jpeg_color444(grad)
+    _w, _h, ycc2 = multimodal.decode_jpeg(
+        multimodal.encode_jpeg(grad)
     )
     err2 = np.abs(ycc2.astype(int) - multimodal.rgb_to_ycbcr(grad).astype(int))
     assert err2.max() <= 8
 
 
-def test_color_jpeg_rejects_unsupported():
-    img = np.zeros((8, 8, 3), dtype=np.uint8)
-    enc = bytearray(multimodal.encode_jpeg_color444(img))
-    # tamper component 1's sampling byte in SOF0 (id,samp,qtab triples)
+def _tamper_sof(data: bytes, offset: int, value: int) -> bytes:
+    """Overwrite one byte of the SOF0 body (offset 0 = precision, 5 =
+    component count, 7 + 3c = component c's sampling byte)."""
+    enc = bytearray(data)
     sof_at = bytes(enc).find(b"\xff\xc0")
     assert sof_at > 0
-    samp_at = sof_at + 4 + 6 + 1  # marker+len+precision/h/w/ncomp, comp0.samp
-    assert enc[samp_at] == 0x11
-    enc[samp_at] = 0x22
+    enc[sof_at + 4 + offset] = value
+    return bytes(enc)
+
+
+def test_color_jpeg_rejects_unsupported():
+    """Out-of-scope color shapes raise instead of misreading: 4:2:2
+    luma sampling (2x1) and a two-component frame."""
+    img = np.zeros((8, 8, 3), dtype=np.uint8)
+    enc = multimodal.encode_jpeg(img)
+    assert enc[enc.find(b"\xff\xc0") + 4 + 7] == 0x11  # comp0 sampling
     with pytest.raises(NotImplementedError):
-        multimodal.decode_jpeg_color444(bytes(enc))
-    # the gray decoder refuses 3-component streams rather than misreading
+        multimodal.decode_jpeg(_tamper_sof(enc, 7, 0x21))
     with pytest.raises(NotImplementedError):
-        multimodal.decode_jpeg_gray8(multimodal.encode_jpeg_color444(img))
-    # and the color decoder refuses single-component (gray) streams
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_jpeg_color444(
-            multimodal.encode_jpeg_gray8(np.zeros((8, 8), dtype=np.uint8))
-        )
+        multimodal.decode_jpeg(_tamper_sof(enc, 5, 2))
 
 
 def test_jpeg_420_constant_macroblocks_exact():
@@ -635,8 +636,8 @@ def test_jpeg_420_constant_macroblocks_exact():
         [bi, (bi * 7 + 31) % 256, (bi * 13 + 101) % 256], axis=-1
     ).astype(np.uint8)
     rgb = np.repeat(np.repeat(rgb_blocks, 16, 0), 16, 1)
-    w, h, ycc = multimodal.decode_jpeg_color420(
-        multimodal.encode_jpeg_color420(rgb)
+    w, h, ycc = multimodal.decode_jpeg(
+        multimodal.encode_jpeg(rgb, sampling=2)
     )
     assert (w, h) == (48, 32)
     # 2x2 chroma averaging inside constant macro-blocks is lossless, so
@@ -647,8 +648,8 @@ def test_jpeg_420_constant_macroblocks_exact():
 def test_jpeg_420_odd_dims_and_lossy_bound():
     rng = np.random.RandomState(11)
     img = rng.randint(0, 256, (19, 21, 3), dtype=np.uint8)
-    w, h, ycc = multimodal.decode_jpeg_color420(
-        multimodal.encode_jpeg_color420(img)
+    w, h, ycc = multimodal.decode_jpeg(
+        multimodal.encode_jpeg(img, sampling=2)
     )
     assert (w, h) == (21, 19)
     conv = multimodal.rgb_to_ycbcr(img)
@@ -673,15 +674,48 @@ def test_jpeg_420_odd_dims_and_lossy_bound():
 
 
 def test_jpeg_420_and_444_reject_each_other():
+    """One decoder reads 4:4:4, 4:2:0 and gray alike; the neighbors still
+    out of scope raise: extended sequential (SOF1) and restart
+    intervals (DRI)."""
     img = np.zeros((16, 16, 3), dtype=np.uint8)
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_jpeg_color444(multimodal.encode_jpeg_color420(img))
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_jpeg_color420(multimodal.encode_jpeg_color444(img))
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_jpeg_color420(
-            multimodal.encode_jpeg_gray8(np.zeros((8, 8), dtype=np.uint8))
+    ycc = multimodal.rgb_to_ycbcr(img)
+    for sampling in (1, 2):
+        w, h, out = multimodal.decode_jpeg(
+            multimodal.encode_jpeg(img, sampling=sampling)
         )
+        assert (w, h) == (16, 16) and np.array_equal(out, ycc)
+    gray = multimodal.decode_jpeg(
+        multimodal.encode_jpeg(np.zeros((8, 8), dtype=np.uint8))
+    )[2]
+    assert gray.shape == (8, 8)
+    enc = multimodal.encode_jpeg(img, sampling=2)
+    sof1 = bytearray(enc)
+    sof1[sof1.find(b"\xff\xc0") + 1] = 0xC1
+    with pytest.raises(NotImplementedError, match="SOF0"):
+        multimodal.decode_jpeg(bytes(sof1))
+    dri = enc[:2] + b"\xff\xdd\x00\x04\x00\x01" + enc[2:]
+    with pytest.raises(NotImplementedError, match="restart"):
+        multimodal.decode_jpeg(dri)
+
+
+def test_color_plane_sums_mixed_sampling_column(spark):
+    """One payload column mixing 4:4:4 and 4:2:0 streams: every row's
+    plane sums equal numpy sums over that payload's own decode — the
+    sampling is read from each stream's SOF header, never passed in."""
+    rng = np.random.RandomState(4)
+    rows, want = [], {}
+    for doc_id in range(6):
+        rgb = rng.randint(0, 256, (8 + 3 * doc_id, 16 + doc_id, 3)).astype(np.uint8)
+        data = multimodal.encode_jpeg(rgb, sampling=1 + doc_id % 2)
+        _, _, ycc = multimodal.decode_jpeg(data)
+        want[doc_id] = tuple(int(ycc[..., c].astype(np.int64).sum()) for c in range(3))
+        rows.append((doc_id, bytearray(data)))
+    df = spark.createDataFrame(rows, "doc_id long, payload binary")
+    got = {
+        r.doc_id: (r.sum_y, r.sum_cb, r.sum_cr)
+        for r in multimodal.color_plane_sums(df).collect()
+    }
+    assert got == want
 
 
 def test_jpeg_progressive_matches_baseline_pixels():
@@ -704,8 +738,8 @@ def test_jpeg_progressive_matches_baseline_pixels():
         )).astype(np.uint8),                        # smooth → long EOB runs
     ]
     for img in cases:
-        base = multimodal.decode_jpeg_gray8(multimodal.encode_jpeg_gray8(img))
-        prog = multimodal.decode_jpeg_gray8(
+        base = multimodal.decode_jpeg(multimodal.encode_jpeg(img))
+        prog = multimodal.decode_jpeg(
             multimodal.encode_jpeg_gray8_progressive(img)
         )
         assert base[:2] == prog[:2]
@@ -745,7 +779,7 @@ def test_jpeg_progressive_stream_is_really_sof2():
     # and the q127-style constant-block fixture decodes exactly
     blocks = np.arange(12, dtype=np.uint8).reshape(3, 4) * 20
     plane = np.repeat(np.repeat(blocks, 8, 0), 8, 1)
-    w, h, out = multimodal.decode_jpeg_gray8(
+    w, h, out = multimodal.decode_jpeg(
         multimodal.encode_jpeg_gray8_progressive(plane)
     )
     assert (w, h) == (32, 24)
@@ -781,10 +815,10 @@ def test_jpeg_progressive_refinement_carries_information():
             pos = i
             continue
         pos += 2 + ln
-    full = multimodal.decode_jpeg_gray8(data)[2]
-    coarse = multimodal.decode_jpeg_gray8_progressive(truncated)[2]
+    full = multimodal.decode_jpeg(data)[2]
+    coarse = multimodal.decode_jpeg(truncated)[2]
     assert not np.array_equal(full, coarse)
-    base = multimodal.decode_jpeg_gray8(multimodal.encode_jpeg_gray8(img))[2]
+    base = multimodal.decode_jpeg(multimodal.encode_jpeg(img))[2]
     assert np.array_equal(full, base)
 
 
@@ -836,8 +870,8 @@ def test_image_dhash_survives_jpeg_quality_shift(spark):
     from hive_cassandra_spark.operators import dedup as dd
     from hive_cassandra_spark.operators.multimodal import (
         _JPEG_QTABLE,
-        decode_jpeg_gray8,
-        encode_jpeg_gray8,
+        decode_jpeg,
+        encode_jpeg,
     )
 
     # blocky high-contrast images aligned to the 9x8 dhash grid: cell
@@ -861,8 +895,8 @@ def test_image_dhash_survives_jpeg_quality_shift(spark):
         plane = img(seed)
         h, w = plane.shape
         for doc_id, buf in (
-            (seed, encode_jpeg_gray8(plane)),
-            (1000 + seed, encode_jpeg_gray8(plane, qtable=coarse_q)),
+            (seed, encode_jpeg(plane)),
+            (1000 + seed, encode_jpeg(plane, qtable=coarse_q)),
         ):
             rows.append((doc_id, bytearray(buf), ("image/jpeg", w, h, 1)))
         # the quality shift must actually change pixels somewhere across
@@ -889,9 +923,9 @@ def test_image_dhash_survives_jpeg_quality_shift(spark):
     # at least some images), so this is not the identical-plane case
     diffs = 0
     for seed in range(6):
-        a = decode_jpeg_gray8(encode_jpeg_gray8(img(seed)))[2]
-        b = decode_jpeg_gray8(
-            encode_jpeg_gray8(img(seed), qtable=coarse_q)
+        a = decode_jpeg(encode_jpeg(img(seed)))[2]
+        b = decode_jpeg(
+            encode_jpeg(img(seed), qtable=coarse_q)
         )[2]
         diffs += int(not np.array_equal(a, b))
     assert diffs > 0
@@ -1092,7 +1126,7 @@ def test_mp4_audio_first_track_selection_consistent():
     from hive_cassandra_spark.operators import multimodal as mm
 
     plane = np.full((8, 8), 7, dtype=np.uint8)
-    jpeg = mm.encode_jpeg_gray8(plane)
+    jpeg = mm.encode_jpeg(plane)
     audio = b"\x01\x02\x03\x04"
     full = lambda t, p: mm._mp4_full(t, 0, 0, p)  # noqa: E731
 
@@ -1124,14 +1158,14 @@ def test_mp4_audio_first_track_selection_consistent():
     base = len(build(0, 0)) + 8
     data = build(base, base + len(audio)) + mm._mp4_box(b"mdat", audio + jpeg)
     # sample-level readers pick the VIDEO track
-    assert mm.mp4_sample_codec(data) == "jpeg"
+    assert mm.mp4_codec_and_samples(data)[0] == "jpeg"
     assert mm.mp4_sample_table(data) == [(base + len(audio), len(jpeg))]
     assert mm.mp4_extract_samples(data, [0]) == [jpeg]
     # metadata probe agrees (vide-preferred since round 11)
     meta = mm.mp4_metadata_bytes(data)
     assert meta["codec"] == "jpeg" and meta["n_tracks"] == 2
     # the decode routing composes: the sliced sample IS a decodable JPEG
-    w, h, px = mm.decode_jpeg_gray8(mm.mp4_extract_samples(data, [0])[0])
+    w, h, px = mm.decode_jpeg(mm.mp4_extract_samples(data, [0])[0])
     assert (w, h) == (8, 8) and np.array_equal(px, plane)
 
 

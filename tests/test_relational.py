@@ -70,17 +70,6 @@ def test_skew_safe_distinct_agg_matches_naive(spark, sf_dir):
     assert a == b
 
 
-def test_salted_collect_list(spark, sf_dir):
-    ord_ = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    out = rel.salted_collect_list(ord_, ["o_orderstatus"], "o_orderkey", salt_buckets=4)
-    naive = ord_.groupBy("o_orderstatus").agg(
-        F.collect_list("o_orderkey").alias("l")
-    )
-    a = {r.o_orderstatus: sorted(r.o_orderkey_list) for r in out.collect()}
-    b = {r.o_orderstatus: sorted(r.l) for r in naive.collect()}
-    assert a == b
-
-
 def test_deterministic_split(spark, sf_dir):
     ord_ = spark.read.parquet(f"{sf_dir}/orders.parquet")
     out = rel.deterministic_split(ord_, "o_orderkey")

@@ -100,28 +100,6 @@ def test_jaccard_hot_set_broadcast_anti_join(spark, sf_dir):
     assert "BroadcastHashJoin" in plan[max(0, anti_idx - 60): anti_idx + 60]
 
 
-def test_simhash_single_shuffle_to_buckets(spark, sf_dir):
-    """SimHash banding is a pure projection off the signature aggregate:
-    exactly one exchange keys the signature groupBy(doc), one more the
-    (pos, band) bucket groupBy — nothing else."""
-    import re
-
-    from hive_cassandra_spark.operators import dedup
-
-    # an earlier test may have left the simhash signature subtree persisted
-    # (the banded engine materializes it); assert on the fresh plan, not on
-    # a cache substitution whose AQE toString double-prints its Exchange
-    spark.catalog.clearCache()
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    grouped = (
-        dedup.simhash_bands(dedup.simhash(docs))
-        .groupBy("pos", "band")
-        .count()
-    )
-    plan = grouped._jdf.queryExecution().executedPlan().toString()
-    assert len(re.findall(r"\bExchange\b", plan)) == 2, plan
-
-
 def test_pack_sequences_single_corpus_scan(spark, sf_dir):
     """The two-phase prefix sum must reuse ONE persisted corpus pass: the
     executed plan shows the InMemoryRelation on both branches, a pid-keyed

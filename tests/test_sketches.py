@@ -174,19 +174,6 @@ def test_bloom_no_false_negatives_and_fp_rate(spark):
     assert fp < 0.6  # loaded filter, but far from degenerate
 
 
-def test_bloom_merge_equals_full(spark):
-    keys = spark.range(400).select(F.col("id").alias("k"))
-    a = keys.filter(F.col("k") < 200)
-    b = keys.filter(F.col("k") >= 200)
-    merged = sketches.bloom_merge(
-        sketches.bloom_build(a, "k"), sketches.bloom_build(b, "k")
-    )
-    full = sketches.bloom_build(keys, "k")
-    assert sorted(map(tuple, merged.collect())) == sorted(
-        map(tuple, full.collect())
-    )
-
-
 def test_bloom_probe_zero_shuffle_on_fact_side(spark):
     keys = spark.range(100).select(F.col("id").alias("k"))
     bloom = sketches.bloom_build(keys, "k")

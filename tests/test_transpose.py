@@ -74,16 +74,6 @@ def test_lww_tiebreak_deterministic(spark):
     assert out.collect()[0].val == "v2"  # desc tiebreak
 
 
-def test_counter_rollup(spark):
-    df = spark.createDataFrame(
-        [("k", "c", 1), ("k", "c", 2), ("k2", "c", 5)],
-        "key string, col string, value long",
-    )
-    out = tp.counter_rollup(df, ["key", "col"], "value")
-    got = {(r.key, r.col): r.value for r in out.collect()}
-    assert got == {("k", "c"): 3, ("k2", "c"): 5}
-
-
 def test_super_implode_single_exchange(spark):
     """The two nested aggregations must share one up-front row_key
     repartition — hash(row_key) satisfies both clusterings."""

@@ -19,7 +19,12 @@ Layers (see SURVEY.md §7):
 - ``streaming``    — Structured Streaming superset over the events table.
 """
 
-from hive_cassandra_spark.session import get_spark  # noqa: F401
+from hive_cassandra_spark.session import _install_zip_cache_guard, get_spark  # noqa: F401
 from hive_cassandra_spark.catalog import Catalog  # noqa: F401
+
+# Every process that imports the engine (Spark's Python workers do when
+# they unpickle an engine object) stops re-reading unchanged zip
+# archives on each importlib.invalidate_caches().
+_install_zip_cache_guard()
 
 __version__ = "0.1.0"

@@ -47,13 +47,18 @@ exists anywhere — at 100 TB the store is many files and splits simply
 multiply.
 
 Fixed cost: every scan through this source makes three Python-worker
-calls (create the source, push filters + plan splits, read each split),
-about 0.25 CPU-s each on a 4-core host even with reused workers, because
-pyspark's worker set-up calls ``importlib.invalidate_caches()``, which
-re-reads ``pyspark.zip``'s directory once per zipimporter. That is the
-price of the connector seam and is paid per scan, not per cell, so the
-engine's own read paths bypass it: ``handler.read_table`` and
-``index.index_lookup`` scan the same files as JVM parquet
+calls (create the source, push filters + plan splits, read each split).
+Each call runs pyspark's worker set-up, which calls
+``importlib.invalidate_caches()``; before CPython 3.13 that re-parses
+``pyspark.zip``'s directory once per zipimporter, about 0.25 CPU-s a
+call. Importing the engine installs ``session._install_zip_cache_guard``,
+so a reused worker that has unpickled this source skips re-reads of
+unchanged archives: in steady state a key or column-range lookup through
+this source costs under 0.1 Python-CPU-s and about 0.2 CPU-s in all on a
+4-core host. That price is still per scan, not per cell, and a JVM
+parquet scan of the same files needs no Python worker at all, so the
+engine's own read paths bypass the connector: ``handler.read_table`` and
+``index.index_lookup`` read the files as JVM parquet
 (``source.read_cells``; ``store_schema`` gives them this source's column
 list). Callers that query through ``cassandra_cells`` keep the three
 calls, which the Python Data Source API requires.

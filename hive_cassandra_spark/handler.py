@@ -19,6 +19,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 
 from hive_cassandra_spark import sink, source
+from hive_cassandra_spark.datasource import store_schema
 from hive_cassandra_spark.mapping import (
     ColumnMapping,
     cf_type_for_mapping,
@@ -112,8 +113,11 @@ def read_table(
 ) -> DataFrame:
     """Cell store → LWW-reconciled, decoded relational rows; an optional
     column subset prunes the fetch (projection pushdown, ≙ the read-column
-    slice predicate, HiveCassandraStandardColumnInputFormat.java:203-216)."""
-    cells = source.read_cells(spark, table.path)
+    slice predicate, HiveCassandraStandardColumnInputFormat.java:203-216).
+    The store is opened with the connector's column list
+    (``datasource.store_schema``: footer reads only), so planning runs no
+    Spark schema-inference job; ``cells_to_table`` reads columns by name."""
+    cells = source.read_cells(spark, table.path, store_schema(table.path))
     return source.cells_to_table(
         cells,
         table.mapping,

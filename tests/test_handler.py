@@ -141,3 +141,90 @@ def test_transposed_read_is_last_write_wins(spark, tmp_path):
     _delete(spark, tdef, [("k1", "c2")], ts=3000)
     assert tdef.mapping.transposed
     assert _rows(handler.read_table(spark, tdef)) == [("k1", "c1", "new")]
+
+
+def test_read_table_plans_without_a_spark_job(spark, tmp_path):
+    """The store is opened with the connector's column list, so planning
+    ``read_table`` runs no parquet schema-inference job."""
+    tdef = _two_row_table(spark, tmp_path)
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    handler.read_table(spark, tdef)
+    assert set(tracker.getJobIdsForGroup(None)) == before
+
+
+def _ttl_cells(spark, rows):
+    """Cells that carry a ``ttl_s`` column, from (row_key, column_name,
+    value bytes or None, ts, ttl_s) with str keys."""
+    return spark.createDataFrame(
+        [(rk.encode(), cn.encode(), v, ts, ttl) for rk, cn, v, ts, ttl in rows],
+        "row_key binary, column_name binary, value binary, ts bigint, ttl_s int",
+    )
+
+
+def test_read_table_rows_match_inferred_schema_read(spark, tmp_path):
+    """``read_table`` reads the same rows as a scan with Spark's inferred
+    schema for every store shape: regular, transposed with a sub-column,
+    cf-map, and a store where only later parts carry ``ttl_s``."""
+    from hive_cassandra_spark import sink, source
+    from hive_cassandra_spark.codecs import encode_long
+    from hive_cassandra_spark.datasource import store_schema
+
+    def inferred(tdef):
+        return _rows(source.cells_to_table(
+            source.read_cells(spark, tdef.path), tdef.mapping,
+            list(tdef.column_names), list(tdef.hive_types),
+        ))
+
+    regular = _two_row_table(spark, tmp_path / "regular")
+
+    sub = handler.define_table(
+        "sub", str(tmp_path / "sub"),
+        ["row_key", "column_name", "sub_column_name", "value"],
+        ["string", "string", "string", "string"],
+    )
+    sub_schema = "row_key string, column_name string, sub_column_name string, value string"
+    handler.write_table(
+        spark.createDataFrame(
+            [("k1", "c1", "s1", "old"), ("k1", "c1", "s2", "y"), ("k2", "c2", "s1", "z")],
+            sub_schema,
+        ),
+        sub, clock_millis=1000,
+    )
+    handler.write_table(
+        spark.createDataFrame([("k1", "c1", "s1", "new")], sub_schema),
+        sub, mode="append", clock_millis=2000,
+    )
+    assert sub.mapping.transposed and sub.mapping.has_subcolumn
+
+    cf_map = handler.define_table(
+        "cfm", str(tmp_path / "cfm"), ["id", "name", "props"],
+        ["string", "string", "map<string,string>"], mapping=":key,name,props:",
+    )
+    handler.write_table(
+        spark.createDataFrame(
+            [("r1", "n1", {"a": "1", "b": "2"}), ("r2", "n2", {"c": "3"})],
+            "id string, name string, props map<string,string>",
+        ),
+        cf_map, clock_millis=1000,
+    )
+
+    ttl = _two_row_table(spark, tmp_path / "ttl")
+    sink.write_cells(
+        _ttl_cells(spark, [("k1", "a", encode_long(9), 2000, 60),
+                           ("k2", "b", None, 2000, None)]),
+        ttl.path, mode="append",
+    )
+    assert "ttl_s" in store_schema(ttl.path)
+
+    cases = [
+        (regular, [("k1", 1, 2), ("k2", 3, 4)]),
+        (sub, [("k1", "c1", "s1", "new"), ("k1", "c1", "s2", "y"),
+               ("k2", "c2", "s1", "z")]),
+        (cf_map, [("r1", "n1", {"a": "1", "b": "2"}), ("r2", "n2", {"c": "3"})]),
+        (ttl, [("k1", 9, 2), ("k2", 3, None)]),
+    ]
+    for tdef, want in cases:
+        got = _rows(handler.read_table(spark, tdef))
+        assert got == inferred(tdef), tdef.path
+        assert got == want, tdef.path

@@ -22,9 +22,10 @@ Layers (see SURVEY.md §7):
 from hive_cassandra_spark.session import _install_zip_cache_guard, get_spark  # noqa: F401
 from hive_cassandra_spark.catalog import Catalog  # noqa: F401
 
-# Every process that imports the engine (Spark's Python workers do when
-# they unpickle an engine object) stops re-reading unchanged zip
-# archives on each importlib.invalidate_caches().
+# Every process that imports the engine stops re-reading unchanged zip
+# archives on each importlib.invalidate_caches(). get_spark's workers
+# fork from worker_daemon with it primed; workers of sessions built
+# elsewhere get it when they unpickle an engine object.
 _install_zip_cache_guard()
 
 __version__ = "0.1.0"

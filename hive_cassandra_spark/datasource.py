@@ -51,11 +51,13 @@ calls (create the source, push filters + plan splits, read each split).
 Each call runs pyspark's worker set-up, which calls
 ``importlib.invalidate_caches()``; before CPython 3.13 that re-parses
 ``pyspark.zip``'s directory once per zipimporter, about 0.25 CPU-s a
-call. Importing the engine installs ``session._install_zip_cache_guard``,
-so a reused worker that has unpickled this source skips re-reads of
-unchanged archives: in steady state a key or column-range lookup through
-this source costs under 0.1 Python-CPU-s and about 0.2 CPU-s in all on a
-4-core host. That price is still per scan, not per cell, and a JVM
+call. A ``get_spark`` session forks its workers from
+``worker_daemon``, which installs ``session._install_zip_cache_guard``
+and primes it before the fork, so every worker skips re-reads of
+unchanged archives from its first call on (importing the engine
+installs the guard too, for sessions built elsewhere): in steady state
+a key or column-range lookup through this source costs under 0.1
+Python-CPU-s and about 0.2 CPU-s in all on a 4-core host. That price is still per scan, not per cell, and a JVM
 parquet scan of the same files needs no Python worker at all, so the
 engine's own read paths bypass the connector: ``handler.read_table`` and
 ``index.index_lookup`` read the files as JVM parquet

@@ -24,9 +24,10 @@ makes it work at 100 TB:
 Both stores are read as native JVM parquet scans (``source.read_cells``
 with the connector's column list, ``datasource.store_schema``), not
 through ``cassandra_cells``: a Python Data Source scan costs three
-Python-worker calls (create, pushdown + plan, read). With the engine's
-zip-cache guard (``session._install_zip_cache_guard``) a reused worker no
-longer re-reads ``pyspark.zip`` on each call, but a connector scan still
+Python-worker calls (create, pushdown + plan, read). A ``get_spark``
+session forks its workers with the engine's zip-cache guard
+(``session._install_zip_cache_guard``) already primed, so no worker
+re-reads ``pyspark.zip`` on each call, but a connector scan still
 costs about 0.2 CPU-s of fixed overhead on a 4-core host, and a lookup
 would take two of them for a few cells, while the parquet scans need no
 Python worker. The connector stays the path for callers that scan the

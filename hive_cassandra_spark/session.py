@@ -72,6 +72,10 @@ _BASE_CONF: dict[str, str] = {
     # file per bucket, which is both the layout this needs and the
     # small-file posture a 100 TB lake wants anyway).
     "spark.sql.legacy.bucketedTableScan.outputOrdering": "true",
+    # Fork Python workers from the engine's daemon, which primes the
+    # zip-cache guard before the fork (worker_daemon.py); get_spark puts
+    # the engine on the workers' PYTHONPATH so the daemon can import it.
+    "spark.python.daemon.module": "hive_cassandra_spark.worker_daemon",
 }
 
 
@@ -125,29 +129,33 @@ def local_df(spark: SparkSession, rows, schema):
     EVERY action that touches it pays a JVM→Python-worker round trip —
     measured 4.2 s to write a ONE-ROW table to parquet on local[32]
     (vs 0.15 s for a LocalTableScan), because the write job re-evaluates
-    the scan through a fresh Python runner. Routing the same rows through
-    a pandas DataFrame hands them to Arrow, which materializes a local
-    relation on the JVM side once at plan time — no Python evaluation at
-    action time at all. Values are unchanged (the explicit schema is
-    applied either way); any conversion the Arrow path refuses falls back
-    to the classic path, so this is a plan-shape optimization only. A
-    fallback taken here is logged as a warning; one taken inside
-    pyspark's own Arrow fallback only raises pyspark's ``UserWarning``.
-    Zero rows go through an empty ``pyarrow`` table of the same schema:
-    an empty pandas frame still plans as ``Scan ExistingRDD``.
+    the scan through a fresh Python runner. Building the rows into a
+    ``pyarrow`` table of the schema's Arrow types instead hands them to
+    the JVM as a local relation, materialized once at plan time — no
+    Python evaluation at action time at all. Each column is converted
+    straight to its Arrow type, so values are unchanged (no pandas
+    float64 detour: a bigint above 2**53 next to a NULL stays exact).
+    A value Arrow refuses (a Decimal with more digits than its scale,
+    say) falls back to ``spark.createDataFrame(rows, schema)`` — the
+    Python-RDD plan, with its own conversions — and that fallback is
+    logged as a warning, so this is a plan-shape optimization only.
     """
-    import pandas as pd
+    import pyarrow as pa
     from pyspark.sql import types as T
     from pyspark.sql.pandas.types import to_arrow_schema
 
     try:
         st = T.StructType.fromDDL(schema) if isinstance(schema, str) else schema
         rows = list(rows)
-        if not rows:
-            return spark.createDataFrame(to_arrow_schema(st).empty_table())
-        names = [f.name for f in st.fields]
-        pdf = pd.DataFrame.from_records(rows, columns=names)
-        return spark.createDataFrame(pdf, schema=st)
+        arrow_schema = to_arrow_schema(st)
+        if any(len(r) != len(arrow_schema) for r in rows):
+            raise ValueError(f"every row must have {len(arrow_schema)} fields")
+        table = pa.Table.from_arrays(
+            [pa.array([r[i] for r in rows], type=f.type)
+             for i, f in enumerate(arrow_schema)],
+            schema=arrow_schema,
+        )
+        return spark.createDataFrame(table)
     except Exception as exc:
         logging.getLogger(__name__).warning(
             "local_df fell back to a Python-RDD scan (%s: %s)",
@@ -171,6 +179,12 @@ def _install_zip_cache_guard() -> None:
     key is kept per importer, so an archive rewritten in place is still
     re-read by every importer that holds it. An importer not yet seen
     through this method re-reads once. Idempotent.
+
+    ``get_spark`` workers start with the guard installed and primed:
+    they fork from ``worker_daemon``, which calls this and then
+    ``importlib.invalidate_caches()`` before the fork. The package's
+    ``__init__`` calls it too, so workers of sessions built elsewhere
+    get it once they import the engine.
     """
     # CPython 3.13's Lib/zipimport.py invalidate_caches only drops the
     # archive's _zip_directory_cache entry; 3.11 and 3.12 re-read it.
@@ -216,6 +230,12 @@ def get_spark(
     conf = dict(_BASE_CONF)
     if extra_conf:
         conf.update(extra_conf)
+    # workers fork from hive_cassandra_spark.worker_daemon, so they must
+    # import the engine whatever the JVM's working directory is
+    engine_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    key = "spark.executorEnv.PYTHONPATH"
+    paths = [p for p in conf.get(key, "").split(os.pathsep) if p]
+    conf[key] = os.pathsep.join([engine_root] + [p for p in paths if p != engine_root])
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -7,6 +7,7 @@ import os
 import sys
 import zipfile
 import zipimport
+from decimal import Decimal
 
 import pytest
 
@@ -43,17 +44,51 @@ def test_ensure_session_confs_warns_on_refused_conf(caplog):
 
 
 def test_local_df_logs_its_fallback(spark, caplog):
-    """A value Arrow refuses (a bigint column with a NULL becomes float64
-    in pandas, and 2**63-1 overflows the cast back) still builds the
-    frame through the classic path, and the fallback is logged with the
-    exception type."""
+    """A value Arrow refuses (``Decimal("1.55")`` has more digits than
+    ``decimal(3,1)`` holds) still builds the frame through the classic
+    path, with its rows, and the fallback is logged with the exception
+    type."""
+    rows = [(Decimal("1.55"),)]
     with caplog.at_level(logging.WARNING, logger="hive_cassandra_spark"):
-        df = local_df(spark, [(2**63 - 1,), (None,)], "v bigint")
+        df = local_df(spark, rows, "v decimal(3,1)")
     warned = [r.getMessage() for r in caplog.records
               if r.levelno == logging.WARNING and r.name.startswith("hive_cassandra_spark")]
     assert len(warned) == 1
-    assert "local_df fell back" in warned[0] and "TypeError" in warned[0]
-    assert [r.v for r in df.collect()] == [2**63 - 1, None]
+    assert "local_df fell back" in warned[0] and "ArrowInvalid" in warned[0]
+    assert df.collect() == spark.createDataFrame(rows, "v decimal(3,1)").collect()
+    assert [r.v for r in df.collect()] == [Decimal("1.6")]
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_local_df_keeps_big_bigints_exact(spark, caplog):
+    """A bigint above 2**53 next to a NULL keeps every digit (no float64
+    detour) and the frame plans as a ``LocalTableScan``."""
+    with caplog.at_level(logging.WARNING, logger="hive_cassandra_spark"):
+        df = local_df(spark, [(2**60 + 1,), (2**63 - 1,), (None,)], "v bigint")
+    assert [r.v for r in df.collect()] == [2**60 + 1, 2**63 - 1, None]
+    assert "LocalTableScan" in _plan(df) and "ExistingRDD" not in _plan(df)
+    assert not [r for r in caplog.records if r.name.startswith("hive_cassandra_spark")]
+
+
+@pytest.mark.parametrize("rows", [
+    [("x", 7, 2**60 + 1, 1.5, b"\x00\xff", ["p", None]),
+     (None, None, None, None, None, None),
+     ("", -2**31, -(2**63), -0.0, b"", [])],
+    [],
+])
+def test_local_df_rows_equal_create_dataframe(spark, rows):
+    """Every type the engine builds literal frames of (string, int, long,
+    double, binary, array<string>, NULLs) comes back as
+    ``spark.createDataFrame`` returns it, with the same schema."""
+    schema = "s string, i int, l long, d double, b binary, a array<string>"
+    df = local_df(spark, rows, schema)
+    want = spark.createDataFrame(rows, schema)
+    assert df.schema == want.schema
+    assert df.collect() == want.collect()
+    assert "LocalTableScan" in _plan(df)
 
 
 def _write_zip(path, modules):
@@ -152,3 +187,90 @@ def test_python_worker_skips_unchanged_zip_rereads(spark):
     ).collect()
     assert row.zips > 0  # the worker imports from zip archives at all
     assert row.reads == 0
+
+
+def test_python_worker_forks_from_engine_daemon(spark):
+    """A plain Python-RDD task that never imports the engine runs in a
+    worker forked from ``hive_cassandra_spark.worker_daemon``: the engine
+    is already loaded there, and the zip-cache guard is primed, so the
+    worker's ``importlib.invalidate_caches()`` parses no zip directory."""
+
+    def probe(_):
+        import importlib
+        import sys
+        import zipimport
+
+        real = zipimport._read_directory
+        reads = []
+
+        def counting(archive):
+            reads.append(archive)
+            return real(archive)
+
+        zipimport._read_directory = counting
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = real  # workers are reused
+        zips = sum(isinstance(f, zipimport.zipimporter)
+                   for f in sys.path_importer_cache.values())
+        yield (sys.modules["__main__"].__spec__.name,
+               "hive_cassandra_spark" in sys.modules, zips, len(reads))
+
+    got = spark.sparkContext.parallelize(range(4), 4).mapPartitions(probe).collect()
+    assert len(got) == 4
+    for main, engine_loaded, zips, reads in got:
+        assert main == "hive_cassandra_spark.worker_daemon"
+        assert engine_loaded
+        assert zips > 0  # the worker imports from zip archives at all
+        assert reads == 0
+
+
+_OUTSIDE_DRIVER = """
+import json, sys
+sys.path.insert(0, sys.argv[1])
+from hive_cassandra_spark import datasource
+from hive_cassandra_spark.session import get_spark, local_df
+
+spark = get_spark("outside", master="local[2]")
+datasource.register(spark)
+squares = spark.sparkContext.parallelize(range(4), 2).map(lambda x: x * x).sum()
+cells = local_df(
+    spark, [(b"k", b"c", b"v", 1)],
+    "row_key binary, column_name binary, value binary, ts long",
+)
+cells.write.format("cassandra_cells").mode("overwrite").save(sys.argv[2])
+rows = spark.read.format("cassandra_cells").load(sys.argv[2]).collect()
+spark.stop()
+print(json.dumps({"squares": squares, "rows": [
+    [bytes(v).decode() if isinstance(v, (bytes, bytearray)) else v for v in r]
+    for r in rows
+]}))
+"""
+
+
+def test_get_spark_workers_import_engine_outside_repo(tmp_path):
+    """A driver started outside the checkout, with the engine only on its
+    own ``sys.path``, still runs Python tasks: ``get_spark`` puts the
+    engine on the workers' PYTHONPATH, which the worker daemon and every
+    engine object unpickled in a worker need."""
+    import json
+    import subprocess
+
+    import hive_cassandra_spark
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(hive_cassandra_spark.__file__)))
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in env.get("PYTHONPATH", "").split(os.pathsep)
+        if p and os.path.abspath(p) != root
+    )
+    script = tmp_path / "driver.py"
+    script.write_text(_OUTSIDE_DRIVER)
+    run = subprocess.run(
+        [sys.executable, str(script), root, str(tmp_path / "store")],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert run.returncode == 0, run.stderr[-3000:]
+    out = json.loads(run.stdout.strip().splitlines()[-1])
+    assert out == {"squares": 14, "rows": [["k", "c", "v", 1]]}

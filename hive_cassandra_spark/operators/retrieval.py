@@ -183,7 +183,7 @@ def build_postings_index_occ(
         else expected_version
     )
     res = sink.occ_commit_tables(
-        spark, path, {"postings": post, "meta": meta.coalesce(1)}, v,
+        spark, path, {"postings": post, "meta": meta}, v,
         snapshot=True,
     )
     post.unpersist()
@@ -223,7 +223,6 @@ def update_postings_index_occ(
     batch_id: str | None = None,
     max_retries: int = 5,
     claim_grace_s: float = 10.0,
-    delta_files: int = 8,
 ) -> dict:
     """THE incremental index-maintenance path (the delta job that keeps
     ``build_postings_index_occ``'s nightly corpus pass amortized — only the
@@ -246,15 +245,10 @@ def update_postings_index_occ(
     already_applied}."""
     from hive_cassandra_spark import sink
 
-    # a micro-batch delta is small by definition: bound its file count
-    # so each commit cycle (and every future reader's union) pays a
-    # handful of parts, not the session's 32 shuffle partitions of
-    # near-empty files. Persist it: every attempt consumes it twice (the
-    # stats head and the staging write), and it does not depend on the
-    # index state, so the retries reuse it too.
-    delta_post = postings(new_docs, id_col, text_col).coalesce(
-        delta_files
-    ).persist()
+    # persist the delta: every attempt consumes it twice (the stats head
+    # and the staging write), and it does not depend on the index state,
+    # so the retries reuse it too. The commit sizes its parts by data.
+    delta_post = postings(new_docs, id_col, text_col).persist()
 
     def derive(snap):
         meta = snap.read("meta", latest_only=True)
@@ -271,7 +265,7 @@ def update_postings_index_occ(
         merged = local_df(
             spark, [(n, s, s // max(n, 1))], "n long, s long, a long"
         )
-        return {"postings": delta_post, "meta": merged.coalesce(1)}, {
+        return {"postings": delta_post, "meta": merged}, {
             "docs_added": int(dlt["n"]), "tokens_added": int(dlt["s"]),
             "n": n, "a": s // max(n, 1),
         }

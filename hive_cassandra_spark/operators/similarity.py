@@ -1159,7 +1159,7 @@ def build_ivfpq_index_occ(
             "pq_codebooks": ix["pc"],
             "assignments": ix["assign"],
             "codes": ix["codes"],
-            "meta": meta.coalesce(1),
+            "meta": meta,
         },
         v,
         snapshot=True,
@@ -1375,7 +1375,6 @@ def update_ivfpq_index_occ(
     batch_id: str | None = None,
     max_retries: int = 5,
     claim_grace_s: float = 10.0,
-    delta_files: int = 8,
 ) -> dict:
     """Incremental IVF-PQ maintenance — the vector-side sibling of
     ``retrieval.update_postings_index_occ`` (r09's q188), completing
@@ -1450,12 +1449,9 @@ def update_ivfpq_index_occ(
             .filter(F.col("__rn") == 1)
             .select("id", "sub", "pcid")
         )
-        # bound delta file counts (the update_postings_index_occ
-        # discipline): a delta batch is small by definition
-        return {
-            "assignments": cassign.coalesce(delta_files),
-            "codes": codes.coalesce(delta_files),
-        }, {"vecs_added": new_items.count()}
+        return {"assignments": cassign, "codes": codes}, {
+            "vecs_added": new_items.count()
+        }
 
     try:
         res = sink.occ_update(

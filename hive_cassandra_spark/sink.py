@@ -35,6 +35,7 @@ import shutil
 import time
 import uuid
 from types import SimpleNamespace
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import Column, DataFrame, functions as F
 
@@ -697,11 +698,33 @@ def set_occ_claim_backend(backend) -> object:
 def _parquet_num_rows(path: str) -> int:
     """Row count from the parquet FOOTER (metadata-only, no column
     reads) — the per-staged-file check occ_commit uses to drop
-    zero-row parts. Driver-side and O(parts-per-commit), the same cost
-    class as the rename loop it sits in."""
+    zero-row parts, and occ_compact_store's count of its input.
+    Driver-side and O(parts), the same cost class as a part listing."""
     import pyarrow.parquet as pq
 
     return pq.ParquetFile(path).metadata.num_rows
+
+
+def _read_parts(spark, files: list):
+    """``spark.read.parquet(*files)`` that plans with no Spark job. With
+    ``mergeSchema`` off Spark infers the schema from the first file's
+    footer, through a job of its own; here the driver reads the schema
+    Spark recorded in that footer
+    (``org.apache.spark.sql.parquet.row.metadata``) with ``pyarrow`` and
+    hands it to the reader, which makes every field nullable just as
+    inference does. A part without that key (another writer's) falls
+    back to Spark's inference."""
+    import json
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    meta = pq.read_metadata(files[0]).metadata or {}
+    recorded = meta.get(b"org.apache.spark.sql.parquet.row.metadata")
+    reader = spark.read
+    if recorded is not None:
+        reader = reader.schema(StructType.fromJson(json.loads(recorded)))
+    return reader.parquet(*files)
 
 
 def _occ_commit(
@@ -734,8 +757,24 @@ def _occ_commit(
     # paid 5 full job latencies for mostly-small tables. FIFO
     # scheduling keeps the first job's resource priority; atomicity is
     # untouched (nothing publishes until every staged write returned).
+    #
+    # Parts are sized by the data, not by how the input was split: every
+    # table goes through one AQE rebalance, which coalesces a small
+    # commit into one part and splits a partition larger than
+    # spark.sql.adaptive.advisoryPartitionSizeInBytes (the optimized-
+    # write shape of Delta and Iceberg). A cell frame rebalances on
+    # row_key, as write_cells distributes, so one row's cells share a
+    # part — unless AQE splits an over-size partition, which it does by
+    # input partition. (With AQE off it is a plain exchange into
+    # spark.sql.shuffle.partitions parts.) Every part costs each later
+    # read and compaction a listed, opened and scheduled file.
     def _stage(item):
         tname, df = item
+        df = (
+            df.hint("rebalance", "row_key")
+            if "row_key" in df.columns
+            else df.hint("rebalance")
+        )
         df.write.mode("overwrite").parquet(_occ_dir(staging, tname))
 
     if len(tables) > 1:
@@ -823,7 +862,11 @@ def occ_commit(
     ``OCC_CLAIM_BACKEND`` seam — ``LocalFSClaimBackend`` is the default
     and documents the contract an S3/GCS conditional-PUT or lock-table
     backend must honor):
-    1. stage the data files under a hidden ``.occ-staging-*`` dir;
+    1. stage the data files under a hidden ``.occ-staging-*`` dir,
+       through one AQE rebalance (on ``row_key`` for a cell frame): the
+       part count follows the data, not the input's partitioning — a
+       small commit lands as one part, a partition above
+       ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` splits;
     2. CLAIM the version: ``backend.claim(path, v, token)`` — atomic,
        exactly one winner per version, the claim is permanent; a loser
        cleans its staging and reports the conflict with the fresh
@@ -924,7 +967,14 @@ def _occ_read(
     ``files:`` count its marker durably recorded, so a version that lost
     some or all of its parts to ``occ_vacuum``, out-of-band deletion or
     a partial restore is never served as "the state at vN". Markers
-    that predate the ``files:`` records cannot be checked."""
+    that predate the ``files:`` records cannot be checked.
+
+    Planning runs no Spark job: the schema comes from the first visible
+    part's footer (``_read_parts``). One cliff remains: above 32 visible
+    parts (``spark.sql.sources.parallelPartitionDiscovery.threshold``)
+    Spark lists the files through a parallel-listing job of its own. A
+    small delta commits one part, so a store crosses it after about 32
+    deltas without a compaction."""
     if as_of_version is not None and as_of_version not in log:
         raise ValueError(
             f"as_of_version={as_of_version} was never published under "
@@ -963,7 +1013,7 @@ def _occ_read(
             files = by_version[max(by_version)]
         else:
             files = [f for fs in by_version.values() for f in fs]
-        return spark.read.parquet(*files)
+        return _read_parts(spark, files)
     if table is not None:
         raise FileNotFoundError(
             f"no committed parts for table '{table}' under {path}"
@@ -994,8 +1044,9 @@ def _occ_read(
         return local_df(spark, [], empty_schema)
     if parts:
         # no visible version, but the store HAS a cell shape — take
-        # the schema from any part footer (metadata-only read)
-        return spark.read.parquet(parts[-1]).limit(0)
+        # the schema from any part footer (metadata-only read); the
+        # frame scans no file, so its inputFiles() stay the visible set
+        return local_df(spark, [], _read_parts(spark, parts[-1:]).schema)
     return local_df(
         spark, [], "row_key binary, column_name binary, value binary, ts long"
     )
@@ -1251,13 +1302,20 @@ def occ_compact_store(
     maintenance (the Delta/Iceberg optimistic-compaction shape). A
     pending claim is waited out for ``claim_grace_s`` before it is swept
     (``occ_wait_claim``). Superseded parts are vacuumed after the
-    commit. Returns {cells_in, cells_out, version, conflicts, vacuumed,
-    files}.
+    commit. ``cells_in`` is the sum of the visible parts' footer row
+    counts, so no Spark job counts the store; reading it plans with no
+    job either (``_occ_read``), and the snapshot stages through the same
+    rebalance as any commit (a small store compacts to one part).
+    Returns {cells_in, cells_out, version, conflicts, vacuumed, files}.
     """
 
     def derive(snap):
         cells = snap.read()
-        cells_in = cells.count()
+        # the frame's input files are exactly the snapshot's visible parts
+        cells_in = sum(
+            _parquet_num_rows(unquote(urlparse(f).path))
+            for f in cells.inputFiles()
+        )
         flat = _compact_winners(cells, drop_tombstones, now_millis, gc_grace_s)
         # materialize the winners BEFORE the claim: the commit's write
         # must not re-read store files that a racing vacuum could move

@@ -253,12 +253,13 @@ def paged_cells(cells: DataFrame, page_size: int = 1000) -> DataFrame:
     - hash-repartition on row_key: all of a row's cells land in one
       partition (the reference's token-range locality),
     - sortWithinPartitions(row_key, column_name): the slice order,
-    - mapInPandas with a running counter: page numbers per partition —
+    - mapInArrow with a running counter: page numbers per partition —
       Arrow-batched, no global sort, no driver involvement, so it holds at
-      any scale (a global orderBy here would be the 100 TB mistake).
+      any scale (a global orderBy here would be the 100 TB mistake). Each
+      ``pyarrow.RecordBatch`` passes through untouched with an int64
+      ``page`` array appended, so no value takes a pandas detour (a
+      nullable bigint above 2**53 stays exact).
     """
-    import pandas as pd  # noqa: F401 (mapInPandas ships pandas batches)
-
     part = (
         cells.repartition(F.col("row_key"))
         .sortWithinPartitions("row_key", "column_name")
@@ -273,14 +274,20 @@ def paged_cells(cells: DataFrame, page_size: int = 1000) -> DataFrame:
     )
 
     def paginate(batches):
-        seen = 0
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["page"] = [(seen + i) // page_size for i in range(len(pdf))]
-            seen += len(pdf)
-            yield pdf
+        import numpy as np
+        import pyarrow as pa
 
-    return part.mapInPandas(paginate, schema)
+        seen = 0
+        for batch in batches:
+            n = batch.num_rows
+            page = np.arange(seen, seen + n, dtype=np.int64) // page_size
+            seen += n
+            yield pa.RecordBatch.from_arrays(
+                batch.columns + [pa.array(page)],
+                names=batch.schema.names + ["page"],
+            )
+
+    return part.mapInArrow(paginate, schema)
 
 
 def slice_cells(

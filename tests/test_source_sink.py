@@ -4,7 +4,9 @@ Round-trip identity through the actual byte encodings is the strongest
 check on the SerDe-parity layer (≙ TableMapping.getWritable →
 CassandraLazy* decode; SURVEY.md §5.2 and §7 step 4)."""
 
+import contextlib
 import datetime
+import time
 
 from pyspark.sql import functions as F
 
@@ -161,6 +163,25 @@ def test_paged_cells_bounded_ordered_complete(spark):
     again = source.paged_cells(cells, page_size=3).collect()
     key = lambda r: (bytes(r.row_key), bytes(r.column_name), r.scan_partition, r.page)
     assert sorted(map(key, rows)) == sorted(map(key, again))
+
+
+def test_paged_cells_keeps_big_bigints_exact(spark):
+    """``paged_cells`` passes every value through untouched: a nullable
+    bigint above 2**53 comes back exact, and the plan keeps its one
+    exchange (the row_key repartition)."""
+    from hive_cassandra_spark.session import local_df
+
+    cells = local_df(
+        spark,
+        [(b"r1", b"c", b"v", 1, 2**60 + 1), (b"r2", b"c", b"v", 1, None)],
+        "row_key binary, column_name binary, value binary, ts long, "
+        "ttl_s long",
+    )
+    paged = source.paged_cells(cells, page_size=1)
+    plan = paged._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1, plan
+    got = {bytes(r.row_key): r.ttl_s for r in paged.collect()}
+    assert got == {b"r1": 2**60 + 1, b"r2": None}
 
 
 def test_validator_decode_col(spark):
@@ -1194,16 +1215,265 @@ def test_occ_as_of_partial_part_loss_fails_closed(spark, tmp_path):
             F2.lit(1000).cast("long").alias("ts"),
         )
     )
-    res = sink.occ_commit(spark, store, cells, 0)
-    assert res["committed"] and res["files"] == 3, res
+    # a commit sizes its parts by data: 30 cells need a tiny advisory
+    # partition size to land as several parts
+    with _small_commit_parts(spark):
+        res = sink.occ_commit(spark, store, cells, 0)
+    n = res["files"]
+    assert res["committed"] and n >= 2, res
     assert sink.occ_read(spark, store, as_of_version=1).count() == 30
-    # lose ONE of the three part files out-of-band: the version is still
-    # "present" by the old presence-only check, but the pinned read must
-    # compare against the recorded count and refuse
+    # lose ONE of the version's part files out-of-band: the version is
+    # still "present" by the old presence-only check, but the pinned
+    # read must compare against the recorded count and refuse
     victim = sorted(glob.glob(os.path.join(store, "part-occ-v*-00001-*")))[0]
     os.remove(victim)
-    with pytest.raises(FileNotFoundError, match="only 2 remain"):
+    with pytest.raises(FileNotFoundError, match=f"only {n - 1} remain"):
         sink.occ_read(spark, store, as_of_version=1).count()
+
+
+@contextlib.contextmanager
+def _small_commit_parts(spark, advisory="1k"):
+    """AQE sizes OCC commit parts at ``advisory`` bytes for the block.
+    The minimum partition size shrinks too: with
+    ``coalescePartitions.parallelismFirst`` on (the default) AQE never
+    coalesces below it (1 MB), however small the advisory size."""
+    confs = {
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": advisory,
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize": "1",
+    }
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def _jobs_run_by(spark, fn):
+    """``(fn(), ids of the Spark jobs fn ran)``. A fence job under its
+    own group runs after ``fn``: once the status store has seen it, it
+    has seen every job ``fn`` started."""
+    import uuid
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    out = fn()
+    fence = f"fence-{uuid.uuid4().hex}"
+    sc.setJobGroup(fence, fence)
+    try:
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    while not tracker.getJobIdsForGroup(fence):
+        time.sleep(0.01)
+    return out, set(tracker.getJobIdsForGroup(None)) - before
+
+
+def _cell_rows(df):
+    return sorted(
+        tuple(bytes(v) if isinstance(v, (bytes, bytearray)) else v for v in r)
+        for r in df.collect()
+    )
+
+
+def test_occ_commit_sizes_parts_by_data(spark, tmp_path):
+    """A delta built from an Arrow frame and a Python-list frame (8 input
+    partitions on local[4]) commits as ONE part: parts follow the data,
+    not the input's split. It reads back the same cells."""
+    import pyarrow as pa
+
+    schema = "row_key binary, column_name binary, value binary, ts bigint"
+    keys = [f"k{i:03d}".encode() for i in range(200)]
+    live = spark.createDataFrame(pa.table({
+        "row_key": pa.array(keys, pa.binary()),
+        "column_name": pa.array([b"c"] * 200, pa.binary()),
+        "value": pa.array([k + b"v" for k in keys], pa.binary()),
+        "ts": pa.array([7] * 200, pa.int64()),
+    }), schema)
+    dead = spark.createDataFrame(
+        [(k, b"d", None, 7) for k in keys[:50]], schema
+    )
+    cells = live.unionByName(dead)
+    assert cells.rdd.getNumPartitions() >= 2
+    store = str(tmp_path / "store")
+    res = sink.occ_commit(spark, store, cells, 0)
+    assert res["committed"] and res["files"] == 1, res
+    assert _cell_rows(sink.occ_read(spark, store)) == _cell_rows(cells)
+
+
+def test_occ_commit_multi_part_keeps_rows_whole(spark, tmp_path):
+    """Under a small advisory partition size a commit lands as several
+    parts, and each row_key's cells share one part even though they came
+    from different input partitions. (Every partition here stays under
+    the advisory size, so AQE only coalesces; it splits an over-size
+    partition by input partition.)"""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F2
+
+    cells = spark.range(0, 2000, 1, 8).select(
+        F2.encode((F2.col("id") % 400).cast("string"), "utf-8").alias("row_key"),
+        F2.encode(F2.col("id").cast("string"), "utf-8").alias("column_name"),
+        F2.encode(F2.lit("value"), "utf-8").alias("value"),
+        F2.col("id").alias("ts"),
+    )
+    store = str(tmp_path / "store")
+    with _small_commit_parts(spark, "16k"):
+        res = sink.occ_commit(spark, store, cells, 0)
+    assert res["committed"] and res["files"] > 1, res
+    owner = {}
+    for i, f in enumerate(glob.glob(os.path.join(store, "part-occ-v*"))):
+        for rk in pq.read_table(f, columns=["row_key"])["row_key"].to_pylist():
+            assert owner.setdefault(rk, i) == i, rk
+    assert len(owner) == 400
+    assert _cell_rows(sink.occ_read(spark, store)) == _cell_rows(cells)
+
+
+def test_occ_reads_plan_without_a_spark_job(spark, sf_dir, tmp_path):
+    """``occ_read`` and ``occ_snapshot(...).read(table)`` plan with no
+    Spark job, and their schema is the one Spark infers from the same
+    files, for cell stores with and without ``ttl_s`` and
+    ``sub_column_name`` and for the postings and IVF-PQ artifacts."""
+    from pyspark.sql import functions as F2
+
+    from hive_cassandra_spark.operators import retrieval, similarity
+
+    def gen(n, wide=False):
+        cols = [
+            F2.encode(F2.col("id").cast("string"), "utf-8").alias("row_key"),
+            F2.encode(F2.lit("c"), "utf-8").alias("column_name"),
+        ]
+        if wide:
+            cols.append(F2.encode(F2.lit("s"), "utf-8").alias("sub_column_name"))
+        cols += [
+            F2.encode(F2.lit("v"), "utf-8").alias("value"),
+            F2.lit(1).cast("long").alias("ts"),
+        ]
+        if wide:
+            cols.append(F2.lit(30).cast("int").alias("ttl_s"))
+        return spark.range(n).select(*cols)
+
+    def check(read):
+        df, jobs = _jobs_run_by(spark, read)
+        assert jobs == set(), jobs
+        files = df.inputFiles()
+        assert files
+        assert df.schema == spark.read.parquet(*files).schema
+        return df
+
+    for name, wide in (("narrow", False), ("wide", True)):
+        store = str(tmp_path / name)
+        assert sink.occ_commit(spark, store, gen(10, wide), 0)["committed"]
+        assert sink.occ_commit(spark, store, gen(4, wide), 1)["committed"]
+        assert check(lambda: sink.occ_read(spark, store)).count() == 14
+        assert check(
+            lambda: sink.occ_read(spark, store, as_of_version=1)
+        ).count() == 10
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    idx = str(tmp_path / "postings")
+    retrieval.build_postings_index_occ(spark, docs, idx)
+    snap = sink.occ_snapshot(spark, idx)
+    check(lambda: snap.read("postings"))
+    check(lambda: snap.read("meta", latest_only=True))
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").filter(
+        F2.col("vec_id") < 60
+    )
+    vidx = str(tmp_path / "ivfpq")
+    similarity.build_ivfpq_index_occ(
+        spark, emb, vidx, n_cells=4, m=4, k_codes=4
+    )
+    snap = sink.occ_snapshot(spark, vidx)
+    for table in ("coarse_centroids", "pq_codebooks", "assignments", "codes"):
+        check(lambda: snap.read(table))
+    check(lambda: snap.read("meta", latest_only=True))
+
+
+def test_occ_read_part_without_spark_schema(spark, tmp_path):
+    """A part another writer wrote (no Spark schema in its footer) reads
+    through Spark's own inference, alone and ahead of Spark's parts."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F2
+
+    store = str(tmp_path / "store")
+    os.makedirs(store)
+    pq.write_table(
+        pa.table({
+            "row_key": pa.array([b"a", b"b"]),
+            "column_name": pa.array([b"c", b"c"]),
+            "value": pa.array([b"1", None]),
+            "ts": pa.array([5, 5], pa.int64()),
+        }),
+        os.path.join(store, "part-occ-v000000001-00000-0f0f0f0f.parquet"),
+    )
+    with open(os.path.join(store, "_occ-v000000001"), "w") as fh:
+        fh.write("0f0f0f0f\nfiles:1")
+    assert _cell_rows(sink.occ_read(spark, store)) == [
+        (b"a", b"c", b"1", 5), (b"b", b"c", None, 5),
+    ]
+    more = spark.range(1).select(
+        F2.lit(b"z").alias("row_key"), F2.lit(b"c").alias("column_name"),
+        F2.lit(b"2").alias("value"), F2.lit(6).cast("long").alias("ts"),
+    )
+    assert sink.occ_commit(spark, store, more, 1)["committed"]
+    back = sink.occ_read(spark, store)
+    assert _cell_rows(back) == [
+        (b"a", b"c", b"1", 5), (b"b", b"c", None, 5), (b"z", b"c", b"2", 6),
+    ]
+    assert back.schema == spark.read.parquet(*back.inputFiles()).schema
+
+
+def test_occ_compact_store_counts_cells_in_from_footers(
+    spark, tmp_path, monkeypatch
+):
+    """``occ_compact_store`` over multi-part versions with tombstones
+    returns the cells_in, cells_out and version a count would give, and
+    counts no frame that scans the store."""
+    from pyspark.sql import functions as F2
+
+    store = str(tmp_path / "store")
+
+    def gen(tag, n, ts, dead=False):
+        return spark.range(n).select(
+            F2.encode(F2.col("id").cast("string"), "utf-8").alias("row_key"),
+            F2.encode(F2.lit("c"), "utf-8").alias("column_name"),
+            (F2.lit(None).cast("binary") if dead else F2.encode(
+                F2.concat(F2.lit(tag), F2.col("id").cast("string")), "utf-8"
+            )).alias("value"),
+            F2.lit(ts).cast("long").alias("ts"),
+        )
+
+    with _small_commit_parts(spark):
+        for v, df in enumerate(
+            (gen("a", 300, 1000), gen("b", 40, 2000),
+             gen("t", 20, 3000, dead=True))
+        ):
+            res = sink.occ_commit(spark, store, df, v)
+            assert res["committed"] and res["files"] >= 2, res
+    counted = []
+    frame = type(spark.range(0))  # the session's concrete DataFrame class
+    real_count = frame.count
+
+    def recording_count(self):
+        counted.append(self.inputFiles())
+        return real_count(self)
+
+    monkeypatch.setattr(frame, "count", recording_count)
+    res = sink.occ_compact_store(spark, store)
+    monkeypatch.undo()
+    assert (res["cells_in"], res["cells_out"], res["version"]) == (360, 280, 4)
+    assert counted and not any(counted), counted
+    assert sink.occ_read(spark, store).count() == 280
 
 
 def _publish_snapshot_after_first_listing(monkeypatch, store, part_dir, part):

@@ -36,6 +36,7 @@ INTERESTING = [
     ("ArrowEvalPython", "Arrow-vectorized Python (pandas_udf)"),
     ("BatchEvalPython", "ROW-AT-A-TIME PYTHON (red flag)"),
     ("MapInPandas", "mapInPandas (Arrow batches)"),
+    ("MapInArrow", "mapInArrow (Arrow batches, no pandas)"),
     ("FlatMapGroupsInPandas", "grouped pandas"),
     ("WholeStageCodegen", "codegen span"),
 ]

@@ -18,8 +18,8 @@ makes it work at 100 TB:
 - the fetched base row keys (the selectivity of the predicate, NOT the
   table size) broadcast into a semi-join against the base store. The
   base side is scanned but never shuffled; with the base store
-  row_key-sorted (sink.write_cells hash-distributes; compact_store
-  sorts), a runtime-filter push would prune it too.
+  row_key-sorted (sink.write_cells and sink.occ_compact_store only
+  hash-distribute on it), a runtime-filter push would prune it too.
 
 Both stores are read as native JVM parquet scans (``source.read_cells``
 with the connector's column list, ``datasource.store_schema``), not

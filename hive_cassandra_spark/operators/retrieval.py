@@ -277,7 +277,7 @@ def update_postings_index_occ(
         )
     finally:
         delta_post.unpersist()
-    del res["files"]
+    del res["files"], res["rows"]
     return {"docs_added": 0, "tokens_added": 0, "n": None, "a": None, **res}
 
 

@@ -1461,5 +1461,5 @@ def update_ivfpq_index_occ(
     finally:
         for df in held:
             df.unpersist()
-    del res["files"]
+    del res["files"], res["rows"]
     return {"vecs_added": 0, **res}

@@ -3765,14 +3765,15 @@ def q93_stream_cell_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(coalesce(sum(ttl), 0) AS BIGINT) AS sum_ttl
     FROM live GROUP BY col
     """,
-    doc="store compaction (sink.compact_store — the Cassandra SSTable-"
+    doc="store compaction (sink.occ_compact_store — the Cassandra SSTable-"
     "compaction analogue the reference delegates to the server): three "
     "append jobs leave duplicate cell versions across part files; "
     "compaction keeps each cell's LWW winner (highest ts, ties to the "
     "lexically greater value — Cassandra's reconciliation rule), lets "
     "the tombstone generation suppress older versions then vanish "
-    "(post-gc_grace), drops TTL-expired winners, and atomically swaps "
-    "the rewritten store in; gated by reading the compacted store back "
+    "(post-gc_grace), drops TTL-expired winners, and commits the winners "
+    "as an OCC snapshot that replaces the connector's parts, which the "
+    "vacuum then drops; gated by reading the compacted store back "
     "through format('cassandra_cells') against a serial replay",
 )
 def q94_store_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3817,7 +3818,7 @@ def q94_store_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     for gen in (gen1, gen2.unionByName(tomb), tmp):
         gen.write.format("cassandra_cells").mode("append").save(store)
 
-    sink.compact_store(spark, store, now_millis=10000)
+    sink.occ_compact_store(spark, store, now_millis=10000)
 
     back = spark.read.format("cassandra_cells").load(store)
     return back.groupBy(
@@ -6095,7 +6096,7 @@ def q129_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     # now=10000 (2000 + 5000 <= 10000 → purged with their suppressed
     # row), deletes at ts=9000 are inside it (retained as tombstones,
     # row suppressed from the live view). Compaction itself runs on a
-    # real file store through sink.compact_store.
+    # real file store through sink.occ_compact_store.
     oracle="""
     SELECT c_mktsegment AS segment,
            count(*) FILTER (WHERE c_custkey % 5 NOT IN (0, 1))
@@ -6106,13 +6107,13 @@ def q129_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS purged_rows
     FROM customer GROUP BY c_mktsegment
     """,
-    doc="tombstone GC grace compaction (sink.compact_store gc_grace_s — "
+    doc="tombstone GC grace compaction (sink.occ_compact_store gc_grace_s — "
     "Cassandra's gc_grace_seconds rule, public data model): tombstones "
     "younger than the grace window survive compaction so late-arriving "
     "older writes still lose to the delete; older tombstones are purged "
     "together with the rows they suppressed. Builds a real store "
     "(writes at ts=1000, deletes at two epochs), compacts through the "
-    "atomic-swap maintenance path, and gates the post-compaction cell "
+    "OCC snapshot commit, and gates the post-compaction cell "
     "census per segment. Overflow variant of the in-window lww (q94/"
     "q125) and ttl (q94) families — the delete-GC face of the same "
     "compaction contract",
@@ -6157,9 +6158,7 @@ def q131_gc_grace_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     writes.unionByName(old_del).unionByName(new_del).write.format(
         "cassandra_cells"
     ).mode("overwrite").save(store)
-    sink.compact_store(
-        spark, store, now_millis=10_000, gc_grace_s=5, target_buckets=4
-    )
+    sink.occ_compact_store(spark, store, now_millis=10_000, gc_grace_s=5)
     compacted = spark.read.format("cassandra_cells").load(store).select(
         codecs.decode_col(F.col("row_key"), "bigint").alias("c_custkey"),
         F.col("value").isNotNull().alias("live"),
@@ -8861,9 +8860,9 @@ def q176_indexed_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The crash-recovery contract (sink.recover_store, previously
     # pytest-only — r07 verdict item 7): the store must come back as
     # EXACTLY the compacted content, and the recovery must report what
-    # it did. The injected state is built from real artifacts — the
-    # actual compacted output parked as .compacting-T (final rename
-    # never happened), the actual pre-compaction store as .old-T, plus
+    # it did. The injected state is built from real artifacts — a copy
+    # compacted by sink.occ_compact_store parked as .compacting-T (final
+    # rename never happened), the pre-compaction store as .old-T, plus
     # an older torn partial — so roll-forward is proven against the
     # same LWW/tombstone replay q94 gates, and the literal counter
     # columns make the driver hash adjudicate the recovery actions too.
@@ -8891,15 +8890,15 @@ def q176_indexed_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="crash-recovery runbook (sink.recover_store — the SSTable-replay "
     "analogue of Cassandra's startup cleanup of incomplete compactions): "
-    "three generations land in the store, compaction's atomic swap is "
+    "three generations land in the store, a rename-swap compaction is "
     "interrupted BETWEEN the two renames (live store parked at .old-T, "
-    "complete compacted output at .compacting-T, store path missing) "
-    "with an older torn partial alongside; recovery rolls the compacted "
-    "output forward, drops the partial and the superseded pre-compaction "
-    "dir, and the reopened store replays the q94 LWW/tombstone contract "
-    "bit-for-bit. Counters ride as literal columns so the hash gates "
-    "the recovery actions, not just the content. New crash_recovery "
-    "capability; takes a round-8 window slot",
+    "a copy compacted by occ_compact_store at .compacting-T, store path "
+    "missing) with an older torn partial alongside; recovery rolls the "
+    "compacted output forward, drops the partial and the superseded "
+    "pre-compaction dir, and the reopened store replays the q94 "
+    "LWW/tombstone contract bit-for-bit. Counters ride as literal "
+    "columns so the hash gates the recovery actions, not just the "
+    "content. New crash_recovery capability; takes a round-8 window slot",
 )
 def q177_recovery_runbook(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
@@ -8916,7 +8915,6 @@ def q177_recovery_runbook(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     for leftover in (
         store,
-        f"{store}.pre",
         f"{store}.old-inj",
         f"{store}.compacting-aaa-partial",
         f"{store}.compacting-inj",
@@ -8940,13 +8938,12 @@ def q177_recovery_runbook(spark: SparkSession, sf_dir: str) -> DataFrame:
     for gen in (gen1, gen2, tomb):
         gen.write.format("cassandra_cells").mode("append").save(store)
 
-    # real artifacts for the injected crash: keep the pre-compaction
-    # store aside, compact for real, then park the two dirs exactly
-    # where a crash between compact_store's renames leaves them
-    shutil.copytree(store, f"{store}.pre")
-    sink.compact_store(spark, store)
-    os.rename(store, f"{store}.compacting-inj")
-    os.rename(f"{store}.pre", f"{store}.old-inj")
+    # real artifacts for the injected crash: compact a copy for real,
+    # then park the two dirs exactly where a crash between a swap's
+    # renames leaves them
+    shutil.copytree(store, f"{store}.compacting-inj")
+    sink.occ_compact_store(spark, f"{store}.compacting-inj")
+    os.rename(store, f"{store}.old-inj")
     # an older abandoned partial (state-1 leftover from a prior crash);
     # 'aaa' sorts before 'inj' so recovery rolls the NEWEST forward
     os.makedirs(f"{store}.compacting-aaa-partial")
@@ -9333,7 +9330,7 @@ def q188_incremental_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     "SNAPSHOT at the exact version its inputs were read at, so a "
     "concurrent ingest that claims the next version first forces a "
     "refresh-and-retry that re-reads WITH the new append — closing the "
-    "lost-update window of compact_store's rename-swap (read, racing "
+    "lost-update window of a rename-swap compaction (read, racing "
     "append, swap → append clobbered). The runbook races exactly that: "
     "a stale snapshot commit fails closed, the retry entrypoint lands "
     "v5 including the race-winning ingest (which resurrects tombstoned "

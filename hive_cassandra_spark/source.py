@@ -92,8 +92,8 @@ def apply_cdc_batch(cells: DataFrame, changes: DataFrame) -> DataFrame:
     """Apply a CDC change batch to a cell store: INSERT/UPDATE changes are
     ordinary cells with a newer ``ts``; a DELETE is a TOMBSTONE — the same
     cell key with ``value`` NULL at a newer ``ts``. Union + last-write-
-    wins compaction resolves everything in one keyed aggregation
-    (``max_by`` keeps the newest version even when it is the NULL
+    wins compaction resolves everything in one keyed aggregation (the
+    struct-max keeps the newest version even when it is the NULL
     tombstone — pinned by test_source_sink), and cells_to_table reads a
     tombstoned cell as NULL, so a fully-deleted row vanishes from the
     pivoted read exactly like a ghost row.
@@ -110,12 +110,15 @@ def apply_cdc_batch(cells: DataFrame, changes: DataFrame) -> DataFrame:
 
 def lww_latest(cells: DataFrame, key_cols: list[str] | None = None) -> DataFrame:
     """Keep the newest version of each cell — Cassandra's last-write-wins
-    reconciliation, which the reference inherits from the server. Expressed
-    as max_by over the writer timestamp: one map-side-combined aggregation."""
+    reconciliation, which the reference inherits from the server: the
+    struct-max of (ts, value), so ts ties go to the greater value (a
+    value beats a same-ts tombstone) as in compaction and
+    ``cells_to_table``. One map-side-combined aggregation."""
     key_cols = key_cols or ["row_key", "column_name"]
     return (
         cells.groupBy(*key_cols)
-        .agg(F.max_by("value", "ts").alias("value"), F.max("ts").alias("ts"))
+        .agg(F.max(F.struct("ts", "value")).alias("w"))
+        .select(*key_cols, "w.value", "w.ts")
     )
 
 

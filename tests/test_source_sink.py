@@ -284,9 +284,10 @@ def test_expire_cells_ttl_semantics(spark):
 
 
 def test_compact_store_semantics(spark, tmp_path):
-    """sink.compact_store: LWW winner per cell (highest ts, ties to the
-    lexically greater value — Cassandra's reconciliation rule), tombstone
-    suppress-and-vanish, TTL GC, atomic swap with no temp leftovers."""
+    """sink.occ_compact_store on a connector-written store: LWW winner
+    per cell (highest ts, ties to the lexically greater value —
+    Cassandra's reconciliation rule), tombstone suppress-and-vanish, TTL
+    GC, no temp leftovers."""
     import glob
     import os
 
@@ -309,15 +310,15 @@ def test_compact_store_semantics(spark, tmp_path):
     )
     df.write.format("cassandra_cells").mode("append").save(store)
     df.write.format("cassandra_cells").mode("append").save(store)  # 2nd gen of files
-    stats = sink.compact_store(spark, store, now_millis=10000, target_buckets=2)
-    assert stats["cells_in"] == 16 and stats["files_in"] >= 2
-    assert stats["cells_out"] == 3 and stats["files_out"] <= 2
+    stats = sink.occ_compact_store(spark, store, now_millis=10000)
+    assert stats["cells_in"] == 16
+    assert stats["cells_out"] == 3
     back = {
         bytes(r.row_key): bytes(r.value)
         for r in spark.read.format("cassandra_cells").load(store).collect()
     }
     assert back == {b"k1": b"v2", b"k2": b"zz", b"k5": b"y"}
-    # atomic swap left no temp/old dirs behind
+    # no temp/old dirs left behind
     parent = os.path.dirname(store)
     assert not glob.glob(f"{parent}/*.compacting-*")
     assert not glob.glob(f"{parent}/*.old-*")
@@ -417,9 +418,7 @@ def test_compact_store_gc_grace(spark, tmp_path):
     spark.createDataFrame(
         rows, "row_key binary, column_name binary, value binary, ts long, ttl_s int"
     ).write.format("cassandra_cells").mode("append").save(store)
-    sink.compact_store(
-        spark, store, now_millis=10_000, gc_grace_s=5, target_buckets=1
-    )
+    sink.occ_compact_store(spark, store, now_millis=10_000, gc_grace_s=5)
     back = {
         bytes(r.row_key): (None if r.value is None else bytes(r.value))
         for r in spark.read.format("cassandra_cells").load(store).collect()
@@ -430,9 +429,7 @@ def test_compact_store_gc_grace(spark, tmp_path):
         [(b"k2", b"c", b"late", 5000, None)],
         "row_key binary, column_name binary, value binary, ts long, ttl_s int",
     ).write.format("cassandra_cells").mode("append").save(store)
-    sink.compact_store(
-        spark, store, now_millis=10_000, gc_grace_s=5, target_buckets=1
-    )
+    sink.occ_compact_store(spark, store, now_millis=10_000, gc_grace_s=5)
     back2 = {
         bytes(r.row_key): (None if r.value is None else bytes(r.value))
         for r in spark.read.format("cassandra_cells").load(store).collect()
@@ -1438,7 +1435,7 @@ def test_occ_compact_store_counts_cells_in_from_footers(
 ):
     """``occ_compact_store`` over multi-part versions with tombstones
     returns the cells_in, cells_out and version a count would give, and
-    counts no frame that scans the store."""
+    counts no frame at all: both counts come from parquet footers."""
     from pyspark.sql import functions as F2
 
     store = str(tmp_path / "store")
@@ -1472,7 +1469,7 @@ def test_occ_compact_store_counts_cells_in_from_footers(
     res = sink.occ_compact_store(spark, store)
     monkeypatch.undo()
     assert (res["cells_in"], res["cells_out"], res["version"]) == (360, 280, 4)
-    assert counted and not any(counted), counted
+    assert counted == [], counted
     assert sink.occ_read(spark, store).count() == 280
 
 
@@ -1675,7 +1672,8 @@ def test_cells_to_table_matches_compacted_store(spark, tmp_path):
     """Read-time LWW picks the same winners compaction does: ts ties go to
     the greater value (a value beats a same-ts tombstone), and a
     tombstone winner reads NULL — so the rows are identical before and
-    after sink.compact_store, whether it keeps tombstones or drops them."""
+    after sink.occ_compact_store, whether it keeps tombstones or drops
+    them."""
     m = parse_mapping(":key,a,b", 3)
     names, types = ["k", "a", "b"], ["string", "string", "string"]
     rows = [
@@ -1692,7 +1690,7 @@ def test_cells_to_table_matches_compacted_store(spark, tmp_path):
         sink.write_cells(_raw_cells(spark, rows), store)
         before = source.cells_to_table(source.read_cells(spark, store), m, names, types)
         assert sorted(map(tuple, before.collect())) == want
-        sink.compact_store(spark, store, drop_tombstones=drop, target_buckets=2)
+        sink.occ_compact_store(spark, store, drop_tombstones=drop)
         after = source.cells_to_table(source.read_cells(spark, store), m, names, types)
         assert sorted(map(tuple, after.collect())) == want
 
@@ -1720,3 +1718,268 @@ def test_cf_map_overwrite_and_tombstone(spark):
     }
     only_map = source.cells_to_table(cells, m, names, types, wanted_columns=["props"])
     assert {r.id: r.props for r in only_map.collect()} == {"r1": {"a": "2", "c": "keep"}}
+
+
+_TTL_CELLS = "row_key binary, column_name binary, value binary, ts long, ttl_s int"
+
+
+def _connector_append(spark, store, rows, schema=_TTL_CELLS):
+    spark.createDataFrame(rows, schema).write.format("cassandra_cells").mode(
+        "append"
+    ).save(store)
+
+
+def _root_parts(store):
+    import glob
+    import os
+
+    return sorted(
+        os.path.basename(f) for f in glob.glob(os.path.join(store, "*.parquet"))
+    )
+
+
+def _live_winners(cells):
+    """{(row_key, column_name): (value, ts)} of the live LWW winners."""
+    return {
+        (bytes(r.row_key), bytes(r.column_name)): (bytes(r.value), r.ts)
+        for r in source.lww_latest(cells).collect()
+        if r.value is not None
+    }
+
+
+def test_connector_append_racing_compaction_claim_survives(spark, tmp_path):
+    """A ``cassandra_cells`` append that lands after the compaction read
+    its inputs and before it claims its version is not named by the
+    snapshot, so it stays visible — to ``occ_read`` and to the
+    connector — and the next compaction folds it in."""
+    from hive_cassandra_spark import datasource
+
+    datasource.register(spark)
+    store = str(tmp_path / "store")
+    _connector_append(spark, store, [(b"k1", b"c", b"v1", 10, None)])
+    first = _root_parts(store)
+    fired = []
+
+    class AppendBeforeClaim(sink.LocalFSClaimBackend):
+        def claim(self, path, version, token):
+            if not fired:
+                fired.append(version)
+                _connector_append(spark, store, [(b"k2", b"c", b"v2", 20, None)])
+            return super().claim(path, version, token)
+
+    prev = sink.set_occ_claim_backend(AppendBeforeClaim())
+    try:
+        res = sink.occ_compact_store(spark, store)
+    finally:
+        sink.set_occ_claim_backend(prev)
+    assert fired == [1]
+    assert (res["cells_in"], res["cells_out"], res["version"]) == (1, 1, 1)
+    assert sink._occ_log(store)[1]["replaced"] == set(first)
+    want = {(b"k1", b"c"): (b"v1", 10), (b"k2", b"c"): (b"v2", 20)}
+    assert _live_winners(sink.occ_read(spark, store)) == want
+    connector = spark.read.format("cassandra_cells").load(store)
+    assert _live_winners(connector) == want
+    res2 = sink.occ_compact_store(spark, store)
+    assert (res2["cells_in"], res2["cells_out"], res2["version"]) == (2, 2, 2)
+    assert all(sink._PART_RE.search(p) for p in _root_parts(store))
+    assert _live_winners(spark.read.format("cassandra_cells").load(store)) == want
+
+
+def test_occ_compact_store_compacts_connector_store(spark, tmp_path):
+    """A store written only by the ``cassandra_cells`` connector compacts:
+    its parts are the snapshot's input, the marker names each one
+    ``replaced:``, the vacuum drops them, and both readers see the
+    winners."""
+    from hive_cassandra_spark import datasource
+
+    datasource.register(spark)
+    store = str(tmp_path / "store")
+    _connector_append(spark, store, [
+        (b"k1", b"c", b"old", 10, None), (b"k2", b"c", b"x", 10, None),
+        (b"k3", b"c", b"y", 10, None),
+    ])
+    _connector_append(spark, store, [
+        (b"k1", b"c", b"new", 20, None), (b"k2", b"c", None, 30, None),
+    ])
+    legacy = _root_parts(store)
+    assert len(legacy) >= 2 and not any(sink._PART_RE.search(p) for p in legacy)
+    res = sink.occ_compact_store(spark, store)
+    assert (res["cells_in"], res["cells_out"], res["version"]) == (5, 2, 1)
+    assert res["vacuumed"] == len(legacy) and res["conflicts"] == 0
+    assert sink._occ_log(store)[1]["replaced"] == set(legacy)
+    parts = _root_parts(store)
+    assert len(parts) == res["files"] == 1 and sink._PART_RE.search(parts[0])
+    want = {(b"k1", b"c"): (b"new", 20), (b"k3", b"c"): (b"y", 10)}
+    assert _live_winners(sink.occ_read(spark, store)) == want
+    assert _live_winners(spark.read.format("cassandra_cells").load(store)) == want
+
+
+def test_compaction_keeps_columns_of_later_legacy_parts(spark, tmp_path):
+    """A legacy store whose FIRST part has no ``ttl_s`` and whose later
+    part carries it: the compaction reads and keeps the column, and
+    purges the cells it expires."""
+    import os
+
+    from hive_cassandra_spark import datasource
+
+    datasource.register(spark)
+    store = str(tmp_path / "store")
+    _connector_append(
+        spark, store, [(b"k1", b"c", b"a", 1000)],
+        "row_key binary, column_name binary, value binary, ts long",
+    )
+    (first,) = _root_parts(store)
+    # legacy names carry no order: fix it so the ttl-less part lists first
+    os.rename(os.path.join(store, first), os.path.join(store, "part-0-a.parquet"))
+    _connector_append(spark, store, [
+        (b"k2", b"c", b"short", 1000, 1),    # expired at now=10000
+        (b"k3", b"c", b"long", 1000, 100),   # alive
+    ])
+    assert _root_parts(store)[0] == "part-0-a.parquet"
+    assert "ttl_s" in sink.occ_read(spark, store).columns
+    res = sink.occ_compact_store(spark, store, now_millis=10_000)
+    assert (res["cells_in"], res["cells_out"]) == (3, 2)
+    back = sink.occ_read(spark, store)
+    assert "ttl_s" in back.columns
+    assert sorted(
+        (bytes(r.row_key), r.ttl_s) for r in back.collect()
+    ) == [(b"k1", None), (b"k3", 100)]
+
+
+def test_compaction_crash_after_publish_before_vacuum(spark, tmp_path, monkeypatch):
+    """A crash after the snapshot published and before its vacuum: the
+    replaced legacy parts are still on disk, yet ``occ_read`` and the
+    connector's raw read give the same live last-write-wins cells as
+    before the compaction; ``occ_vacuum`` then finishes the cleanup."""
+    import pytest
+
+    from hive_cassandra_spark import datasource
+
+    datasource.register(spark)
+    store = str(tmp_path / "store")
+    _connector_append(spark, store, [
+        (b"k1", b"c", b"a", 10, None), (b"k2", b"c", b"b", 10, None),
+    ])
+    _connector_append(spark, store, [
+        (b"k1", b"c", b"a2", 20, None), (b"k2", b"c", None, 20, None),
+    ])
+    legacy = _root_parts(store)
+    before = _live_winners(spark.read.format("cassandra_cells").load(store))
+
+    def crash(path, retain_versions=0):
+        raise OSError("crash before vacuum")
+
+    monkeypatch.setattr(sink, "occ_vacuum", crash)
+    with pytest.raises(OSError, match="crash before vacuum"):
+        sink.occ_compact_store(spark, store)
+    monkeypatch.undo()
+    assert sink.store_version(store) == 1
+    assert set(legacy) < set(_root_parts(store))
+    assert _live_winners(sink.occ_read(spark, store)) == before
+    raw = spark.read.format("cassandra_cells").load(store)
+    assert _live_winners(raw) == before
+    vac = sink.occ_vacuum(store)
+    assert vac["dropped_parts"] == len(legacy)
+    assert not set(legacy) & set(_root_parts(store))
+    assert _live_winners(spark.read.format("cassandra_cells").load(store)) == before
+    assert sink.occ_vacuum(store)["dropped_parts"] == 0  # idempotent
+
+
+def test_pinned_read_on_mixed_store_serves_or_fails_closed(
+    spark, tmp_path, monkeypatch
+):
+    """Legacy and OCC parts in one store: a read pinned before the
+    compaction sees the legacy parts it replaced while they are on disk,
+    ``occ_vacuum`` keeps them for a retained version, and once any is
+    gone the pinned read fails closed instead of serving partial state."""
+    import os
+
+    import pytest
+
+    from hive_cassandra_spark import datasource
+
+    datasource.register(spark)
+    store = str(tmp_path / "store")
+    _connector_append(
+        spark, store, [(b"k1", b"c", b"a", 10)],
+        "row_key binary, column_name binary, value binary, ts long",
+    )
+    assert sink.occ_commit(
+        spark, store, _raw_cells(spark, [("k2", "c", "b", 20)]), 0
+    )["committed"]
+    _connector_append(
+        spark, store, [(b"k1", b"c", b"c", 30)],
+        "row_key binary, column_name binary, value binary, ts long",
+    )
+    legacy = [p for p in _root_parts(store) if not sink._PART_RE.search(p)]
+    want = {(b"k1", b"c"): (b"c", 30), (b"k2", b"c"): (b"b", 20)}
+    assert _live_winners(sink.occ_read(spark, store, as_of_version=1)) == want
+    monkeypatch.setattr(sink, "occ_vacuum", lambda path: {"dropped_parts": 0})
+    res = sink.occ_compact_store(spark, store)
+    monkeypatch.undo()
+    assert res["version"] == 2 and res["cells_in"] == 3
+    assert sink._occ_log(store)[2]["replaced"] == set(legacy)
+    latest = sink.occ_read(spark, store)
+    assert latest.count() == 2 and _live_winners(latest) == want
+    pinned = sink.occ_read(spark, store, as_of_version=1)
+    assert pinned.count() == 3 and _live_winners(pinned) == want
+    # a retained v1 still sees the replaced legacy parts: they stay
+    assert sink.occ_vacuum(store, retain_versions=1) == {
+        "dropped_parts": 0, "floor": 2, "retained_versions": [1],
+    }
+    assert set(legacy) <= set(_root_parts(store))
+    assert sink.occ_read(spark, store, as_of_version=1).count() == 3
+    # one replaced legacy part lost out of band: the pin fails closed
+    os.rename(os.path.join(store, legacy[0]), str(tmp_path / "aside.parquet"))
+    with pytest.raises(FileNotFoundError, match="legacy"):
+        sink.occ_read(spark, store, as_of_version=1)
+    os.rename(str(tmp_path / "aside.parquet"), os.path.join(store, legacy[0]))
+    # retention over: v1's part and both legacy parts go
+    assert sink.occ_vacuum(store)["dropped_parts"] == 3
+    assert not set(legacy) & set(_root_parts(store))
+    with pytest.raises(FileNotFoundError):
+        sink.occ_read(spark, store, as_of_version=1)
+    assert _live_winners(sink.occ_read(spark, store, as_of_version=2)) == want
+
+
+def test_occ_compact_store_jobs(spark, tmp_path):
+    """``cells_out`` comes from the committed parts' footers, so a
+    compaction runs no Spark job to count its output: the checkpoint of
+    the winners and the snapshot's staged write are all it runs."""
+    sc = spark.sparkContext
+    store = str(tmp_path / "store")
+    assert sink.occ_commit(spark, store, _raw_cells(spark, [
+        ("k1", "c", "a", 10), ("k2", "c", "b", 10),
+    ]), 0)["committed"]
+    assert sink.occ_commit(spark, store, _raw_cells(spark, [
+        ("k1", "c", "a2", 20), ("k2", "c", None, 20),
+    ]), 1)["committed"]
+    sc.setJobGroup("occ-compact-jobs", "jobs of one compaction")
+    try:
+        res = sink.occ_compact_store(spark, store)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert (res["cells_in"], res["cells_out"]) == (4, 1)
+    # under AQE each of the two runs as a shuffle-map job and a result
+    # job; a count of the checkpoint added two more
+    jobs = sc.statusTracker().getJobIdsForGroup("occ-compact-jobs")
+    assert len(jobs) <= 4, sorted(jobs)
+
+
+def test_lww_latest_ties_follow_the_compaction_rule(spark):
+    """``lww_latest`` resolves a ts tie the way compaction and
+    ``cells_to_table`` do — the greater value wins, and a value beats a
+    same-ts tombstone — whatever order the versions arrive in."""
+    rows = [
+        ("k", "c", "b", 10), ("k", "c", "a", 10),
+        ("t", "c", None, 10), ("t", "c", "x", 10),
+        ("d", "c", "old", 10), ("d", "c", None, 20),
+    ]
+    for order in (rows, rows[::-1]):
+        cells = _raw_cells(spark, order).coalesce(1)
+        got = _cell_rows(source.lww_latest(cells))
+        assert got == [
+            (b"d", b"c", None, 20), (b"k", b"c", b"b", 10), (b"t", b"c", b"x", 10),
+        ], got
+        winners = sink._compact_winners(cells, False, None, None)
+        assert _cell_rows(winners) == got

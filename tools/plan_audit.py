@@ -273,7 +273,7 @@ NOTES = {
         "only scales the vocab-sized tail."
     ),
     "q185_occ_compaction": (
-        "compact_store routed through the OCC protocol: the compacted "
+        "occ_compact_store, the one compaction: the compacted "
         "winners commit as a SNAPSHOT at the exact version the inputs "
         "were read at, so the raced ingest that claimed v4 first forces "
         "the refresh-and-retry — the lost-update window of the "
@@ -360,9 +360,9 @@ NOTES = {
         "is the amortized nightly job; queries are interactive."
     ),
     "q177_recovery_runbook": (
-        "store build (3 append generations) + compact_store + an "
-        "injected between-renames crash (REAL artifacts: the completed "
-        "compacted dir parked as .compacting-T, the pre-compaction "
+        "store build (3 append generations) + occ_compact_store on a "
+        "copy + an injected between-renames crash (REAL artifacts: the "
+        "compacted copy parked as .compacting-T, the pre-compaction "
         "store as .old-T) + recover_store roll-forward + read-back "
         "rollup. Recovery itself is pure driver-side dirent work — "
         "zero data movement; the timed cost is the store write + "

@@ -8,9 +8,9 @@ Hadoop InputFormat plumbing; each piece maps one-to-one:
 - split generation from the ring, sized by ``cassandra.input.split.size``
   (65,536 keys/split — AbstractColumnSerDe.java:42,69; splits built in
   HiveCassandraStandardColumnInputFormat.getSplits):
-  ``CellStoreReader.partitions()`` bin-packs the store's parquet files
-  (hash-buckets of row_key, i.e. token ranges — sink.write_cells
-  repartitions on the key) into ``split_size``-row splits.
+  ``CellStoreReader.partitions()`` bin-packs the parts the store's OCC
+  marker log makes visible (``sink._occ_files``; hash-buckets of
+  row_key, i.e. token ranges) into ``split_size``-row splits.
 - per-split host placement (HiveCassandraStandardSplit.java:13-158 carries
   start/end token + preferred hosts): each ``CellSplit`` carries a
   ``preferred_hosts`` tuple. Over a file-backed store it is synthesized
@@ -36,9 +36,9 @@ Hadoop InputFormat plumbing; each piece maps one-to-one:
   (AbstractColumnSerDe.java:47,75; consistency coercion
   output/CassandraAbstractPut.java:39-50): ``df.write.format(
   "cassandra_cells")`` streams each task's Arrow batches into row groups
-  capped at ``batch_size`` with an atomic temp-file/rename commit
-  protocol (``CellStoreWriter``); the store path must be shared storage,
-  the same assumption every parquet sink makes.
+  capped at ``batch_size``, committed as ONE OCC version
+  (``CellStoreWriter``); the store path must be shared storage, the same
+  assumption every parquet sink makes.
 
 Scale posture: one split never materializes more than ~``split_size``
 cells (the same bounded-memory contract the reference's split reader
@@ -60,15 +60,13 @@ a key or column-range lookup through this source costs under 0.1
 Python-CPU-s and about 0.2 CPU-s in all on a 4-core host. That price is still per scan, not per cell, and a JVM
 parquet scan of the same files needs no Python worker at all, so the
 engine's own read paths bypass the connector: ``handler.read_table`` and
-``index.index_lookup`` read the files as JVM parquet
-(``source.read_cells``; ``store_schema`` gives them this source's column
-list). Callers that query through ``cassandra_cells`` keep the three
-calls, which the Python Data Source API requires.
+``index.index_lookup`` read the same resolved parts as JVM parquet
+(``source.read_cells``). Callers that query through ``cassandra_cells``
+keep the three calls, which the Python Data Source API requires.
 """
 
 from __future__ import annotations
 
-import glob
 import os
 from dataclasses import dataclass
 
@@ -96,13 +94,6 @@ DEFAULT_SPLIT_SIZE = 65536  # ≙ cassandra.input.split.size
 DEFAULT_PAGE_SIZE = 1000  # ≙ cassandra.range.size
 
 _BASE_SCHEMA = "row_key binary, column_name binary, value binary, ts bigint"
-_OPTIONAL_COLS = ("sub_column_name", "ttl_s")
-
-
-def _store_files(path: str) -> list[str]:
-    if os.path.isdir(path):
-        return sorted(glob.glob(os.path.join(path, "*.parquet")))
-    return sorted(glob.glob(path))
 
 
 def _vacuum_watermark(path: str) -> int | None:
@@ -117,22 +108,18 @@ def _vacuum_watermark(path: str) -> int | None:
 
 
 def store_schema(path: str) -> str:
-    """The store's scan schema: ``sink.to_cells``'s columns, then each
-    optional column (sub_column_name, ttl_s) that ANY sampled footer has —
-    appends may have introduced it after the store was created, and
-    footer-only sampling keeps planning cheap."""
-    parts = [_BASE_SCHEMA]
-    files = _store_files(path)
-    if files:
-        import pyarrow.parquet as pq
+    """The store's scan schema, as DDL: the columns of every visible part
+    merged from their footers (``sink._parts_schema``, the schema
+    ``source.read_cells`` plans with), so a column that only later
+    appends carry (``sub_column_name``, ``ttl_s``) is in it; a store with
+    no visible part scans as ``_BASE_SCHEMA``."""
+    from hive_cassandra_spark import sink
 
-        names: set[str] = set()
-        for f in files[:16]:
-            names |= set(pq.read_schema(f).names)
-        for c in _OPTIONAL_COLS:
-            if c in names:
-                parts.append(f"{c} binary" if c == "sub_column_name" else f"{c} int")
-    return ", ".join(parts)
+    files = sink._occ_files(path, sink._occ_log(path)) if path else []
+    if not files:
+        return _BASE_SCHEMA
+    fields = sink._parts_schema(files).fields
+    return ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in fields)
 
 
 @dataclass
@@ -229,7 +216,9 @@ class CellStoreReader(DataSourceReader):
     def partitions(self) -> list[CellSplit]:
         import pyarrow.parquet as pq
 
-        files = _store_files(self.path)
+        from hive_cassandra_spark import sink
+
+        files = sink._occ_files(self.path, sink._occ_log(self.path))
         if not files:
             raise FileNotFoundError(f"no parquet files under {self.path}")
         if self.as_of_batch is not None:
@@ -339,9 +328,9 @@ DEFAULT_BATCH_SIZE = 500  # ≙ cassandra.batchmutate.size
 
 @dataclass
 class CellCommit(WriterCommitMessage):
-    """One task's pending output: a hidden temp file the driver publishes
-    (renames) at commit — the all-or-nothing protocol standing in for the
-    reference's per-batch ``batch_mutate`` acknowledgements."""
+    """One task's pending output: a hidden temp file the job's commit
+    publishes in one OCC version — the all-or-nothing protocol standing
+    in for the reference's per-batch ``batch_mutate`` acknowledgements."""
 
     tmp_file: str
     rows: int
@@ -354,11 +343,13 @@ class CellStoreWriter(DataSourceArrowWriter):
     consistency coercion, batch_mutate flushing sized by
     ``cassandra.batchmutate.size`` = 500): each executor task streams its
     Arrow batches into one hidden temp file whose row groups are capped at
-    ``batch_size`` rows — the bounded unit of work a mutation flush ships —
-    and the driver publishes all temp files atomically on commit (or
-    deletes them on abort). ``consistency`` is validated with the
-    reference's coercion rule (bad → ONE) and recorded; over a file store
-    it has no runtime effect, exactly as SURVEY §2.A row 17 prescribes.
+    ``batch_size`` rows — the bounded unit of work a mutation flush ships.
+    ``commit`` publishes them as ONE OCC version (``sink.occ_update``): an
+    append is a delta, an overwrite a snapshot naming every legacy part it
+    replaces, vacuumed after its marker publishes, so a crashed commit
+    leaves the previous store readable. ``consistency`` is validated with
+    the reference's coercion rule (bad → ONE) and recorded; over a file
+    store it has no runtime effect, exactly as SURVEY §2.A row 17 says.
     """
 
     _REQUIRED = ("row_key", "column_name", "value", "ts")
@@ -378,8 +369,7 @@ class CellStoreWriter(DataSourceArrowWriter):
         self.consistency = normalize_consistency(options.get("consistency"))
         self.overwrite = overwrite
         # the driver constructs the writer once and pickles it to every
-        # task: job_id scopes temp files AND committed names to this job,
-        # so appends never clobber a prior job's parts and the stale-temp
+        # task: job_id scopes temp files to this job, so the stale-temp
         # sweep can't touch a concurrent job's in-flight files
         self.job_id = uuid.uuid4().hex[:12]
         names = {f.name for f in schema.fields}
@@ -414,21 +404,20 @@ class CellStoreWriter(DataSourceArrowWriter):
         return CellCommit(tmp_file=tmp, rows=rows)
 
     def commit(self, messages):
-        import glob as _glob
+        from hive_cassandra_spark import sink
 
+        staged = [m.tmp_file for m in messages if m and m.tmp_file]
+
+        def derive(snap):
+            if not self.overwrite:
+                return {None: staged}, {}
+            names = (os.path.basename(f) for f in snap.files())
+            return {None: staged}, {}, [n for n in names if not sink._PART_RE.search(n)]
+
+        # no session in the commit worker: derive reads no data
+        sink.occ_update(None, self.path, derive, snapshot=self.overwrite)
         if self.overwrite:
-            for old in _glob.glob(os.path.join(self.path, "*.parquet")):
-                os.remove(old)
-        for i, m in enumerate(messages):
-            if m and m.tmp_file:
-                # committed names carry the job id + task index: appends to
-                # a non-empty store never collide with earlier jobs' parts
-                os.rename(
-                    m.tmp_file,
-                    os.path.join(
-                        self.path, f"part-{self.job_id}-{i:05d}.parquet"
-                    ),
-                )
+            sink.occ_vacuum(self.path)
         self._sweep_stale_tmp()
 
     def abort(self, messages):
@@ -522,8 +511,10 @@ def _commit_log_batches(path: str) -> dict[int, list[str]]:
     tailing reader can trust — read those with ``spark.read``)."""
     import re
 
+    from hive_cassandra_spark import sink
+
     batches: dict[int, list[str]] = {}
-    for f in _store_files(path):
+    for f in sink._occ_files(path, sink._occ_log(path)):
         m = re.search(_BATCH_PART_RE, os.path.basename(f))
         if m is None:
             raise ValueError(

@@ -19,7 +19,6 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 
 from hive_cassandra_spark import sink, source
-from hive_cassandra_spark.datasource import store_schema
 from hive_cassandra_spark.mapping import (
     ColumnMapping,
     cf_type_for_mapping,
@@ -114,10 +113,10 @@ def read_table(
     """Cell store → LWW-reconciled, decoded relational rows; an optional
     column subset prunes the fetch (projection pushdown, ≙ the read-column
     slice predicate, HiveCassandraStandardColumnInputFormat.java:203-216).
-    The store is opened with the connector's column list
-    (``datasource.store_schema``: footer reads only), so planning runs no
-    Spark schema-inference job; ``cells_to_table`` reads columns by name."""
-    cells = source.read_cells(spark, table.path, store_schema(table.path))
+    ``source.read_cells`` merges the schema from the visible parts'
+    footers, so planning runs no Spark schema-inference job;
+    ``cells_to_table`` reads columns by name."""
+    cells = source.read_cells(spark, table.path)
     return source.cells_to_table(
         cells,
         table.mapping,

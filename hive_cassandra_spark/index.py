@@ -21,9 +21,9 @@ makes it work at 100 TB:
   row_key-sorted (sink.write_cells and sink.occ_compact_store only
   hash-distribute on it), a runtime-filter push would prune it too.
 
-Both stores are read as native JVM parquet scans (``source.read_cells``
-with the connector's column list, ``datasource.store_schema``), not
-through ``cassandra_cells``: a Python Data Source scan costs three
+Both stores are read as native JVM parquet scans of the parts their OCC
+marker logs make visible (``source.read_cells``), not through
+``cassandra_cells``: a Python Data Source scan costs three
 Python-worker calls (create, pushdown + plan, read). A ``get_spark``
 session forks its workers with the engine's zip-cache guard
 (``session._install_zip_cache_guard``) already primed, so no worker
@@ -73,14 +73,13 @@ def index_lookup(
     ``value``: point-read the index row (pushdown-pruned scan of the
     index store), broadcast the matching base row keys, semi-join the
     base store. Returns the full cell rows of the matching base rows."""
-    from hive_cassandra_spark.datasource import store_schema
     from hive_cassandra_spark.source import read_cells
 
     keys = (
-        read_cells(spark, index_path, store_schema(index_path))
+        read_cells(spark, index_path)
         .filter(F.col("row_key") == F.lit(value))
         .select(F.col("column_name").alias("row_key"))
         .distinct()
     )
-    base = read_cells(spark, base_path, store_schema(base_path))
+    base = read_cells(spark, base_path)
     return base.join(F.broadcast(keys), "row_key", "semi")

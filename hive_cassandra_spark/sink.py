@@ -35,7 +35,6 @@ import shutil
 import time
 import uuid
 from types import SimpleNamespace
-from urllib.parse import unquote, urlparse
 
 from pyspark.sql import Column, DataFrame, functions as F
 
@@ -582,9 +581,8 @@ class LocalFSClaimBackend:
         return True
 
     def publish(self, path: str, version: int, content: str) -> None:
-        tmp = os.path.join(
-            path, f".occ-staging-{version:09d}-{uuid.uuid4().hex[:8]}.marker"
-        )
+        tmp = os.path.join(path, f".occ-staging-{version:09d}-"
+                           f"{self.claim_token(path, version)}.marker")
         with open(tmp, "w") as fh:
             fh.write(content)
         os.replace(tmp, os.path.join(path, f"_occ-v{version:09d}"))
@@ -627,7 +625,10 @@ def set_occ_claim_backend(backend) -> object:
     caller in the package because it is the deployment seam: an
     object-store deployment, where mkdir atomicity doesn't exist,
     installs its conditional-PUT backend here, and tests use it to
-    substitute fake backends."""
+    substitute fake backends. It governs the commits of this process
+    only: a ``cassandra_cells`` batch write commits in pyspark's
+    ``commit_data_source_write`` Python worker, which keeps the default
+    ``LocalFSClaimBackend``."""
     global OCC_CLAIM_BACKEND
     prev, OCC_CLAIM_BACKEND = OCC_CLAIM_BACKEND, backend
     return prev
@@ -644,14 +645,12 @@ def _parquet_num_rows(path: str) -> int:
     return pq.ParquetFile(path).metadata.num_rows
 
 
-def _read_parts(spark, files: list):
-    """``spark.read.parquet(*files)`` that plans with no Spark job and
-    keeps every column ANY part carries (Spark infers from the first
-    footer only, through a job). Here ``pyarrow`` reads each footer's
-    schema — the one Spark recorded there
-    (``org.apache.spark.sql.parquet.row.metadata``), else the arrow
-    schema (the connector's parts) — and the fields merge by name; the
-    reader makes each nullable, and a part lacking one reads NULL."""
+def _parts_schema(files: list):
+    """The schema of ``files`` merged by name from their footers, read
+    with ``pyarrow`` (no Spark job): each footer gives the schema Spark
+    recorded there (``org.apache.spark.sql.parquet.row.metadata``), else
+    its arrow schema (the connector's parts). The first part carrying a
+    column gives its type; a part lacking one reads NULL."""
     import json
 
     import pyarrow.parquet as pq
@@ -670,7 +669,13 @@ def _read_parts(spark, files: list):
         )
         for field in schema.fields:
             fields.setdefault(field.name, field)
-    return spark.read.schema(StructType(list(fields.values()))).parquet(*files)
+    return StructType(list(fields.values()))
+
+
+def _read_parts(spark, files: list):
+    """``spark.read.parquet(*files)`` with their ``_parts_schema``: no Spark
+    job plans it, and it keeps every column ANY part carries."""
+    return spark.read.schema(_parts_schema(files)).parquet(*files)
 
 
 def _occ_commit(
@@ -682,13 +687,11 @@ def _occ_commit(
     replaced=(),
 ) -> tuple[dict, int]:
     """The one commit routine behind ``occ_commit`` (``tables`` =
-    ``{None: cells}``, parts at the store root) and
-    ``occ_commit_tables`` (one subdir per table): version check, stage,
-    claim, move the staged parts in, publish ONE marker. ``replaced``
-    names the legacy root parts a snapshot supersedes (one
-    ``replaced:<name>`` marker line each). Returns ({committed, version,
-    conflict, claim_pending, files}, rows), ``rows`` summed from the
-    committed parts' footers."""
+    ``{None: cells}``, parts at the store root), ``occ_commit_tables``
+    (one subdir per table) and ``occ_update``: version check, stage, then
+    ``_occ_publish``, whose result it returns. A table given as a list of
+    parquet files is already staged (the ``cassandra_cells`` writer's
+    task files)."""
     os.makedirs(path, exist_ok=True)
     cur = store_version(path)
     if cur != expected_version:
@@ -718,29 +721,46 @@ def _occ_commit(
     # input partition. (With AQE off it is a plain exchange into
     # spark.sql.shuffle.partitions parts.) Every part costs each later
     # read and compaction a listed, opened and scheduled file.
-    def _stage(item):
-        tname, df = item
+    def _stage(tname, df):
         df = (
             df.hint("rebalance", "row_key")
             if "row_key" in df.columns
             else df.hint("rebalance")
         )
         df.write.mode("overwrite").parquet(_occ_dir(staging, tname))
+        return sorted(
+            glob.glob(os.path.join(_occ_dir(staging, tname), "*.parquet"))
+        )
 
-    if len(tables) > 1:
-        from concurrent.futures import ThreadPoolExecutor
+    frames = {t: df for t, df in tables.items() if not isinstance(df, list)}
+    try:
+        if len(frames) > 1:
+            from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(
-            max_workers=min(3, len(tables))
-        ) as pool:
-            list(pool.map(_stage, tables.items()))
-    else:
-        for item in tables.items():
-            _stage(item)
+            with ThreadPoolExecutor(max_workers=min(3, len(frames))) as pool:
+                written = dict(zip(frames, pool.map(_stage, frames, frames.values())))
+        else:
+            written = {t: _stage(t, df) for t, df in frames.items()}
+        return _occ_publish(
+            path, v, token, {**tables, **written}, snapshot, tag, replaced
+        )
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
+
+
+def _occ_publish(
+    path: str, v: int, token: str, staged: dict, snapshot: bool,
+    tag: str | None = None, replaced=(),
+) -> tuple[dict, int]:
+    """The filesystem half of a commit: claim version ``v`` under
+    ``token``, move each table's ``staged`` files in, publish ONE marker
+    (a ``replaced:<name>`` line per legacy part a snapshot supersedes).
+    A lost claim touches no staged file. Returns ({committed, version,
+    conflict, claim_pending, files}, rows), ``rows`` summed from the
+    committed parts' footers."""
     # the claim/publish atomics ride the pluggable backend (the
     # deployment seam — LocalFSClaimBackend documents the contract)
     if not OCC_CLAIM_BACKEND.claim(path, v, token):
-        shutil.rmtree(staging, ignore_errors=True)
         # distinguish a live racing writer (its marker will appear and
         # the version will advance) from a DEAD claim (no marker ever):
         # a caller that only refresh-and-retries would spin forever on
@@ -757,13 +777,11 @@ def _occ_commit(
         lines.append(f"tag:{tag}")
     lines += [f"replaced:{name}" for name in sorted(replaced)]
     n = rows = 0
-    for tname in tables:
+    for tname, files in staged.items():
         dst = _occ_dir(path, tname)
         os.makedirs(dst, exist_ok=True)
         k = 0
-        for f in sorted(
-            glob.glob(os.path.join(_occ_dir(staging, tname), "*.parquet"))
-        ):
+        for f in files:
             # drop zero-row parts instead of committing them: Spark
             # writes one empty part file even for an empty DataFrame,
             # and a streaming pipeline committing many empty micro-batch
@@ -791,7 +809,6 @@ def _occ_commit(
         # parts are gone; a version that never carried table T stays a
         # legitimate no-op for T
         lines.append(f"files:{k}" if tname is None else f"files:{tname}={k}")
-    shutil.rmtree(staging, ignore_errors=True)
     OCC_CLAIM_BACKEND.publish(path, v, "\n".join(lines))
     return {
         "committed": True, "version": v, "conflict": False,
@@ -812,56 +829,42 @@ def occ_commit(
     batch_mutate, AbstractColumnSerDe.java:47,75, never had).
 
     Protocol (claim/publish atomics via the pluggable
-    ``OCC_CLAIM_BACKEND`` seam — ``LocalFSClaimBackend`` is the default
-    and documents the contract an S3/GCS conditional-PUT or lock-table
-    backend must honor):
-    1. stage the data files under a hidden ``.occ-staging-*`` dir,
-       through one AQE rebalance (on ``row_key`` for a cell frame): the
-       part count follows the data, not the input's partitioning — a
-       small commit lands as one part, a partition above
-       ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` splits;
+    ``OCC_CLAIM_BACKEND`` seam — ``LocalFSClaimBackend`` documents the
+    contract an S3/GCS conditional-PUT or lock-table backend must honor):
+    1. stage the data files under a hidden ``.occ-staging-<v>-<token>``
+       dir through one AQE rebalance (on ``row_key`` for a cell frame), so
+       the part count follows the data, not the input's partitioning;
     2. CLAIM the version: ``backend.claim(path, v, token)`` — atomic,
        exactly one winner per version, the claim is permanent; a loser
-       cleans its staging and reports the conflict with the fresh
-       version so the caller can re-derive and retry;
-    3. move the staged files in under version-stamped names
-       (``part-occ-v%09d-*``), then PUBLISH the ``_occ-v%09d`` marker
-       (``token``, optional ``snapshot``, ``files:<n>``) — atomically:
-       the marker appears whole or not at all. Every reader resolves
-       the store from the published markers through one log listing
-       (``_occ_log``), so a torn commit is never observed as the
-       current VERSION.
+       drops its staging and reports the conflict with the fresh version
+       so the caller can re-derive and retry;
+    3. move the staged files in as ``part-occ-v%09d-*``, then PUBLISH the
+       ``_occ-v%09d`` marker (``token``, optional ``snapshot``,
+       ``files:<n>``), which appears whole or not at all.
 
-    Torn-commit isolation applies to ``store_version`` and to readers
-    that go through ``occ_read`` (which lists only part files whose
-    version has a published marker). A raw ``spark.read.parquet(path)``
-    glob over the directory sees unpublished parts too — committed
-    consumers must read via ``occ_read`` (q183 does) or run
+    Every engine reader (``occ_read``, ``source.read_cells``, the
+    ``cassandra_cells`` connector) takes its files from the one resolver
+    (``_occ_files``), which lists only parts whose version has a
+    published marker, so no reader sees a torn commit. Only user code
+    that globs the directory itself (``spark.read.parquet(path)``) sees
+    unpublished parts; it must read via ``occ_read`` or run
     ``occ_recover`` first.
 
-    With ``snapshot=True`` the committed cells are a FULL REPLACEMENT of
-    every version ≤ ``expected_version`` (the compaction commit shape):
-    the published marker records the snapshot flag, ``occ_read`` then
-    lists only parts of versions ≥ the newest snapshot, and
-    ``occ_vacuum`` may physically drop the superseded parts at leisure.
-    Legacy root parts (no OCC version in their name) stay visible: only
-    ``occ_compact_store`` replaces them, by name. Because the snapshot
-    claims the next version through the SAME mkdir atom, a concurrent
-    append that wins the race forces the compactor to refresh (re-read,
-    now including the new append) and retry — the lost-update window of
-    a rename-swap compaction is gone.
+    With ``snapshot=True`` the committed cells REPLACE every version ≤
+    ``expected_version`` (the compaction commit shape): readers skip
+    versions below the newest snapshot and ``occ_vacuum`` drops their
+    parts at leisure. Legacy root parts (no OCC version in their name)
+    stay visible unless a snapshot names them ``replaced:``
+    (``occ_compact_store``, a ``cassandra_cells`` overwrite). A
+    concurrent append that wins the claim race forces the snapshot
+    writer to refresh and retry: no update is lost.
 
-    A crash between claim and publish leaves a claim without a marker:
-    ``occ_recover`` sweeps those (drops the claim's token-matched part
-    files) so the version becomes claimable again. A loser whose mkdir
-    failed against a claim that has NO published marker gets
-    ``claim_pending=True`` in its result: the claimant is either still
-    in flight or dead, and a refresh-and-retry loop alone will spin
-    forever on a dead claim. ``occ_update`` is that loop: one attempt
-    reads ONE snapshot of the marker log, detects a retried batch from
-    its tags, commits at its version and waits out a pending claim
-    (``occ_wait_claim``). Returns
-    {committed, version, conflict, claim_pending, files}.
+    A crash between claim and publish leaves a claim without a marker;
+    ``occ_recover`` drops its token-matched parts so the version becomes
+    claimable again. A loser against such a claim gets
+    ``claim_pending=True``: the claimant is in flight or dead, and
+    ``occ_update``'s retry loop waits it out (``occ_wait_claim``).
+    Returns {committed, version, conflict, claim_pending, files}.
     """
     return _occ_commit(path, {None: cells}, expected_version, snapshot)[0]
 
@@ -903,19 +906,19 @@ def store_tags(path: str) -> dict:
     }
 
 
-def _occ_read(
-    spark, path: str, log: dict, table: str | None = None,
+def _occ_files(
+    path: str, log: dict, table: str | None = None,
     latest_only: bool = False, as_of_version: int | None = None,
-    empty_schema=None,
-):
-    """The one read behind ``occ_snapshot(...).read`` (and so ``occ_read``,
-    ``table=None``). The snapshot's ONE log listing resolves
-    the visible versions: those at or above the snapshot floor, or
+) -> list:
+    """The one part resolver, pure (no Spark): the parquet files of
+    ``table`` (None = the store root) that the marker listing ``log``
+    makes visible. Every engine reader takes its files from here. The
+    visible versions are those at or above the snapshot floor, or
     ``(floor-at-N, N]`` for a pin at N (a compaction published after the
-    pin cannot rewrite its history; a never-published pin is a caller
-    bug and raises ValueError). One listing of the table's parts groups
-    them by version. A root read also serves each legacy part no marker
-    at or below the pin names ``replaced:``.
+    pin cannot rewrite its history; a never-published pin raises
+    ValueError); a torn commit's parts are never returned. A root read
+    also returns each legacy part no marker at or below the pin names
+    ``replaced:``. ``latest_only`` keeps the highest visible version.
 
     A PINNED read whose visible range is only partially on disk fails
     closed: every visible version's parts are counted against the
@@ -923,14 +926,9 @@ def _occ_read(
     marker above the pin replaced must be on disk, so a version that
     lost some or all of its parts to ``occ_vacuum``, out-of-band
     deletion or a partial restore is never served as "the state at vN".
-    Markers that predate the ``files:`` records cannot be checked.
-
-    Planning runs no Spark job: the schema is merged from the visible
-    parts' footers (``_read_parts``). One cliff remains: above 32 visible
-    parts (``spark.sql.sources.parallelPartitionDiscovery.threshold``)
-    Spark lists the files through a parallel-listing job of its own. A
-    small delta commits one part, so a store crosses it after about 32
-    deltas without a compaction."""
+    Markers that predate the ``files:`` records cannot be checked. A
+    table with no visible part raises FileNotFoundError; an empty root
+    returns []."""
     if as_of_version is not None and as_of_version not in log:
         raise ValueError(
             f"as_of_version={as_of_version} was never published under "
@@ -977,12 +975,9 @@ def _occ_read(
                     "serve partial state"
                 )
     if latest_only and by_version:
-        return _read_parts(spark, by_version[max(by_version)])
+        return by_version[max(by_version)]
     if by_version or legacy:
-        return _read_parts(
-            spark, [f for fs in by_version.values() for f in fs]
-            + list(legacy.values())
-        )
+        return [f for fs in by_version.values() for f in fs] + list(legacy.values())
     if table is not None:
         raise FileNotFoundError(
             f"no committed parts for table '{table}' under {path}"
@@ -1003,33 +998,52 @@ def _occ_read(
         # history: fail closed like a table read, never silently
         # serve an empty store as "the state at vN". When EVERY visible
         # marker explicitly records files:0 (empty-DataFrame commits),
-        # the pinned state genuinely IS an empty store, and it serves
-        # through the same empty-schema path the latest read uses.
+        # the pinned state genuinely IS an empty store.
         raise FileNotFoundError(
             f"no parts visible as of version {as_of_version} under "
             f"{path} — the pinned history was vacuumed"
         )
+    return []
+
+
+def _occ_read(
+    spark, path: str, log: dict, table: str | None = None,
+    latest_only: bool = False, as_of_version: int | None = None,
+    empty_schema=None,
+):
+    """The one read behind ``occ_snapshot(...).read`` (and so ``occ_read``,
+    ``table=None``): the files ``_occ_files`` resolves from the
+    snapshot's ONE log listing, as a DataFrame.
+
+    Planning runs no Spark job: the schema is merged from the visible
+    parts' footers (``_read_parts``). One cliff remains: above 32 visible
+    parts (``spark.sql.sources.parallelPartitionDiscovery.threshold``)
+    Spark lists the files through a parallel-listing job of its own. A
+    small delta commits one part, so a store crosses it after about 32
+    deltas without a compaction."""
+    files = _occ_files(path, log, table, latest_only, as_of_version)
+    if files:
+        return _read_parts(spark, files)
     if empty_schema is not None:
         return local_df(spark, [], empty_schema)
-    if parts:
-        # no visible version, but the store HAS a cell shape — take
-        # the schema from any part footer (metadata-only read); the
-        # frame scans no file, so its inputFiles() stay the visible set
-        return local_df(spark, [], _read_parts(spark, parts[-1:]).schema)
-    return local_df(
-        spark, [], "row_key binary, column_name binary, value binary, ts long"
-    )
+    # nothing visible: a store that HAS a cell shape (superseded or
+    # unpublished parts) takes the schema of one of their footers
+    parts = sorted(glob.glob(os.path.join(path, "*.parquet")))
+    from hive_cassandra_spark.datasource import _BASE_SCHEMA
+
+    return local_df(spark, [], _parts_schema(parts[-1:]) if parts else _BASE_SCHEMA)
 
 
 def occ_snapshot(spark, path: str) -> SimpleNamespace:
     """ONE listing of an OCC store's marker log, as a value: ``version``
-    (the head, 0 = never committed), ``tags`` ({version: tag}) and
+    (the head, 0 = never committed), ``tags`` ({version: tag}),
     ``read(table=None, latest_only=False, as_of_version=None,
-    empty_schema=None)``, every read resolved from that same listing
-    (Delta's log-snapshot rule). A reader that takes several tables of
-    an ``occ_commit_tables`` artifact from one snapshot gets them all
-    from ONE version set: a commit published after the listing is
-    wholly unseen, never half seen.
+    empty_schema=None)`` and ``files`` (the part files ``read`` scans,
+    ``_occ_files``), all resolved from that same listing (Delta's
+    log-snapshot rule). A reader that takes several tables of an
+    ``occ_commit_tables`` artifact from one snapshot gets them all from
+    ONE version set: a commit published after the listing is wholly
+    unseen, never half seen.
 
     ``read()`` with no table is ``occ_read``. ``read(table)`` unions the
     table's parts of every visible version (append semantics);
@@ -1046,33 +1060,26 @@ def occ_snapshot(spark, path: str) -> SimpleNamespace:
         version=max(log, default=0),
         tags={v: e["tag"] for v, e in log.items() if e["tag"] is not None},
         read=functools.partial(_occ_read, spark, path, log),
+        files=functools.partial(_occ_files, path, log),
     )
 
 
 def occ_read(
     spark, path: str, empty_schema=None, as_of_version: int | None = None
 ):
-    """Snapshot-isolation read of an OCC-managed store: only part files
-    whose version has a PUBLISHED ``_occ-v%09d`` marker are listed — a
-    torn commit's parts (claim without marker) are invisible without
-    waiting for ``occ_recover`` — and versions below the newest
-    published SNAPSHOT commit (a compaction's full replacement) are
-    superseded and skipped even before ``occ_vacuum`` physically drops
-    them. ``as_of_version=N`` pins the read to the state as of version
-    N — versions in ``(floor-at-N, N]``, later deltas and later
-    snapshots invisible (time-travel; see ``occ_snapshot``). Listing
-    is O(files) driver-side dirent work (the same cost class as any
-    parquet file listing), zero data movement; the returned DataFrame
-    scans exactly the committed, current parts.
+    """Snapshot-isolation read of a cell store: the parts ``_occ_files``
+    makes visible — published versions at or above the newest snapshot,
+    plus the legacy parts no marker replaced; a torn commit's parts are
+    invisible without waiting for ``occ_recover``. ``as_of_version=N``
+    pins the read to the state as of version N (time-travel; see
+    ``occ_snapshot``). Listing is O(files) driver-side dirent work.
 
     An empty / never-committed store reads as an empty cell DataFrame
     whose schema comes from, in order: ``empty_schema`` (a StructType)
-    if given; the parquet footer of any part file present but not
-    currently visible (superseded or unpublished — the store's actual
-    cell shape); else the base 4-column cell layout. Without this, a
-    store whose cells carry ``sub_column_name`` / ``ttl_s`` would read
-    back 4-column when empty and diverge from the non-empty case in
-    downstream unions and compaction key derivation."""
+    if given; the footer of any part file present but not visible (the
+    store's actual cell shape, so a store whose cells carry
+    ``sub_column_name`` / ``ttl_s`` does not read back 4-column when
+    empty); else the base 4-column cell layout."""
     return occ_snapshot(spark, path).read(
         as_of_version=as_of_version, empty_schema=empty_schema
     )
@@ -1083,8 +1090,7 @@ def occ_recover(path: str, min_age_s: float = 0.0) -> dict:
     published marker is a torn commit — drop its token-matched part
     files and the claim itself so the version becomes claimable again
     (the in-flight writer is presumed dead; the ``recover_store``
-    single-maintainer contract). Leftover staging dirs and marker temp
-    files sweep unconditionally (they were never visible). Idempotent.
+    single-maintainer contract). Idempotent.
 
     ``min_age_s`` age-gates the sweep: a claim younger than it is left
     alone (counted in ``skipped_young``). "No marker at conflict time"
@@ -1094,16 +1100,15 @@ def occ_recover(path: str, min_age_s: float = 0.0) -> dict:
     eventually-published marker would name a version with silently
     missing files. Automated maintenance (``occ_wait_claim``) passes
     a grace period; a human-invoked recovery after a known crash may
-    keep the 0 default. Returns {dropped_claims, dropped_parts,
-    dropped_staging, skipped_young}."""
+    keep the 0 default. Staging dirs and marker temp files
+    (``.occ-staging-<v>-<token>``) go with the claim they belong to: a
+    live writer stages before it claims, and losing its staging would
+    make it publish an empty version. Only ``min_age_s=0`` sweeps them
+    all. Returns {dropped_claims, dropped_parts, dropped_staging,
+    skipped_young}."""
     dropped_claims = dropped_parts = dropped_staging = 0
     skipped_young = 0
-    for stg in glob.glob(os.path.join(path, ".occ-staging-*")):
-        if os.path.isdir(stg):
-            shutil.rmtree(stg, ignore_errors=True)
-        else:  # a marker temp file a crashed publish left behind
-            os.remove(stg)
-        dropped_staging += 1
+    staging = [] if min_age_s > 0 else [".occ-staging-*"]
     # list the log AFTER the claims: every claimant that published
     # before this listing is seen as published
     pending = OCC_CLAIM_BACKEND.pending_claims(path)
@@ -1127,8 +1132,16 @@ def occ_recover(path: str, min_age_s: float = 0.0) -> dict:
                 for f in glob.glob(pattern):
                     os.remove(f)
                     dropped_parts += 1
+            staging.append(f".occ-staging-{v:09d}-{token}*")
         OCC_CLAIM_BACKEND.abandon(path, v)
         dropped_claims += 1
+    for pattern in staging:
+        for stg in glob.glob(os.path.join(path, pattern)):
+            if os.path.isdir(stg):
+                shutil.rmtree(stg, ignore_errors=True)
+            else:  # a marker temp file a crashed publish left behind
+                os.remove(stg)
+            dropped_staging += 1
     return {
         "dropped_claims": dropped_claims,
         "dropped_parts": dropped_parts,
@@ -1219,10 +1232,11 @@ def occ_update(
     everything from ONE ``occ_snapshot`` (Delta's log-snapshot rule): a
     ``tag`` already in its ``tags`` returns ``already_applied``; else
     ``derive(snap)`` gets the attempt's ``occ_snapshot`` — its
-    ``version`` and its ``read``, resolved from that same listing — and
-    returns ``(tables, out[, replaced])``: the ``{table: DataFrame}`` to
-    commit at ``snap.version`` (``None`` = the store root), the caller's
-    result dict, and the legacy parts a snapshot supersedes. A lost
+    ``version``, ``read`` and ``files``, resolved from that same listing
+    — and returns ``(tables, out[, replaced])``: the ``{table:
+    DataFrame}`` to commit at ``snap.version`` (``None`` = the store
+    root; a list of parquet files is committed as already staged), the
+    caller's result dict, and the legacy parts a snapshot supersedes. A lost
     commit, or a table read that found its snapshot vacuumed by a newer
     snapshot commit, counts a conflict, waits out a pending claim
     (``occ_wait_claim``) and retries on a fresh listing. So a duplicate
@@ -1307,9 +1321,8 @@ def occ_compact_store(
     """
 
     def derive(snap):
-        cells = snap.read()
-        # the frame's input files are exactly the snapshot's visible parts
-        files = [unquote(urlparse(f).path) for f in cells.inputFiles()]
+        files = snap.files()
+        cells = _read_parts(spark, files) if files else snap.read()
         cells_in = sum(_parquet_num_rows(f) for f in files)
         names = [os.path.basename(f) for f in files]
         legacy = [n for n in names if not _PART_RE.search(n)]

@@ -59,13 +59,11 @@ def _decode_value(col: F.Column, hive_type: str) -> F.Column:
     return decode_col(col, hive_type)
 
 
-def read_cells(spark: SparkSession, path: str, schema: str | None = None) -> DataFrame:
-    """Open a persisted cell store (see sink.write_cells). Without
-    ``schema`` Spark infers it from one part file; pass
-    ``datasource.store_schema(path)`` to get the connector's column list
-    when only some parts carry the optional columns."""
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    return reader.parquet(path)
+def read_cells(spark: SparkSession, path: str) -> DataFrame:
+    """Open a persisted cell store (see sink.write_cells): ``sink.occ_read``
+    — the parts its OCC marker log makes visible, every column any of them
+    carries, no Spark job; an empty store reads as an empty cell frame."""
+    return sink.occ_read(spark, path)
 
 
 def expire_cells(

@@ -1729,6 +1729,12 @@ def _connector_append(spark, store, rows, schema=_TTL_CELLS):
     ).save(store)
 
 
+def _legacy_append(spark, store, rows, schema=_TTL_CELLS):
+    """Append parts with no OCC version in their names (Spark's parquet
+    writer, ``sink.write_cells``): the legacy parts of a mixed store."""
+    sink.write_cells(spark.createDataFrame(rows, schema), store, mode="append")
+
+
 def _root_parts(store):
     import glob
     import os
@@ -1747,16 +1753,16 @@ def _live_winners(cells):
     }
 
 
-def test_connector_append_racing_compaction_claim_survives(spark, tmp_path):
-    """A ``cassandra_cells`` append that lands after the compaction read
-    its inputs and before it claims its version is not named by the
-    snapshot, so it stays visible — to ``occ_read`` and to the
-    connector — and the next compaction folds it in."""
+def test_legacy_append_racing_compaction_claim_survives(spark, tmp_path):
+    """A legacy append (a part with no OCC version) that lands after the
+    compaction read its inputs and before it claims its version is not
+    named by the snapshot, so it stays visible — to ``occ_read`` and to
+    the connector — and the next compaction folds it in."""
     from hive_cassandra_spark import datasource
 
     datasource.register(spark)
     store = str(tmp_path / "store")
-    _connector_append(spark, store, [(b"k1", b"c", b"v1", 10, None)])
+    _legacy_append(spark, store, [(b"k1", b"c", b"v1", 10, None)])
     first = _root_parts(store)
     fired = []
 
@@ -1764,7 +1770,7 @@ def test_connector_append_racing_compaction_claim_survives(spark, tmp_path):
         def claim(self, path, version, token):
             if not fired:
                 fired.append(version)
-                _connector_append(spark, store, [(b"k2", b"c", b"v2", 20, None)])
+                _legacy_append(spark, store, [(b"k2", b"c", b"v2", 20, None)])
             return super().claim(path, version, token)
 
     prev = sink.set_occ_claim_backend(AppendBeforeClaim())
@@ -1787,9 +1793,9 @@ def test_connector_append_racing_compaction_claim_survives(spark, tmp_path):
 
 def test_occ_compact_store_compacts_connector_store(spark, tmp_path):
     """A store written only by the ``cassandra_cells`` connector compacts:
-    its parts are the snapshot's input, the marker names each one
-    ``replaced:``, the vacuum drops them, and both readers see the
-    winners."""
+    each append is an OCC delta, the snapshot supersedes both (it names
+    no part ``replaced:``), the vacuum drops their parts, and both
+    readers see the winners."""
     from hive_cassandra_spark import datasource
 
     datasource.register(spark)
@@ -1801,12 +1807,13 @@ def test_occ_compact_store_compacts_connector_store(spark, tmp_path):
     _connector_append(spark, store, [
         (b"k1", b"c", b"new", 20, None), (b"k2", b"c", None, 30, None),
     ])
-    legacy = _root_parts(store)
-    assert len(legacy) >= 2 and not any(sink._PART_RE.search(p) for p in legacy)
+    deltas = _root_parts(store)
+    assert len(deltas) >= 2 and all(sink._PART_RE.search(p) for p in deltas)
+    assert sink.store_version(store) == 2
     res = sink.occ_compact_store(spark, store)
-    assert (res["cells_in"], res["cells_out"], res["version"]) == (5, 2, 1)
-    assert res["vacuumed"] == len(legacy) and res["conflicts"] == 0
-    assert sink._occ_log(store)[1]["replaced"] == set(legacy)
+    assert (res["cells_in"], res["cells_out"], res["version"]) == (5, 2, 3)
+    assert res["vacuumed"] == len(deltas) and res["conflicts"] == 0
+    assert sink._occ_log(store)[3]["replaced"] == set()
     parts = _root_parts(store)
     assert len(parts) == res["files"] == 1 and sink._PART_RE.search(parts[0])
     want = {(b"k1", b"c"): (b"new", 20), (b"k3", b"c"): (b"y", 10)}
@@ -1857,10 +1864,10 @@ def test_compaction_crash_after_publish_before_vacuum(spark, tmp_path, monkeypat
 
     datasource.register(spark)
     store = str(tmp_path / "store")
-    _connector_append(spark, store, [
+    _legacy_append(spark, store, [
         (b"k1", b"c", b"a", 10, None), (b"k2", b"c", b"b", 10, None),
     ])
-    _connector_append(spark, store, [
+    _legacy_append(spark, store, [
         (b"k1", b"c", b"a2", 20, None), (b"k2", b"c", None, 20, None),
     ])
     legacy = _root_parts(store)
@@ -1900,14 +1907,14 @@ def test_pinned_read_on_mixed_store_serves_or_fails_closed(
 
     datasource.register(spark)
     store = str(tmp_path / "store")
-    _connector_append(
+    _legacy_append(
         spark, store, [(b"k1", b"c", b"a", 10)],
         "row_key binary, column_name binary, value binary, ts long",
     )
     assert sink.occ_commit(
         spark, store, _raw_cells(spark, [("k2", "c", "b", 20)]), 0
     )["committed"]
-    _connector_append(
+    _legacy_append(
         spark, store, [(b"k1", b"c", b"c", 30)],
         "row_key binary, column_name binary, value binary, ts long",
     )
@@ -1983,3 +1990,226 @@ def test_lww_latest_ties_follow_the_compaction_rule(spark):
         ], got
         winners = sink._compact_winners(cells, False, None, None)
         assert _cell_rows(winners) == got
+
+
+class _CrashInPublish(sink.LocalFSClaimBackend):
+    """A committer that dies after it claimed its version and moved its
+    parts in, before its marker publishes: a torn commit."""
+
+    def publish(self, path, version, content):
+        raise OSError("crash in publish")
+
+
+def test_torn_commit_is_invisible_to_every_reader(spark, tmp_path):
+    """Parts of a version whose marker never published are invisible to
+    ``read_cells``, ``handler.read_table``, ``index.index_lookup`` and a
+    ``cassandra_cells`` scan, as they are to ``occ_read``."""
+    import pytest
+
+    from hive_cassandra_spark import datasource, handler, index
+
+    datasource.register(spark)
+    tdef = handler.define_table(
+        "torn", str(tmp_path / "base"), ["rk", "seg"], ["string", "string"]
+    )
+    handler.write_table(
+        spark.createDataFrame([("r1", "gold"), ("r2", "iron")], "rk string, seg string"),
+        tdef, clock_millis=1,
+    )
+    idx = str(tmp_path / "idx")
+    sink.write_cells(
+        index.build_value_index(source.read_cells(spark, tdef.path), b"seg"), idx
+    )
+    prev = sink.set_occ_claim_backend(_CrashInPublish())
+    try:
+        for path, rows in (
+            (tdef.path, [("r2", "seg", "gold", 5), ("r3", "seg", "gold", 5)]),
+            (idx, [("gold", "r2", None, 5)]),
+        ):
+            with pytest.raises(OSError, match="crash in publish"):
+                sink.occ_commit(spark, path, _raw_cells(spark, rows), 0)
+            assert any(sink._PART_RE.search(p) for p in _root_parts(path))
+    finally:
+        sink.set_occ_claim_backend(prev)
+    want = [(b"r1", b"seg", b"gold", 1), (b"r2", b"seg", b"iron", 1)]
+    assert _cell_rows(source.read_cells(spark, tdef.path)) == want
+    assert _cell_rows(sink.occ_read(spark, tdef.path)) == want
+    connector = spark.read.format("cassandra_cells").load(tdef.path)
+    assert _cell_rows(connector.select("row_key", "column_name", "value", "ts")) == want
+    assert sorted(map(tuple, handler.read_table(spark, tdef).collect())) == [
+        ("r1", "gold"), ("r2", "iron"),
+    ]
+    hits = index.index_lookup(spark, tdef.path, idx, b"gold")
+    assert {bytes(r.row_key) for r in hits.collect()} == {b"r1"}
+
+
+def test_batch_writer_crash_in_commit_keeps_previous_store(spark, tmp_path, monkeypatch):
+    """``CellStoreWriter.commit`` over hand-made task files, with a rename
+    that raises after the first part moved in: for an overwrite and for
+    an append, the previous rows still read back, since no part is
+    removed and nothing is visible before the marker publishes."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+    from pyspark.sql.types import StructType
+
+    from hive_cassandra_spark import datasource
+
+    datasource.register(spark)
+    real_rename = os.rename
+    cols = ("row_key", "column_name", "value", "ts")
+    for overwrite in (True, False):
+        store = str(tmp_path / f"store_{overwrite}")
+        _connector_append(spark, store, [
+            (b"k1", b"c", b"a", 10, None), (b"k2", b"c", b"b", 10, None),
+        ])
+        before = _cell_rows(source.read_cells(spark, store).select(*cols))
+        w = datasource.CellStoreWriter(
+            {"path": store}, StructType.fromDDL(datasource._BASE_SCHEMA), overwrite
+        )
+        messages = []
+        for i in range(3):
+            tmp = os.path.join(store, f"._tmp-{w.job_id}-task{i}.parquet")
+            pq.write_table(pa.table({
+                "row_key": [f"n{i}".encode()], "column_name": [b"c"],
+                "value": [b"new"], "ts": pa.array([20], pa.int64()),
+            }), tmp)
+            messages.append(datasource.CellCommit(tmp_file=tmp, rows=1))
+        moved = []
+
+        def crash_after_first(src, dst):
+            if moved:
+                raise OSError("crash in commit")
+            moved.append(dst)
+            real_rename(src, dst)
+
+        monkeypatch.setattr(os, "rename", crash_after_first)
+        with pytest.raises(OSError, match="crash in commit"):
+            w.commit(messages)
+        monkeypatch.setattr(os, "rename", real_rename)
+        assert moved, overwrite
+        assert _cell_rows(source.read_cells(spark, store).select(*cols)) == before
+        back = spark.read.format("cassandra_cells").load(store)
+        assert _cell_rows(back.select(*cols)) == before
+        # the torn version is swept and the store reads as before
+        assert sink.occ_recover(store)["dropped_parts"] == 1
+        assert _cell_rows(sink.occ_read(spark, store).select(*cols)) == before
+
+
+def test_ttl_column_of_a_late_part_reaches_every_reader(spark, tmp_path):
+    """A ``ttl_s`` column that only the 17th part carries is in
+    ``store_schema``, the connector's schema and the scan
+    ``handler.read_table`` plans, and its value reads back."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from hive_cassandra_spark import datasource, handler
+    from hive_cassandra_spark.codecs import encode_long
+
+    datasource.register(spark)
+    tdef = handler.define_table(
+        "late_ttl", str(tmp_path / "store"), ["rk", "a"], ["string", "bigint"]
+    )
+    os.makedirs(tdef.path)
+    for i in range(17):
+        cols = {
+            "row_key": [f"k{i:02d}".encode()], "column_name": [b"a"],
+            "value": [encode_long(i)], "ts": pa.array([1], pa.int64()),
+        }
+        if i == 16:
+            cols["ttl_s"] = pa.array([60], pa.int32())
+        pq.write_table(pa.table(cols), os.path.join(tdef.path, f"part-{i:05d}.parquet"))
+    assert "ttl_s int" in datasource.store_schema(tdef.path)
+    connector = spark.read.format("cassandra_cells").load(tdef.path)
+    assert "ttl_s" in connector.columns
+    assert connector.filter(F.col("ttl_s") == 60).count() == 1
+    assert "ttl_s" in source.read_cells(spark, tdef.path).columns
+    table = handler.read_table(spark, tdef)
+    assert "ttl_s" in table._jdf.queryExecution().analyzed().toString()
+    assert sorted(map(tuple, table.collect())) == [(f"k{i:02d}", i) for i in range(17)]
+
+
+def test_connector_append_racing_an_occ_delta_gets_its_own_version(spark, tmp_path):
+    """A ``cassandra_cells`` append that commits between an OCC delta's
+    listing and its claim takes the next version itself; the delta loses
+    its claim, retries on a fresh listing, and both land."""
+    from hive_cassandra_spark import datasource
+
+    datasource.register(spark)
+    store = str(tmp_path / "store")
+    assert sink.occ_commit(
+        spark, store, _raw_cells(spark, [("k1", "c", "a", 10)]), 0
+    )["committed"]
+    fired = []
+
+    class AppendBeforeClaim(sink.LocalFSClaimBackend):
+        def claim(self, path, version, token):
+            if not fired:
+                fired.append(version)
+                _connector_append(spark, store, [(b"k2", b"c", b"b", 20, None)])
+            return super().claim(path, version, token)
+
+    prev = sink.set_occ_claim_backend(AppendBeforeClaim())
+    try:
+        res = sink.occ_update(spark, store, lambda snap: (
+            {None: _raw_cells(spark, [("k3", "c", "c", 30)])}, {},
+        ))
+    finally:
+        sink.set_occ_claim_backend(prev)
+    assert fired == [2]
+    assert (res["version"], res["conflicts"]) == (3, 1)
+    log = sink._occ_log(store)
+    assert sorted(log) == [1, 2, 3] and not any(e["snapshot"] for e in log.values())
+    want = {
+        (b"k1", b"c"): (b"a", 10), (b"k2", b"c"): (b"b", 20),
+        (b"k3", b"c"): (b"c", 30),
+    }
+    assert _live_winners(sink.occ_read(spark, store)) == want
+    assert _live_winners(spark.read.format("cassandra_cells").load(store)) == want
+
+
+def test_occ_recover_sweeps_only_the_staging_of_claims_it_abandons(spark, tmp_path):
+    """The automated sweep (``occ_recover`` with ``min_age_s > 0``, as
+    ``occ_wait_claim`` runs it) removes the staging dir and marker temp
+    file of the dead claim it abandons, never a live writer's staged
+    parts: that writer, which staged before the sweep, still commits its
+    cells."""
+    import glob
+    import os
+
+    store = str(tmp_path / "store")
+    assert sink.occ_commit(
+        spark, store, _raw_cells(spark, [("k1", "c", "a", 10)]), 0
+    )["committed"]
+    claim = os.path.join(store, "_occ-claim-000000002")
+    os.mkdir(claim)
+    with open(os.path.join(claim, "token"), "w") as fh:
+        fh.write("deadbeef")
+    os.makedirs(os.path.join(store, ".occ-staging-000000002-deadbeef"))
+    with open(os.path.join(store, ".occ-staging-000000002-deadbeef.marker"), "w"):
+        pass
+    old = time.time() - 60
+    os.utime(claim, (old, old))
+    swept = []
+
+    class RecoverBeforeClaim(sink.LocalFSClaimBackend):
+        def claim(self, path, version, token):
+            if not swept:
+                swept.append(sink.occ_recover(path, min_age_s=10))
+            return super().claim(path, version, token)
+
+    prev = sink.set_occ_claim_backend(RecoverBeforeClaim())
+    try:
+        res = sink.occ_commit(
+            spark, store, _raw_cells(spark, [("k2", "c", "b", 20)]), 1
+        )
+    finally:
+        sink.set_occ_claim_backend(prev)
+    assert swept[0]["dropped_claims"] == 1 and swept[0]["dropped_staging"] == 2
+    assert res["committed"] and (res["version"], res["files"]) == (2, 1)
+    assert sink.occ_read(spark, store).count() == 2
+    assert not glob.glob(os.path.join(store, ".occ-staging-*"))

@@ -25,12 +25,13 @@ Usage: python tools/check_oracle.py [sf_dir] [query ...] [--vanilla]
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 import time
 import traceback
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # DuckDB result types the driver's fetch path renders differently than
 # fetchall() does — ban them outright; the oracle SQL must CAST.

@@ -34,7 +34,8 @@ import sys
 import time
 import urllib.request
 
-sys.path.insert(0, "/root/repo")
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
 
 from pyspark.sql import DataFrame, functions as F  # noqa: E402
 
@@ -244,7 +245,7 @@ def main() -> None:
     print(f"# ivfpq_delta_vs_corpus: {json.dumps(rec)}", file=sys.stderr)
 
     out["load1_at_end"] = round(os.getloadavg()[0], 2)
-    with open("/root/repo/MAINT_SCALING_r12.json", "w") as f:
+    with open(f"{_ROOT}/MAINT_SCALING_r12.json", "w") as f:
         json.dump(out, f, indent=1)
     print(json.dumps(out))
     shutil.rmtree(base, ignore_errors=True)

@@ -12,10 +12,12 @@ Usage: python tools/plan_audit.py [sf_dir]  (writes PLANS.md at repo root)
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
 
 INTERESTING = [
     ("BroadcastHashJoin", "broadcast hash join"),
@@ -946,7 +948,7 @@ def _scaling_section() -> str:
     import json as _json
     import os as _os
 
-    path = "/root/repo/SCALING_r13.json"
+    path = f"{_ROOT}/SCALING_r13.json"
     for fallback in (
         "SCALING_r12.json", "SCALING_r11.json",
         "SCALING_r10.json", "SCALING_r09.json", "SCALING_r08.json",
@@ -954,12 +956,12 @@ def _scaling_section() -> str:
     ):
         if _os.path.exists(path):
             break
-        path = f"/root/repo/{fallback}"
+        path = f"{_ROOT}/{fallback}"
     if not _os.path.exists(path):
         return ""
     extra20 = None
-    if _os.path.exists("/root/repo/SCALING_r08_20x.json"):
-        with open("/root/repo/SCALING_r08_20x.json") as f:
+    if _os.path.exists(f"{_ROOT}/SCALING_r08_20x.json"):
+        with open(f"{_ROOT}/SCALING_r08_20x.json") as f:
             extra20 = _json.load(f)
     # later rounds' 20x files share one per-query {a, b} format — render
     # the NEWEST one only (it supersedes the older measurement of the
@@ -967,7 +969,7 @@ def _scaling_section() -> str:
     extra20_late = None
     extra20_late_name = None
     for rnd in ("r13", "r12", "r11", "r10", "r09"):
-        p = f"/root/repo/SCALING_{rnd}_20x.json"
+        p = f"{_ROOT}/SCALING_{rnd}_20x.json"
         if _os.path.exists(p):
             with open(p) as f:
                 extra20_late = _json.load(f)
@@ -1193,7 +1195,7 @@ def main() -> None:
             out.append(audit(name, df))
         spark.catalog.clearCache()  # drop the query's leaked persists
     out.append(_scaling_section())
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(f"{_ROOT}/PLANS.md", "w") as f:
         f.write("\n".join(out))
     print("wrote PLANS.md")
     spark.stop()

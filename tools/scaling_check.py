@@ -53,7 +53,8 @@ import sys
 import time
 import urllib.request
 
-sys.path.insert(0, "/root/repo")
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
 
 from pyspark.sql import DataFrame, functions as F  # noqa: E402
 
@@ -727,15 +728,15 @@ def main() -> None:
             )
         out["queries"][name] = rec
         print(f"# {name}: {json.dumps(rec)}", file=sys.stderr)
-    if only is not None and os.path.exists("/root/repo/SCALING_r13.json"):
+    if only is not None and os.path.exists(f"{_ROOT}/SCALING_r13.json"):
         # --only refreshes a subset: merge into the existing rows rather
         # than discarding the un-rerun queries' measurements
-        with open("/root/repo/SCALING_r13.json") as f:
+        with open(f"{_ROOT}/SCALING_r13.json") as f:
             prev = json.load(f)
         merged = prev.get("queries", {})
         merged.update(out["queries"])
         out["queries"] = merged
-    with open("/root/repo/SCALING_r13.json", "w") as f:
+    with open(f"{_ROOT}/SCALING_r13.json", "w") as f:
         json.dump(out, f, indent=1)
     print(json.dumps(out))
     if failures:
